@@ -3,8 +3,13 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{And, EqualTo, Filter,
+  GreaterThanOrEqual, In, LessThanOrEqual, StringStartsWith}
+
+import graft.sources.StatsSkipping
 
 /** Versioned parquet table store with time-travel reads — the
   * commit-log model (a log of add/remove file actions whose replay
@@ -268,8 +273,7 @@ object TableStore {
         if (ss.nonEmpty && isString) {
           val vals = ss.map { st =>
             (st.genericGetMin, st.genericGetMax) match {
-              case (a: org.apache.parquet.io.api.Binary,
-                    b: org.apache.parquet.io.api.Binary) =>
+              case (a: Binary, b: Binary) =>
                 (a.toStringUsingUTF8, b.toStringUsingUTF8)
               case other => throw new IllegalArgumentException(
                 s"stats column $c in $f is not string-typed: $other")
@@ -912,11 +916,21 @@ object TableStore {
   /** Live [[FileEntry]]s at `asOf`: per path, the latest action at a
     * version <= asOf must be an add. Metadata-sized. */
   private[graft] def liveAt(spark: SparkSession, root: String,
-                     asOf: Long): Seq[FileEntry] = {
-    val vs = versions(spark, root)
+                     asOf: Long): Seq[FileEntry] =
+    liveIn(logAt(spark, root, versions(spark, root), asOf))
+
+  /** The log replay up to `asOf`, which must be one of the committed
+    * versions `vs` — one listing serves the check and the replay. */
+  private def logAt(spark: SparkSession, root: String, vs: Seq[Long],
+                    asOf: Long): Seq[LogRow] = {
     require(vs.contains(asOf),
       s"version $asOf not committed at $root (have ${vs.mkString(",")})" +
         " — vacuumed past the horizon or never written")
+    vs.filter(_ <= asOf).flatMap(v => readLogDir(spark, root, v))
+  }
+
+  /** The live files of a log replay. */
+  private def liveIn(log: Seq[LogRow]): Seq[FileEntry] =
     // DATA actions only: metadata rows (dv vectors, constraints) share
     // the path column, and letting them into the latest-action pick
     // would shadow a file's add (the dv row would "win" and silently
@@ -924,7 +938,7 @@ object TableStore {
     // file count, the planning budget; per-file schema variance
     // (pre-upgrade logs lacking the string-stat maps) resolves to
     // empty inside the reader.
-    readLogTo(spark, root, asOf)
+    log
       .filter(r => r.action == "add" || r.action == "remove")
       .groupBy(_.path)
       .flatMap { case (_, rs) =>
@@ -934,7 +948,6 @@ object TableStore {
         if (last.action == "add") Some(last.toEntry) else None
       }
       .toSeq.sortBy(_.path)
-  }
 
   /** Merge-on-read delete vectors active at `asOf`, restricted to
     * `live` files: data-file name → the dv parquet dirs holding its
@@ -942,9 +955,13 @@ object TableStore {
     * names embed the write job's UUID — unique within a store), so
     * applying them is one equi anti-join, no path arithmetic. */
   private[graft] def dvsAt(spark: SparkSession, root: String, asOf: Long,
+                    live: Seq[FileEntry]): Map[String, Seq[String]] =
+    dvsIn(readLogTo(spark, root, asOf), live) // bounded: dv'd files, not rows
+
+  private def dvsIn(log: Seq[LogRow],
                     live: Seq[FileEntry]): Map[String, Seq[String]] = {
     val liveNames = live.map(e => e.path.split('/').last).toSet
-    readLogTo(spark, root, asOf) // bounded: dv'd files, not rows
+    log
       .filter(_.action == "dv")
       .map(r => (r.path, r.meta.getOrElse("")))
       .filter { case (f, _) => liveNames.contains(f.split('/').last) }
@@ -959,9 +976,30 @@ object TableStore {
   private[graft] def requireNoDvs(spark: SparkSession, root: String,
                            asOf: Long, live: Seq[FileEntry],
                            op: String): Unit =
-    require(dvsAt(spark, root, asOf, live).isEmpty,
+    requireNoDvsIn(readLogTo(spark, root, asOf), root, live, op)
+
+  private def requireNoDvsIn(log: Seq[LogRow], root: String,
+                             live: Seq[FileEntry], op: String): Unit =
+    require(dvsIn(log, live).isEmpty,
       s"$op plans at file granularity, but merge-on-read delete " +
         s"vectors are present at $root — run purgeDeletes first")
+
+  /** A snapshot resolved for a file-granular operation `op`: ONE
+    * versions listing and ONE log replay give its version (default:
+    * the latest), live files and declared schema, and refuse under
+    * delete vectors ([[requireNoDvs]]). */
+  private def fileSnapshot(spark: SparkSession, root: String,
+                           version: Option[Long], op: String)
+      : (Long, Seq[FileEntry],
+         Option[org.apache.spark.sql.types.StructType]) = {
+    val vs = versions(spark, root)
+    require(vs.nonEmpty, s"no committed versions at $root")
+    val v = version.getOrElse(vs.max)
+    val log = logAt(spark, root, vs, v)
+    val live = liveIn(log)
+    requireNoDvsIn(log, root, live, op)
+    (v, live, schemaIn(log))
+  }
 
   /** Scan a subset of LIVE data files under the snapshot's EFFECTIVE
     * schema: the declared (ALTER-evolved) schema when one is in force
@@ -975,10 +1013,16 @@ object TableStore {
     * column's values from every rewritten file. */
   private[graft] def readLiveFiles(spark: SparkSession, root: String,
                                    asOf: Long,
-                                   entries: Seq[FileEntry]): DataFrame = {
+                                   entries: Seq[FileEntry]): DataFrame =
+    scanFiles(spark, root, declaredSchemaAt(spark, root, asOf), entries)
+
+  /** [[readLiveFiles]] with the declared schema already resolved. */
+  private def scanFiles(spark: SparkSession, root: String,
+                        declared: Option[org.apache.spark.sql.types.StructType],
+                        entries: Seq[FileEntry]): DataFrame = {
     val raw = spark.read.option("ignoreMissingFiles", "false")
     val files = entries.map(e => resolve(root, e.path))
-    declaredSchemaAt(spark, root, asOf) match {
+    declared match {
       case Some(t) => raw.schema(t).parquet(files: _*)
       case None => raw.parquet(files: _*)
     }
@@ -1029,7 +1073,7 @@ object TableStore {
     require(vs.nonEmpty, s"no committed versions at $root")
     val prev = vs.last
     val live = liveAt(spark, root, prev)
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
+    val touched = prunedFiles(spark, root, live, within(pcol, lo, hi))
     deleteMoRTouched(spark, root, pred, prev, touched)
   }
 
@@ -1291,15 +1335,8 @@ object TableStore {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t)
         case None => spark.read.parquet(s"$root/_schema").limit(0)
       }
-    else if (dvs.isEmpty) {
-      val raw = spark.read.option("ignoreMissingFiles", "false")
-      declared match {
-        case Some(t) =>
-          raw.schema(t).parquet(entries.map(e => resolve(root, e.path)): _*)
-        case None =>
-          raw.parquet(entries.map(e => resolve(root, e.path)): _*)
-      }
-    } else {
+    else if (dvs.isEmpty) scanFiles(spark, root, declared, entries)
+    else {
       // declared schema + outstanding vectors composes: both the
       // dirty scan (applyDvs) and the clean scan below read through
       // readLiveFiles, which applies the declared schema — an ALTER
@@ -1325,11 +1362,7 @@ object TableStore {
   def readAs(spark: SparkSession, root: String,
              target: org.apache.spark.sql.types.StructType,
              version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val v = version.getOrElse(vs.max)
-    val entries = liveAt(spark, root, v)
-    requireNoDvs(spark, root, v, entries, "readAs")
+    val (v, entries, _) = fileSnapshot(spark, root, version, "readAs")
     val files = entries.map(e => resolve(root, e.path))
     if (files.nonEmpty)
       SchemaEvolution.readWithTarget(spark, target, files: _*)
@@ -1355,11 +1388,7 @@ object TableStore {
   def metaStats(spark: SparkSession, root: String,
                 version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val v = version.getOrElse(vs.max)
-    val live = liveAt(spark, root, v)
-    requireNoDvs(spark, root, v, live, "metaStats")
+    val (v, live, _) = fileSnapshot(spark, root, version, "metaStats")
     val bytes: Option[Long] =
       if (live.forall(_.bytes > 0)) Some(live.map(_.bytes).sum) else None
     Seq((v, live.size.toLong, live.map(_.rows).sum, bytes))
@@ -1382,11 +1411,7 @@ object TableStore {
                  version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     require(cols.nonEmpty, "metaBounds needs at least one column")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val v = version.getOrElse(vs.max)
-    val live = liveAt(spark, root, v)
-    requireNoDvs(spark, root, v, live, "metaBounds")
+    val (v, live, _) = fileSnapshot(spark, root, version, "metaBounds")
     cols.map { c =>
       val missing = live.filter(e =>
         !e.mins.contains(c) || !e.maxs.contains(c))
@@ -1487,8 +1512,12 @@ object TableStore {
     * `asOf`, or None. Bounded: one row back. */
   private[graft] def latestMeta(spark: SparkSession, root: String,
                                 action: String,
-                                asOf: Long): Option[String] = {
-    val hits = readLogTo(spark, root, asOf).filter(_.action == action)
+                                asOf: Long): Option[String] =
+    latestMetaIn(readLogTo(spark, root, asOf), action)
+
+  private def latestMetaIn(log: Seq[LogRow],
+                           action: String): Option[String] = {
+    val hits = log.filter(_.action == action)
     if (hits.isEmpty) None else hits.maxBy(_.v).meta
   }
 
@@ -1537,7 +1566,11 @@ object TableStore {
   private[graft] def declaredSchemaAt(spark: SparkSession, root: String,
                                       asOf: Long)
       : Option[org.apache.spark.sql.types.StructType] =
-    latestMeta(spark, root, "schema", asOf).map(j =>
+    schemaIn(readLogTo(spark, root, asOf))
+
+  private def schemaIn(log: Seq[LogRow])
+      : Option[org.apache.spark.sql.types.StructType] =
+    latestMetaIn(log, "schema").map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
@@ -1683,11 +1716,7 @@ object TableStore {
               statsCols: Seq[String] = Nil,
               bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "compact")
+    val (prev, live, _) = fileSnapshot(spark, root, None, "compact")
     if (live.isEmpty) {
       // compacting an empty table: content unchanged, but callers
       // get the version they asked for (a no-action commit)
@@ -1705,370 +1734,182 @@ object TableStore {
       writeData(df, root, n, statsCols, bloomCols), live.map(_.path))
   }
 
-  /** Live files whose [min, max] for `pcol` can intersect [lo, hi].
-    * Files whose commit DECLARED `pcol` in statsCols answer from the
-    * log alone — zero IO; files written without it fall back to one
-    * footer read each (and stat-less chunks count as overlapping).
-    * At scale the log-stats path is the only one that matters: a
-    * footer open per live file is itself a million-IO listing. */
-  private def overlappingFiles(spark: SparkSession, root: String,
-                               live: Seq[FileEntry], pcol: String,
-                               lo: Long, hi: Long): Seq[FileEntry] = {
+  /** `c` ∈ [lo, hi] as a pruning filter. */
+  private def within(c: String, lo: Any, hi: Any): Filter =
+    And(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
+  /** The live files that may hold a row satisfying `filter` — the ONE
+    * file-pruning path behind every typed read and interval-scoped
+    * rewrite. `filter` must reject nulls in every column it reads (as
+    * the callers' comparisons, IN lists and prefixes do), so a row
+    * group whose schema predates a probed column cannot match.
+    *
+    * The log's bounds go first, zero IO. A survivor opens its footer
+    * once, and only when it has no logged bounds for a probed column
+    * or `filter` is an EqualTo/In a bloom can refute; it then survives
+    * iff some row group's footer bounds pass the same evaluator and
+    * its bloom may hold a probed value. Blooms hash by the column's
+    * PHYSICAL type: probing an INT32 bloom with long hashes would be a
+    * false NEGATIVE on every key. Null probes match nothing (SQL IN).
+    * A probed column in no logged bounds and no opened footer is a
+    * misspelling, not an evolved column: loud. */
+  private def prunedFiles(spark: SparkSession, root: String,
+                          live: Seq[FileEntry],
+                          filter: Filter): Seq[FileEntry] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
-    // a file whose schema PREDATES the prune column provably holds
-    // only nulls for it — skippable, not an error (readAs evolution);
-    // the typo guard below still catches a column no file ever had
-    var sawColumn = live.isEmpty
-    def footerOverlap(rel: String): Boolean = {
+    val cols = filter.references.distinct.toSeq
+    def logged(e: FileEntry, c: String) =
+      e.mins.contains(c) || e.smins.contains(c)
+    val probe = filter match {
+      case EqualTo(c, v) => Some(c -> Seq(v))
+      case In(c, vs) => Some(c -> vs.toSeq)
+      case _ => None
+    }
+    val seen = scala.collection.mutable.Set(
+      cols.filter(c => live.exists(logged(_, c))): _*)
+    var opened = false
+    def footerMayContain(e: FileEntry): Boolean = {
+      opened = true
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(resolve(root, rel)), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = reader.getFooter.getBlocks.asScala
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == pcol)
-        if (chunks.nonEmpty) sawColumn = true
-        if (blocks.nonEmpty && chunks.isEmpty) return false
-        chunks.exists { c =>
-          // annotated storage (DECIMAL/DATE over ints): stats can't be
-          // interpreted against the caller's [lo, hi] — never skip
-          !plainStatsType(c.getPrimitiveType) || {
-          val s = c.getStatistics
-          s == null || !s.hasNonNullValue || {
-            val (mn, mx) = (s.genericGetMin, s.genericGetMax) match {
-              case (a: java.lang.Number, b: java.lang.Number) =>
-                (a.longValue, b.longValue)
-              case _ => (Long.MinValue, Long.MaxValue)
-            }
-            mn <= hi && mx >= lo
+        new Path(resolve(root, e.path)), conf))
+      try reader.getFooter.getBlocks.asScala.exists { block =>
+        val chunks = block.getColumns.asScala
+          .map(c => c.getPath.toDotString -> c).toMap
+          .filter { case (c, _) => cols.contains(c) }
+        seen ++= chunks.keys
+        chunks.size == cols.size &&
+          StatsSkipping.mayContain(groupBounds(e.path, block.getRowCount,
+            chunks.values.toSeq), filter) &&
+          probe.forall { case (c, vs) =>
+            val cc = chunks(c)
+            val bf = reader.getBloomFilterDataReader(block)
+              .readBloomFilter(cc)
+            bf == null || vs.exists(v => v != null &&
+              ((cc.getPrimitiveType.getPrimitiveTypeName, v) match {
+                case (INT64, l: java.lang.Long) => bf.findHash(bf.hash(l))
+                case (INT32, l: java.lang.Long) =>
+                  bf.findHash(bf.hash(Integer.valueOf(l.intValue)))
+                case (BINARY, s: String) =>
+                  bf.findHash(bf.hash(Binary.fromString(s)))
+                case _ => true // not hashable for this column: maybe
+              }))
           }
-        }}
       } finally reader.close()
     }
-    val hits = live.filter { e =>
-      (e.mins.get(pcol), e.maxs.get(pcol)) match {
-        case (Some(mn), Some(mx)) => sawColumn = true; mn <= hi && mx >= lo
-        case _ => footerOverlap(e.path)
-      }
-    }
-    require(sawColumn,
-      s"prune column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    hits
+    val kept = live.filter(e => StatsSkipping.mayContain(e, filter) &&
+      (probe.isEmpty && cols.forall(logged(e, _)) || footerMayContain(e)))
+    // with no footer opened, every file was logged or ruled out by the
+    // log, so nothing could show a column the logs lack
+    val typos = cols.filterNot(seen)
+    require(!opened || typos.isEmpty,
+      s"column ${typos.mkString(",")} exists in NO live file of $root " +
+        "— misspelled column, not an evolved one")
+    kept
   }
 
-  /** Manifest-pruned range read: open only the live files whose
-    * footer stats can contain `pcol` ∈ [lo, hi], then apply the
-    * residual row filter. Returns the frame plus the
-    * (files touched, files live) evidence pair — the skipping
-    * economics a layout is judged by. On a store whose commits are
-    * key-ranged (the natural shape of range-partitioned ingestion),
-    * a point probe opens one commit's files, never the table. */
-  def readRange(spark: SparkSession, root: String,
-                pcol: String, lo: Long, hi: Long,
-                version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
-    val residual = col(pcol) >= lo && col(pcol) <= hi
+  /** A row group's footer bounds as a [[FileEntry]], read the way
+    * [[footerInfo]] logs them. Annotated storage (DECIMAL/DATE over
+    * ints), all-null and stat-less chunks get none: they never skip. */
+  private def groupBounds(path: String, rows: Long,
+                          chunks: Seq[org.apache.parquet.hadoop.metadata
+                            .ColumnChunkMetaData]): FileEntry =
+    chunks.foldLeft(FileEntry(path, rows, Map.empty, Map.empty)) { (b, c) =>
+      val s = c.getStatistics
+      val n = c.getPath.toDotString
+      if (s == null || !s.hasNonNullValue) b
+      else (s.genericGetMin, s.genericGetMax) match {
+        case (lo: Number, hi: Number) if plainStatsType(c.getPrimitiveType) =>
+          b.copy(mins = b.mins + (n -> lo.longValue),
+            maxs = b.maxs + (n -> hi.longValue))
+        case (lo: Binary, hi: Binary) if stringStatsType(c.getPrimitiveType) =>
+          b.copy(smins = b.smins + (n -> lo.toStringUsingUTF8),
+            smaxs = b.smaxs + (n -> hi.toStringUsingUTF8))
+        case _ => b
+      }
+    }
+
+  /** The typed reads' one code path: resolve the snapshot once, keep
+    * what [[prunedFiles]] cannot rule out, and scan it with `residual`
+    * re-applied — the filter only chooses files, the residual keeps
+    * the rows exact. Returns (frame, files touched, files live). */
+  private def prunedRead(spark: SparkSession, root: String,
+                         version: Option[Long], filter: Filter,
+                         residual: org.apache.spark.sql.Column)
+      : (DataFrame, Int, Int) = {
+    val (v, live, declared) =
+      fileSnapshot(spark, root, version, "stats- and bloom-pruned reads")
+    val touched = prunedFiles(spark, root, live, filter)
     val df =
       if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
+        scanFiles(spark, root, declared, touched).where(residual)
+      else if (live.nonEmpty)
+        scanFiles(spark, root, declared, live).where(residual).limit(0)
+      else read(spark, root, Some(v)).where(residual).limit(0)
     (df, touched.size, live.size)
   }
 
-  /** Live files whose string [min, max] for `pcol` can intersect
-    * [lo, hi] (either side unbounded as None), compared in Spark's
-    * string order. Files whose commit DECLARED `pcol` in statsCols
-    * answer from the log alone — zero IO; files written without it
-    * fall back to one footer read each. Truncated log bounds only
-    * ever WIDEN a file's range, so pruning stays sound. */
-  private def overlappingFilesString(spark: SparkSession, root: String,
-                                     live: Seq[FileEntry], pcol: String,
-                                     lo: Option[String],
-                                     hi: Option[String]): Seq[FileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def overlaps(mn: String, mx: String): Boolean =
-      lo.forall(l => strLe(l, mx)) && hi.forall(h => strLe(mn, h))
-    // a file whose schema PREDATES the prune column provably holds
-    // only nulls for it — skippable, not an error (readAs evolution)
-    var sawColumn = live.isEmpty
-    def footerOverlap(rel: String): Boolean = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(resolve(root, rel)), conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = reader.getFooter.getBlocks.asScala
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == pcol)
-        if (chunks.nonEmpty) sawColumn = true
-        if (blocks.nonEmpty && chunks.isEmpty) return false
-        chunks.exists { c =>
-          // non-string storage: the caller's string bounds can't be
-          // compared against these stats — never skip
-          !stringStatsType(c.getPrimitiveType) || {
-            val s = c.getStatistics
-            s == null || !s.hasNonNullValue || {
-              (s.genericGetMin, s.genericGetMax) match {
-                case (a: org.apache.parquet.io.api.Binary,
-                      b: org.apache.parquet.io.api.Binary) =>
-                  overlaps(a.toStringUsingUTF8, b.toStringUsingUTF8)
-                case _ => true
-              }
-            }
-          }
-        }
-      } finally reader.close()
-    }
-    val hits = live.filter { e =>
-      (e.smins.get(pcol), e.smaxs.get(pcol)) match {
-        case (Some(mn), Some(mx)) => sawColumn = true; overlaps(mn, mx)
-        case _ => footerOverlap(e.path)
-      }
-    }
-    require(sawColumn,
-      s"prune column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    hits
-  }
+  /** Manifest-pruned range read: the rows with `pcol` ∈ [lo, hi],
+    * scanning only the live files whose bounds can intersect it.
+    * Returns the frame plus the (files touched, files live) evidence
+    * pair — the skipping economics a layout is judged by. */
+  def readRange(spark: SparkSession, root: String,
+                pcol: String, lo: Long, hi: Long,
+                version: Option[Long] = None): (DataFrame, Int, Int) =
+    prunedRead(spark, root, version, within(pcol, lo, hi),
+      col(pcol) >= lo && col(pcol) <= hi)
 
-  /** Manifest-pruned range read over a STRING key: open only the live
-    * files whose (truncated) string bounds can contain `pcol` ∈
-    * [lo, hi] in Spark's string order, then apply the residual row
-    * filter. Returns the frame plus the (files touched, files live)
-    * evidence pair. The string twin of [[readRange]] — the shape for
-    * tables ingested in key order on URLs, content hashes, or
-    * date-string keys, where the pruning column can't be an integer. */
+  /** [[readRange]] over a STRING key, compared in Spark's string
+    * order — the shape for tables ingested in key order on URLs,
+    * content hashes or date-string keys. Returns the frame plus
+    * (files touched, files live). */
   def readRangeString(spark: SparkSession, root: String,
                       pcol: String, lo: String, hi: String,
                       version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val touched = overlappingFilesString(spark, root, live, pcol,
-      Some(lo), Some(hi))
-    val residual = col(pcol) >= lit(lo) && col(pcol) <= lit(hi)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
-  }
+      : (DataFrame, Int, Int) =
+    prunedRead(spark, root, version, within(pcol, lo, hi),
+      col(pcol) >= lit(lo) && col(pcol) <= lit(hi))
 
-  /** Exclusive upper bound for "starts with `prefix`": bump the
-    * rightmost ASCII char below 0x7f and drop the tail — every string
-    * with the prefix sorts strictly below it. None when the prefix
-    * has no such char: the probe then has no finite upper bound and
-    * prunes on the lower side only (still sound). */
-  private[graft] def prefixSuccessor(prefix: String): Option[String] = {
-    val i = prefix.lastIndexWhere(c => c < 0x7f)
-    if (i < 0) None
-    else Some(prefix.substring(0, i) + (prefix.charAt(i) + 1).toChar)
-  }
-
-  /** Manifest-pruned PREFIX scan: open only the live files whose
-    * string bounds can contain a key starting with `prefix` — the
-    * domain/path-prefix probe shape of a URL-keyed corpus ("all of
-    * en.wikipedia.org") answered from log metadata alone when commits
-    * are key-clustered. Residual `startsWith` keeps the result exact;
-    * returns the frame plus (files touched, files live). */
+  /** Manifest-pruned PREFIX scan: the rows whose `pcol` starts with
+    * `prefix`, scanning only the live files whose string bounds can
+    * hold such a key — the domain/path-prefix probe of a URL-keyed
+    * corpus ("all of en.wikipedia.org"). Returns the frame plus
+    * (files touched, files live). */
   def readPrefix(spark: SparkSession, root: String,
                  pcol: String, prefix: String,
                  version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // [prefix, successor): a file overlaps iff its max reaches the
-    // prefix and its min stays below the successor (strictly — but
-    // <= on the successor only ever ADDS a file, never loses one)
-    val touched = overlappingFilesString(spark, root, live, pcol,
-      Some(prefix), prefixSuccessor(prefix))
-    val residual = col(pcol).startsWith(prefix)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    prunedRead(spark, root, version, StringStartsWith(pcol, prefix),
+      col(pcol).startsWith(prefix))
   }
 
-  /** Whether the file might contain ANY of `values` in `pcol`:
-    * Some(true/false) from its parquet bloom, None when the file's
-    * schema predates the column entirely (only nulls — provably no
-    * match, but the caller tracks presence for the typo guard).
-    * Blocks without a bloom can't be skipped and count as maybe.
-    * Probe hashes follow the column's PHYSICAL type — a bloom over
-    * INT32 was built from 4-byte hashes, and probing it with longs
-    * would be a false NEGATIVE on every key (silent row loss). */
-  private def bloomMayContain(spark: SparkSession, root: String,
-                              rel: String, pcol: String,
-                              values: Seq[Long]): Option[Boolean] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(resolve(root, rel)), spark.sparkContext.hadoopConfiguration))
-    try {
-      import scala.jdk.CollectionConverters._
-      var saw = false
-      val may = reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == pcol) match {
-          case None => false // only nulls here: cannot match a value
-          case Some(cc) =>
-            saw = true
-            val bf = reader.getBloomFilterDataReader(block)
-              .readBloomFilter(cc)
-            bf == null || {
-              val hash: Long => Long =
-                cc.getPrimitiveType.getPrimitiveTypeName match {
-                  case PrimitiveTypeName.INT64 =>
-                    v => bf.hash(java.lang.Long.valueOf(v))
-                  case PrimitiveTypeName.INT32 =>
-                    v => bf.hash(java.lang.Integer.valueOf(v.toInt))
-                  case _ => return Some(true) // unsupported: maybe
-                }
-              values.exists(v => bf.findHash(hash(v)))
-            }
-        }
-      }
-      if (!saw && !may) None else Some(may)
-    } finally reader.close()
-  }
-
-  /** Point lookup with BLOOM skipping — the prune min/max ranges
-    * cannot make: when every file spans the whole key space (hash-
-    * distributed ingest, the usual shape for high-cardinality ids),
-    * range stats skip nothing, but a per-file bloom written at
+  /** Point lookup with BLOOM skipping: the rows whose `pcol` is one of
+    * `values`. Beyond what ranges prune, a per-file bloom written at
     * commit time ([[append]]'s `bloomCols`) skips every file that
-    * provably lacks all probed keys at ~one footer+bloom-page read
-    * per range-surviving file. Two-level prune: log-carried ranges
-    * first (zero IO), blooms on the survivors. Returns the frame
-    * plus (files touched, files live). False positives only ever ADD
-    * a file — never lose a row; the residual isin filter keeps the
-    * result exact either way. */
+    * provably lacks all probed keys — the prune min/max cannot make
+    * when every file spans the key space (hash-distributed ingest).
+    * False positives only ever ADD a file, never lose a row. Returns
+    * the frame plus (files touched, files live). */
   def pointLookup(spark: SparkSession, root: String,
                   pcol: String, values: Seq[Long],
                   version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pointLookup needs at least one value")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // files with log-carried stats range-prune for free; files
-    // without go straight to the bloom (the range check would open
-    // the same footer the bloom read is about to — one IO, not two)
-    val (logged, bare) = live.partition(_.mins.contains(pcol))
-    val ranged = overlappingFiles(spark, root, logged, pcol,
-      values.min, values.max) ++ bare
-    var sawColumn = logged.nonEmpty || live.isEmpty
-    val touched = ranged.filter { e =>
-      bloomMayContain(spark, root, e.path, pcol, values) match {
-        case Some(m) => sawColumn = true; m
-        case None => false // schema predates the column: only nulls
-      }
-    }
-    require(sawColumn || bare.isEmpty,
-      s"lookup column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    val residual = col(pcol).isin(values: _*)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
-  }
-
-  /** Whether the file might contain ANY of the STRING `values` in
-    * `pcol`, via its parquet bloom over the column's BINARY (UTF-8)
-    * representation. Some(true/false) from the bloom; None when the
-    * file's schema predates the column (only nulls — provably no
-    * match). A non-BINARY physical type means the probe's hashing
-    * assumption is wrong — never skip (Some(true)), exactness is
-    * preserved by the residual filter. */
-  private def stringBloomMayContain(spark: SparkSession, root: String,
-                                    rel: String, pcol: String,
-                                    values: Seq[String])
-      : Option[Boolean] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(resolve(root, rel)), spark.sparkContext.hadoopConfiguration))
-    try {
-      import scala.jdk.CollectionConverters._
-      var saw = false
-      val may = reader.getFooter.getBlocks.asScala.exists { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == pcol) match {
-          case None => false // only nulls here: cannot match a value
-          case Some(cc) =>
-            saw = true
-            if (cc.getPrimitiveType.getPrimitiveTypeName !=
-                PrimitiveTypeName.BINARY) return Some(true)
-            val bf = reader.getBloomFilterDataReader(block)
-              .readBloomFilter(cc)
-            bf == null || values.exists(v => bf.findHash(bf.hash(
-              org.apache.parquet.io.api.Binary.fromString(v))))
-        }
-      }
-      if (!saw && !may) None else Some(may)
-    } finally reader.close()
+    prunedRead(spark, root, version, In(pcol, values.toArray[Any]),
+      col(pcol).isin(values: _*))
   }
 
   /** [[pointLookup]] for STRING keys — the high-cardinality id shape
-    * of document stores (URLs, content hashes, doc ids): integer
-    * range stats can't carry strings, so every live file goes
-    * straight to its bloom, and files written with `bloomCols` on
-    * the string column skip at ~one footer+bloom-page read each.
-    * False positives only ever ADD a file; the residual isin keeps
-    * the result exact. Returns the frame plus the
-    * (files touched, files live) economics pair. */
+    * of document stores (URLs, content hashes, doc ids). A null value
+    * matches nothing (SQL IN). Returns the frame plus
+    * (files touched, files live). */
   def pointLookupString(spark: SparkSession, root: String,
                         pcol: String, values: Seq[String],
                         version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pointLookupString needs at least one value")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    // two-level prune, the numeric pointLookup posture: files with
-    // log-carried string ranges prune for free (zero IO); survivors
-    // and stat-less files go to their blooms
-    val vmin = values.reduce((a, b) => if (strLe(a, b)) a else b)
-    val vmax = values.reduce((a, b) => if (strLe(a, b)) b else a)
-    val (logged, bare) = live.partition(_.smins.contains(pcol))
-    val ranged = logged.filter(e =>
-      strLe(e.smins(pcol), vmax) && strLe(vmin, e.smaxs(pcol))) ++ bare
-    var sawColumn = logged.nonEmpty || live.isEmpty
-    val touched = ranged.filter { e =>
-      stringBloomMayContain(spark, root, e.path, pcol, values) match {
-        case Some(m) => sawColumn = true; m
-        case None => false // schema predates the column: only nulls
-      }
-    }
-    require(sawColumn || bare.isEmpty,
-      s"lookup column $pcol exists in NO live file of $root — " +
-        "misspelled column, not an evolved one")
-    val residual = col(pcol).isin(values: _*)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    prunedRead(spark, root, version, In(pcol, values.toArray[Any]),
+      col(pcol).isin(values: _*))
   }
 
   /** Exactly-once streaming append: commit `df` as a new version
@@ -2131,11 +1972,7 @@ object TableStore {
                    statsCols: Seq[String] = Nil,
                    bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "compactSmall")
+    val (prev, live, _) = fileSnapshot(spark, root, None, "compactSmall")
     val fs = fsOf(spark, new Path(root))
     val small = live.filter(e =>
       sizeOf(spark, root, e) < smallBytes)
@@ -2217,12 +2054,9 @@ object TableStore {
                   bloomCols: Seq[String] = Nil): Long = {
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val liveNow = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, liveNow, "deleteWhere")
-    val touched = overlappingFiles(spark, root, liveNow, pcol, lo, hi)
+    val (prev, liveNow, _) =
+      fileSnapshot(spark, root, None, "deleteWhere")
+    val touched = prunedFiles(spark, root, liveNow, within(pcol, lo, hi))
     if (touched.isEmpty) return prev
     // keep a row unless the predicate is DEFINITELY true: under
     // three-valued logic `!pred` drops NULL-valued rows the caller
@@ -2261,11 +2095,7 @@ object TableStore {
     val spark = df.sparkSession
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "replaceWhere")
+    val (prev, live, _) = fileSnapshot(spark, root, None, "replaceWhere")
     val store = read(spark, root, Some(prev))
     require(df.columns.sorted.sameElements(store.columns.sorted),
       s"replaceWhere schema mismatch at $root: batch " +
@@ -2299,7 +2129,7 @@ object TableStore {
           "slice must contain only rows it replaces, or re-runs " +
           "duplicate")
     }
-    val touched = overlappingFiles(spark, root, live, pcol, lo, hi)
+    val touched = prunedFiles(spark, root, live, within(pcol, lo, hi))
     val kept =
       if (touched.isEmpty) df.limit(0).select(store.columns.map(col): _*)
       else readLiveFiles(spark, root, prev, touched)
@@ -2409,11 +2239,7 @@ object TableStore {
                         precomputedSpan: Option[org.apache.spark.sql.Row]
                           = None): Long = {
     val spark = inserts.sparkSession
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, opName)
+    val (prev, live, _) = fileSnapshot(spark, root, None, opName)
     val store = read(spark, root, Some(prev))
     // schema contract: an upsert that widened or narrowed the row
     // shape would leave a mixed-schema live set behind — loud, not
@@ -2432,12 +2258,8 @@ object TableStore {
     val candidates: Seq[FileEntry] =
       if (span.isNullAt(0)) Seq.empty // no non-null keys: no matches
       else keyRows.schema(key).dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          overlappingFiles(spark, root, live, key,
-            span.getAs[Number](0).longValue, span.getAs[Number](1).longValue)
-        case StringType =>
-          overlappingFilesString(spark, root, live, key,
-            Some(span.getString(0)), Some(span.getString(1)))
+        case ByteType | ShortType | IntegerType | LongType | StringType =>
+          prunedFiles(spark, root, live, within(key, span.get(0), span.get(1)))
         case _ => live // unpruneable key type: exact scan decides
       }
     val keys = keyRows.select(col(key).as("__merge_key"))
@@ -2780,11 +2602,7 @@ object TableStore {
                      statsCols: Seq[String] = Nil,
                      bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "optimizeLayout")
+    val (prev, live, _) = fileSnapshot(spark, root, None, "optimizeLayout")
     if (live.isEmpty) {
       return commitLayoutRebasing(spark, root, prev + 1,
         Seq.empty, Seq.empty)
@@ -2823,12 +2641,9 @@ object TableStore {
                           bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     require(lo <= hi, s"empty scope interval [$lo, $hi]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "optimizeLayoutWhere")
-    val touched = overlappingFiles(spark, root, live, clusterCol, lo, hi)
+    val (prev, live, _) =
+      fileSnapshot(spark, root, None, "optimizeLayoutWhere")
+    val touched = prunedFiles(spark, root, live, within(clusterCol, lo, hi))
     if (touched.size < 2) return prev
     val bytes = touched.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -2863,11 +2678,7 @@ object TableStore {
                           statsCols: Seq[String] = Nil,
                           bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    requireNoDvs(spark, root, prev, live, "optimizeLayout")
+    val (prev, live, _) = fileSnapshot(spark, root, None, "optimizeLayout")
     if (live.isEmpty) {
       return commitLayoutRebasing(spark, root, prev + 1,
         Seq.empty, Seq.empty)
@@ -2887,33 +2698,19 @@ object TableStore {
       live.map(_.path))
   }
 
-  /** Manifest-pruned 2-D box read: open only the live files whose
-    * stats can intersect BOTH `x ∈ [xlo, xhi]` AND `y ∈ [ylo, yhi]`,
-    * then apply the residual row filter. Returns the frame plus the
-    * (files touched, files live) economics pair. On an
-    * [[optimizeLayoutCurve]]d table a box tight in EITHER dimension
-    * prunes, because curve tiles are compact in both — the claim the
-    * q_store_optimize_curve gate enforces loudly. */
+  /** Manifest-pruned 2-D box read: the rows with `x` ∈ [xlo, xhi]
+    * AND `y` ∈ [ylo, yhi], scanning only the live files whose bounds
+    * can intersect both. On an [[optimizeLayoutCurve]]d table a box
+    * tight in EITHER dimension prunes, because curve tiles are compact
+    * in both. Returns the frame plus (files touched, files live). */
   def readBox(spark: SparkSession, root: String,
               x: (String, Long, Long), y: (String, Long, Long),
               version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(x._2 <= x._3 && y._2 <= y._3,
       s"empty box [${x._2},${x._3}]×[${y._2},${y._3}]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val live = liveAt(spark, root, version.getOrElse(vs.max))
-    requireNoDvs(spark, root, version.getOrElse(vs.max), live,
-      "stats- and bloom-pruned reads")
-    val xPass = overlappingFiles(spark, root, live, x._1, x._2, x._3)
-    val touched = overlappingFiles(spark, root, xPass, y._1, y._2, y._3)
-    val residual = col(x._1).between(x._2, x._3) &&
-      col(y._1).between(y._2, y._3)
-    val df =
-      if (touched.nonEmpty)
-        readLiveFiles(spark, root, version.getOrElse(vs.max), touched)
-          .where(residual)
-      else read(spark, root, version).where(residual).limit(0)
-    (df, touched.size, live.size)
+    prunedRead(spark, root, version,
+      And(within(x._1, x._2, x._3), within(y._1, y._2, y._3)),
+      col(x._1).between(x._2, x._3) && col(y._1).between(y._2, y._3))
   }
 
   /** Zero-mutation VACUUM DRY RUN — what [[vacuum]](keepVersions)

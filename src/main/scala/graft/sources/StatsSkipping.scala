@@ -5,23 +5,22 @@ import org.apache.spark.sql.sources._
 import graft.ops.TableStore
 import graft.ops.TableStore.FileEntry
 
-/** Log-stats file skipping for the SQL surface: decide, from the
-  * commit log's per-file bounds ALONE (zero data IO), whether a file
-  * can possibly hold a row satisfying a pushed-down filter. This is
-  * the same evidence [[TableStore.readRange]]/`readPrefix` consult —
-  * re-expressed over Spark's `sources.Filter` ADT so one evaluator
-  * serves both the DSv2 pushdown path and the [[GraftFileIndex]]
-  * native-scan path (which translates its Catalyst filters to the
-  * same ADT).
+/** THE file-pruning predicate of the versioned store: from a file's
+  * [min, max] bounds alone, can it hold a row satisfying a
+  * `sources.Filter`? Every pruned store read calls it: the typed reads
+  * and interval-scoped rewrites of [[TableStore]], the DSv2 pushdown
+  * scan, the [[GraftFileIndex]] native scan (its Catalyst filters
+  * translated to this ADT) and the SQL DML planner. The bounds are the
+  * commit log's (zero IO) or, for a file whose log entry has none, one
+  * row group's footer bounds handed in by the store as a [[FileEntry]].
   *
   * Soundness contract: `mayContain` returns false ONLY when the
-  * logged bounds PROVE no row matches — unknown filter shapes,
-  * columns without logged stats, and null-related predicates (the log
-  * carries no null counts) all answer true. Truncated string bounds
-  * (the log's 64-char cap) only ever WIDEN a file's range, so every
-  * comparison stays conservative. The residual row filter is always
-  * re-applied by the scan, so a too-wide answer costs IO, never
-  * correctness.
+  * bounds PROVE no row matches — unknown filter shapes, columns
+  * without bounds, and null-related predicates (no null counts are
+  * kept) all answer true. Truncated string bounds (the log's 64-char
+  * cap) only ever WIDEN a file's range, so every comparison stays
+  * conservative. The caller always re-applies the filter to the rows
+  * it scans, so a too-wide answer costs IO, never correctness.
   */
 object StatsSkipping {
 
@@ -41,8 +40,8 @@ object StatsSkipping {
 
   import TableStore.strLe
 
-  // per-file bound tests; None bounds (column not in the file's logged
-  // stats) always answer true — pruning needs proof, absence isn't it
+  // per-file bound tests; None bounds (column not in the entry's
+  // bounds) always answer true — pruning needs proof, absence isn't it
   private def longOverlap(e: FileEntry, col: String,
                           lo: Option[Long], hi: Option[Long]): Boolean =
     (e.mins.get(col), e.maxs.get(col)) match {
@@ -66,6 +65,17 @@ object StatsSkipping {
     e.maxs.get(col).forall(_ > v)
   private def longLt(e: FileEntry, col: String, v: Long): Boolean =
     e.mins.get(col).forall(_ < v)
+
+  /** Exclusive upper bound for "starts with `prefix`": bump the
+    * rightmost ASCII char below 0x7f and drop the tail — every string
+    * with the prefix sorts strictly below it. None when the prefix
+    * has no such char: the probe then has no finite upper bound and
+    * prunes on the lower side only (still sound). */
+  private def prefixSuccessor(prefix: String): Option[String] = {
+    val i = prefix.lastIndexWhere(c => c < 0x7f)
+    if (i < 0) None
+    else Some(prefix.substring(0, i) + (prefix.charAt(i) + 1).toChar)
+  }
 
   /** Can `e` possibly hold a row satisfying `f`? Conservative. */
   def mayContain(e: FileEntry, f: Filter): Boolean = f match {
@@ -97,7 +107,7 @@ object StatsSkipping {
     case StringStartsWith(a, p) if p.nonEmpty =>
       // [p, successor(p)): the readPrefix window; a successor-less
       // prefix (all chars >= 0x7f) prunes on the lower side only
-      strOverlap(e, a, Some(p), TableStore.prefixSuccessor(p))
+      strOverlap(e, a, Some(p), prefixSuccessor(p))
     case _ => true // IsNull/IsNotNull/Not/unknown: no null counts, no proof
   }
 

@@ -483,6 +483,12 @@ class TableStoreSpec extends SparkSpec {
     val (ints, t5, _) = TableStore.pointLookupString(
       spark, root, "v", Seq("42"))
     assert(t5 == 3 && ints.count() == 2L) // v=42 in both a and b files
+    // a null probe matches nothing (SQL IN) and never throws
+    val (withNull, t6, _) = TableStore.pointLookupString(
+      spark, root, "k", Seq("doc-a-42", null))
+    assert(withNull.select("v").collect().map(_.getLong(0)).toSeq ==
+      Seq(42L))
+    assert(t6 == 1) // only doc-a's bloom and bounds hold "doc-a-42"
     // typos stay loud
     val ex = intercept[IllegalArgumentException] {
       TableStore.pointLookupString(spark, root, "kk", Seq("x"))
