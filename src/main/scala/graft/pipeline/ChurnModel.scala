@@ -40,16 +40,20 @@ object ChurnModel {
     * reference's '0'/'1' and the load's 'Yes'/'No' conventions are
     * accepted. */
   def extractFeatures(spark: SparkSession, layers: Warehouse.Layers): DataFrame = {
-    val fact = spark.read.parquet(layers.fact)
-    val dc = spark.read.parquet(layers.dim("customer"))
+    val fact = spark.read.schema(ChurnSchema.fact).parquet(layers.fact)
+    val dc = spark.read.schema(ChurnSchema.dimCustomer)
+      .parquet(layers.dim("customer"))
       .select(col("customer_key").as("_ck"), col("customer_id"),
         col("gender"), col("senior_citizen"), col("partner"),
         col("dependents"))
-    val dk = spark.read.parquet(layers.dim("contract"))
+    val dk = spark.read.schema(ChurnSchema.dimContract)
+      .parquet(layers.dim("contract"))
       .select(col("contract_key"), col("contract_type"))
-    val dp = spark.read.parquet(layers.dim("payment_method"))
+    val dp = spark.read.schema(ChurnSchema.dimPaymentMethod)
+      .parquet(layers.dim("payment_method"))
       .select(col("payment_key"), col("payment_method"))
-    val ds = spark.read.parquet(layers.dim("services"))
+    val ds = spark.read.schema(ChurnSchema.dimServices)
+      .parquet(layers.dim("services"))
       .select(col("service_key"), col("internet_service"),
         col("phone_service"), col("online_security"), col("streaming_tv"))
     fact

@@ -58,6 +58,39 @@ object ChurnSchema {
     case f => f
   })
 
+  /** A gold dim's schema: its surrogate key, then its value columns
+    * (the layout [[Warehouse.loadDim]]/[[Warehouse.loadEntityDim]]
+    * write). */
+  private[pipeline] def dim(keyCol: String, keyType: DataType,
+                            values: StructType): StructType =
+    StructType(StructField(keyCol, keyType) +: values.fields.toIndexedSeq)
+
+  /** Gold dims (Gold/DDL_gold.sql). dim_customer is hash-keyed (LONG);
+    * the combo dims take dense INT keys. */
+  val dimCustomer: StructType = dim("customer_key", LongType, StructType(
+    Seq("customer_id", "gender", "senior_citizen", "partner", "dependents",
+      "city", "state").map(s)))
+  val dimContract: StructType =
+    dim("contract_key", IntegerType, StructType(Seq(s("contract_type"))))
+  val dimPaymentMethod: StructType =
+    dim("payment_key", IntegerType, StructType(Seq(s("payment_method"))))
+  val dimChurnReason: StructType =
+    dim("reason_key", IntegerType, StructType(Seq(s("churn_reason"))))
+  val dimServices: StructType =
+    dim("service_key", IntegerType, StructType(serviceCols.map(s)))
+
+  /** fact_customer_churn: the five dim keys, the measures, the load's
+    * run date. */
+  val fact: StructType = StructType(Seq(
+    StructField("customer_key", LongType),
+    StructField("contract_key", IntegerType),
+    StructField("payment_key", IntegerType),
+    StructField("reason_key", IntegerType),
+    StructField("service_key", IntegerType),
+    d("tenure_in_months"), d("monthly_charges_amount"), d("total_charges"),
+    s("churn_flag"), d("churn_score"), d("cltv"),
+    StructField("run_date", DateType)))
+
   /** Bronze partial-update list (reference ON CONFLICT DO UPDATE,
     * dags/SQL/Bronze/insert_data_into_bronze.sql:60-77): these columns
     * refresh on conflict; every other column keeps the existing value. */

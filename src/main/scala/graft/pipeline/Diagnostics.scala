@@ -35,14 +35,16 @@ object Diagnostics {
     // per-path FS resolution (layers may live on a non-default scheme)
     val fs = new Path(layers.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(
+    (Seq(
       "staging" -> layers.staging,
       "bronze" -> layers.bronze,
       "silver" -> layers.silver,
       "quarantine" -> layers.quarantine,
       "quarantine_reprocess" -> layers.reprocessQuarantine,
       "ledger" -> layers.ledger,
-      "fact" -> layers.fact)
+      "fact" -> layers.fact) ++
+      Seq("customer", "contract", "payment_method", "churn_reason", "services")
+        .map(n => s"dim_$n" -> layers.dim(n)))
       .map { case (name, path) => probe(fs, name, path) }
       .toDF()
   }

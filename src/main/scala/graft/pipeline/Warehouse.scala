@@ -1,8 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.ops._
 
 /** The full medallion composition — the reference's
@@ -12,9 +17,16 @@ import graft.ops._
   * DQ gate). Every step composes an existing engine op; this file adds
   * COMPOSITION, not new operator semantics.
   *
-  * Layer storage is path-addressed parquet under one root; overwrite
-  * layers go through [[Upsert.atomicOverwrite]] (the reference gets
-  * crash safety from Postgres transactions; Parquet needs it built).
+  * Layer storage is path-addressed parquet under one root. Bronze,
+  * silver, staging and the ledger are overwritten through
+  * [[Upsert.atomicOverwrite]] (the reference gets crash safety from
+  * Postgres transactions; Parquet needs it built). The gold dims and
+  * the fact are APPEND-ONLY: a run writes only the rows it adds, as
+  * files staged next to the layer and renamed in (each combo dim's
+  * new rows are one file, so they commit with one rename). A crashed
+  * append is safe to rerun: each load anti-joins against what the
+  * layer already holds, so rows an earlier attempt appended are
+  * skipped, never added twice.
   *
   * Scale: staging→bronze is the only keyed shuffle (full-outer merge
   * on customer_id — broadcastable when the nightly batch is small
@@ -187,7 +199,9 @@ object Warehouse {
   }
 
   /** Incremental dim load (J8): values not yet in the dim get fresh
-    * surrogate keys above the current max.
+    * surrogate keys above the current max, in value order (ascending,
+    * nulls first), and only those rows are appended. Returns the whole
+    * dim (existing and new rows) as a local frame.
     *
     * The reference carries a key-equality ASYMMETRY (SURVEY §7.4): dim
     * anti-join loads use plain `=` — NULL-bearing combos never match
@@ -201,34 +215,120 @@ object Warehouse {
   def loadDim(spark: SparkSession, path: String, values: DataFrame,
               keyCol: String, valueCols: Seq[String],
               faithful: Boolean = false): DataFrame = {
-    val dimSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(keyCol,
-        org.apache.spark.sql.types.IntegerType) +:
-        values.schema.fields.toIndexedSeq)
-    val existing = readOrEmpty(spark, path, dimSchema)
-    val distinctNew = values.distinct()
-      .join(existing,
-        valueCols.map(c =>
-          if (faithful) values(c) === existing(c)
-          else values(c) <=> existing(c)).reduce(_ && _),
-        "left_anti")
-    // dims are distinct-combo-sized: the single-partition window is
-    // bounded by combo cardinality, never data size (same argument as
-    // StarQueries.dimSegment) — and the bound is ENFORCED: the key
-    // expression raises past BoundedDim.MaxCombos instead of silently
-    // funnelling an entity-sized dim through one task. maxKey is one
-    // scalar.
-    val maxKey = existing.agg(coalesce(max(col(keyCol)), lit(0))).head().getInt(0)
-    val withKeys = distinctNew.withColumn(keyCol,
-      graft.ops.BoundedDim.cappedKey(
-        row_number().over(
-          Window.orderBy(valueCols.map(c => col(c).asc_nulls_first): _*))
-          + maxKey,
-        s"loadDim($path)").cast("int"))
-      .select(col(keyCol) +: valueCols.map(col): _*)
-    val updated = existing.unionByName(withKeys)
-    Upsert.atomicOverwrite(updated, path)
-    spark.read.schema(dimSchema).parquet(path)
+    val vals = values.select(valueCols.map(col): _*)
+    resolveCombos(spark, Seq(ComboDim(path,
+      ChurnSchema.dim(keyCol, IntegerType, vals.schema), vals)), faithful).head
+  }
+
+  /** A combo dim for [[resolveCombos]]: its path, its schema (the
+    * surrogate key first) and its values, one column per value field
+    * of the schema, in schema order. */
+  private final case class ComboDim(path: String, schema: StructType,
+                                    values: DataFrame)
+
+  /** Resolves combo dims together in ONE Spark execution: every dim's
+    * silver combos and existing rows go through one keyed aggregate
+    * (grouping is null-safe, so `faithful` adds back the `=`
+    * semantics: a NULL-bearing combo counts as new even when present),
+    * and one window partitioned by dim numbers the new combos above
+    * that dim's max key. The execution collects each dim's existing
+    * and new rows; each dim with new rows then appends them as ONE
+    * file, and a dim with none writes nothing.
+    *
+    * Dims are distinct-combo-sized, so the rows collected are bounded
+    * by combo cardinality, never data size — and the bound is
+    * ENFORCED: the key expression raises past BoundedDim.MaxCombos
+    * inside the window's task, before any offending row is collected.
+    * Returns each dim's full row set as a local frame, in
+    * `dims` order. */
+  private def resolveCombos(spark: SparkSession, dims: Seq[ComboDim],
+                            faithful: Boolean): Seq[DataFrame] = {
+    // one column per (dim, value column); a dim's rows carry NULL in
+    // every other dim's columns, so ordering by all of them orders
+    // each dim by its own values
+    val wide = dims.zipWithIndex.flatMap { case (d, i) =>
+      d.schema.fields.toIndexedSeq.tail.map(f => (i, f, s"_v${i}_${f.name}")) }
+    def project(i: Int, df: DataFrame, key: Column, fromSilver: Boolean,
+                nullCombo: Column): DataFrame =
+      df.select(Seq(lit(i).as("_d"), key.cast("int").as("_key"),
+        lit(fromSilver).as("_in"), nullCombo.as("_nullc")) ++
+        wide.map { case (j, f, n) =>
+          (if (j == i) col(f.name) else lit(null)).cast(f.dataType).as(n) }: _*)
+    val existing = dims.map(d => readOrEmpty(spark, d.path, d.schema))
+    val kept = dims.indices.map(i => project(i, existing(i),
+      col(dims(i).schema.head.name), fromSilver = false, lit(false)))
+    val offered = dims.indices.map { i =>
+      val anyNull = dims(i).values.columns.map(col(_).isNull).reduce(_ || _)
+      project(i, dims(i).values, lit(null), fromSilver = true,
+        lit(faithful) && anyNull)
+    }
+    val wideCols = wide.map { case (_, _, n) => col(n) }
+    val grouped = (kept ++ offered).reduce(_ unionByName _)
+      .groupBy(col("_d") +: wideCols: _*)
+      .agg(max("_key").as("_key"), max("_in").as("_in"),
+        max("_nullc").as("_nullc"))
+      .withColumn("_new",
+        col("_in") && (col("_key").isNull || col("_nullc")))
+    val byDim = Window.partitionBy(col("_d"))
+    val rank = sum(col("_new").cast("int")).over(byDim
+      .orderBy(wideCols.map(_.asc_nulls_first): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val key = coalesce(max(col("_key")).over(byDim), lit(0)) + rank
+    val capped = dims.indices.tail.foldLeft(when(col("_d") === 0,
+      BoundedDim.cappedKey(key, s"loadDim(${dims.head.path})"))) { (c, i) =>
+      c.when(col("_d") === i,
+        BoundedDim.cappedKey(key, s"loadDim(${dims(i).path})"))
+    }
+    val fresh = grouped.withColumn("_k", capped).filter(col("_new"))
+      .select(Seq(col("_d"), col("_k").cast("int").as("_key"),
+        lit(true).as("_new")) ++ wideCols: _*)
+    val old = kept.reduce(_ unionByName _)
+      .select(Seq(col("_d"), col("_key"), lit(false).as("_new")) ++ wideCols: _*)
+    val rows = fresh.unionByName(old).collect()
+
+    dims.zipWithIndex.map { case (d, i) =>
+      val cols = wide.collect { case (`i`, _, n) => n }
+      val mine = rows.filter(_.getAs[Int]("_d") == i)
+      def dimRow(r: Row) =
+        Row.fromSeq(r.getAs[Any]("_key") +: cols.map(r.getAs[Any](_)))
+      val added = mine.filter(_.getAs[Boolean]("_new")).map(dimRow)
+        .sortBy(_.getInt(0))
+      if (added.nonEmpty || !pathExists(spark, d.path))
+        appendFiles(spark.createDataFrame(added.toSeq.asJava, d.schema)
+          .coalesce(1), d.path)
+      spark.createDataFrame(mine.map(dimRow).toSeq.asJava, d.schema)
+    }
+  }
+
+  /** Append-only commit: `df` is written to a staging dir next to
+    * `path`, then every staged part file that holds rows is renamed
+    * into `path`. Readers see a whole file or none of it; a frame with
+    * no rows changes nothing; a layer that doesn't exist yet is
+    * created (empty when `df` is). */
+  private def appendFiles(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    val fs = fsFor(spark, path)
+    val target = new Path(path)
+    val staged = new Path(path + ".__append__")
+    fs.delete(staged, true)
+    df.write.mode("overwrite").parquet(staged.toString)
+    if (!fs.exists(target)) {
+      if (!fs.rename(staged, target))
+        throw new java.io.IOException(s"cannot publish $path")
+    } else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      fs.listStatus(staged).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+        .filter { p =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+          try reader.getRecordCount > 0 finally reader.close()
+        }
+        .foreach { p =>
+          if (!fs.rename(p, new Path(target, p.getName)))
+            throw new java.io.IOException(s"cannot append $p to $path")
+        }
+      fs.delete(staged, true)
+    }
   }
 
   /** Entity dim (dim_customer): one row per NATURAL key — the
@@ -237,7 +337,9 @@ object Warehouse {
     * small combo dims do) would grow a second row for a customer whose
     * city changes and double their fact rows downstream. Attributes
     * are first-seen; within-batch duplicate keys resolve
-    * deterministically (ordered pick).
+    * deterministically (ordered pick). Only the unseen ids are
+    * appended, as a distributed write; a batch with none writes
+    * nothing.
     *
     * Surrogate = xxhash64 of the natural key: a pure per-row
     * projection. An entity dim's cardinality IS data-sized, so the
@@ -249,13 +351,10 @@ object Warehouse {
   def loadEntityDim(spark: SparkSession, path: String, values: DataFrame,
                     keyCol: String, naturalKey: String,
                     valueCols: Seq[String]): DataFrame = {
-    val dimSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(keyCol,
-        org.apache.spark.sql.types.LongType) +:
-        values.schema.fields.toIndexedSeq)
+    val dimSchema = ChurnSchema.dim(keyCol, LongType, values.schema)
     val existing = readOrEmpty(spark, path, dimSchema)
     val deduped = values.withColumn("_rn",
-        row_number().over(org.apache.spark.sql.expressions.Window
+        row_number().over(Window
           .partitionBy(col(naturalKey))
           .orderBy(valueCols.map(c => col(c).asc_nulls_first): _*)))
       .filter(col("_rn") === 1).drop("_rn")
@@ -263,8 +362,7 @@ object Warehouse {
       .join(existing.select(col(naturalKey)), Seq(naturalKey), "left_anti")
       .withColumn(keyCol, xxhash64(col(naturalKey)))
       .select(col(keyCol) +: valueCols.map(col): _*)
-    val updated = existing.unionByName(fresh)
-    Upsert.atomicOverwrite(updated, path)
+    appendFiles(fresh, path)
     spark.read.schema(dimSchema).parquet(path)
   }
 
@@ -272,7 +370,9 @@ object Warehouse {
     * with the reference's expression keys — REPLACE-normalized
     * contract, TRIM/UPPER churn_reason with 'n/a' default, and the
     * 9-column null-safe composite services join — then the anti-join
-    * on customer_key keeps the append idempotent. */
+    * on customer_key keeps the append idempotent. The four combo dims
+    * resolve together ([[resolveCombos]]) and the fact joins their
+    * resolved rows; nothing reads a dim back but dim_customer. */
   def loadGold(spark: SparkSession, layers: Layers, runDate: String): Unit = {
     val silver = spark.read.schema(ChurnSchema.silver).parquet(layers.silver)
 
@@ -281,37 +381,32 @@ object Warehouse {
     val reasonNorm =
       upper(trim(coalesce(col("churn_reason"), lit("n/a"))))
 
-    val customerDimCols = Seq("customer_id", "gender", "senior_citizen",
-      "partner", "dependents", "city", "state")
+    val customerDimCols = ChurnSchema.dimCustomer.fieldNames.toSeq.tail
     val dimCustomer = loadEntityDim(spark, layers.dim("customer"),
       silver.select(customerDimCols.map(col): _*),
       "customer_key", "customer_id", customerDimCols)
-    val dimContract = loadDim(spark, layers.dim("contract"),
-      silver.select(contractNorm.as("contract_type")),
-      "contract_key", Seq("contract_type"))
-    val dimPayment = loadDim(spark, layers.dim("payment_method"),
-      silver.select(col("payment_method")),
-      "payment_key", Seq("payment_method"))
-    val dimReason = loadDim(spark, layers.dim("churn_reason"),
-      silver.select(reasonNorm.as("churn_reason")),
-      "reason_key", Seq("churn_reason"))
-    val dimServices = loadDim(spark, layers.dim("services"),
-      silver.select(ChurnSchema.serviceCols.map(col): _*),
-      "service_key", ChurnSchema.serviceCols)
-
-    val factExists = pathExists(spark, layers.fact)
+    val combos = resolveCombos(spark, Seq(
+      ComboDim(layers.dim("contract"), ChurnSchema.dimContract,
+        silver.select(contractNorm.as("contract_type"))),
+      ComboDim(layers.dim("payment_method"), ChurnSchema.dimPaymentMethod,
+        silver.select(col("payment_method"))),
+      ComboDim(layers.dim("churn_reason"), ChurnSchema.dimChurnReason,
+        silver.select(reasonNorm.as("churn_reason"))),
+      ComboDim(layers.dim("services"), ChurnSchema.dimServices,
+        silver.select(ChurnSchema.serviceCols.map(col): _*))),
+      faithful = false)
 
     // prefix every dim value column: the fact build joins five dims
     // whose natural columns all exist on the silver side too
     val dc = dimCustomer.select(col("customer_key"),
       col("customer_id").as("_dc_id"))
-    val dk = dimContract.select(col("contract_key"),
+    val dk = combos(0).select(col("contract_key"),
       col("contract_type").as("_dk_ct"))
-    val dp = dimPayment.select(col("payment_key"),
+    val dp = combos(1).select(col("payment_key"),
       col("payment_method").as("_dp_pm"))
-    val dr = dimReason.select(col("reason_key"),
+    val dr = combos(2).select(col("reason_key"),
       col("churn_reason").as("_dr_cr"))
-    val ds = dimServices.select(col("service_key") +:
+    val ds = combos(3).select(col("service_key") +:
       ChurnSchema.serviceCols.map(c => col(c).as(s"_ds_$c")): _*)
 
     // null-safe keys throughout: the dims were LOADED null-safely
@@ -335,12 +430,12 @@ object Warehouse {
         col("churn_score"), col("cltv"),
         to_date(lit(runDate)).as("run_date"))
 
-    val toAppend = if (factExists) {
-      val existingFact = spark.read.parquet(layers.fact)
+    val toAppend = if (pathExists(spark, layers.fact)) {
+      val existingFact = spark.read.schema(ChurnSchema.fact).parquet(layers.fact)
       fact.join(existingFact.select("customer_key"),
         Seq("customer_key"), "left_anti")
     } else fact
-    toAppend.write.mode("append").parquet(layers.fact)
+    appendFiles(toAppend, layers.fact)
   }
 
   /** A12: the DAG's two hard value checks, at the DAG's positions —
@@ -356,7 +451,7 @@ object Warehouse {
 
   def dqGoldCheck(spark: SparkSession, layers: Layers): Unit =
     Validate.valueCheck(
-      spark.read.parquet(layers.fact)
+      spark.read.schema(ChurnSchema.fact).parquet(layers.fact)
         .filter(col("customer_key").isNull ||
           col("contract_key").isNull || col("service_key").isNull ||
           col("monthly_charges_amount") < 0 || col("total_charges") < 0 ||

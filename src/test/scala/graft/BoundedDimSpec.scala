@@ -35,4 +35,17 @@ class BoundedDimSpec extends SparkSpec {
       msg.contains("loadEntityDim"),
       s"expected the bounded-dim error, got: $msg")
   }
+
+  test("loadDim past MaxCombos fails in the plan, before any dim write") {
+    val path = graft.TempRoots.create("graft_bounded") + "/dim"
+    val values = spark.range(BoundedDim.MaxCombos + 1)
+      .select(col("id").cast("string").as("v"))
+    val ex = intercept[Exception](graft.pipeline.Warehouse.loadDim(
+      spark, path, values, "k", Seq("v")))
+    val msg = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msg.contains(s"loadDim($path)") && msg.contains("loadEntityDim"),
+      s"expected the bounded-dim error, got: $msg")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+  }
 }

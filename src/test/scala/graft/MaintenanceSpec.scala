@@ -18,6 +18,11 @@ class MaintenanceSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getBoolean(2)).toMap
     assert(probes("bronze"))
     assert(!probes("silver") && !probes("fact"))
+    // the gold dims are probed too
+    spark.range(3).toDF("contract_key").write.parquet(layers.dim("contract"))
+    val dimProbes = Diagnostics.probeLayers(spark, layers).collect()
+      .map(r => r.getString(0) -> r.getBoolean(2)).toMap
+    assert(dimProbes("dim_contract") && !dimProbes("dim_customer"))
     val bronzeRow = Diagnostics.probeLayers(spark, layers)
       .filter(col("layer") === "bronze").head()
     assert(bronzeRow.getLong(3) > 0 && bronzeRow.getLong(4) > 0,

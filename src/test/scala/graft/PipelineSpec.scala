@@ -1,6 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlExecutions
 import graft.pipeline._
 
 /** End-to-end medallion pipeline over a churn-shaped fixture
@@ -136,12 +138,73 @@ class PipelineSpec extends SparkSpec {
       ClassicHeader +: (1 to 5).map(i => classicRow(s"I00$i")))
     Warehouse.run(spark, landing, layers, "2026-04-01")
     val n1 = spark.read.parquet(layers.fact).count()
+    val dimFiles1 = dimFiles(layers)
     Warehouse.run(spark, landing, layers, "2026-04-02")
     val n2 = spark.read.parquet(layers.fact).count()
     assert(n1 == 5 && n2 == 5, "anti-join must keep the fact stable")
     // dims stable too (null-safe incremental load)
     assert(spark.read.parquet(layers.dim("services")).count() == 1)
+    // append-only dims: nothing new, so no dim file was rewritten
+    assert(dimFiles(layers) == dimFiles1)
+    // and the rerun's gold load runs no write under a combo dim
+    val (_, executions) = SqlExecutions.during(spark)(
+      Warehouse.loadGold(spark, layers, "2026-04-03"))
+    val comboDims = Seq("contract", "payment_method", "churn_reason",
+      "services").map(layers.dim)
+    // the probe does see writes: the fact's append stages one
+    assert(executions.flatten.exists(_.contains(layers.fact)), executions)
+    assert(!executions.flatten.exists(p => comboDims.exists(p.contains)),
+      executions)
+    assert(dimFiles(layers) == dimFiles1)
+
+    // crash after the dims append, before the fact append: a plain
+    // file where the fact should be fails the fact write only
+    val landing2 = s"$root/landing2"
+    writeCsv(landing2, "classic.csv", ClassicHeader +: Seq(
+      classicRow("I006", payment = "Credit card (automatic)"),
+      classicRow("I007").replace("Month-to-month", "Two year")))
+    val clean = Warehouse.validateStaging(spark,
+      Warehouse.loadStaging(spark, landing2), layers, "2026-04-04")
+    Warehouse.upsertBronze(spark, clean, layers)
+    Warehouse.refreshSilver(spark, layers)
+    val fs = org.apache.hadoop.fs.FileSystem
+      .get(spark.sparkContext.hadoopConfiguration)
+    val factPath = new org.apache.hadoop.fs.Path(layers.fact)
+    val parked = new org.apache.hadoop.fs.Path(layers.fact + "_parked")
+    assert(fs.rename(factPath, parked))
+    java.nio.file.Files.write(java.nio.file.Paths.get(layers.fact),
+      "not parquet".getBytes("UTF-8"))
+    intercept[Exception](Warehouse.loadGold(spark, layers, "2026-04-04"))
+    assert(spark.read.parquet(layers.dim("payment_method")).count() == 2,
+      "the crashed run appended its dims")
+    assert(fs.delete(factPath, false) && fs.rename(parked, factPath))
+    Warehouse.loadGold(spark, layers, "2026-04-04")
+    for ((name, key, values) <- Seq(
+        ("customer", "customer_key", Seq("customer_id")),
+        ("contract", "contract_key", Seq("contract_type")),
+        ("payment_method", "payment_key", Seq("payment_method")),
+        ("churn_reason", "reason_key", Seq("churn_reason")),
+        ("services", "service_key", ChurnSchema.serviceCols))) {
+      val dim = spark.read.parquet(layers.dim(name))
+      val n = dim.count()
+      assert(dim.select(key).distinct().count() == n, s"dim_$name keys")
+      assert(dim.select(values.map(col): _*).distinct().count() == n,
+        s"dim_$name values")
+    }
+    assert(spark.read.parquet(layers.dim("contract")).count() == 2)
+    val fact = spark.read.parquet(layers.fact)
+    assert(fact.count() == 7 &&
+      fact.select("customer_key").distinct().count() == 7)
   }
+
+  /** Every file under the five gold dims. */
+  private def dimFiles(layers: Warehouse.Layers): Set[String] =
+    Seq("customer", "contract", "payment_method", "churn_reason", "services")
+      .flatMap { n =>
+        val dir = java.nio.file.Paths.get(layers.dim(n))
+        val s = java.nio.file.Files.walk(dir)
+        try s.iterator().asScala.map(_.toString).toList finally s.close()
+      }.toSet
 
   test("plain run on an empty landing dir skips cleanly") {
     val root = freshRoot("empty"); val layers = Warehouse.Layers(root)
