@@ -1,13 +1,17 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData,
+  ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{And, EqualTo, Filter,
   GreaterThanOrEqual, In, LessThanOrEqual, StringStartsWith}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sources.StatsSkipping
 
@@ -236,70 +240,92 @@ object TableStore {
     org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
       org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0
 
-  /** Rows + per-column [min, max] per declared stats column, from the
-    * footer — one read per file, at write time only. Columns dispatch
-    * on their PHYSICAL storage: plain integers ride the long maps,
-    * UTF-8 strings ride the (truncated) string maps, and anything
-    * else — annotated storage whose raw footer values would be lies —
-    * stays a loud error. */
-  private def footerInfo(spark: SparkSession, f: Path,
+  /** Data-file footer memo, keyed by resolved path and byte length.
+    * A footer read once — at write time by [[writeData]], or by the
+    * first read that plans over the file — serves every later prune
+    * and schema resolution with zero IO. Unlike [[logDirCache]], an
+    * entry is never re-checked against a listing: data files are
+    * written once into attempt-unique dirs and never rewritten in
+    * place, so a (path, length) names one content for the JVM's life.
+    * Bounded by entry count, not bytes (a footer grows with row groups
+    * times columns): cleared wholesale past 4096 files. */
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), ParquetMetadata]()
+
+  /** The footer of data file `path` whose length is `len` (the log's
+    * `bytes`; 0 for pre-upgrade entries), through [[footerCache]]. */
+  private def footerOf(spark: SparkSession, path: String,
+                       len: Long): ParquetMetadata = {
+    val key = (path, len)
+    val hit = footerCache.get(key)
+    if (hit != null) return hit
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(path), spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    if (footerCache.size > 4096) footerCache.clear()
+    footerCache.put(key, footer)
+    footer
+  }
+
+  /** Rows + per-column [min, max] per declared stats column, from
+    * file `f`'s footer. Columns dispatch on their PHYSICAL storage:
+    * plain integers ride the long maps, UTF-8 strings ride the
+    * (truncated) string maps, and anything else — annotated storage
+    * whose raw footer values would be lies — stays a loud error. */
+  private def footerInfo(footer: ParquetMetadata, f: String,
                          statsCols: Seq[String])
       : (Long, Map[String, Long], Map[String, Long],
          Map[String, String], Map[String, String]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      f, spark.sparkContext.hadoopConfiguration))
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val nums = Map.newBuilder[String, (Long, Long)]
-      val strs = Map.newBuilder[String, (String, String)]
-      statsCols.foreach { c =>
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == c)
-        require(rows == 0 || chunks.nonEmpty, s"stats column $c not in $f")
-        val isString = chunks.forall(ch => stringStatsType(ch.getPrimitiveType))
-        if (!isString)
-          chunks.foreach(ch => require(plainStatsType(ch.getPrimitiveType),
-            s"stats column $c in $f is logically annotated " +
-              s"${ch.getPrimitiveType.getLogicalTypeAnnotation} — its raw " +
-              "footer integers are unscaled/encoded and would plan " +
-              "pruning from misinterpreted values; declare a plain " +
-              "integer or string column instead"))
-        val ss = chunks.map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
-        // an all-null column has no range — omit the key; pruning
-        // treats the file as unskippable for that column
-        if (ss.nonEmpty && isString) {
-          val vals = ss.map { st =>
-            (st.genericGetMin, st.genericGetMax) match {
-              case (a: Binary, b: Binary) =>
-                (a.toStringUsingUTF8, b.toStringUsingUTF8)
-              case other => throw new IllegalArgumentException(
-                s"stats column $c in $f is not string-typed: $other")
-            }
+    import scala.jdk.CollectionConverters._
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    val nums = Map.newBuilder[String, (Long, Long)]
+    val strs = Map.newBuilder[String, (String, String)]
+    statsCols.foreach { c =>
+      val chunks = blocks.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == c)
+      require(rows == 0 || chunks.nonEmpty, s"stats column $c not in $f")
+      val isString = chunks.forall(ch => stringStatsType(ch.getPrimitiveType))
+      if (!isString)
+        chunks.foreach(ch => require(plainStatsType(ch.getPrimitiveType),
+          s"stats column $c in $f is logically annotated " +
+            s"${ch.getPrimitiveType.getLogicalTypeAnnotation} — its raw " +
+            "footer integers are unscaled/encoded and would plan " +
+            "pruning from misinterpreted values; declare a plain " +
+            "integer or string column instead"))
+      val ss = chunks.map(_.getStatistics)
+        .filter(st => st != null && st.hasNonNullValue)
+      // an all-null column has no range — omit the key; pruning
+      // treats the file as unskippable for that column
+      if (ss.nonEmpty && isString) {
+        val vals = ss.map { st =>
+          (st.genericGetMin, st.genericGetMax) match {
+            case (a: Binary, b: Binary) =>
+              (a.toStringUsingUTF8, b.toStringUsingUTF8)
+            case other => throw new IllegalArgumentException(
+              s"stats column $c in $f is not string-typed: $other")
           }
-          val mn = vals.map(_._1).reduce((a, b) => if (strLe(a, b)) a else b)
-          val mx = vals.map(_._2).reduce((a, b) => if (strLe(a, b)) b else a)
-          truncUpper(mx).foreach(u => strs += c -> (truncLower(mn), u))
-        } else if (ss.nonEmpty) {
-          val vals = ss.map { st =>
-            (st.genericGetMin, st.genericGetMax) match {
-              case (a: java.lang.Number, b: java.lang.Number) =>
-                (a.longValue, b.longValue)
-              case other => throw new IllegalArgumentException(
-                s"stats column $c in $f is not integer-typed: $other")
-            }
-          }
-          nums += c -> (vals.map(_._1).min, vals.map(_._2).max)
         }
+        val mn = vals.map(_._1).reduce((a, b) => if (strLe(a, b)) a else b)
+        val mx = vals.map(_._2).reduce((a, b) => if (strLe(a, b)) b else a)
+        truncUpper(mx).foreach(u => strs += c -> (truncLower(mn), u))
+      } else if (ss.nonEmpty) {
+        val vals = ss.map { st =>
+          (st.genericGetMin, st.genericGetMax) match {
+            case (a: java.lang.Number, b: java.lang.Number) =>
+              (a.longValue, b.longValue)
+            case other => throw new IllegalArgumentException(
+              s"stats column $c in $f is not integer-typed: $other")
+          }
+        }
+        nums += c -> (vals.map(_._1).min, vals.map(_._2).max)
       }
-      val nr = nums.result(); val sr = strs.result()
-      (rows, nr.map { case (c, r) => c -> r._1 },
-        nr.map { case (c, r) => c -> r._2 },
-        sr.map { case (c, r) => c -> r._1 },
-        sr.map { case (c, r) => c -> r._2 })
-    } finally reader.close()
+    }
+    val nr = nums.result(); val sr = strs.result()
+    (rows, nr.map { case (c, r) => c -> r._1 },
+      nr.map { case (c, r) => c -> r._2 },
+      sr.map { case (c, r) => c -> r._1 },
+      sr.map { case (c, r) => c -> r._2 })
   }
 
   /** Write `df` into an attempt-unique `data/v<n>-<nonce>` dir and
@@ -320,11 +346,14 @@ object TableStore {
     val attempt = java.util.UUID.randomUUID.toString.take(8)
     val sub = s"v$n-$attempt"
     val dir = new Path(s"$root/$Data/$sub")
-    // bloom sizing scales with per-file NDV: parquet's default 1 MB
-    // cap saturates around ~1M distinct keys per file (measured at
-    // the sf10 gate: fpp collapsed to ~1 and pruning died) — 16 MB
-    // holds fpp through ~10M-key files; beyond that, write smaller
-    // files or raise further
+    // bloom sizing does NOT follow per-file NDV: with no expected NDV
+    // declared, parquet allocates the whole max.bytes cap for every
+    // bloom column, so each bloom is 16 MB however few rows the file
+    // holds. The cap was raised from parquet's default 1 MB because
+    // that saturates around ~1M distinct keys per file (measured at
+    // the sf10 gate: fpp collapsed to ~1 and pruning died); 16 MB
+    // holds fpp through ~10M-key files. Lookups never read a bloom
+    // whole: `prunedFiles` reads one 32-byte block per probed key
     val writer0 =
       if (bloomCols.isEmpty) df.write.mode("overwrite")
       else df.write.mode("overwrite")
@@ -354,14 +383,15 @@ object TableStore {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
       .map { s =>
+        val rel = s"$Data/$sub/${s.getPath.getName}"
+        val path = resolve(root, rel)
         val (rows, mins, maxs, smins, smaxs) =
-          footerInfo(spark, s.getPath, statsCols)
+          footerInfo(footerOf(spark, path, s.getLen), path, statsCols)
         // the listing already holds each file's length — carrying it
         // in the log makes maintenance PLANNING (compact/optimize
         // sizing) zero-IO instead of one driver stat per live file,
         // the call pattern that melts at a million files
-        FileEntry(s"$Data/$sub/${s.getPath.getName}", rows, mins, maxs,
-          smins, smaxs, s.getLen)
+        FileEntry(rel, rows, mins, maxs, smins, smaxs, s.getLen)
       }
       // a zero-row part (empty write task) carries no row groups —
       // it contributes nothing to any snapshot, so never log it
@@ -1005,7 +1035,9 @@ object TableStore {
     * schema: the declared (ALTER-evolved) schema when one is in force
     * at `asOf` — files predating an added column null-fill it inside
     * the reader, and a REWRITE of this frame CARRIES the column —
-    * else plain schema inference (uniform live sets by construction).
+    * else the schema Spark would infer, resolved on the driver from
+    * memoized footers ([[scanSchema]]; uniform live sets by
+    * construction).
     * Every content-rewrite path (compaction, layout, DML,
     * replaceWhere, purge) and every pruned read must go through here:
     * a raw read of a mixed-schema live set infers ONE file's shape,
@@ -1016,17 +1048,45 @@ object TableStore {
                                    entries: Seq[FileEntry]): DataFrame =
     scanFiles(spark, root, declaredSchemaAt(spark, root, asOf), entries)
 
-  /** [[readLiveFiles]] with the declared schema already resolved. */
+  /** [[readLiveFiles]] with the declared schema already resolved. The
+    * scan always gets an explicit schema ([[scanSchema]]), so planning
+    * it runs no Spark job: Spark's own inference would launch one to
+    * read a footer the driver already holds. */
   private def scanFiles(spark: SparkSession, root: String,
                         declared: Option[org.apache.spark.sql.types.StructType],
-                        entries: Seq[FileEntry]): DataFrame = {
-    val raw = spark.read.option("ignoreMissingFiles", "false")
-    val files = entries.map(e => resolve(root, e.path))
-    declared match {
-      case Some(t) => raw.schema(t).parquet(files: _*)
-      case None => raw.parquet(files: _*)
+                        entries: Seq[FileEntry]): DataFrame =
+    spark.read.option("ignoreMissingFiles", "false")
+      .schema(scanSchema(spark, root, declared, entries))
+      .parquet(entries.map(e => resolve(root, e.path)): _*)
+
+  /** The schema a scan of `entries` reports: the declared one (built
+    * from a scan's schema, so already nullable), else Spark's
+    * inference rule run on the driver over memoized footers
+    * ([[footerOf]]) — the first file in qualified-path order, or all
+    * of them merged in that order when the session sets
+    * `spark.sql.parquet.mergeSchema` — read by Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter`. The merge branch is
+    * driver-serial: a footer not yet memoized is one file open after
+    * another, where Spark's inference would read them in one parallel
+    * job. No store caller sets that conf. `entries` must be non-empty
+    * when nothing is declared. */
+  private def scanSchema(spark: SparkSession, root: String,
+                         declared: Option[org.apache.spark.sql.types.StructType],
+                         entries: Seq[FileEntry])
+      : org.apache.spark.sql.types.StructType =
+    declared.getOrElse {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val byPath = entries.map { e =>
+        val p = new Path(resolve(root, e.path))
+        (p.getFileSystem(conf).makeQualified(p), e)
+      }.sortBy(_._1.toString)
+      val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+        .toBoolean
+      Bridge.footerSchema(spark,
+        (if (merge) byPath else byPath.take(1)).map { case (p, e) =>
+          new Footer(p, footerOf(spark, resolve(root, e.path), e.bytes))
+        })
     }
-  }
 
   /** Apply `dvs` to a scan of `dirty` files: anti-join on
     * (file name, row index) removes exactly the vectored rows. */
@@ -1744,21 +1804,21 @@ object TableStore {
     * the callers' comparisons, IN lists and prefixes do), so a row
     * group whose schema predates a probed column cannot match.
     *
-    * The log's bounds go first, zero IO. A survivor opens its footer
-    * once, and only when it has no logged bounds for a probed column
-    * or `filter` is an EqualTo/In a bloom can refute; it then survives
-    * iff some row group's footer bounds pass the same evaluator and
-    * its bloom may hold a probed value. Blooms hash by the column's
-    * PHYSICAL type: probing an INT32 bloom with long hashes would be a
-    * false NEGATIVE on every key. Null probes match nothing (SQL IN).
-    * A probed column in no logged bounds and no opened footer is a
-    * misspelling, not an evolved column: loud. */
+    * The log's bounds go first, zero IO. A survivor consults its
+    * footer — memoized ([[footerOf]]), so a file is opened at most once
+    * per JVM, and never when this JVM wrote it — only when it has no
+    * logged bounds for a probed column or `filter` is an EqualTo/In a
+    * bloom can refute; it then survives iff some row group's footer
+    * bounds pass the same evaluator and its bloom may hold a probed
+    * value. Blooms are probed one 32-byte block per distinct hash
+    * ([[BloomProbe]]), not read whole: the store's blooms are 16 MB
+    * each. Null probes match nothing (SQL IN). A probed column in no
+    * logged bounds and no consulted footer is a misspelling, not an
+    * evolved column: loud. */
   private def prunedFiles(spark: SparkSession, root: String,
                           live: Seq[FileEntry],
                           filter: Filter): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val conf = spark.sparkContext.hadoopConfiguration
     val cols = filter.references.distinct.toSeq
     def logged(e: FileEntry, c: String) =
       e.mins.contains(c) || e.smins.contains(c)
@@ -1772,9 +1832,10 @@ object TableStore {
     var opened = false
     def footerMayContain(e: FileEntry): Boolean = {
       opened = true
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(resolve(root, e.path)), conf))
-      try reader.getFooter.getBlocks.asScala.exists { block =>
+      val path = resolve(root, e.path)
+      val blocks = footerOf(spark, path, e.bytes).getBlocks.asScala
+      val blooms = new BloomProbe(spark, path)
+      try blocks.exists { block =>
         val chunks = block.getColumns.asScala
           .map(c => c.getPath.toDotString -> c).toMap
           .filter { case (c, _) => cols.contains(c) }
@@ -1782,32 +1843,98 @@ object TableStore {
         chunks.size == cols.size &&
           StatsSkipping.mayContain(groupBounds(e.path, block.getRowCount,
             chunks.values.toSeq), filter) &&
-          probe.forall { case (c, vs) =>
-            val cc = chunks(c)
-            val bf = reader.getBloomFilterDataReader(block)
-              .readBloomFilter(cc)
-            bf == null || vs.exists(v => v != null &&
-              ((cc.getPrimitiveType.getPrimitiveTypeName, v) match {
-                case (INT64, l: java.lang.Long) => bf.findHash(bf.hash(l))
-                case (INT32, l: java.lang.Long) =>
-                  bf.findHash(bf.hash(Integer.valueOf(l.intValue)))
-                case (BINARY, s: String) =>
-                  bf.findHash(bf.hash(Binary.fromString(s)))
-                case _ => true // not hashable for this column: maybe
-              }))
-          }
-      } finally reader.close()
+          probe.forall { case (c, vs) => blooms.mayHold(chunks(c), vs) }
+      } finally blooms.close()
     }
     val kept = live.filter(e => StatsSkipping.mayContain(e, filter) &&
       (probe.isEmpty && cols.forall(logged(e, _)) || footerMayContain(e)))
-    // with no footer opened, every file was logged or ruled out by the
-    // log, so nothing could show a column the logs lack
+    // with no footer consulted, every file was logged or ruled out by
+    // the log, so nothing could show a column the logs lack
     val typos = cols.filterNot(seen)
     require(!opened || typos.isEmpty,
       s"column ${typos.mkString(",")} exists in NO live file of $root " +
         "— misspelled column, not an evolved one")
     kept
   }
+
+  /** One data file's bloom probes, over at most one input stream.
+    * Parquet's split-block bloom is `numBytes / 32` independent
+    * 32-byte blocks: a hash `h` lives only in block
+    * `((h >>> 32) * numBlocks) >>> 32`, as 8 bits chosen by its low 32
+    * bits. So a probe reads the bloom's header, then only the blocks
+    * its hashes select — 32 bytes each, by position, one read per
+    * distinct block — and tests each with a one-block
+    * [[BlockSplitBloomFilter]], whose block index is always 0 and
+    * whose bit test is the whole filter's. A header this probe cannot
+    * read — another algorithm, hash or compression, a size parquet
+    * itself would refuse, or no parsable header — answers "may hold",
+    * which is always safe; the store only writes BLOCK/XXHASH blooms. */
+  private[graft] final class BloomProbe(spark: SparkSession, path: String)
+      extends java.io.Closeable {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    private val file = new Path(path)
+    private var in: org.apache.hadoop.fs.FSDataInputStream = null
+
+    /** May chunk `cc` hold one of `values`? True without a bloom, or
+      * when a value is not hashable for the column; nulls match
+      * nothing. Values hash by the column's PHYSICAL type: probing an
+      * INT32 bloom with long hashes would be a false NEGATIVE on
+      * every key. */
+    def mayHold(cc: ColumnChunkMetaData, values: Seq[Any]): Boolean = {
+      val off = cc.getBloomFilterOffset
+      if (off < 0) return true
+      val hasher =
+        new BlockSplitBloomFilter(BlockSplitBloomFilter.LOWER_BOUND_BYTES)
+      val hashes = values.filter(_ != null).map { v =>
+        (cc.getPrimitiveType.getPrimitiveTypeName, v) match {
+          case (INT64, l: java.lang.Long) => Some(hasher.hash(l.longValue))
+          case (INT32, l: java.lang.Long) => Some(hasher.hash(l.intValue))
+          case (BINARY, s: String) => Some(hasher.hash(Binary.fromString(s)))
+          case _ => None
+        }
+      }
+      if (hashes.contains(None)) return true
+      val keys = hashes.flatten
+      if (in == null) in = fsOf(spark, file).open(file)
+      val head = new Array[Byte](BloomHeaderBytes)
+      val got = readAt(off, head)
+      val src = new java.io.ByteArrayInputStream(head, 0, got)
+      val header =
+        try Some(org.apache.parquet.format.Util.readBloomFilterHeader(src))
+        catch { case _: java.io.IOException => None }
+      header.filter(h => h.getAlgorithm.isSetBLOCK &&
+          h.getHash.isSetXXHASH && h.getCompression.isSetUNCOMPRESSED &&
+          h.getNumBytes >= BlockSplitBloomFilter.LOWER_BOUND_BYTES &&
+          h.getNumBytes <= BlockSplitBloomFilter.UPPER_BOUND_BYTES) match {
+        case Some(h) =>
+          val bits = off + got - src.available
+          val numBlocks = (h.getNumBytes / 32).toLong
+          keys.groupBy(k => ((k >>> 32) * numBlocks) >>> 32)
+            .exists { case (b, hs) =>
+              val block = new Array[Byte](32)
+              in.readFully(bits + b * 32, block)
+              val bf = new BlockSplitBloomFilter(block)
+              hs.exists(bf.findHash)
+            }
+        case None => true // a bloom this probe cannot read: may hold
+      }
+    }
+
+    /** Positional read into `buf` up to end of file; bytes read. */
+    private def readAt(pos: Long, buf: Array[Byte]): Int = {
+      var n = 0
+      var r = 0
+      while (n < buf.length &&
+          { r = in.read(pos + n, buf, n, buf.length - n); r > 0 }) n += r
+      n
+    }
+
+    def close(): Unit = if (in != null) in.close()
+  }
+
+  /** Bytes read to parse a bloom header: its thrift encoding is about
+    * 20 bytes (the byte count plus three one-member unions). */
+  private val BloomHeaderBytes = 64
 
   /** A row group's footer bounds as a [[FileEntry]], read the way
     * [[footerInfo]] logs them. Annotated storage (DECIMAL/DATE over
@@ -1845,7 +1972,11 @@ object TableStore {
       if (touched.nonEmpty)
         scanFiles(spark, root, declared, touched).where(residual)
       else if (live.nonEmpty)
-        scanFiles(spark, root, declared, live).where(residual).limit(0)
+        // every file refuted: an empty frame of the scan's schema hands
+        // Spark no files to list
+        spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          scanSchema(spark, root, declared, live)).where(residual)
       else read(spark, root, Some(v)).where(residual).limit(0)
     (df, touched.size, live.size)
   }
@@ -1889,8 +2020,14 @@ object TableStore {
     * commit time ([[append]]'s `bloomCols`) skips every file that
     * provably lacks all probed keys — the prune min/max cannot make
     * when every file spans the key space (hash-distributed ingest).
-    * False positives only ever ADD a file, never lose a row. Returns
-    * the frame plus (files touched, files live). */
+    * False positives only ever ADD a file, never lose a row.
+    *
+    * Planning runs no Spark job and reads O(live files) bytes: the
+    * log prunes, memoized footers ([[footerOf]]) give row-group bounds
+    * and bloom offsets, each surviving bloom is probed one 32-byte
+    * block per key ([[BloomProbe]]), and the frame's schema resolves
+    * on the driver ([[scanSchema]]). Collecting the frame is the one
+    * job. Returns the frame plus (files touched, files live). */
   def pointLookup(spark: SparkSession, root: String,
                   pcol: String, values: Seq[Long],
                   version: Option[Long] = None): (DataFrame, Int, Int) = {
@@ -2519,8 +2656,11 @@ object TableStore {
     * walks only the clone's own data dir). Retention caveat — the
     * standard lakehouse clone contract: the SOURCE's vacuum does not
     * know about clones; keep source retention wider than any clone's
-    * pin, or the clone fails loudly on the missing files
-    * (`ignoreMissingFiles=false`), never partial rows. */
+    * pin, or the clone fails loudly on the missing files it reads
+    * (`ignoreMissingFiles=false`), never partial rows. A typed read
+    * whose prune refutes every file from the log or memoized footers
+    * reads no file, so it answers empty without noticing the loss —
+    * still the snapshot's content for that filter. */
   def shallowClone(spark: SparkSession, srcRoot: String,
                    dstRoot: String,
                    version: Option[Long] = None): Long = {
@@ -2760,7 +2900,9 @@ object TableStore {
     * named ([[read]]'s version check), and a frame CONSTRUCTED before
     * the vacuum fails at execution with a missing-file error rather
     * than returning the subset of rows whose files survived
-    * (`ignoreMissingFiles` is pinned false on every store read).
+    * (`ignoreMissingFiles` is pinned false on every store read). A
+    * typed read that prunes every file away reads none and answers
+    * empty, which is still that snapshot's content for its filter.
     * Operators size `keepVersions` to cover their longest reader —
     * the same contract every lakehouse retention knob carries. */
   def vacuum(spark: SparkSession, root: String,

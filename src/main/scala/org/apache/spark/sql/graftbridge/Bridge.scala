@@ -46,6 +46,25 @@ object Bridge {
         org.apache.spark.sql.internal.SQLConf.get)
       .convert(schema)
 
+  /** The schema Spark's parquet scan infers from `footers`, without
+    * the inference job: each footer read by Spark's own
+    * `ParquetFileFormat.readSchemaFromFooter` (the file's Spark row
+    * metadata when present, else the session-configured converter),
+    * merged left to right as schema merging does, then nullable as
+    * every file scan reports it. The versioned store resolves its
+    * scan schemas through this from footers it already holds. */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                   footers: Seq[org.apache.parquet.hadoop.Footer])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    footers.map(ParquetFileFormat.readSchemaFromFooter(_, converter))
+      .reduce(_.merge(_, conf.caseSensitiveAnalysis)).asNullable
+  }
+
   /** A V1 streaming Sink's `addBatch` frame re-wrapped as a PLAIN
     * batch frame over the micro-batch's already-planned RDD —
     * Spark's own ForeachBatchSink construction

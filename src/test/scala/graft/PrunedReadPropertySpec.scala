@@ -17,7 +17,10 @@ import graft.sources.GraftFileIndex
   * Where every live file carries log bounds for the probed columns
   * (and no bloom can refute a lookup), the read's `touched` must also
   * equal what the SQL surface's [[GraftFileIndex]] keeps for the same
-  * predicate: one evaluator, two callers.
+  * predicate: one evaluator, two callers. Every frame's schema, which
+  * the store resolves on the driver, must equal what Spark infers for
+  * the snapshot's live files (merged, once an ALTER declared one),
+  * including a snapshot pinned before the ALTER.
   */
 class PrunedReadPropertySpec extends SparkSpec {
 
@@ -102,6 +105,17 @@ class PrunedReadPropertySpec extends SparkSpec {
 
   private var indexChecks = 0
 
+  /** What Spark infers for the live files of `root` at `v`: merged
+    * across files once an ALTER declared the schema (pre-ALTER files
+    * lack the added column), else Spark's plain inference. */
+  private def inferred(root: String, v: Long) = {
+    val files = TableStore.liveAt(spark, root, v)
+      .map(e => TableStore.resolve(root, e.path))
+    val merged = TableStore.declaredSchemaAt(spark, root, v).isDefined
+    spark.read.option("mergeSchema", merged.toString)
+      .parquet(files: _*).schema
+  }
+
   /** One typed read against its reference. */
   private def agree(root: String, shape: Shape, name: String,
                     read: (DataFrame, Int, Int), residual: Column,
@@ -111,8 +125,9 @@ class PrunedReadPropertySpec extends SparkSpec {
     val got = rows(df)
     assert(got == want, s"$name rows differ")
     assert(touched <= live, s"$name touched $touched of $live")
-    val entries = TableStore.liveAt(spark, root,
-      TableStore.versions(spark, root).max)
+    val v = TableStore.versions(spark, root).max
+    assert(df.schema == inferred(root, v), s"$name schema differs")
+    val entries = TableStore.liveAt(spark, root, v)
     val allLogged = entries.forall(e => probed.forall(c =>
       e.mins.contains(c) || e.smins.contains(c)))
     if (allLogged && !(lookup && shape.bloomy)) {
@@ -170,6 +185,14 @@ class PrunedReadPropertySpec extends SparkSpec {
           TableStore.readBox(spark, root, ("k", lo, hi), ("y", ylo, yhi)),
           col("k").between(lo, hi) && col("y").between(ylo, yhi),
           Seq("k", "y"), lookup = false)
+        if (shape.preAlter) {
+          // version 1 predates the ALTER: its reads resolve from footers
+          val before = Seq(TableStore.read(spark, root, Some(1L)),
+            TableStore.pointLookup(spark, root, "k", keys, Some(1L))._1,
+            TableStore.readRange(spark, root, "k", lo, hi, Some(1L))._1)
+          before.foreach(df => assert(df.schema == inferred(root, 1L),
+            "pre-ALTER snapshot schema differs"))
+        }
         true
     }
     val res = SCTest.check(params, prop)

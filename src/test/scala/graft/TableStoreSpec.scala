@@ -1594,4 +1594,85 @@ test("merge on a CONSTRAINED store: a violating batch refuses with " +
     TableStore.merge(mk(2L, 9L), root, "id", statsCols = Seq("id"))
     assert(ids(root) == Set(1L, 2L, 3L, 9L))
   }
+
+  /** What Spark's own inference reports for the live files of `root`
+    * at its latest version (or `v`). */
+  private def inferred(root: String, v: Option[Long] = None) =
+    spark.read.parquet(TableStore.liveAt(spark, root,
+      v.getOrElse(TableStore.versions(spark, root).max))
+      .map(e => TableStore.resolve(root, e.path)): _*).schema
+
+  test("scan schemas resolve on the driver exactly as Spark infers them") {
+    val s = spark; import s.implicits._
+    // nested, decimal and timestamp columns ride Spark's row metadata
+    def rows(lo: Long) = (lo until lo + 20L).map(i =>
+      (i, s"r$i", BigDecimal(i) / 4, java.sql.Timestamp.valueOf(
+        "2024-01-01 00:00:00"), Seq(i.toInt), Map(s"k$i" -> i * 0.5),
+        (i.toInt, s"n$i"), if (i % 2 == 0) "east" else "west"))
+      .toDF("id", "payload", "dec", "ts", "arr", "m", "st", "region")
+    def frames(root: String, v: Option[Long] = None) = Seq(
+      TableStore.read(spark, root, v),
+      TableStore.pointLookup(spark, root, "id", Seq(3L), v)._1,
+      // refuted by every file: the empty frame never touches a file
+      TableStore.pointLookup(spark, root, "id", Seq(-9L), v)._1,
+      TableStore.pointLookupString(spark, root, "payload", Seq("r5"), v)._1,
+      TableStore.readRange(spark, root, "id", 0L, 30L, v)._1)
+    def same(root: String, v: Option[Long] = None): Unit =
+      frames(root, v).foreach(f => assert(f.schema == inferred(root, v)))
+
+    val plain = tmp()
+    Seq(0L, 20L).foreach(lo => TableStore.append(rows(lo).coalesce(1),
+      plain, statsCols = Seq("id"), bloomCols = Seq("id", "payload")))
+    same(plain)
+    val part = tmp()
+    TableStore.createEmpty(spark, part, rows(0L).schema,
+      partitionBy = Seq("region"))
+    TableStore.append(rows(0L).repartition(2), part, statsCols = Seq("id"))
+    assert(TableStore.partitionColsOf(spark, part) == Seq("region"))
+    same(part)
+    val clone = tmp()
+    TableStore.shallowClone(spark, plain, clone)
+    same(clone)
+    // pre-ALTER: the snapshot before the ALTER resolves from footers
+    val pre = TableStore.versions(spark, plain).max
+    TableStore.addColumn(spark, plain, "extra", org.apache.spark.sql.types.StringType)
+    same(plain, Some(pre))
+    assert(TableStore.read(spark, plain).columns.last == "extra")
+
+    // mixed live schemas with nothing declared: Spark's first file in
+    // path order, or every file merged once the session asks for it
+    val mixed = tmp()
+    TableStore.append(mk(1L).coalesce(1), mixed, bloomCols = Seq("id"))
+    TableStore.append(mk(2L).withColumn("extra", lit(1)).coalesce(1), mixed,
+      bloomCols = Seq("id"))
+    same(mixed)
+    assert(!TableStore.read(spark, mixed).columns.contains("extra"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      same(mixed)
+      assert(TableStore.read(spark, mixed).columns.contains("extra"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("typed reads plan with zero Spark jobs; a one-file lookup " +
+    "collects in one") {
+    import org.apache.spark.sql.graftbridge.SparkJobs
+    val root = tmp()
+    TableStore.append(mk(1L to 50L: _*).coalesce(1), root,
+      statsCols = Seq("id"), bloomCols = Seq("id", "payload"))
+    TableStore.append(mk(51L to 100L: _*).coalesce(1), root,
+      statsCols = Seq("id"), bloomCols = Seq("id", "payload"))
+    val (built, planJobs) = SparkJobs.during(spark) {
+      Seq(TableStore.pointLookup(spark, root, "id", Seq(7L)),
+        TableStore.pointLookupString(spark, root, "payload", Seq("r70")),
+        TableStore.readRange(spark, root, "id", 10L, 20L))
+    }
+    val (_, readJobs) = SparkJobs.during(spark)(TableStore.read(spark, root))
+    assert(planJobs == 0 && readJobs == 0,
+      s"planning ran $planJobs + $readJobs Spark jobs")
+    assert(built.map(_._2) == Seq(1, 1, 1))
+    val (got, jobs) = SparkJobs.during(spark)(built.head._1.collect())
+    assert(got.map(_.getLong(0)).toSeq == Seq(7L))
+    assert(jobs == 1, s"a one-file lookup ran $jobs Spark jobs")
+  }
 }
