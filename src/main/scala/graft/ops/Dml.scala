@@ -12,9 +12,9 @@ import TableStore.FileEntry
   * its own right. Where [[TableStore.deleteWhere]] takes the caller's
   * explicit skipping hint, these ops derive the candidate file set
   * from the predicate ITSELF: the condition is translated to
-  * `sources.Filter`s (Spark's own translation) and evaluated against
-  * the commit log's per-file bounds by [[graft.sources.StatsSkipping]]
-  * — the same zero-IO evaluator every read path runs. The reference
+  * `sources.Filter`s (Spark's own translation) and handed to
+  * [[TableStore.prunedFiles]] — the same pruner every read path runs:
+  * log bounds, then footer bounds and bloom probes. The reference
   * mutates its warehouse through exactly these statements: the
   * correction loop's IN-subquery delete + re-insert
   * (dags/Reprocessing.py:117-126), the silver dup-delete whose
@@ -27,8 +27,8 @@ import TableStore.FileEntry
   *
   * Every op is ONE commit with three proportionality levels:
   *
-  *  1. log-stats prune: files whose logged [min, max] PROVE no row
-  *     can match are never read (zero IO, metadata-sized);
+  *  1. prune: files whose logged or footer bounds, or blooms, PROVE
+  *     no row can match are never read (metadata-sized);
   *  2. exact discovery: one column-pruned scan of the survivors finds
   *     the files that actually HOLD an affected row — a false
   *     candidate costs a scan, never a rewrite;
@@ -119,7 +119,7 @@ object Dml {
     * rewritten GraftFileIndex scan); an API caller reading the target
     * through bare parquet paths owns the race, as documented. */
   private def readsStore(df: DataFrame, root: String): Boolean = {
-    // FS-qualified comparison with a '/'-boundary (the toEntryPaths
+    // FS-qualified comparison with a '/'-boundary (the toEntries
     // strictness): a bare startsWith would (a) let a prefix-sharing
     // SIBLING store (/wh/t vs /wh/t2) spuriously void the key-span
     // screen, and (b) miss a scheme-qualified spelling of the SAME
@@ -259,15 +259,15 @@ object Dml {
   }
 
   /** URI file paths (from `_metadata.file_path`) back to the log's
-    * relative entry paths. Matching requires a path-separator
+    * entries. Matching requires a path-separator
     * boundary — `resolve(root, p)` always joins with '/', so a bare
     * suffix match could attribute a scanned URI to the WRONG entry
     * (a prefix-sharing part name), removing one file from the log
     * while rewriting another's rows: silent row loss. Exactly one
     * candidate must claim each URI; zero or several is a broken
     * invariant and fails loudly. */
-  private def toEntryPaths(uris: Seq[String], root: String,
-                           candidates: Seq[FileEntry]): Seq[String] = {
+  private def toEntries(uris: Seq[String], root: String,
+                        candidates: Seq[FileEntry]): Seq[FileEntry] = {
     // FS-qualified EXACT matching: resolve each candidate entry to its
     // full path (relative entries join under root; absolute entries —
     // shallow-clone references into another store's data dir — pass
@@ -282,13 +282,13 @@ object Dml {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(conf).makeQualified(hp).toString
     }
-    val byQualified = new scala.collection.mutable.HashMap[String, String]()
+    val byQualified = new scala.collection.mutable.HashMap[String, FileEntry]()
     candidates.foreach { e =>
       val q = qualify(TableStore.resolve(root, e.path))
-      byQualified.put(q, e.path).foreach { prior =>
+      byQualified.put(q, e).foreach { prior =>
         throw new IllegalStateException(
-          s"log entries $prior and ${e.path} of $root resolve to the " +
-            s"same file $q — ambiguous attribution")
+          s"log entries ${prior.path} and ${e.path} of $root resolve " +
+            s"to the same file $q — ambiguous attribution")
       }
     }
     uris.map { u =>
@@ -297,22 +297,20 @@ object Dml {
     }
   }
 
-  /** Candidate-file scan under the snapshot's EFFECTIVE schema: the
-    * snapshot frame's own schema is declared-aware
-    * ([[TableStore.read]]), so on an ALTER-evolved store pre-ALTER
-    * files null-fill the added column inside the reader — a DML
-    * predicate can reference it, and a rewrite of these rows CARRIES
-    * it instead of silently dropping the values. */
-  private def scanFiles(spark: SparkSession, root: String,
-                        snapshot: DataFrame,
-                        paths: Seq[String]): DataFrame =
-    // aliased so a correlated subquery's rebound outer references
-    // (`TargetAlias.col`) resolve against THIS scan — transparent to
-    // unqualified predicates and to the merge join (plain columns
-    // resolve through a SubqueryAlias unchanged)
-    spark.read.option("ignoreMissingFiles", "false")
-      .schema(snapshot.schema)
-      .parquet(paths.map(p => TableStore.resolve(root, p)): _*)
+  /** The store's one scan ([[TableStore.scanFiles]]) of candidate
+    * files under the snapshot's EFFECTIVE schema: the snapshot frame's
+    * own schema is declared-aware ([[TableStore.read]]), so on an
+    * ALTER-evolved store pre-ALTER files null-fill the added column
+    * inside the reader — a DML predicate can reference it, and a
+    * rewrite of these rows CARRIES it instead of silently dropping the
+    * values. Aliased so a correlated subquery's rebound outer
+    * references (`TargetAlias.col`) resolve against THIS scan —
+    * transparent to unqualified predicates and to the merge join
+    * (plain columns resolve through a SubqueryAlias unchanged). */
+  private def target(spark: SparkSession, root: String,
+                     snapshot: DataFrame,
+                     entries: Seq[FileEntry]): DataFrame =
+    TableStore.scanFiles(spark, root, Some(snapshot.schema), entries)
       .alias(TargetAlias)
 
   /** The DELETE execution mode knob the SQL surface reads:
@@ -365,7 +363,8 @@ object Dml {
     // IN-subquery is present — see materializeInSubqueries
     val predM = materializeInSubqueries(spark, pred)
     val filters = predicateFilters(snapshot, predM)
-    val candidates = graft.sources.StatsSkipping.prune(live, filters)
+    val candidates = TableStore.prunedFiles(spark, root, live,
+      Some(snapshot.schema), filters)
     if (candidates.isEmpty) return prev
     if (mor)
       // merge-on-read: vector the matching rows of the pruned
@@ -374,13 +373,13 @@ object Dml {
       return TableStore.deleteMoRTouched(spark, root, predM, prev,
         candidates)
     // exact discovery: which candidates HOLD a definitely-matching row
-    val hitUris = scanFiles(spark, root, snapshot, candidates.map(_.path))
+    val hitUris = target(spark, root, snapshot, candidates)
       .where(coalesce(predM, lit(false)))
       .select(col("_metadata.file_path")).distinct()
       .collect().map(_.getString(0)).toSeq // bounded by file count
     if (hitUris.isEmpty) return prev
-    val touched = toEntryPaths(hitUris, root, candidates)
-    val kept = scanFiles(spark, root, snapshot, touched)
+    val touched = toEntries(hitUris, root, candidates)
+    val kept = target(spark, root, snapshot, touched)
       .where(!coalesce(predM, lit(false)))
     val n = prev + 1
     val adds = TableStore.writeData(kept, root, n,
@@ -390,8 +389,8 @@ object Dml {
     // rebases when the racer is provably disjoint (pure appends the
     // predicate's filters refute) — the streaming-sink coexistence
     // contract layout rewrites already have.
-    TableStore.commitRewriteRebasing(spark, root, n, adds, touched,
-      screenFilters(snapshot, pred, filters))
+    TableStore.commitRewriteRebasing(spark, root, n, adds,
+      touched.map(_.path), screenFilters(snapshot, pred, filters))
   }
 
   /** `UPDATE store SET c = v, … WHERE pred` — copy-on-write, one
@@ -433,16 +432,17 @@ object Dml {
     val filters = pred.map(_ => predicateFilters(snapshot, cond))
       .getOrElse(Seq.empty)
     val candidates = pred match {
-      case Some(_) => graft.sources.StatsSkipping.prune(live, filters)
+      case Some(_) => TableStore.prunedFiles(spark, root, live,
+        Some(snapshot.schema), filters)
       case None => live // unconditional update touches everything
     }
     if (candidates.isEmpty) return prev
-    val hitUris = scanFiles(spark, root, snapshot, candidates.map(_.path))
+    val hitUris = target(spark, root, snapshot, candidates)
       .where(coalesce(cond, lit(false)))
       .select(col("_metadata.file_path")).distinct()
       .collect().map(_.getString(0)).toSeq // bounded by file count
     if (hitUris.isEmpty) return prev
-    val touched = toEntryPaths(hitUris, root, candidates)
+    val touched = toEntries(hitUris, root, candidates)
     val assigned = set.toMap
     // assignments evaluate against the ORIGINAL row in both shapes
     // (simultaneous-assignment semantics: a select's projections all
@@ -457,11 +457,11 @@ object Dml {
     }
     val rewritten =
       if (hasSubquery(cond)) {
-        val base = scanFiles(spark, root, snapshot, touched)
+        val base = target(spark, root, snapshot, touched)
         base.where(coalesce(cond, lit(false))).select(applied: _*)
           .unionByName(base.where(!coalesce(cond, lit(false)))
             .select(snapshot.columns.toIndexedSeq.map(col): _*))
-      } else scanFiles(spark, root, snapshot, touched).select(
+      } else target(spark, root, snapshot, touched).select(
         snapshot.columns.toIndexedSeq.map { c =>
           assigned.get(c) match {
             case Some(v) =>
@@ -477,8 +477,8 @@ object Dml {
     TableStore.enforceConstraints(spark, root, adds)
     // race screen judges the ORIGINAL predicate: a materialized
     // subquery's result could still change under serial execution
-    TableStore.commitRewriteRebasing(spark, root, n, adds, touched,
-      screenFilters(snapshot, cond0, filters))
+    TableStore.commitRewriteRebasing(spark, root, n, adds,
+      touched.map(_.path), screenFilters(snapshot, cond0, filters))
   }
 
   /** One WHEN MATCHED clause: `set = None` is DELETE, `Some(…)` is
@@ -604,15 +604,16 @@ object Dml {
     val candidates: Seq[FileEntry] =
       if (notMatchedBySource.nonEmpty) live
       else if (live.isEmpty || spanFilters.isEmpty) Seq.empty
-      else graft.sources.StatsSkipping.prune(live, spanFilters)
+      else TableStore.prunedFiles(spark, root, live, Some(snapshot.schema),
+        spanFilters)
 
     val srcPresent = col("__graft_src_present")
     val src = source.withColumn("__graft_src_present", lit(true))
 
     // the matched / not-matched split: LEFT join of candidate content
     // against the source under the FULL on-condition
-    def joined(paths: Seq[String]): DataFrame =
-      scanFiles(spark, root, snapshot, paths)
+    def joined(entries: Seq[FileEntry]): DataFrame =
+      target(spark, root, snapshot, entries)
         .withColumn("__graft_file", col("_metadata.file_path"))
         .withColumn("__graft_rid", col("_metadata.row_index"))
         .join(src, on, "left")
@@ -638,10 +639,10 @@ object Dml {
     // target row is then unambiguous (it just isn't inserted), so the
     // SQL standard allows it there.
     val rowClauses = matched.nonEmpty || notMatchedBySource.nonEmpty
-    val (touched, cardinalityBad): (Seq[String], Boolean) =
+    val (touched, cardinalityBad): (Seq[FileEntry], Boolean) =
       if (candidates.isEmpty || !rowClauses) (Seq.empty, false)
       else {
-        val j = joined(candidates.map(_.path))
+        val j = joined(candidates)
         val dup =
           if (matched.isEmpty) Array.empty[org.apache.spark.sql.Row]
           else j.where(srcPresent.isNotNull)
@@ -650,7 +651,7 @@ object Dml {
         val hitUris = j.where(actionCol() >= 0)
           .select(col("__graft_file")).distinct()
           .collect().map(_.getString(0)).toSeq // bounded by file count
-        (toEntryPaths(hitUris, root, candidates), dup.nonEmpty)
+        (toEntries(hitUris, root, candidates), dup.nonEmpty)
       }
     require(!cardinalityBad,
       s"MERGE cardinality violation at $root: a target row matches " +
@@ -706,8 +707,7 @@ object Dml {
       else {
         val unmatchedSrc =
           if (candidates.isEmpty) source
-          else source.join(
-            scanFiles(spark, root, snapshot, candidates.map(_.path)), on,
+          else source.join(target(spark, root, snapshot, candidates), on,
             "left_anti")
         val insertAct = notMatched.zipWithIndex.reverse
           .foldLeft(lit(-1): Column) { case (els, (wn, i)) =>
@@ -743,7 +743,7 @@ object Dml {
     // add its span refutes can still change what the source computes)
     // — refuse on any concurrent add then, like subquery predicates
     TableStore.commitRewriteRebasing(spark, root, n,
-      rewriteAdds ++ insertAdds, touched,
+      rewriteAdds ++ insertAdds, touched.map(_.path),
       if (readsStore(source, root)) Seq.empty else spanFilters,
       marker = if (touched.isEmpty) None else Some("rewrite"))
   }

@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{And, EqualTo, Filter,
+import org.apache.spark.sql.sources.{EqualTo, Filter,
   GreaterThanOrEqual, In, LessThanOrEqual, StringStartsWith}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -1048,16 +1048,20 @@ object TableStore {
                                    entries: Seq[FileEntry]): DataFrame =
     scanFiles(spark, root, declaredSchemaAt(spark, root, asOf), entries)
 
-  /** [[readLiveFiles]] with the declared schema already resolved. The
-    * scan always gets an explicit schema ([[scanSchema]]), so planning
-    * it runs no Spark job: Spark's own inference would launch one to
-    * read a footer the driver already holds. */
-  private def scanFiles(spark: SparkSession, root: String,
-                        declared: Option[org.apache.spark.sql.types.StructType],
-                        entries: Seq[FileEntry]): DataFrame =
-    spark.read.option("ignoreMissingFiles", "false")
-      .schema(scanSchema(spark, root, declared, entries))
-      .parquet(entries.map(e => resolve(root, e.path)): _*)
+  /** [[readLiveFiles]] with the declared schema already resolved: the
+    * one scan of store data files, typed, SQL, DML or change feed — a
+    * native parquet scan over a [[graft.sources.GraftFileIndex]] of
+    * `entries`, so the query's own filters prune it through
+    * [[prunedFiles]] at planning. The scan always gets an explicit
+    * schema ([[scanSchema]]), so planning it runs no Spark job:
+    * Spark's own inference would launch one to read a footer the
+    * driver already holds. */
+  private[graft] def scanFiles(spark: SparkSession, root: String,
+                               declared: Option[org.apache.spark.sql.types.StructType],
+                               entries: Seq[FileEntry]): DataFrame =
+    Bridge.dataFrame(spark, org.apache.spark.sql.execution.datasources
+      .LogicalRelation(graft.sources.GraftFileIndex.relation(spark, root,
+        entries, scanSchema(spark, root, declared, entries))))
 
   /** The schema a scan of `entries` reports: the declared one (built
     * from a scan's schema, so already nullable), else Spark's
@@ -1133,7 +1137,8 @@ object TableStore {
     require(vs.nonEmpty, s"no committed versions at $root")
     val prev = vs.last
     val live = liveAt(spark, root, prev)
-    val touched = prunedFiles(spark, root, live, within(pcol, lo, hi))
+    val touched = prunedFiles(spark, root, live,
+      declaredSchemaAt(spark, root, prev), within(pcol, lo, hi))
     deleteMoRTouched(spark, root, pred, prev, touched)
   }
 
@@ -1387,14 +1392,10 @@ object TableStore {
     // columns with null inside the reader (the readAs posture,
     // versioned). Never-ALTERed stores skip this entirely.
     val declared = declaredSchemaAt(spark, root, v)
-    if (entries.isEmpty)
-      // empty snapshot (all-empty commits, overwrite-with-empty): the
-      // declared schema if ALTERed, else the first-touch anchor
-      declared match {
-        case Some(t) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t)
-        case None => spark.read.parquet(s"$root/_schema").limit(0)
-      }
+    if (entries.isEmpty && declared.isEmpty)
+      // empty never-ALTERed snapshot (all-empty commits, overwrite-
+      // with-empty): the first-touch anchor's schema
+      spark.read.parquet(s"$root/_schema").limit(0)
     else if (dvs.isEmpty) scanFiles(spark, root, declared, entries)
     else {
       // declared schema + outstanding vectors composes: both the
@@ -1422,12 +1423,8 @@ object TableStore {
   def readAs(spark: SparkSession, root: String,
              target: org.apache.spark.sql.types.StructType,
              version: Option[Long] = None): DataFrame = {
-    val (v, entries, _) = fileSnapshot(spark, root, version, "readAs")
-    val files = entries.map(e => resolve(root, e.path))
-    if (files.nonEmpty)
-      SchemaEvolution.readWithTarget(spark, target, files: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
+    val (_, entries, _) = fileSnapshot(spark, root, version, "readAs")
+    scanFiles(spark, root, Some(target), entries)
   }
 
   /** Metadata-only table digest at `version` (default: latest): file
@@ -1794,41 +1791,54 @@ object TableStore {
       writeData(df, root, n, statsCols, bloomCols), live.map(_.path))
   }
 
-  /** `c` ∈ [lo, hi] as a pruning filter. */
-  private def within(c: String, lo: Any, hi: Any): Filter =
-    And(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+  /** `c` ∈ [lo, hi] as pruning filters. */
+  private def within(c: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
 
-  /** The live files that may hold a row satisfying `filter` — the ONE
-    * file-pruning path behind every typed read and interval-scoped
-    * rewrite. `filter` must reject nulls in every column it reads (as
-    * the callers' comparisons, IN lists and prefixes do), so a row
-    * group whose schema predates a probed column cannot match.
+  /** The live files that may hold a row satisfying all `filters` —
+    * the ONE file pruner behind every store read: the typed reads and
+    * interval-scoped rewrites here, the SQL file index
+    * ([[graft.sources.GraftFileIndex]]) and [[Dml]]'s candidates.
     *
-    * The log's bounds go first, zero IO. A survivor consults its
-    * footer — memoized ([[footerOf]]), so a file is opened at most once
-    * per JVM, and never when this JVM wrote it — only when it has no
-    * logged bounds for a probed column or `filter` is an EqualTo/In a
-    * bloom can refute; it then survives iff some row group's footer
-    * bounds pass the same evaluator and its bloom may hold a probed
-    * value. Blooms are probed one 32-byte block per distinct hash
+    * The log's bounds go first, for every filter, zero IO. The footer
+    * stage takes only the filters that reject nulls in every column
+    * they read ([[StatsSkipping.rejectsNulls]]) — a row group whose
+    * schema predates such a column cannot match them — and, when
+    * `declared` is given, read only its non-nested columns, which
+    * footers name chunks after. A survivor consults its footer —
+    * memoized ([[footerOf]]), so a file is opened at most once per
+    * JVM, and never when this JVM wrote it — only when it has no
+    * logged bounds for one of their columns or one of them is an
+    * EqualTo/In a bloom can refute; it then survives iff some row
+    * group's footer bounds pass them and its blooms may hold every
+    * probe. Blooms are probed one 32-byte block per distinct hash
     * ([[BloomProbe]]), not read whole: the store's blooms are 16 MB
     * each. Null probes match nothing (SQL IN). A probed column in no
-    * logged bounds and no consulted footer is a misspelling, not an
-    * evolved column: loud. */
-  private def prunedFiles(spark: SparkSession, root: String,
-                          live: Seq[FileEntry],
-                          filter: Filter): Seq[FileEntry] = {
+    * logged bounds, no consulted footer and not `declared` (the
+    * snapshot's declared schema, or the SQL/DML relation's) is a
+    * misspelling, not an evolved column: loud. */
+  private[graft] def prunedFiles(spark: SparkSession, root: String,
+                                 live: Seq[FileEntry],
+                                 declared: Option[org.apache.spark.sql.types.StructType],
+                                 filters: Seq[Filter]): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
-    val cols = filter.references.distinct.toSeq
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val flat = declared.map(_.fields.filterNot(_.dataType match {
+      case _: StructType | _: ArrayType | _: MapType => true
+      case _ => false
+    }).map(_.name).toSet)
+    val strict = filters.filter(f => StatsSkipping.rejectsNulls(f) &&
+      flat.forall(f.references.forall(_)))
+    val cols = strict.flatMap(_.references).distinct
     def logged(e: FileEntry, c: String) =
       e.mins.contains(c) || e.smins.contains(c)
-    val probe = filter match {
-      case EqualTo(c, v) => Some(c -> Seq(v))
-      case In(c, vs) => Some(c -> vs.toSeq)
-      case _ => None
+    val probes = strict.collect {
+      case EqualTo(c, v) => c -> Seq(v)
+      case In(c, vs) => c -> vs.toSeq
     }
     val seen = scala.collection.mutable.Set(
       cols.filter(c => live.exists(logged(_, c))): _*)
+    declared.foreach(seen ++= _.fieldNames)
     var opened = false
     def footerMayContain(e: FileEntry): Boolean = {
       opened = true
@@ -1840,14 +1850,15 @@ object TableStore {
           .map(c => c.getPath.toDotString -> c).toMap
           .filter { case (c, _) => cols.contains(c) }
         seen ++= chunks.keys
+        lazy val bounds = groupBounds(e.path, block.getRowCount,
+          chunks.values.toSeq)
         chunks.size == cols.size &&
-          StatsSkipping.mayContain(groupBounds(e.path, block.getRowCount,
-            chunks.values.toSeq), filter) &&
-          probe.forall { case (c, vs) => blooms.mayHold(chunks(c), vs) }
+          strict.forall(StatsSkipping.mayContain(bounds, _)) &&
+          probes.forall { case (c, vs) => blooms.mayHold(chunks(c), vs) }
       } finally blooms.close()
     }
-    val kept = live.filter(e => StatsSkipping.mayContain(e, filter) &&
-      (probe.isEmpty && cols.forall(logged(e, _)) || footerMayContain(e)))
+    val kept = live.filter(e => filters.forall(StatsSkipping.mayContain(e, _)) &&
+      (probes.isEmpty && cols.forall(logged(e, _)) || footerMayContain(e)))
     // with no footer consulted, every file was logged or ruled out by
     // the log, so nothing could show a column the logs lack
     val typos = cols.filterNot(seen)
@@ -1889,6 +1900,7 @@ object TableStore {
         (cc.getPrimitiveType.getPrimitiveTypeName, v) match {
           case (INT64, l: java.lang.Long) => Some(hasher.hash(l.longValue))
           case (INT32, l: java.lang.Long) => Some(hasher.hash(l.intValue))
+          case (INT32, i: java.lang.Integer) => Some(hasher.hash(i.intValue))
           case (BINARY, s: String) => Some(hasher.hash(Binary.fromString(s)))
           case _ => None
         }
@@ -1958,26 +1970,24 @@ object TableStore {
     }
 
   /** The typed reads' one code path: resolve the snapshot once, keep
-    * what [[prunedFiles]] cannot rule out, and scan it with `residual`
-    * re-applied — the filter only chooses files, the residual keeps
-    * the rows exact. Returns (frame, files touched, files live). */
+    * what [[prunedFiles]] cannot rule out, and scan it under the
+    * snapshot's schema with `residual` re-applied — the filters only
+    * choose files, the residual keeps the rows exact (and prunes the
+    * scan's index through the same function, so to the same files).
+    * Returns (frame, files touched, files live). */
   private def prunedRead(spark: SparkSession, root: String,
-                         version: Option[Long], filter: Filter,
+                         version: Option[Long], filters: Seq[Filter],
                          residual: org.apache.spark.sql.Column)
       : (DataFrame, Int, Int) = {
     val (v, live, declared) =
       fileSnapshot(spark, root, version, "stats- and bloom-pruned reads")
-    val touched = prunedFiles(spark, root, live, filter)
+    val touched = prunedFiles(spark, root, live, declared, filters)
+    // the schema of what is scanned (a store appended with a wider
+    // frame is not uniform), or with every file refuted, of them all
     val df =
-      if (touched.nonEmpty)
-        scanFiles(spark, root, declared, touched).where(residual)
-      else if (live.nonEmpty)
-        // every file refuted: an empty frame of the scan's schema hands
-        // Spark no files to list
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          scanSchema(spark, root, declared, live)).where(residual)
-      else read(spark, root, Some(v)).where(residual).limit(0)
+      if (live.isEmpty) read(spark, root, Some(v)).where(residual).limit(0)
+      else scanFiles(spark, root, Some(scanSchema(spark, root, declared,
+        if (touched.isEmpty) live else touched)), touched).where(residual)
     (df, touched.size, live.size)
   }
 
@@ -2011,7 +2021,7 @@ object TableStore {
                  pcol: String, prefix: String,
                  version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
-    prunedRead(spark, root, version, StringStartsWith(pcol, prefix),
+    prunedRead(spark, root, version, Seq(StringStartsWith(pcol, prefix)),
       col(pcol).startsWith(prefix))
   }
 
@@ -2032,7 +2042,7 @@ object TableStore {
                   pcol: String, values: Seq[Long],
                   version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pointLookup needs at least one value")
-    prunedRead(spark, root, version, In(pcol, values.toArray[Any]),
+    prunedRead(spark, root, version, Seq(In(pcol, values.toArray[Any])),
       col(pcol).isin(values: _*))
   }
 
@@ -2045,7 +2055,7 @@ object TableStore {
                         version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
     require(values.nonEmpty, "pointLookupString needs at least one value")
-    prunedRead(spark, root, version, In(pcol, values.toArray[Any]),
+    prunedRead(spark, root, version, Seq(In(pcol, values.toArray[Any])),
       col(pcol).isin(values: _*))
   }
 
@@ -2191,9 +2201,10 @@ object TableStore {
                   bloomCols: Seq[String] = Nil): Long = {
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val (prev, liveNow, _) =
+    val (prev, liveNow, declared) =
       fileSnapshot(spark, root, None, "deleteWhere")
-    val touched = prunedFiles(spark, root, liveNow, within(pcol, lo, hi))
+    val touched =
+      prunedFiles(spark, root, liveNow, declared, within(pcol, lo, hi))
     if (touched.isEmpty) return prev
     // keep a row unless the predicate is DEFINITELY true: under
     // three-valued logic `!pred` drops NULL-valued rows the caller
@@ -2232,7 +2243,8 @@ object TableStore {
     val spark = df.sparkSession
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val (prev, live, _) = fileSnapshot(spark, root, None, "replaceWhere")
+    val (prev, live, declared) =
+      fileSnapshot(spark, root, None, "replaceWhere")
     val store = read(spark, root, Some(prev))
     require(df.columns.sorted.sameElements(store.columns.sorted),
       s"replaceWhere schema mismatch at $root: batch " +
@@ -2250,8 +2262,7 @@ object TableStore {
       bloomCols)
     val staged =
       if (batchAdds.isEmpty) df.limit(0)
-      else spark.read.option("ignoreMissingFiles", "false")
-        .parquet(batchAdds.map(e => resolve(root, e.path)): _*)
+      else scanFiles(spark, root, None, batchAdds)
     val escapee = staged.where(!coalesce(pred, lit(false))).limit(1)
       .collect() // bounded: first violation only
     if (escapee.nonEmpty) {
@@ -2266,7 +2277,8 @@ object TableStore {
           "slice must contain only rows it replaces, or re-runs " +
           "duplicate")
     }
-    val touched = prunedFiles(spark, root, live, within(pcol, lo, hi))
+    val touched =
+      prunedFiles(spark, root, live, declared, within(pcol, lo, hi))
     val kept =
       if (touched.isEmpty) df.limit(0).select(store.columns.map(col): _*)
       else readLiveFiles(spark, root, prev, touched)
@@ -2376,7 +2388,7 @@ object TableStore {
                         precomputedSpan: Option[org.apache.spark.sql.Row]
                           = None): Long = {
     val spark = inserts.sparkSession
-    val (prev, live, _) = fileSnapshot(spark, root, None, opName)
+    val (prev, live, declared) = fileSnapshot(spark, root, None, opName)
     val store = read(spark, root, Some(prev))
     // schema contract: an upsert that widened or narrowed the row
     // shape would leave a mixed-schema live set behind — loud, not
@@ -2396,7 +2408,8 @@ object TableStore {
       if (span.isNullAt(0)) Seq.empty // no non-null keys: no matches
       else keyRows.schema(key).dataType match {
         case ByteType | ShortType | IntegerType | LongType | StringType =>
-          prunedFiles(spark, root, live, within(key, span.get(0), span.get(1)))
+          prunedFiles(spark, root, live, declared,
+            within(key, span.get(0), span.get(1)))
         case _ => live // unpruneable key type: exact scan decides
       }
     val keys = keyRows.select(col(key).as("__merge_key"))
@@ -2781,9 +2794,10 @@ object TableStore {
                           bloomCols: Seq[String] = Nil): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     require(lo <= hi, s"empty scope interval [$lo, $hi]")
-    val (prev, live, _) =
+    val (prev, live, declared) =
       fileSnapshot(spark, root, None, "optimizeLayoutWhere")
-    val touched = prunedFiles(spark, root, live, within(clusterCol, lo, hi))
+    val touched =
+      prunedFiles(spark, root, live, declared, within(clusterCol, lo, hi))
     if (touched.size < 2) return prev
     val bytes = touched.map(e => sizeOf(spark, root, e)).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -2849,7 +2863,7 @@ object TableStore {
     require(x._2 <= x._3 && y._2 <= y._3,
       s"empty box [${x._2},${x._3}]×[${y._2},${y._3}]")
     prunedRead(spark, root, version,
-      And(within(x._1, x._2, x._3), within(y._1, y._2, y._3)),
+      within(x._1, x._2, x._3) ++ within(y._1, y._2, y._3),
       col(x._1).between(x._2, x._3) && col(y._1).between(y._2, y._3))
   }
 
@@ -3089,7 +3103,7 @@ object TableStore {
     val layoutVs = marked.map(_.v).toSet
     val adds = range // bounded by files added in the window
       .filter(r => r.action == "add" && !layoutVs.contains(r.v))
-      .map(r => (r.path, r.v))
+      .map(r => (r.toEntry, r.v))
     if (adds.isEmpty) {
       val anchor = new Path(s"$root/_schema")
       return spark.read.parquet(anchor.toString).limit(0)
@@ -3102,8 +3116,7 @@ object TableStore {
     // merged target schema via a mergeSchema footer scan of every
     // add file, which tripled the version-diff gate's cost)
     adds.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, rows) =>
-      spark.read.option("ignoreMissingFiles", "false")
-        .parquet(rows.map(r => resolve(root, r._1)): _*)
+      scanFiles(spark, root, None, rows.map(_._1))
         .withColumn("_commit_version", lit(v))
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
@@ -3152,17 +3165,11 @@ object TableStore {
     requireNoDvs(spark, root, to, after, "readRowChanges (window end)")
     val beforeP = before.map(_.path).toSet
     val afterP = after.map(_.path).toSet
-    val addedFiles = after.collect {
-      case e if !beforeP.contains(e.path) => resolve(root, e.path) }
-    val removedFiles = before.collect {
-      case e if !afterP.contains(e.path) => resolve(root, e.path) }
+    val addedFiles = after.filterNot(e => beforeP.contains(e.path))
+    val removedFiles = before.filterNot(e => afterP.contains(e.path))
     val target = read(spark, root, Some(to)).schema
-    def frame(files: Seq[String]) =
-      if (files.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
-      else SchemaEvolution.readWithTarget(spark, target, files: _*)
-    val a = frame(addedFiles)
-    val r = frame(removedFiles)
+    val a = scanFiles(spark, root, Some(target), addedFiles)
+    val r = scanFiles(spark, root, Some(target), removedFiles)
     // Multiset difference in ONE pass. The previous shape —
     // a.exceptAll(r) UNION r.exceptAll(a) — scanned BOTH file sets
     // TWICE and ran two aggregates (Spark rewrites each exceptAll

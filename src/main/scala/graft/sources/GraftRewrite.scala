@@ -3,53 +3,38 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.StructType
 
-/** Analysis rewrite: every [[GraftStoreTable]] relation becomes a
-  * NATIVE parquet file-source relation over a [[GraftFileIndex]] —
-  * the Delta-lake architecture for putting a log-governed table on
-  * Spark's first-class read path. What the swap buys, relative to the
-  * DSv2 V1Scan fallback the table otherwise plans through:
+/** Analysis rewrite: every [[GraftStoreTable]] relation becomes the
+  * relation every typed store read already scans — a NATIVE parquet
+  * file-source relation over a [[GraftFileIndex]]
+  * ([[GraftFileIndex.relation]]), the Delta-lake architecture for
+  * putting a log-governed table on Spark's first-class read path.
+  * What the swap buys, relative to the DSv2 V1Scan fallback the table
+  * otherwise plans through:
   *
   *  - FileSourceScanExec: vectorized parquet reader inside
   *    whole-stage codegen, zero per-row adapter cost;
   *  - Catalyst's own pushdown: filters reach the scan as
   *    `PushedFilters` (parquet row-group pruning) AND reach the
-  *    file index as data filters (log-stats FILE pruning);
+  *    file index as data filters (FILE pruning: log bounds, footer
+  *    bounds and bloom probes — the typed reads' one pruner);
   *  - column pruning into the reader (`ReadSchema`), AQE, runtime
   *    filters — everything the planner knows how to do with a
   *    HadoopFsRelation.
   *
-  * The rewrite preserves the relation's resolved output attributes
-  * (same names, types, exprIds), so parent operators are untouched.
-  * Snapshots carrying merge-on-read delete vectors are left on the
-  * dv-aware V1Scan path — a raw file scan would resurrect deleted
-  * rows; correctness owns the fork.
-  *
-  * DML TARGETS are left alone: the relation under a
-  * `DeleteFromTable`/`UpdateTable`/`MergeIntoTable` must stay a V2
-  * relation for [[GraftDmlRule]] to claim once the command resolves
-  * (the rewrite would otherwise fire in the iteration where the
-  * relation resolves but the condition hasn't yet — stranding the
-  * command over a plain parquet relation no DML path understands).
-  * A merge's SOURCE side still rewrites: only the mutation target is
-  * protected. */
+  * The rewrite waits for the whole plan to resolve. So the COUNT
+  * pre-pass below always meets the V2 relation, and a DML target is
+  * never rewritten: [[GraftDmlRule]], injected first, claims a
+  * `DeleteFromTable`/`UpdateTable`/`MergeIntoTable` in the same pass
+  * its plan resolves (a merge's SOURCE still rewrites). The rewrite
+  * preserves the relation's resolved output attributes (same names,
+  * types, exprIds), so parent operators are untouched. Snapshots
+  * carrying merge-on-read delete vectors are left on the dv-aware
+  * V1Scan path — a raw file scan would resurrect deleted rows;
+  * correctness owns the fork. */
 case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
-
-  import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, MergeIntoTable, UpdateTable}
-
-  private def dmlTargets(plan: LogicalPlan): Set[LogicalPlan] =
-    plan.collect {
-      case d: DeleteFromTable =>
-        d.table.collect { case r: DataSourceV2Relation => r }
-      case u: UpdateTable =>
-        u.table.collect { case r: DataSourceV2Relation => r }
-      case m: MergeIntoTable =>
-        m.targetTable.collect { case r: DataSourceV2Relation => r }
-    }.flatten.toSet
 
   import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
   import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
@@ -58,9 +43,9 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   /** A bare graft snapshot under aliases/trivial projections — the
     * only shape whose row count the LOG answers exactly (any Filter
     * or join in between makes the count data-dependent). Matches the
-    * V2 relation AND the already-rewritten file-index form (the two
-    * can race within the resolution fixed point). Yields the
-    * log-exact row count. */
+    * V2 relation only: a typed read's file-index relation must scan,
+    * so a vacuumed file fails it loudly. Yields the log-exact row
+    * count. */
   private object MetaCountable {
     def unapply(plan: LogicalPlan): Option[Long] = plan match {
       case SubqueryAlias(_, child) => unapply(child)
@@ -72,12 +57,6 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
             !r.table.asInstanceOf[GraftStoreTable].hasDeleteVectors =>
         Some(r.table.asInstanceOf[GraftStoreTable]
           .liveEntries.map(_.rows).sum)
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation if h.location.isInstanceOf[GraftFileIndex] =>
-          Some(h.location.asInstanceOf[GraftFileIndex]
-            .entries.map(_.rows).sum)
-        case _ => None
-      }
       case _ => None
     }
   }
@@ -90,7 +69,7 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val protectedRels = dmlTargets(plan)
+    if (!plan.resolved) return plan
     // metadata-only COUNT(*) pre-pass (top-down: the count subsumes
     // its relation before the bottom-up scan rewrite converts it):
     // an ungrouped, unfiltered count over a vector-free snapshot is
@@ -115,26 +94,15 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     // transformUpWithSubqueries: relations INSIDE subquery expressions
     // (IN/EXISTS/scalar over a graft store — the reference's literal
     // DELETE shapes, and any SELECT with a store-reading subquery) get
-    // the same native vectorized scan as top-level relations. DML
-    // targets are top-level by grammar, so the protection set is
-    // never shadowed by a subquery relation (those are reads).
+    // the same native vectorized scan as top-level relations
     counted.transformUpWithSubqueries {
       case r: DataSourceV2Relation
           if r.table.isInstanceOf[GraftStoreTable] &&
-            !r.table.asInstanceOf[GraftStoreTable].hasDeleteVectors &&
-            !protectedRels.contains(r) =>
+            !r.table.asInstanceOf[GraftStoreTable].hasDeleteVectors =>
         val t = r.table.asInstanceOf[GraftStoreTable]
-        val index = new GraftFileIndex(session, t.root,
-          t.resolvedVersion, t.liveEntries)
-        val rel = HadoopFsRelation(
-          location = index,
-          partitionSchema = new StructType(),
-          dataSchema = t.schema,
-          bucketSpec = None,
-          fileFormat = new ParquetFileFormat(),
-          options = Map.empty)(session)
-        LogicalRelation(rel, r.output, None, isStreaming = false,
-          stream = None)
+        LogicalRelation(
+          GraftFileIndex.relation(session, t.root, t.liveEntries, t.schema),
+          r.output, None, isStreaming = false, stream = None)
     }
   }
 }

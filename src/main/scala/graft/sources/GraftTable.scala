@@ -28,16 +28,17 @@ import graft.ops.TableStore
   * resolved table reads one immutable snapshot — a concurrent commit
   * between analysis and execution cannot tear a query.
   *
-  * Two read paths share this table:
-  *  - [[graft.functions.GraftExtensions]] rewrites the relation to a
-  *    [[GraftFileIndex]]-backed native parquet scan during analysis —
-  *    vectorized reader + whole-stage codegen + log-stats file
-  *    skipping; this is the plan every SQL query gets;
+  * Every read of this table scans the one store relation, a
+  * [[GraftFileIndex]]-backed native parquet scan pruned by
+  * [[TableStore.prunedFiles]] (log bounds, footer bounds, blooms):
+  *  - [[graft.functions.GraftExtensions]] rewrites the relation to it
+  *    during analysis — vectorized reader + whole-stage codegen; this
+  *    is the plan every SQL query gets;
   *  - the DSv2 [[GraftScanBuilder]] below is the self-contained
   *    fallback (extensions not installed, or merge-on-read delete
   *    vectors outstanding — the rewrite refuses those): V1Scan
-  *    delegation to the dv-aware [[TableStore.read]], with the same
-  *    [[StatsSkipping]] file pruning when the snapshot is vector-free.
+  *    delegation to the same pruned scan when the snapshot is
+  *    vector-free, else to the dv-aware [[TableStore.read]].
   */
 class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
                       providedSchema: Option[StructType] = None)
@@ -200,9 +201,9 @@ class GraftWriteBuilder(table: GraftStoreTable, info: LogicalWriteInfo)
 
 /** DSv2 scan builder: column pruning + filter pushdown. Every filter
   * is RETURNED as residual (Spark re-evaluates it after the scan — a
-  * skipping bug can cost IO, never rows); the skipping-usable subset
-  * is recorded and reported as `pushedFilters` to drive
-  * [[StatsSkipping]] file pruning inside the scan. */
+  * skipping bug can cost IO, never rows) and also recorded, reported
+  * as `pushedFilters`, for [[TableStore.prunedFiles]] to prune with
+  * inside the scan. */
 class GraftScanBuilder(table: GraftStoreTable)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -211,7 +212,7 @@ class GraftScanBuilder(table: GraftStoreTable)
   private var pushed: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(StatsSkipping.usable)
+    pushed = filters
     filters // all residual: exactness never rests on the skip
   }
 
@@ -224,8 +225,9 @@ class GraftScanBuilder(table: GraftStoreTable)
 }
 
 /** V1Scan delegation: the scan plans as a RowDataSourceScanExec whose
-  * RDD is a pruned [[TableStore]] read — log-stats file skipping when
-  * the snapshot is vector-free, the dv-aware full read when not.
+  * RDD is the store's one pruned scan ([[TableStore.prunedFiles]] then
+  * [[TableStore.scanFiles]]) when the snapshot is vector-free, the
+  * dv-aware full read when not.
   * (The primary SQL path never reaches here: the analysis rewrite in
   * [[graft.functions.GraftExtensions]] replaces the relation with a
   * native parquet scan first. This path serves `spark.read
@@ -272,17 +274,12 @@ class GraftScan(table: GraftStoreTable, required: StructType,
         val base =
           if (table.hasDeleteVectors || table.liveEntries.isEmpty)
             table.snapshot
-          else {
-            val kept = StatsSkipping.prune(table.liveEntries, pushed)
-            if (kept.isEmpty) table.snapshot.limit(0)
-            // read under the table's (declared-aware) schema: an
-            // ALTER-evolved snapshot's pre-ALTER files null-fill the
-            // added column instead of inferring one file's shape
-            else spark.read.option("ignoreMissingFiles", "false")
-              .schema(table.schema)
-              .parquet(kept.map(e =>
-                TableStore.resolve(table.root, e.path)): _*)
-          }
+          // read under the table's (declared-aware) schema: an
+          // ALTER-evolved snapshot's pre-ALTER files null-fill the
+          // added column instead of inferring one file's shape
+          else TableStore.scanFiles(spark, table.root, Some(table.schema),
+            TableStore.prunedFiles(spark, table.root, table.liveEntries,
+              Some(table.schema), pushed))
         base.select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
       }
     }

@@ -5,14 +5,14 @@ import org.apache.spark.sql.sources._
 import graft.ops.TableStore
 import graft.ops.TableStore.FileEntry
 
-/** THE file-pruning predicate of the versioned store: from a file's
-  * [min, max] bounds alone, can it hold a row satisfying a
-  * `sources.Filter`? Every pruned store read calls it: the typed reads
-  * and interval-scoped rewrites of [[TableStore]], the DSv2 pushdown
-  * scan, the [[GraftFileIndex]] native scan (its Catalyst filters
-  * translated to this ADT) and the SQL DML planner. The bounds are the
-  * commit log's (zero IO) or, for a file whose log entry has none, one
-  * row group's footer bounds handed in by the store as a [[FileEntry]].
+/** The bounds predicate of the versioned store's file pruning: from
+  * a file's [min, max] bounds alone, can it hold a row satisfying a
+  * `sources.Filter`? Every store read prunes through
+  * [[TableStore.prunedFiles]], which asks it first of the commit log's
+  * bounds (zero IO) and then of one row group's footer bounds handed
+  * in as a [[FileEntry]]; the typed reads, the SQL file index, the
+  * DSv2 fallback scan and the DML planner all reach it there. Only
+  * the commit-race screen calls [[prune]] directly, on log bounds.
   *
   * Soundness contract: `mayContain` returns false ONLY when the
   * bounds PROVE no row matches — unknown filter shapes, columns
@@ -116,26 +116,24 @@ object StatsSkipping {
       .orElse(asString(v).map(s => strOverlap(e, a, Some(s), Some(s))))
       .getOrElse(true)
 
-  /** Filters this evaluator can use for skipping — what the scan
-    * reports as `pushedFilters` (advisory; every filter is also kept
-    * as a residual, so reporting is never a correctness claim). */
-  def usable(f: Filter): Boolean = f match {
-    case And(l, r) => usable(l) || usable(r)
-    case Or(l, r)  => usable(l) && usable(r)
-    case EqualTo(_, v) => asLong(v).orElse(asString(v)).isDefined
-    case EqualNullSafe(_, v) =>
-      v != null && asLong(v).orElse(asString(v)).isDefined
-    case In(_, vs) =>
-      vs.exists(v => v != null && asLong(v).orElse(asString(v)).isDefined)
-    case GreaterThan(_, v) => asLong(v).orElse(asString(v)).isDefined
-    case GreaterThanOrEqual(_, v) => asLong(v).orElse(asString(v)).isDefined
-    case LessThan(_, v) => asLong(v).orElse(asString(v)).isDefined
-    case LessThanOrEqual(_, v) => asLong(v).orElse(asString(v)).isDefined
-    case StringStartsWith(_, p) => p.nonEmpty
+  /** Is `f` false or null for a row with a null in ANY column it
+    * reads? Only such filters may prune a row group lacking one of
+    * those columns (an ALTER-added column reads as null there). IS
+    * NULL, `<=>` NULL, NOT and an OR of different columns are not;
+    * an unknown shape answers false. */
+  private[graft] def rejectsNulls(f: Filter): Boolean = f match {
+    case And(l, r) => rejectsNulls(l) && rejectsNulls(r)
+    case Or(l, r) => rejectsNulls(l) && rejectsNulls(r) &&
+      l.references.toSet == r.references.toSet
+    case EqualNullSafe(_, v) => v != null
+    case _: EqualTo | _: In | _: GreaterThan | _: GreaterThanOrEqual |
+         _: LessThan | _: LessThanOrEqual | _: StringStartsWith |
+         _: StringEndsWith | _: StringContains | _: IsNotNull => true
     case _ => false
   }
 
-  /** The live files that survive every filter. */
+  /** The live files whose log bounds survive every filter — the
+    * commit-race screen's test. */
   def prune(live: Seq[FileEntry], filters: Seq[Filter]): Seq[FileEntry] =
     live.filter(e => filters.forall(f => mayContain(e, f)))
 }

@@ -65,6 +65,12 @@ object Bridge {
       .reduce(_.merge(_, conf.caseSensitiveAnalysis)).asNullable
   }
 
+  /** `s` with every field nullable, as Spark's file sources report a
+    * user-specified schema (`StructType.asNullable` is spark-private):
+    * a file lacking a column reads it as null. */
+  def nullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** A V1 streaming Sink's `addBatch` frame re-wrapped as a PLAIN
     * batch frame over the micro-batch's already-planned RDD —
     * Spark's own ForeachBatchSink construction

@@ -14,10 +14,10 @@ import graft.sources.GraftFileIndex
   * blooms, and one written before an ALTER added the probed string
   * column — and every typed read with a random probe must return
   * exactly the rows of a full snapshot read under the same residual.
-  * Where every live file carries log bounds for the probed columns
-  * (and no bloom can refute a lookup), the read's `touched` must also
-  * equal what the SQL surface's [[GraftFileIndex]] keeps for the same
-  * predicate: one evaluator, two callers. Every frame's schema, which
+  * Where every live file carries log bounds for the probed columns,
+  * the read's `touched` must also equal what the SQL surface's
+  * [[GraftFileIndex]] keeps for the same predicate, blooms included:
+  * one pruner, two callers. Every frame's schema, which
   * the store resolves on the driver, must equal what Spark infers for
   * the snapshot's live files (merged, once an ALTER declared one),
   * including a snapshot pinned before the ALTER.
@@ -35,9 +35,7 @@ class PrunedReadPropertySpec extends SparkSpec {
                             files: Int)
 
   /** `preAlter`: the first commit predates column `s`. */
-  private case class Shape(preAlter: Boolean, commits: Seq[Commit]) {
-    def bloomy: Boolean = commits.exists(_.kind == Bloom)
-  }
+  private case class Shape(preAlter: Boolean, commits: Seq[Commit])
 
   // keys clustered per commit so the log can prune; `s` follows `k`
   // (prefix "p<k/100>/") so string probes prune too; ~10% nulls
@@ -117,9 +115,9 @@ class PrunedReadPropertySpec extends SparkSpec {
   }
 
   /** One typed read against its reference. */
-  private def agree(root: String, shape: Shape, name: String,
+  private def agree(root: String, name: String,
                     read: (DataFrame, Int, Int), residual: Column,
-                    probed: Seq[String], lookup: Boolean): Unit = {
+                    probed: Seq[String]): Unit = {
     val (df, touched, live) = read
     val want = rows(TableStore.read(spark, root).where(residual))
     val got = rows(df)
@@ -130,7 +128,7 @@ class PrunedReadPropertySpec extends SparkSpec {
     val entries = TableStore.liveAt(spark, root, v)
     val allLogged = entries.forall(e => probed.forall(c =>
       e.mins.contains(c) || e.smins.contains(c)))
-    if (allLogged && !(lookup && shape.bloomy)) {
+    if (allLogged) {
       indexChecks += 1
       val kept = indexKeeps(root, residual)
       assert(touched == kept,
@@ -165,26 +163,25 @@ class PrunedReadPropertySpec extends SparkSpec {
         val (slo, shi) = (str(lo), str(hi))
         val prefix = s"p${lo / 100}/"
         val strKeys = keys.map(str) ++ (if (withNull) Seq(null) else Nil)
-        agree(root, shape, "readRange",
+        agree(root, "readRange",
           TableStore.readRange(spark, root, "k", lo, hi),
-          col("k") >= lo && col("k") <= hi, Seq("k"), lookup = false)
-        agree(root, shape, "readRangeString",
+          col("k") >= lo && col("k") <= hi, Seq("k"))
+        agree(root, "readRangeString",
           TableStore.readRangeString(spark, root, "s", slo, shi),
-          col("s") >= lit(slo) && col("s") <= lit(shi), Seq("s"),
-          lookup = false)
-        agree(root, shape, "readPrefix",
+          col("s") >= lit(slo) && col("s") <= lit(shi), Seq("s"))
+        agree(root, "readPrefix",
           TableStore.readPrefix(spark, root, "s", prefix),
-          col("s").startsWith(prefix), Seq("s"), lookup = false)
-        agree(root, shape, "pointLookup",
+          col("s").startsWith(prefix), Seq("s"))
+        agree(root, "pointLookup",
           TableStore.pointLookup(spark, root, "k", keys),
-          col("k").isin(keys: _*), Seq("k"), lookup = true)
-        agree(root, shape, "pointLookupString",
+          col("k").isin(keys: _*), Seq("k"))
+        agree(root, "pointLookupString",
           TableStore.pointLookupString(spark, root, "s", strKeys),
-          col("s").isin(strKeys: _*), Seq("s"), lookup = true)
-        agree(root, shape, "readBox",
+          col("s").isin(strKeys: _*), Seq("s"))
+        agree(root, "readBox",
           TableStore.readBox(spark, root, ("k", lo, hi), ("y", ylo, yhi)),
           col("k").between(lo, hi) && col("y").between(ylo, yhi),
-          Seq("k", "y"), lookup = false)
+          Seq("k", "y"))
         if (shape.preAlter) {
           // version 1 predates the ALTER: its reads resolve from footers
           val before = Seq(TableStore.read(spark, root, Some(1L)),

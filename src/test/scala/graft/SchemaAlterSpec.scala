@@ -42,6 +42,15 @@ class SchemaAlterSpec extends SparkSpec {
     val post = TableStore.read(spark, root)
     assert(post.schema.fieldNames.toSeq == Seq("id", "v", "note"))
     assert(post.where(col("note").isNull).count() == 3L)
+    // typed reads on the declared column: in no live file yet, yet no
+    // typo — every file predates it, so none can match
+    assert(post.where(col("note") === "x").count() == 0L)
+    Seq(TableStore.pointLookupString(spark, root, "note", Seq("x")),
+      TableStore.readRangeString(spark, root, "note", "a", "z"),
+      TableStore.readPrefix(spark, root, "note", "x")).foreach {
+      case (df, touched, live) =>
+        assert(df.count() == 0L && touched == 0 && live == 2)
+    }
     // a write after the ALTER carries the column
     TableStore.append(Seq((9L, 90L, "hi")).toDF("id", "v", "note")
       .coalesce(1), root) // v4
@@ -214,6 +223,30 @@ class SchemaAlterSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $g.`$root` WHERE note = 'b2'").collect()
     assert(spark.sql(s"SELECT id FROM $g.`$root` ORDER BY id")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L, 4L))
+  }
+
+  test("null-accepting predicates on an ALTER-added column keep the " +
+      "files that predate it: SQL reads and DELETE") {
+    val s = spark; import s.implicits._
+    val root = tmp()
+    TableStore.append(mk(1L, 2L).coalesce(1), root) // v1: no note
+    TableStore.addColumn(spark, root, "note", StringType)
+    TableStore.append(Seq((3L, 30L, "a"), (4L, 40L, null))
+      .toDF("id", "v", "note").coalesce(1), root, bloomCols = Seq("note"))
+    val g = cat("galtnull")
+    def ids(where: String): Set[Long] =
+      spark.sql(s"SELECT id FROM $g.`$root` WHERE $where")
+        .collect().map(_.getLong(0)).toSet
+    assert(ids("note IS NULL") == Set(1L, 2L, 4L))
+    assert(ids("note <=> NULL") == Set(1L, 2L, 4L))
+    assert(ids("note = 'a' OR note IS NULL") == Set(1L, 2L, 3L, 4L))
+    assert(ids("NOT (note <=> 'a')") == Set(1L, 2L, 4L))
+    assert(ids("note IS NULL AND id >= 2") == Set(2L, 4L))
+    // a null-rejecting probe still skips the file without the column
+    assert(ids("note = 'a'") == Set(3L))
+    spark.sql(s"DELETE FROM $g.`$root` WHERE note IS NULL").collect()
+    assert(TableStore.read(spark, root).select("id").collect()
+      .map(_.getLong(0)).toSet == Set(3L))
   }
 
   test("ALTER on an anchored-but-empty store (CREATE then ALTER " +

@@ -57,6 +57,56 @@ class SqlDmlSpec extends SparkSpec {
       Seq(1L, 2L, 3L, 11L, 13L, 21L, 22L, 23L))
   }
 
+  test("DELETE on a bloom store scans and rewrites only the files " +
+      "the blooms keep") {
+    val s = spark; import s.implicits._
+    val root = graft.TempRoots.create("graft_sqldml_bloom") + "/t"
+    // four files whose keys interleave: only the blooms tell them apart
+    (0 until 4).foreach { f =>
+      TableStore.append((0 until 40).map(i => (i * 4 + f).toLong)
+        .map(k => (k, s"id-$k")).toDF("id", "cid").coalesce(1), root,
+        bloomCols = Seq("cid"))
+    }
+    val (_, kept, live) =
+      TableStore.pointLookupString(spark, root, "cid", Seq("id-5"))
+    assert(kept == 1 && live == 4)
+    // the file count of every scan the DELETE plans, read off its
+    // executed plans; a marker query flushes the async listener bus
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+    }.flatten
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "graft_marker"))
+          flushed.countDown()
+        else scans(qe.executedPlan).foreach(sc =>
+          scanned.add(sc.selectedPartitions.totalNumberOfFiles))
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val before = livePaths(root)
+    spark.listenerManager.register(listener)
+    try {
+      spark.sql(s"DELETE FROM ${cat("gdml")}.`$root` WHERE cid = 'id-5'")
+        .collect()
+      spark.range(1).toDF("graft_marker").collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(!scanned.isEmpty && scanned.asScala.forall(_ <= kept),
+      s"the DELETE scanned ${scanned.asScala.mkString(",")} files; " +
+        s"the blooms keep $kept")
+    assert((before -- livePaths(root)).size == 1)
+    assert(TableStore.read(spark, root).select("id").collect()
+      .map(_.getLong(0)).toSet == (0L until 160L).toSet - 5L)
+  }
+
   test("DELETE that provably matches nothing commits nothing") {
     val root = rangedStore("delnoop")
     val g = cat("gdml")

@@ -299,6 +299,36 @@ class SqlStoreSpec extends SparkSpec {
       m.contains("read-only") || m.contains("VERSION AS OF")))
   }
 
+  test("SQL = and IN on a bloom store select the files the typed " +
+      "lookup touches") {
+    val s = spark; import s.implicits._
+    val root = tmp()
+    // four files whose keys interleave: only the blooms tell them apart
+    (0 until 4).foreach { f =>
+      TableStore.append((0 until 40).map(i => i * 4 + f)
+        .map(k => (k.toLong, k, s"id-$k")).toDF("id", "n", "cid")
+        .coalesce(1), root, bloomCols = Seq("cid", "n"))
+    }
+    val g = "gsqlbloom"
+    spark.conf.set(s"spark.sql.catalog.$g", classOf[GraftCatalog].getName)
+    Seq(
+      TableStore.pointLookupString(spark, root, "cid", Seq("id-5")) ->
+        "cid = 'id-5'",
+      TableStore.pointLookupString(spark, root, "cid",
+        Seq("id-5", "id-6")) -> "cid IN ('id-5', 'id-6')",
+      TableStore.pointLookupString(spark, root, "cid",
+        Seq("id-5", "id-9")) -> "cid IN ('id-5', 'id-9')",
+      // an int column: SQL probes it with an Integer literal
+      TableStore.pointLookup(spark, root, "n", Seq(5L)) -> "n = 5"
+    ).foreach { case ((typed, touched, live), cond) =>
+      assert(live == 4)
+      val viaSql = spark.sql(s"SELECT id, cid FROM $g.`$root` WHERE $cond")
+      assert(fileScan(viaSql).selectedPartitions.totalNumberOfFiles ==
+        touched, s"$cond: SQL scans differ from the typed lookup's $touched")
+      assert(rowsAsSet(viaSql) == rowsAsSet(typed.select("id", "cid")))
+    }
+  }
+
   private def hasAnyScan(df: DataFrame): Boolean = {
     df.collect()
     def leaves(p: org.apache.spark.sql.execution.SparkPlan)
