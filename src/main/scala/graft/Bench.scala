@@ -59,7 +59,16 @@ private final class BenchDiag
     "spill_bytes" -> spillBytes.get, "shuffle_write" -> shuffleWr.get,
     "tasks" -> tasks.get, "proc_gc_ms" -> procGcMs,
     "jit_ms" -> jitMs, "codecache_used" -> codeCacheUsed,
-    "heap_used" -> heapUsed)
+    "heap_used" -> heapUsed) ++ host()
+  /** Interference evidence: host CPU time stolen by the hypervisor and
+    * spent waiting on IO, machine-wide, in ms since boot (/proc/stat's
+    * cpu line at USER_HZ = 100; zeros where it is unreadable). */
+  def host(): Map[String, Long] = {
+    val f = scala.util.Try(Files.readAllLines(Paths.get("/proc/stat"))
+      .get(0).trim.split("\\s+")).getOrElse(Array.empty[String])
+    def ms(i: Int) = if (f.length > i) f(i).toLong * 10 else 0L
+    Map("host_iowait_ms" -> ms(5), "host_steal_ms" -> ms(8))
+  }
   /** Levels (point-in-time gauges) are reported as-is; counters as
     * deltas. */
   private val Levels = Set("heap_used", "codecache_used")
@@ -73,6 +82,8 @@ private final class BenchDiag
 
 object Bench {
   def main(args: Array[String]): Unit = {
+    val diag = new BenchDiag
+    val hostAtStart = diag.host()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.tune(SparkSession.builder()
@@ -161,7 +172,6 @@ object Bench {
     // sorted order: hash-map iteration order shifts when queries are
     // added, which moves JVM warmup/GC noise between queries and makes
     // round-over-round per-query comparison unnecessarily noisy
-    val diag = new BenchDiag
     spark.sparkContext.addSparkListener(diag)
     val diagRows = Seq.newBuilder[String]
     // Materialize through the noop sink: every projection/expression
@@ -377,8 +387,10 @@ object Bench {
       System.err.println(f"[bench] RUN DRIFT: $overCount/${comparable.size} " +
         f"queries over 1.5x trailing (like-for-like $likeForLike%.2fx) — " +
         "instance state, treat this run's totals as an upper bound")
+    val hostJson = diag.host().toSeq.sorted
+      .map { case (k, v) => s""","$k":${v - hostAtStart(k)}""" }.mkString
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$resoloJson$splitJson$driftJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$resoloJson$splitJson$driftJson$hostJson,"sf":"$sfDir"}"""
     println(line)
     // self-preserving artifact of record: the driver captures stdout
     // through a tail window that has truncated the per-query map before

@@ -271,12 +271,12 @@ object Layout {
   /** Incremental OPTIMIZE for a key-clustered layer: appends since
     * the last clustered write break the files-are-disjoint-ranges
     * property that makes min/max pruning sharp, but re-clustering the
-    * WHOLE layer (the [[Compaction]] posture) re-encodes mostly-fine
-    * files. This repairs selectively: plan from the footer manifest
-    * ([[FooterStats.manifest]] — metadata only), merge files into
-    * overlap groups, rewrite ONLY groups of ≥2 overlapping files
-    * (range-partitioned + sorted, same file count), byte-copy the
-    * already-disjoint rest, and publish with the crash-safe
+    * WHOLE layer (the [[TableStore.optimizeLayout]] posture)
+    * re-encodes mostly-fine files. This repairs selectively: plan from
+    * the footer manifest ([[FooterStats.manifest]] — metadata only),
+    * merge files into overlap groups, rewrite ONLY groups of ≥2
+    * overlapping files (range-partitioned + sorted, same file count),
+    * byte-copy the already-disjoint rest, and publish with the crash-safe
     * double-rename swap ([[graft.ops.Upsert.atomicOverwrite]]'s
     * protocol): readers never observe a half-reclustered layer and a
     * crash is recovered by the next maintenance call. Re-running on a

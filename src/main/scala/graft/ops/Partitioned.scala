@@ -78,7 +78,7 @@ object Partitioned {
     * dates/months in zero-padded ISO form sort correctly; that is the
     * layout convention [[writeBy]] establishes). The missing third of
     * the data lifecycle beside [[writeBy]] (produce) and
-    * [[Compaction]] (reorganize): a 100 TB fact with a 90-day
+    * [[TableStore.compact]] (reorganize): a 100 TB fact with a 90-day
     * retention contract must DROP directories, not filter at read
     * time — storage, listing cost and compliance all hang on the
     * files actually going away.

@@ -19,12 +19,12 @@ import graft.sources.StatsSkipping
   * commit-log model (a log of add/remove file actions whose replay
   * at version v IS the snapshot) that every lakehouse table format
   * builds on, re-expressed with this engine's primitives. It unifies
-  * the maintenance family under snapshot isolation: [[Compaction]]
-  * rewrites files, [[Layout.recluster]] repairs layout, and
-  * [[Partitioned.expireSlices]] drops slices — here each of those
-  * becomes a new VERSION, old snapshots stay readable until
-  * [[TableStore.vacuum]] retires them, and a reader pinned to v is
-  * immune to every later rewrite.
+  * the maintenance family under snapshot isolation: [[compact]]
+  * folds files, [[optimizeLayout]] repairs layout (the plain-layer
+  * [[Layout.recluster]]), and [[Partitioned.expireSlices]] drops
+  * slices — here each of those becomes a new VERSION, old snapshots
+  * stay readable until [[TableStore.vacuum]] retires them, and a
+  * reader pinned to v is immune to every later rewrite.
   *
   * Layout under `root/`:
   *  - `data/v<N>-<attempt>/part-*.parquet` — immutable data files in
@@ -64,7 +64,7 @@ import graft.sources.StatsSkipping
   * (Delta's checkpoint move) so replay cost stays bounded by the
   * retention window instead of growing with table age. Driver-side
   * work is bounded by file count — the same planning-collect budget
-  * as [[Compaction]] and [[FooterStats]].
+  * as [[FooterStats]].
   */
 object TableStore {
 
@@ -1766,30 +1766,44 @@ object TableStore {
                    cols: Seq[(String, org.apache.spark.sql.types.DataType)])
       : Long = alterSchema(spark, root, Nil, cols)
 
-  /** Rewrite the live set to ~targetBytes files as a new version —
-    * [[Compaction]] under snapshot isolation: content-identical to
-    * the previous version, old file layout still readable there. */
+  /** The one LAYOUT rewrite behind every maintenance op `op`: `pick`
+    * files from the latest (live, declared schema), refused as `op`
+    * under delete vectors, fold them into ~`targetBytes` files, rows
+    * spread round-robin or range-clustered and sorted on `clusterKey`,
+    * and commit them via [[commitLayoutRebasing]]. Fewer than
+    * `minFiles` picked commits nothing; an empty pick at `minFiles` 0
+    * commits a no-action version. */
+  private def rewriteLayout(spark: SparkSession, root: String, op: String,
+                            targetBytes: Long, minFiles: Int,
+                            statsCols: Seq[String], bloomCols: Seq[String],
+                            clusterKey: Option[org.apache.spark.sql.Column])(
+      pick: (Seq[FileEntry], Option[org.apache.spark.sql.types.StructType])
+        => Seq[FileEntry]): Long = {
+    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
+    val (prev, live, declared) = fileSnapshot(spark, root, None, op)
+    val files = pick(live, declared)
+    if (files.size < minFiles) return prev
+    val n = prev + 1
+    val adds = if (files.isEmpty) Seq.empty else {
+      val bytes = files.map(sizeOf(spark, root, _)).sum
+      val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      val scan = scanFiles(spark, root, declared, files)
+      writeData(clusterKey.fold(scan.repartition(nOut))(k =>
+        scan.repartitionByRange(nOut, k).sortWithinPartitions(k)),
+        root, n, statsCols, bloomCols)
+    }
+    commitLayoutRebasing(spark, root, n, adds, files.map(_.path))
+  }
+
+  /** Rewrite the live set to ~targetBytes files as a new version,
+    * rows spread round-robin: content-identical to the previous
+    * version, old file layout still readable there. An empty store
+    * commits a no-action version. */
   def compact(spark: SparkSession, root: String, targetBytes: Long,
               statsCols: Seq[String] = Nil,
-              bloomCols: Seq[String] = Nil): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val (prev, live, _) = fileSnapshot(spark, root, None, "compact")
-    if (live.isEmpty) {
-      // compacting an empty table: content unchanged, but callers
-      // get the version they asked for (a no-action commit)
-      return commitLayoutRebasing(spark, root, prev + 1,
-        Seq.empty, Seq.empty)
-    }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = readLiveFiles(spark, root, prev, live)
-      .repartition(nOut)
-    val n = prev + 1
-    commitLayoutRebasing(spark, root, n,
-      writeData(df, root, n, statsCols, bloomCols), live.map(_.path))
-  }
+              bloomCols: Seq[String] = Nil): Long =
+    rewriteLayout(spark, root, "compact", targetBytes, 0, statsCols,
+      bloomCols, None)((live, _) => live)
 
   /** `c` ∈ [lo, hi] as pruning filters. */
   private def within(c: String, lo: Any, hi: Any): Seq[Filter] =
@@ -2117,22 +2131,10 @@ object TableStore {
   def compactSmall(spark: SparkSession, root: String,
                    smallBytes: Long, targetBytes: Long,
                    statsCols: Seq[String] = Nil,
-                   bloomCols: Seq[String] = Nil): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val (prev, live, _) = fileSnapshot(spark, root, None, "compactSmall")
-    val fs = fsOf(spark, new Path(root))
-    val small = live.filter(e =>
-      sizeOf(spark, root, e) < smallBytes)
-    if (small.size < 2) return prev // nothing worth merging
-    val bytes = small.map(e =>
-      sizeOf(spark, root, e)).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = readLiveFiles(spark, root, prev, small)
-      .repartition(nOut)
-    val n = prev + 1
-    commitLayoutRebasing(spark, root, n,
-      writeData(df, root, n, statsCols, bloomCols), small.map(_.path))
-  }
+                   bloomCols: Seq[String] = Nil): Long =
+    rewriteLayout(spark, root, "compactSmall", targetBytes, 2, statsCols,
+      bloomCols, None)(
+      (live, _) => live.filter(sizeOf(spark, root, _) < smallBytes))
 
   /** Maintenance policy for a streaming sink: once the live set
     * exceeds `maxLiveFiles`, the sink folds the small-file backlog
@@ -2140,7 +2142,14 @@ object TableStore {
     * store commit, so readers pinned to pre-compaction versions are
     * untouched and the batch-id ledger is unaffected. */
   final case class SinkMaintenance(maxLiveFiles: Int,
-                                   targetBytes: Long = 128L << 20)
+                                   targetBytes: Long = 128L << 20) {
+    /** The policy, run after a batch COMMITS (never on a replayed one:
+      * a checkpoint replay must leave the store byte-identical). */
+    private[graft] def afterCommit(spark: SparkSession, root: String,
+                                   statsCols: Seq[String]): Unit =
+      if (liveAt(spark, root, versions(spark, root).last).size > maxLiveFiles)
+        compactSmall(spark, root, targetBytes, targetBytes, statsCols)
+  }
 
   /** Structured-streaming sink: every micro-batch becomes one
     * [[appendBatch]] commit, so readers always see whole batches
@@ -2160,15 +2169,8 @@ object TableStore {
                  statsCols: Seq[String] = Nil): Unit = {
     val q = stream.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val committed = appendBatch(b, root, id, statsCols)
-        if (committed.nonEmpty) maintenance.foreach { m =>
-          val spark = b.sparkSession
-          val live = liveAt(spark, root, versions(spark, root).last)
-          if (live.size > m.maxLiveFiles)
-            compactSmall(spark, root,
-              smallBytes = m.targetBytes, targetBytes = m.targetBytes,
-              statsCols = statsCols)
-        }
+        if (appendBatch(b, root, id, statsCols).nonEmpty)
+          maintenance.foreach(_.afterCommit(b.sparkSession, root, statsCols))
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -2753,26 +2755,10 @@ object TableStore {
   def optimizeLayout(spark: SparkSession, root: String,
                      clusterCol: String, targetBytes: Long,
                      statsCols: Seq[String] = Nil,
-                     bloomCols: Seq[String] = Nil): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val (prev, live, _) = fileSnapshot(spark, root, None, "optimizeLayout")
-    if (live.isEmpty) {
-      return commitLayoutRebasing(spark, root, prev + 1,
-        Seq.empty, Seq.empty)
-    }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = readLiveFiles(spark, root, prev, live)
-      .repartitionByRange(nOut, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-    val n = prev + 1
-    commitLayoutRebasing(spark, root, n,
-      writeData(df, root, n, (statsCols :+ clusterCol).distinct,
-        bloomCols),
-      live.map(_.path))
-  }
+                     bloomCols: Seq[String] = Nil): Long =
+    rewriteLayout(spark, root, "optimizeLayout", targetBytes, 0,
+      (statsCols :+ clusterCol).distinct, bloomCols,
+      Some(col(clusterCol)))((live, _) => live)
 
   /** SCOPED layout OPTIMIZE — recluster only the live files whose
     * logged [min, max] for `clusterCol` can intersect [lo, hi]: the
@@ -2792,23 +2778,11 @@ object TableStore {
                           targetBytes: Long,
                           statsCols: Seq[String] = Nil,
                           bloomCols: Seq[String] = Nil): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     require(lo <= hi, s"empty scope interval [$lo, $hi]")
-    val (prev, live, declared) =
-      fileSnapshot(spark, root, None, "optimizeLayoutWhere")
-    val touched =
-      prunedFiles(spark, root, live, declared, within(clusterCol, lo, hi))
-    if (touched.size < 2) return prev
-    val bytes = touched.map(e => sizeOf(spark, root, e)).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = readLiveFiles(spark, root, prev, touched)
-      .repartitionByRange(nOut, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-    val n = prev + 1
-    commitLayoutRebasing(spark, root, n,
-      writeData(df, root, n, (statsCols :+ clusterCol).distinct,
-        bloomCols),
-      touched.map(_.path))
+    rewriteLayout(spark, root, "optimizeLayoutWhere", targetBytes, 2,
+      (statsCols :+ clusterCol).distinct, bloomCols, Some(col(clusterCol)))(
+      (live, declared) =>
+        prunedFiles(spark, root, live, declared, within(clusterCol, lo, hi)))
   }
 
   /** Multi-dimensional layout OPTIMIZE as a commit: rewrite the live
@@ -2830,27 +2804,10 @@ object TableStore {
                           xCol: String, yCol: String, bits: Int,
                           targetBytes: Long,
                           statsCols: Seq[String] = Nil,
-                          bloomCols: Seq[String] = Nil): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val (prev, live, _) = fileSnapshot(spark, root, None, "optimizeLayout")
-    if (live.isEmpty) {
-      return commitLayoutRebasing(spark, root, prev + 1,
-        Seq.empty, Seq.empty)
-    }
-    val fs = fsOf(spark, new Path(root))
-    val bytes = live.map(e =>
-      sizeOf(spark, root, e)).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val key = Layout.hilbertValue(col(xCol), col(yCol), bits)
-    val df = readLiveFiles(spark, root, prev, live)
-      .repartitionByRange(nOut, key)
-      .sortWithinPartitions(key)
-    val n = prev + 1
-    commitLayoutRebasing(spark, root, n,
-      writeData(df, root, n,
-        (statsCols ++ Seq(xCol, yCol)).distinct, bloomCols),
-      live.map(_.path))
-  }
+                          bloomCols: Seq[String] = Nil): Long =
+    rewriteLayout(spark, root, "optimizeLayoutCurve", targetBytes, 0,
+      (statsCols ++ Seq(xCol, yCol)).distinct, bloomCols,
+      Some(Layout.hilbertValue(col(xCol), col(yCol), bits)))((live, _) => live)
 
   /** Manifest-pruned 2-D box read: the rows with `x` ∈ [xlo, xhi]
     * AND `y` ∈ [ylo, yhi], scanning only the live files whose bounds

@@ -78,6 +78,9 @@ object Reprocess {
         hook.send(Notify.preview(rejected, nRejected, "reprocess_quarantine"))
       }
       if (nAccepted > 0) {
+        // a silver swap that crashed between its renames left the
+        // layer parked at .__old__; restore it before reading
+        Upsert.recoverCrashedSwap(spark, layers.silver)
         val silver = spark.read.schema(ChurnSchema.silver)
           .parquet(layers.silver)
         val conformed = accepted.select(ChurnSchema.silver.fields

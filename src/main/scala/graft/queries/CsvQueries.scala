@@ -287,46 +287,44 @@ object CsvQueries extends QueryPack {
   private def compactDir(sfDir: String): String =
     s"/tmp/graft_fixtures/compaction_${new java.io.File(sfDir).getName}/layer"
 
-  /** Small-file compaction gate ([[graft.ops.Compaction]]) — the
-    * `q_orc_roundtrip` two-stack pattern: the fixture writes orders as
-    * a deliberately fragmented 50-file layer, compacts it in place,
-    * and asserts the file-count contract (post-compaction file count
-    * == the returned n == ceil(fragmented bytes / targetBytes));
-    * the timed/gated body then digests the COMPACTED read-back while
-    * DuckDB digests the same projection straight from the source
-    * parquet — any row lost, duplicated, or mutated by the rewrite
-    * breaks the hash. Build+compact runs inside the fixture lock (one
-    * marker records the compacted state), so verify/bench re-runs pay
-    * two filesystem stats, and a regenerated sf dataset rebuilds. */
+  /** Small-file compaction gate ([[graft.ops.TableStore.compactSmall]])
+    * — the `q_orc_roundtrip` two-stack pattern: the fixture appends
+    * orders as one deliberately fragmented 50-file store commit, folds
+    * it, and asserts the file-count contract (the fold commits; live
+    * files after it == ceil(fragmented live bytes / target) < 50; a
+    * zero-row corpus has nothing to fold and keeps no file); the
+    * body digests the FOLDED snapshot while DuckDB digests the source
+    * parquet — any row lost, duplicated, or mutated breaks the hash.
+    * Build+fold runs inside the fixture lock (one marker records the
+    * folded state); a regenerated sf dataset rebuilds. */
   val compaction = GQuery(
     "q_compaction",
     (s, d) => {
       val layer = compactDir(d)
       Fixtures.ensure(s, layer,
         Fixtures.sourceStamp(s, s"$d/orders.parquet") +
-          ":compaction:v1:frag50:target1m") {
-        Tables.orders(s, d)
+          ":compaction:v2:store:frag50:target1m") {
+        import graft.ops.TableStore
+        val v = TableStore.append(Tables.orders(s, d)
           .select("o_orderkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority")
-          .repartition(50)
-          .write.mode("overwrite").parquet(layer)
-        val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
-        val bytes = fs.getContentSummary(new Path(layer)).getLength
+          .repartition(50), layer)
+        val frag = TableStore.liveAt(s, layer, v)
+        val bytes = frag.map(TableStore.sizeOf(s, layer, _)).sum
         val target = 1L << 20
-        val expected = math.max(1L, (bytes + target - 1) / target).toInt
-        val n = graft.ops.Compaction.compact(s, layer, target)
-        require(n == expected,
-          s"compaction file-count contract: returned $n, " +
+        val expected = ((bytes + target - 1) / target).toInt
+        val folded = TableStore.compactSmall(s, layer, target, target)
+        require(folded == v + 1 || frag.size < 2,
+          s"compactSmall left ${frag.size} fragmented files unfolded")
+        val actual = TableStore.liveAt(s, layer, folded).size
+        require(actual == expected,
+          s"compaction file-count contract: $actual live files, " +
             s"expected ceil($bytes/$target) = $expected")
-        val actual = fs.listStatus(new Path(layer))
-          .count(_.getPath.getName.startsWith("part-"))
-        require(actual == n,
-          s"compaction wrote $actual part files, planned $n")
         require(actual < 50, s"layer not actually compacted: $actual files")
       }
       def h(c: String) =
         sum(conv(substring(md5(col(c)), 1, 8), 16, 10).cast("long"))
-      s.read.parquet(layer)
+      graft.ops.TableStore.read(s, layer)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("o_orderkey")).as("sum_keys"),

@@ -91,9 +91,7 @@ private[sources] object GraftProcedures {
             TableStore.compactSmall(spark, root, targetBytes, targetBytes,
               stats, blooms)
         }
-        val live = TableStore.liveAt(spark, root,
-          TableStore.versions(spark, root).last).size.toLong
-        Seq(v, live)
+        Seq(v, TableStore.liveAt(spark, root, v).size.toLong)
       }),
 
     Proc("vacuum",

@@ -34,16 +34,9 @@ class GraftStreamSink(spark: SparkSession, root: String,
     // the engine hands a streaming-flagged frame; re-wrap it over the
     // batch's planned RDD (ForeachBatchSink's own construction) so
     // the store's ordinary batch write path applies
-    val committed = TableStore.appendBatch(
-      Bridge.batchView(data), root, batchId, statsCols)
-    if (committed.nonEmpty) maintenance.foreach { m =>
-      val live = TableStore.liveAt(spark, root,
-        TableStore.versions(spark, root).last)
-      if (live.size > m.maxLiveFiles)
-        TableStore.compactSmall(spark, root,
-          smallBytes = m.targetBytes, targetBytes = m.targetBytes,
-          statsCols = statsCols)
-    }
+    if (TableStore.appendBatch(Bridge.batchView(data), root, batchId,
+        statsCols).nonEmpty)
+      maintenance.foreach(_.afterCommit(spark, root, statsCols))
   }
 
   override def toString: String = s"GraftStreamSink[$root]"

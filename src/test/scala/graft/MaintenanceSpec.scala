@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Compaction
 import graft.pipeline.{Diagnostics, Warehouse}
 
-/** Layer maintenance: diagnostics probes (F20) and small-file
-  * compaction — both metadata-driven, both safe to run anytime. */
+/** Layer maintenance: diagnostics probes (F20) and slice retention
+  * expiry — both metadata-driven, both safe to run anytime. */
 class MaintenanceSpec extends SparkSpec {
 
   test("diagnostics probe layers like to_regclass: missing = false, not error") {
@@ -39,29 +38,6 @@ class MaintenanceSpec extends SparkSpec {
     val found = Diagnostics.findLayers(spark, root, "%QUARantine%")
       .collect().map(_.getString(0)).toSeq
     assert(found == Seq("quarantine", "quarantine_reprocess"))
-  }
-
-  test("compaction collapses accumulated small files, preserves rows atomically") {
-    val dir = graft.TempRoots
-      .create("graft_compact") + "/layer"
-    // simulate 20 tiny appended batches → ≥20 files
-    (0 until 20).foreach { i =>
-      spark.range(i * 100L, (i + 1) * 100L).toDF("id")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    val before = spark.read.parquet(dir)
-    val filesBefore = before.inputFiles.length
-    assert(filesBefore >= 20, s"fixture should be fragmented: $filesBefore")
-    val sumBefore = before.agg(sum("id")).head().getLong(0)
-    val n = Compaction.compact(spark, dir, targetBytes = 128L * 1024 * 1024)
-    assert(n == 1, s"2000 tiny rows should compact to 1 file, got $n")
-    val after = spark.read.parquet(dir)
-    assert(after.inputFiles.length == 1)
-    assert(after.count() == 2000L)
-    assert(after.agg(sum("id")).head().getLong(0) == sumBefore)
-    // near-empty guard: second run under minBytes is a no-op
-    assert(Compaction.compact(spark, dir, 128L * 1024 * 1024,
-      minBytes = 1L << 40) == 0)
   }
 
   test("retention expiry: dry-run plans without deleting, the real run " +

@@ -409,4 +409,28 @@ class PipelineSpec extends SparkSpec {
     val failing = Quality.runAll(spark, layers).filter(!col("pass"))
     assert(failing.isEmpty, failing.collect().mkString(", "))
   }
+
+  test("correction loop recovers silver parked by a crashed swap") {
+    val root = freshRoot("reproc_crash"); val layers = Warehouse.Layers(root)
+    val landing = s"$root/landing"
+    writeCsv(landing, "classic.csv",
+      ClassicHeader +: (1 to 3).map(i => classicRow(s"K00$i")))
+    Warehouse.run(spark, landing, layers, "2026-04-01")
+    // the crash window of a silver overwrite: the layer was renamed to
+    // .__old__ and the staged copy never took its place
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val silverPath = new org.apache.hadoop.fs.Path(layers.silver)
+    val parked = new org.apache.hadoop.fs.Path(layers.silver + ".__old__")
+    assert(fs.rename(silverPath, parked))
+    val fixes = s"$root/fixed_data"
+    writeCsv(fixes, "corrections.csv",
+      Seq(ClassicHeader, classicRow("K002", tenure = "77")))
+    assert(Reprocess.run(spark, fixes, layers) == ((1L, 0L)))
+    assert(!fs.exists(parked), "the parked layer must be restored")
+    val silver = spark.read.parquet(layers.silver)
+    assert(silver.count() == 3)
+    assert(silver.filter(col("customer_id") === "K002")
+      .head().getAs[Double]("tenure_in_months") == 77.0)
+  }
 }

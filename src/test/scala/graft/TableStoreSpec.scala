@@ -301,6 +301,45 @@ class TableStoreSpec extends SparkSpec {
     assert(tOld == 3)
   }
 
+  test("optimizeLayoutWhere reclusters only the files its interval meets") {
+    val root = tmp()
+    // two interleaved files over [0, 99], one over [200, 299] and one
+    // over [400, 499]
+    TableStore.append(mk((0L until 100L).filter(_ % 2 == 0): _*)
+      .coalesce(1), root, statsCols = Seq("id"))
+    TableStore.append(mk((0L until 100L).filter(_ % 2 == 1): _*)
+      .coalesce(1), root, statsCols = Seq("id"))
+    TableStore.append(mk(200L until 300L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    TableStore.append(mk(400L until 500L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    val before = TableStore.liveAt(spark, root, 4L).map(_.path)
+    val far = TableStore.liveAt(spark, root, 4L)
+      .filter(_.mins("id") == 400L).map(_.path)
+    // [50, 250] meets the three files below 300, not the one at 400
+    val v = TableStore.optimizeLayoutWhere(spark, root, "id", 50L, 250L,
+      targetBytes = 1L << 30)
+    assert(v == 5L)
+    val h = TableStore.history(spark, root)
+      .where(col("version") === v).collect().head
+    assert(h.getAs[Long]("n_removed") == 3L)
+    val after = TableStore.liveAt(spark, root, v)
+    assert(after.map(_.path).intersect(before) == far,
+      "the file outside the interval keeps its exact path")
+    // the cluster column lands in the log stats with no statsCols
+    assert(after.forall(e => e.mins.contains("id") && e.maxs.contains("id")))
+    assert(ids(root) == ((0L until 100L) ++ (200L until 300L) ++
+      (400L until 500L)).toSet)
+    assert(ids(root, Some(v)) == ids(root, Some(4L)))
+    // fewer than two overlapping files: no commit
+    val vs = TableStore.versions(spark, root)
+    assert(TableStore.optimizeLayoutWhere(spark, root, "id", 400L, 450L,
+      targetBytes = 1L << 30) == v)
+    assert(TableStore.optimizeLayoutWhere(spark, root, "id", 1000L,
+      2000L, targetBytes = 1L << 30) == v)
+    assert(TableStore.versions(spark, root) == vs)
+  }
+
   test("optimizeLayoutCurve: 2-D tiles prune a box tight in either dim") {
     val s = spark; import s.implicits._
     val root = tmp()
@@ -929,11 +968,27 @@ class TableStoreSpec extends SparkSpec {
     assert(TableStore.deleteWhereMoR(spark, root, col("id") === 150L,
       pruneBy = ("id", 150L, 150L)) == vsNow.last)
     assert(TableStore.versions(spark, root) == vsNow)
-    // file-granularity ops refuse until purged, naming the remedy
-    val ex = intercept[IllegalArgumentException] {
-      TableStore.compact(spark, root, targetBytes = 1L << 30)
+    // file-granularity ops refuse until purged, naming the remedy;
+    // every layout rewrite names itself
+    val rewrites: Seq[(String, () => Long)] = Seq(
+      "compact" -> (() =>
+        TableStore.compact(spark, root, targetBytes = 1L << 30)),
+      "compactSmall" -> (() =>
+        TableStore.compactSmall(spark, root, 1L << 30, 1L << 30)),
+      "optimizeLayout" -> (() =>
+        TableStore.optimizeLayout(spark, root, "id", 1L << 30)),
+      "optimizeLayoutWhere" -> (() =>
+        TableStore.optimizeLayoutWhere(spark, root, "id", 0L, 300L,
+          1L << 30)),
+      "optimizeLayoutCurve" -> (() =>
+        TableStore.optimizeLayoutCurve(spark, root, "id", "id", 9,
+          1L << 30)))
+    rewrites.foreach { case (op, run) =>
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.startsWith(s"requirement failed: $op plans"),
+        s"$op refusal names another op: ${ex.getMessage}")
+      assert(ex.getMessage.contains("purgeDeletes"))
     }
-    assert(ex.getMessage.contains("purgeDeletes"))
     val ex2 = intercept[IllegalArgumentException] {
       TableStore.readRange(spark, root, "id", 0L, 50L)
     }
