@@ -18,7 +18,10 @@ import java.nio.charset.StandardCharsets
   * first-line read per file — metadata-scale, like the listing itself)
   * and each *dialect group* becomes ONE multi-file scan, normalized
   * and conformed to the target layer schema, then unioned:
-  * #scans = #dialects, not #files.
+  * #scans = #dialects, not #files. The header line already read also
+  * gives each group its all-string schema (Spark's own header rules,
+  * applied to a one-line local dataset), so no scan runs a
+  * header-inference job: ingesting plans without any Spark job.
   */
 object CsvIngest {
 
@@ -32,8 +35,8 @@ object CsvIngest {
   /** S1: list `*.csv` under `dir`, sorted by name (the reference
     * processes files in sorted order). */
   def listCsv(spark: SparkSession, dir: String): Seq[Path] = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty // a missing landing dir = nothing new
     else fs.listStatus(p).toIndexedSeq.map(_.getPath)
       .filter(_.getName.endsWith(".csv")).sortBy(_.getName)
@@ -54,10 +57,13 @@ object CsvIngest {
     * new/changed files get ingested — see pipeline/Warehouse). */
   def ingestFiles(spark: SparkSession, files: Seq[Path], target: StructType,
                   renames: Map[String, String] = Normalize.renameMap): DataFrame = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val groups = files.groupBy(p => headerLine(fs, p))
-    val frames = groups.values.toSeq.sortBy(_.head.getName).map { paths =>
-      val raw = spark.read.option("header", "true")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val groups = files.groupBy(p => headerLine(p.getFileSystem(conf), p))
+    import spark.implicits._
+    val frames = groups.toSeq.sortBy(_._2.head.getName).map { case (header, paths) =>
+      val schema = spark.read.option("header", "true")
+        .csv(Seq(header).toDS()).schema
+      val raw = spark.read.schema(schema).option("header", "true")
         .csv(paths.map(_.toString): _*)
       Normalize.conformTo(Normalize.headers(raw, renames), target)
         .withColumn("src_file",

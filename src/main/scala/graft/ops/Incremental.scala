@@ -70,11 +70,15 @@ object Incremental {
   }
 
   /** S8: deterministic single-file CSV export sink (the reference
-    * writes one watermark-named CSV per window). coalesce(1) is
-    * intentional and bounded: an incremental window is small by
-    * construction; full-table exports should drop the coalesce. */
+    * writes one watermark-named CSV per window): one partition, sorted
+    * within itself by `orderCols` — the same file, in the same key
+    * order, as a global sort would give, without the global sort's
+    * range-sampling job and shuffle: the write is one job. coalesce(1)
+    * is intentional and bounded: an incremental window is small by
+    * construction; a full-table export wants a distributed sort and
+    * many files instead. */
   def csvSink(df: DataFrame, path: String, orderCols: Seq[String]): Unit =
-    df.orderBy(orderCols.map(col): _*)
-      .coalesce(1)
+    df.coalesce(1)
+      .sortWithinPartitions(orderCols.map(col): _*)
       .write.mode("overwrite").option("header", "true").csv(path)
 }

@@ -2719,16 +2719,13 @@ object TableStore {
     * loudly in [[read]]'s version check. */
   def restore(spark: SparkSession, root: String,
               toVersion: Long): Long = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val target = liveAt(spark, root, toVersion) // loud if vacuumed
     // restore re-ADDS files; delete vectors are versioned separately
-    // and would re-apply to the restored files out of their epoch
-    requireNoDvs(spark, root, prev, liveAt(spark, root, prev),
-      "restore")
-    requireNoDvs(spark, root, toVersion, target, "restore (target)")
-    val current = liveAt(spark, root, prev).map(_.path)
+    // and would re-apply to the restored files out of their epoch, so
+    // both snapshots refuse under them
+    val (prev, live, _) = fileSnapshot(spark, root, None, "restore")
+    val (_, target, _) = // loud if the target was vacuumed
+      fileSnapshot(spark, root, Some(toVersion), "restore (target)")
+    val current = live.map(_.path)
     val n = prev + 1
     // a file live in BOTH stays live: remove only what the target
     // lacks, add only what the current set lacks — the minimal diff

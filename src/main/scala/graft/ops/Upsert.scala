@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Upsert family — SURVEY.md §2.3 J3/J4/J5, §7.4.
+/** Upsert family — SURVEY.md §2.3 J3/J4, §7.4 (J5, the ledger upsert,
+  * is [[Ledger.update]]).
   *
   * Plain Parquet has no MERGE, so upserts are read-modify-overwrite.
   * The merge itself is a single full-outer join on the natural key —
@@ -78,11 +79,6 @@ object Upsert {
         keys.map(k => col(k) <=> col(s"_f_$k")).reduce(_ && _), "left_anti")
       .unionByName(fixed)
   }
-
-  /** Ledger upsert (J5): every column refreshed on conflict. */
-  def upsertAll(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
-    merge(existing, incoming, keys,
-      existing.columns.filterNot(keys.contains).toIndexedSeq)
 
   /** Restore a layer whose previous [[atomicOverwrite]] crashed inside
     * its two-rename window: the target is missing and `.__old__` holds

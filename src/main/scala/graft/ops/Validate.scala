@@ -41,17 +41,27 @@ object Validate {
   def bad(annotated: DataFrame): DataFrame =
     annotated.filter(col("error_details") =!= "")
 
-  /** Error-rate circuit breaker (reference: 10% threshold,
-    * dags/DataWarehouse.py:456-482). Single-pass aggregate; the only
-    * driver-side value is the tiny scalar. */
-  /** One-pass (total, bad) counters over an annotated frame. */
+  /** One-pass (total, bad) counters over an annotated frame: each
+    * partition counts its own rows, and only those pairs reach the
+    * driver — no shuffle, so a persisted frame is filled and counted by
+    * the same job. */
   def counts(annotated: DataFrame): (Long, Long) = {
-    val r = annotated.agg(
-      count(lit(1)).as("total"),
-      count(when(col("error_details") =!= "", 1)).as("bad")).head()
-    (r.getLong(0), r.getLong(1))
+    import annotated.sparkSession.implicits._
+    val perPartition = annotated
+      .select((col("error_details") =!= "").as("bad"))
+      .mapPartitions { rows =>
+        var total, bad = 0L
+        rows.foreach { r =>
+          total += 1
+          if (!r.isNullAt(0) && r.getBoolean(0)) bad += 1
+        }
+        Iterator((total, bad))
+      }.collect()
+    (perPartition.map(_._1).sum, perPartition.map(_._2).sum)
   }
 
+  /** Error-rate circuit breaker (reference: 10% threshold,
+    * dags/DataWarehouse.py:456-482). */
   def errorRatePct(annotated: DataFrame): Double = {
     val (total, bad) = counts(annotated)
     if (total == 0) 0.0 else bad * 100.0 / total
@@ -69,12 +79,20 @@ object Validate {
     * rejecting run_date can still see the prior run's partition. */
   def gateCounted(annotated: DataFrame,
                   thresholdPct: Double = 10.0): (DataFrame, Long) = {
+    val (clean, _, bad) = gateTotals(annotated, thresholdPct)
+    (clean, bad)
+  }
+
+  /** [[gateCounted]] with the batch's total row count as well, from
+    * the same pass: (clean rows, total, bad). */
+  private[graft] def gateTotals(annotated: DataFrame,
+                                thresholdPct: Double): (DataFrame, Long, Long) = {
     val (total, bad) = counts(annotated)
     val rate = if (total == 0) 0.0 else bad * 100.0 / total
     if (rate > thresholdPct)
       throw new IllegalStateException(
         f"error rate $rate%.2f%% exceeds $thresholdPct%.1f%% — halting before cleanup")
-    (good(annotated), bad)
+    (good(annotated), total, bad)
   }
 
   /** A12: value-check assertion — the reference's SQLValueCheckOperator

@@ -60,8 +60,9 @@ object Reprocess {
     try {
       val rejected = Validate.bad(annotated)
       val accepted = Validate.good(annotated).drop("error_details")
-      val nRejected = rejected.count()
-      val nAccepted = accepted.count()
+      // one pass fills the cache and counts both sides
+      val (total, nRejected) = Validate.counts(annotated)
+      val nAccepted = total - nRejected
       if (nRejected > 0) {
         rejected.write.mode("append").parquet(layers.reprocessQuarantine)
         // analyst-facing xlsx preview of the rejects (the reference

@@ -95,9 +95,13 @@ object Warehouse {
   /** Validation split with the reference's halt-order semantics:
     * annotate → circuit-breaker gate (throws above 10% BEFORE anything
     * is written) → quarantine sink for bad rows → clean rows persisted
-    * as the staging layer (the reference's staging_churn table; also
-    * bounds re-evaluation of the annotated frame to the three passes
-    * here instead of every downstream consumer).
+    * as the staging layer (the reference's staging_churn table).
+    * Returns the staging layer as written.
+    *
+    * The annotated batch is computed once: the gate's (total, bad)
+    * pass fills a persisted copy, and the quarantine write, the
+    * staging write and the quarantine preview all read that copy —
+    * the rule chain and its duplicate-key shuffle never run twice.
     *
     * The quarantine writes run-date-partitioned with DYNAMIC overwrite,
     * not append: the documented recovery for a mid-run crash is
@@ -107,49 +111,57 @@ object Warehouse {
   def validateStaging(spark: SparkSession, staging: DataFrame,
                       layers: Layers, runDate: String,
                       thresholdPct: Double = 10.0,
-                      hook: NotifyHook = NotifyHook.Log): DataFrame = {
+                      hook: NotifyHook = NotifyHook.Log): DataFrame =
+    validated(spark, staging, layers, runDate, thresholdPct, hook)._1
+
+  /** [[validateStaging]], also returning the clean row count from the
+    * gate's own pass, so a caller never counts the staging layer. */
+  private def validated(spark: SparkSession, staging: DataFrame,
+                        layers: Layers, runDate: String,
+                        thresholdPct: Double = 10.0,
+                        hook: NotifyHook = NotifyHook.Log): (DataFrame, Long) = {
     val rules = ChurnSchema.stagingRules :+
       Validate.Rule("Duplicate ID", Validate.duplicatedAll(col("customer_id")))
-    val annotated = Validate.annotate(staging, rules)
-    // the gate's aggregate pass also yields THIS batch's bad count —
-    // the quarantine dir can't answer that (a clean re-run of a
-    // previously rejecting run_date still sees the old partition,
-    // because dynamic overwrite of an empty frame replaces nothing)
-    val (clean, nBad) =
-      try Validate.gateCounted(annotated, thresholdPct)
-      catch { case e: IllegalStateException =>
-        // the reference's on_failure_callback mail: alert, then halt
-        hook.send(Notify.GateFailure("staging_validate", e.getMessage))
-        throw e
+    // the batch is kept as persisted rows under a frame of its own:
+    // counting that frame fills it in the same job, where a cached
+    // Dataset would be filled by a job of its own before its first
+    // reader's (the duplicate-key shuffle still runs first, once)
+    val planned = Validate.annotate(staging, rules)
+    val rows = planned.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val annotated = spark.createDataFrame(rows, planned.schema)
+    try {
+      // the gate's pass also yields THIS batch's bad count — the
+      // quarantine dir can't answer that (a clean re-run of a
+      // previously rejecting run_date still sees the old partition,
+      // because dynamic overwrite of an empty frame replaces nothing)
+      val (clean, total, nBad) =
+        try Validate.gateTotals(annotated, thresholdPct)
+        catch { case e: IllegalStateException =>
+          // the reference's on_failure_callback mail: alert, then halt
+          hook.send(Notify.GateFailure("staging_validate", e.getMessage))
+          throw e
+        }
+      val rejected = Validate.bad(annotated).withColumn("run_date", lit(runDate))
+      if (nBad > 0)
+        graft.ops.Partitioned.writeBy(rejected, layers.quarantine, "run_date")
+      else {
+        // all-clean batch: clear any stale partition this run_date left
+        // behind, so analysts never see a previous run's rejects
+        val part = new org.apache.hadoop.fs.Path(
+          s"${layers.quarantine}/run_date=$runDate")
+        val fs = fsFor(spark, layers.quarantine)
+        if (fs.exists(part)) fs.delete(part, true)
       }
-    if (nBad > 0)
-      graft.ops.Partitioned.writeBy(
-        Validate.bad(annotated).withColumn("run_date", lit(runDate)),
-        layers.quarantine, "run_date")
-    else {
-      // all-clean batch: clear any stale partition this run_date left
-      // behind, so analysts never see a previous run's rejects
-      val part = new org.apache.hadoop.fs.Path(
-        s"${layers.quarantine}/run_date=$runDate")
-      val fs = fsFor(spark, layers.quarantine)
-      if (fs.exists(part)) fs.delete(part, true)
-    }
-    Upsert.atomicOverwrite(clean.drop("error_details"), layers.staging)
-    if (nBad > 0) {
-      // quarantine-preview notification from the PARTITION JUST
-      // WRITTEN (a small schema-pinned parquet read-back — never a
-      // recompute of the rule chain)
-      val qSchema = org.apache.spark.sql.types.StructType(
-        ChurnSchema.staging.fields.toIndexedSeq :+
-          org.apache.spark.sql.types.StructField("error_details",
-            org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField("run_date",
-            org.apache.spark.sql.types.StringType))
-      val written = readOrEmpty(spark, layers.quarantine, qSchema)
-        .filter(col("run_date") === lit(runDate))
-      hook.send(Notify.preview(written, nBad, "staging_quarantine"))
-    }
-    spark.read.schema(ChurnSchema.staging).parquet(layers.staging)
+      Upsert.atomicOverwrite(clean.drop("error_details"), layers.staging)
+      // the quarantine-preview notification: the rows just written,
+      // from the persisted batch (never a recompute of the rule chain);
+      // one partition, so the bounded take is one job that stops at
+      // the preview's last row
+      if (nBad > 0)
+        hook.send(Notify.preview(rejected.coalesce(1), nBad, "staging_quarantine"))
+      (spark.read.schema(ChurnSchema.staging).parquet(layers.staging),
+        total - nBad)
+    } finally rows.unpersist()
   }
 
   /** Staging batch → bronze: in-batch dedup keeps the latest record
@@ -215,89 +227,105 @@ object Warehouse {
   def loadDim(spark: SparkSession, path: String, values: DataFrame,
               keyCol: String, valueCols: Seq[String],
               faithful: Boolean = false): DataFrame = {
-    val vals = values.select(valueCols.map(col): _*)
-    resolveCombos(spark, Seq(ComboDim(path,
-      ChurnSchema.dim(keyCol, IntegerType, vals.schema), vals)), faithful).head
+    val schema = ChurnSchema.dim(keyCol, IntegerType,
+      values.select(valueCols.map(col): _*).schema)
+    resolveCombos(spark, values,
+      Seq(ComboDim(path, schema, valueCols.map(col))), faithful)
+      .select(col("_key").as(keyCol) +: schema.fieldNames.toSeq.tail
+        .map(n => col(s"_v0_$n").as(n)): _*)
   }
 
   /** A combo dim for [[resolveCombos]]: its path, its schema (the
-    * surrogate key first) and its values, one column per value field
-    * of the schema, in schema order. */
+    * surrogate key first) and the expressions that give its values
+    * from the source rows, one per value field of the schema, in
+    * schema order. */
   private final case class ComboDim(path: String, schema: StructType,
-                                    values: DataFrame)
+                                    values: Seq[Column])
 
-  /** Resolves combo dims together in ONE Spark execution: every dim's
-    * silver combos and existing rows go through one keyed aggregate
-    * (grouping is null-safe, so `faithful` adds back the `=`
-    * semantics: a NULL-bearing combo counts as new even when present),
-    * and one window partitioned by dim numbers the new combos above
-    * that dim's max key. The execution collects each dim's existing
-    * and new rows; each dim with new rows then appends them as ONE
-    * file, and a dim with none writes nothing.
+  /** Resolves combo dims together in ONE Spark execution: one scan of
+    * `source` offers every dim's combos, and they and every dim's
+    * existing rows go through one keyed aggregate (grouping is
+    * null-safe, so `faithful` adds back the `=` semantics: a
+    * NULL-bearing combo counts as new even when present); one window
+    * partitioned by dim numbers the new combos above that dim's max
+    * key. The aggregate carries each combo's existing keys, so the
+    * execution's rows are every dim's existing rows and new rows
+    * without a second read of the dims. Each dim with new rows then
+    * appends them as ONE file, and a dim with none writes nothing.
     *
     * Dims are distinct-combo-sized, so the rows collected are bounded
     * by combo cardinality, never data size — and the bound is
     * ENFORCED: the key expression raises past BoundedDim.MaxCombos
     * inside the window's task, before any offending row is collected.
-    * Returns each dim's full row set as a local frame, in
-    * `dims` order. */
-  private def resolveCombos(spark: SparkSession, dims: Seq[ComboDim],
-                            faithful: Boolean): Seq[DataFrame] = {
+    * Returns every dim's full row set as ONE local frame: `_d` (the
+    * dim's index in `dims`), `_key`, and the `_v<d>_<field>` value
+    * columns, NULL outside the row's own dim. */
+  private def resolveCombos(spark: SparkSession, source: DataFrame,
+                            dims: Seq[ComboDim],
+                            faithful: Boolean): DataFrame = {
     // one column per (dim, value column); a dim's rows carry NULL in
     // every other dim's columns, so ordering by all of them orders
     // each dim by its own values
     val wide = dims.zipWithIndex.flatMap { case (d, i) =>
       d.schema.fields.toIndexedSeq.tail.map(f => (i, f, s"_v${i}_${f.name}")) }
-    def project(i: Int, df: DataFrame, key: Column, fromSilver: Boolean,
-                nullCombo: Column): DataFrame =
-      df.select(Seq(lit(i).as("_d"), key.cast("int").as("_key"),
-        lit(fromSilver).as("_in"), nullCombo.as("_nullc")) ++
+    def row(i: Int, values: Seq[Column], key: Column, offered: Boolean,
+            nullCombo: Column): Seq[Column] = {
+      val mine = values.iterator
+      Seq(lit(i).as("_d"), key.cast("int").as("_key"),
+        lit(offered).as("_in"), nullCombo.as("_nullc")) ++
         wide.map { case (j, f, n) =>
-          (if (j == i) col(f.name) else lit(null)).cast(f.dataType).as(n) }: _*)
-    val existing = dims.map(d => readOrEmpty(spark, d.path, d.schema))
-    val kept = dims.indices.map(i => project(i, existing(i),
-      col(dims(i).schema.head.name), fromSilver = false, lit(false)))
-    val offered = dims.indices.map { i =>
-      val anyNull = dims(i).values.columns.map(col(_).isNull).reduce(_ || _)
-      project(i, dims(i).values, lit(null), fromSilver = true,
-        lit(faithful) && anyNull)
+          (if (j == i) mine.next() else lit(null)).cast(f.dataType).as(n) }
     }
+    val kept = dims.zipWithIndex.map { case (d, i) =>
+      readOrEmpty(spark, d.path, d.schema).select(row(i,
+        d.schema.fieldNames.toSeq.tail.map(col), col(d.schema.head.name),
+        offered = false, lit(false)): _*)
+    }
+    val offered = source.select(explode(array(dims.zipWithIndex.map {
+      case (d, i) => struct(row(i, d.values, lit(null), offered = true,
+        lit(faithful) && d.values.map(_.isNull).reduce(_ || _)): _*)
+    }: _*)).as("_c")).select("_c.*")
     val wideCols = wide.map { case (_, _, n) => col(n) }
-    val grouped = (kept ++ offered).reduce(_ unionByName _)
+    val grouped = (kept :+ offered).reduce(_ unionByName _)
       .groupBy(col("_d") +: wideCols: _*)
-      .agg(max("_key").as("_key"), max("_in").as("_in"),
-        max("_nullc").as("_nullc"))
+      .agg(collect_list(when(!col("_in"), struct(col("_key").as("k"))))
+          .as("_keys"), max("_in").as("_in"), max("_nullc").as("_nullc"))
+      .withColumn("_max", array_max(transform(col("_keys"), _.getField("k"))))
       .withColumn("_new",
-        col("_in") && (col("_key").isNull || col("_nullc")))
+        col("_in") && (col("_max").isNull || col("_nullc")))
     val byDim = Window.partitionBy(col("_d"))
     val rank = sum(col("_new").cast("int")).over(byDim
       .orderBy(wideCols.map(_.asc_nulls_first): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    val key = coalesce(max(col("_key")).over(byDim), lit(0)) + rank
+    val key = coalesce(max(col("_max")).over(byDim), lit(0)) + rank
     val capped = dims.indices.tail.foldLeft(when(col("_d") === 0,
       BoundedDim.cappedKey(key, s"loadDim(${dims.head.path})"))) { (c, i) =>
       c.when(col("_d") === i,
         BoundedDim.cappedKey(key, s"loadDim(${dims(i).path})"))
     }
-    val fresh = grouped.withColumn("_k", capped).filter(col("_new"))
-      .select(Seq(col("_d"), col("_k").cast("int").as("_key"),
-        lit(true).as("_new")) ++ wideCols: _*)
-    val old = kept.reduce(_ unionByName _)
-      .select(Seq(col("_d"), col("_key"), lit(false).as("_new")) ++ wideCols: _*)
-    val rows = fresh.unionByName(old).collect()
+    // each existing key, then the new combo's key
+    val rows = grouped.withColumn("_k", capped.cast("int"))
+      .select((col("_d") +: wideCols) :+ explode(concat(
+        transform(col("_keys"), k =>
+          struct(k.getField("k").as("_key"), lit(false).as("_new"))),
+        filter(array(struct(col("_k").as("_key"), lit(true).as("_new"))),
+          _ => col("_new")))).as("_r"): _*)
+      .select(Seq(col("_d"), col("_r._key").as("_key"),
+        col("_r._new").as("_new")) ++ wideCols: _*)
+    val collected = rows.collect()
 
-    dims.zipWithIndex.map { case (d, i) =>
+    dims.zipWithIndex.foreach { case (d, i) =>
       val cols = wide.collect { case (`i`, _, n) => n }
-      val mine = rows.filter(_.getAs[Int]("_d") == i)
-      def dimRow(r: Row) =
-        Row.fromSeq(r.getAs[Any]("_key") +: cols.map(r.getAs[Any](_)))
-      val added = mine.filter(_.getAs[Boolean]("_new")).map(dimRow)
+      val added = collected.filter(r => r.getAs[Int]("_d") == i && r.getAs[Boolean]("_new"))
+        .map(r => Row.fromSeq(r.getAs[Any]("_key") +: cols.map(r.getAs[Any](_))))
         .sortBy(_.getInt(0))
       if (added.nonEmpty || !pathExists(spark, d.path))
         appendFiles(spark.createDataFrame(added.toSeq.asJava, d.schema)
           .coalesce(1), d.path)
-      spark.createDataFrame(mine.map(dimRow).toSeq.asJava, d.schema)
     }
+    val all = rows.schema.filterNot(_.name == "_new")
+    spark.createDataFrame(collected.toSeq.map(r =>
+      Row.fromSeq(all.map(f => r.getAs[Any](f.name)))).asJava, StructType(all))
   }
 
   /** Append-only commit: `df` is written to a staging dir next to
@@ -372,7 +400,10 @@ object Warehouse {
     * 9-column null-safe composite services join — then the anti-join
     * on customer_key keeps the append idempotent. The four combo dims
     * resolve together ([[resolveCombos]]) and the fact joins their
-    * resolved rows; nothing reads a dim back but dim_customer. */
+    * resolved rows; nothing reads a dim back. dim_customer's key is a
+    * pure function of the id ([[loadEntityDim]]), so the fact derives
+    * it from silver, for exactly the rows the dim join would keep (a
+    * NULL id matches no dim row). */
   def loadGold(spark: SparkSession, layers: Layers, runDate: String): Unit = {
     val silver = spark.read.schema(ChurnSchema.silver).parquet(layers.silver)
 
@@ -382,48 +413,45 @@ object Warehouse {
       upper(trim(coalesce(col("churn_reason"), lit("n/a"))))
 
     val customerDimCols = ChurnSchema.dimCustomer.fieldNames.toSeq.tail
-    val dimCustomer = loadEntityDim(spark, layers.dim("customer"),
+    loadEntityDim(spark, layers.dim("customer"),
       silver.select(customerDimCols.map(col): _*),
       "customer_key", "customer_id", customerDimCols)
-    val combos = resolveCombos(spark, Seq(
-      ComboDim(layers.dim("contract"), ChurnSchema.dimContract,
-        silver.select(contractNorm.as("contract_type"))),
+    // each combo dim with the silver expressions of its value columns
+    val comboDims = Seq(
+      ComboDim(layers.dim("contract"), ChurnSchema.dimContract, Seq(contractNorm)),
       ComboDim(layers.dim("payment_method"), ChurnSchema.dimPaymentMethod,
-        silver.select(col("payment_method"))),
+        Seq(col("payment_method"))),
       ComboDim(layers.dim("churn_reason"), ChurnSchema.dimChurnReason,
-        silver.select(reasonNorm.as("churn_reason"))),
+        Seq(reasonNorm)),
       ComboDim(layers.dim("services"), ChurnSchema.dimServices,
-        silver.select(ChurnSchema.serviceCols.map(col): _*))),
-      faithful = false)
+        ChurnSchema.serviceCols.map(col)))
+    val combos = resolveCombos(spark, silver, comboDims, faithful = false)
 
-    // prefix every dim value column: the fact build joins five dims
-    // whose natural columns all exist on the silver side too
-    val dc = dimCustomer.select(col("customer_key"),
-      col("customer_id").as("_dc_id"))
-    val dk = combos(0).select(col("contract_key"),
-      col("contract_type").as("_dk_ct"))
-    val dp = combos(1).select(col("payment_key"),
-      col("payment_method").as("_dp_pm"))
-    val dr = combos(2).select(col("reason_key"),
-      col("churn_reason").as("_dr_cr"))
-    val ds = combos(3).select(col("service_key") +:
-      ChurnSchema.serviceCols.map(c => col(c).as(s"_ds_$c")): _*)
-
-    // null-safe keys throughout: the dims were LOADED null-safely
-    // (a NULL contract gets a dim row), so the fact join must match
-    // it — a plain === would orphan the NULL-combo dim row, emit a
-    // NULL contract_key, and fail the run at dqGoldCheck
-    val fact = silver
-      .join(dc, col("customer_id") === col("_dc_id"))
-      .join(broadcast(dk), contractNorm <=> col("_dk_ct"), "left")
-      .join(broadcast(dp), col("payment_method") <=> col("_dp_pm"), "left")
-      .join(broadcast(dr), reasonNorm <=> col("_dr_cr"), "left")
-      .join(broadcast(ds),
-        ChurnSchema.serviceCols
-          .map(c => col(c) <=> col(s"_ds_$c")).reduce(_ && _), "left")
-      .select(
-        col("customer_key"), col("contract_key"), col("payment_key"),
-        col("reason_key"), col("service_key"),
+    // Each dim's key comes from one left join against ALL the combo
+    // dims' rows, keyed by the whole row: a struct of `_d` and every
+    // value column, NULL-safe field by field, so it matches the
+    // null-safe join a per-dim lookup would make (the dims were LOADED
+    // null-safely, so a NULL contract has a dim row to match). The
+    // build side and its key are the same in all four joins, so the
+    // broadcast is built once and reused.
+    val values = combos.columns.filterNot(_ == "_key").toSeq
+    val byDim = comboDims.indices.map { i =>
+      val probe = comboDims(i).values.iterator
+      struct(combos.schema.fields.toSeq.filterNot(_.name == "_key").map { f =>
+        (if (f.name == "_d") lit(i)
+         else if (f.name.startsWith(s"_v${i}_")) probe.next()
+         else lit(null)).cast(f.dataType).as(f.name)
+      }: _*)
+    }
+    val keyed = comboDims.indices.foldLeft(
+        silver.filter(col("customer_id").isNotNull)) { (df, i) =>
+      df.join(broadcast(combos.as(s"_k$i")),
+        byDim(i) <=> struct(values.map(c => col(s"_k$i.$c")): _*), "left")
+    }
+    val fact = keyed.select(
+        xxhash64(col("customer_id")).as("customer_key"),
+        col("_k0._key").as("contract_key"), col("_k1._key").as("payment_key"),
+        col("_k2._key").as("reason_key"), col("_k3._key").as("service_key"),
         col("tenure_in_months"), col("monthly_charges_amount"),
         col("total_charges"),
         col("churn_label").as("churn_flag"),
@@ -466,14 +494,14 @@ object Warehouse {
           runDate: String, hook: NotifyHook = NotifyHook.Log): DataFrame = {
     ddlBootstrap(spark, layers)
     val staging = loadStaging(spark, landingDir)
-    val clean = validateStaging(spark, staging, layers, runDate, hook = hook)
+    val (clean, nClean) = validated(spark, staging, layers, runDate, hook = hook)
     // ST4 for the plain path too: an empty landing zone yields an
     // empty clean batch (a >10%-bad batch THROWS at the gate and never
     // reaches here) and skips every downstream layer — running gold on
     // a first-ever empty batch would otherwise create a schemaless
     // empty fact. The explicit marker row distinguishes a skipped run
     // from a healthy one (both satisfy filter(!pass).isEmpty).
-    if (clean.isEmpty) {
+    if (nClean == 0) {
       import spark.implicits._
       return Seq(Quality.Check("run", "skipped_empty_batch", 0L, true))
         .toDF()
@@ -483,10 +511,9 @@ object Warehouse {
     refreshSilver(spark, layers)
     loadGold(spark, layers, runDate)
     dqGoldCheck(spark, layers)
-    // the reference's end-of-run stats mail: counts come from the
-    // just-written layer (one small parquet count, no recompute)
+    // the reference's end-of-run stats mail: the count is the gate's
     hook.send(Notify.BatchStats("warehouse_run",
-      Map("clean_rows" -> clean.count())))
+      Map("clean_rows" -> nClean)))
     Quality.runAll(spark, layers)
   }
 
@@ -514,17 +541,10 @@ object Warehouse {
     val prior = readOrEmpty(spark, layers.ledger,
       org.apache.spark.sql.types.StructType.fromDDL(
         "file_name STRING, size_bytes LONG, checksum STRING"))
-    // materialize decisions NOW: the plan reads the landing files,
-    // which this run archives away — a lazy consumer after the run
-    // would re-scan moved files. The decision set is metadata-sized
-    // (one row per file), same bounded-driver-data discipline as the
-    // ledger itself.
-    val decisions = {
-      val lazyDecisions = Ledger.decide(scanned, prior)
-      spark.createDataFrame(
-        java.util.Arrays.asList(lazyDecisions.collect(): _*),
-        lazyDecisions.schema)
-    }
+    // decisions come back materialized (a local frame): the scan reads
+    // the landing files, which this run archives away, so a lazy
+    // consumer after the run would re-scan moved files
+    val decisions = Ledger.decide(scanned, prior)
     val toProcess = Ledger.toProcess(decisions)
       .select("file_name").collect().map(_.getString(0)).sorted.toIndexedSeq
     if (toProcess.isEmpty) return (decisions, None) // ST4: skip, touch nothing
@@ -534,12 +554,12 @@ object Warehouse {
       new org.apache.hadoop.fs.Path(landingDir, n))
     val staging = CsvIngest
       .ingestFiles(spark, files, ChurnSchema.staging).drop("src_file")
-    val clean = validateStaging(spark, staging, layers, runDate, hook = hook)
+    val (clean, nClean) = validated(spark, staging, layers, runDate, hook = hook)
     // ST4 here too (same guard as run()): a new file with zero data
     // rows must not drive gold over a schemaless empty fact — but it
     // WAS processed, so the archive + ledger protocol below still
     // runs and the file won't re-ingest forever
-    val haveData = !clean.isEmpty
+    val haveData = nClean > 0
     if (haveData) {
       upsertBronze(spark, clean, layers)
       dqBronzeCheck(spark, layers)
@@ -566,7 +586,7 @@ object Warehouse {
     Upsert.atomicOverwrite(Ledger.update(prior, processedRows), layers.ledger)
     hook.send(Notify.BatchStats("warehouse_run_ledger", Map(
       "files_processed" -> toProcess.size.toLong,
-      "clean_rows" -> (if (haveData) clean.count() else 0L))))
+      "clean_rows" -> nClean)))
     (decisions, if (haveData) Some(Quality.runAll(spark, layers)) else None)
   }
 }

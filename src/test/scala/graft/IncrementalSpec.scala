@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.SparkJobs
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.ops.Incremental
 import graft.ops.Incremental.WatermarkStore
@@ -80,5 +82,30 @@ class IncrementalSpec extends SparkSpec {
     val lines = scala.io.Source.fromFile(files.head).getLines().toSeq
     assert(lines.head === "id,v")
     assert(lines.tail.map(_.split(",")(0).toLong) === (1 to 5).map(_.toLong))
+  }
+
+  test("csvSink writes the bytes a global sort writes, in one job") {
+    val ts = java.sql.Timestamp.valueOf("2026-04-01 08:00:00")
+    // unsorted over three partitions; quotes, delimiters, NULLs and a
+    // timestamp exercise the CSV writer's escaping
+    val rows = Seq(Row(3L, "c,\"q\"", null, ts), Row(1L, "a", "x", null),
+      Row(5L, null, "y", ts), Row(2L, "b\nb", "z", ts), Row(4L, "", " w ", ts))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType),
+        StructField("w", StringType), StructField("ts", TimestampType))))
+    val root = TempRoots.create("graft-csv-bytes")
+    // the global sort the sink used before, as the oracle
+    df.orderBy(col("id")).coalesce(1)
+      .write.mode("overwrite").option("header", "true").csv(s"$root/oracle")
+    val (_, jobs) = SparkJobs.during(spark)(
+      Incremental.csvSink(df, s"$root/out", Seq("id")))
+    assert(jobs == 1)
+    def bytes(dir: String): Seq[Byte] = {
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".csv"))
+      assert(parts.length == 1, parts.toSeq)
+      Files.readAllBytes(parts.head.toPath).toSeq
+    }
+    assert(bytes(s"$root/out") == bytes(s"$root/oracle"))
   }
 }

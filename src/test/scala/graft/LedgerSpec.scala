@@ -38,6 +38,10 @@ class LedgerSpec extends SparkSpec {
       Seq("file_name"), "left")
     assert(joined.filter(col("true_ck").isNotNull &&
       col("checksum") =!= col("true_ck")).count() == 0)
+    // every column is refreshed on a conflict: the planted rows had no
+    // size, the processed ones carry the scan's
+    assert(updated.join(processed.select("file_name"), Seq("file_name"))
+      .filter(col("size_bytes").isNull).count() == 0)
     assert(updated.filter(col("file_name") === "ghost.png").count() == 1)
     assert(updated.count() == BinaryQueries.NumFiles + 1)
   }

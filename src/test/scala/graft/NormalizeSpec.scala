@@ -61,6 +61,47 @@ class NormalizeSpec extends SparkSpec {
     assert(missing.count() == 0)
   }
 
+  test("a landing dir on a non-default scheme lists and ingests") {
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${SchemeLocalFileSystem.Scheme}.impl",
+      classOf[SchemeLocalFileSystem].getName)
+    val dir = graft.TempRoots.create("graft_scheme")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.csv"),
+      "customer_id,tenure_in_months\nC1,3\n".getBytes("UTF-8"))
+    val landing = s"${SchemeLocalFileSystem.Scheme}://$dir"
+    assert(graft.ops.CsvIngest.listCsv(spark, landing).map(_.getName) ==
+      Seq("a.csv"))
+    val out = graft.ops.CsvIngest.ingestDir(spark, landing, layer)
+    assert(out.select("customer_id", "tenure_in_months").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("C1", 3)))
+  }
+
+  test("each dialect's schema follows Spark's own header rules, with no job") {
+    val dir = graft.TempRoots.create("graft_headers")
+    // quoted names holding the delimiter, a duplicated name, an empty
+    // name and surrounding spaces: every rule Spark applies to a header
+    val headers = Seq("customer_id,\"Tenure, Months\",Monthly Charges",
+      "Customer ID,city,city,,Churn Reason ")
+    headers.zipWithIndex.foreach { case (h, i) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"d$i.csv"),
+        s"$h\nC$i,1,2,3,4\n".getBytes("UTF-8"))
+    }
+    val files = graft.ops.CsvIngest.listCsv(spark, dir)
+    // the oracle: each file read with Spark's header inference
+    val inferred = headers.indices.map(i => Normalize.headers(
+      spark.read.option("header", "true").csv(s"$dir/d$i.csv")))
+    val target = StructType(inferred.flatMap(_.schema.fields).distinct)
+    assert(target.size == 7, target) // both dialects carry customer_id
+    val expected = inferred.map(Normalize.conformTo(_, target))
+      .reduce(_ unionByName _)
+    val (out, jobs) = org.apache.spark.sql.graftbridge.SparkJobs.during(spark)(
+      graft.ops.CsvIngest.ingestFiles(spark, files, target))
+    assert(jobs == 0)
+    val got = rowsAsSet(out.drop("src_file"))
+    assert(got == rowsAsSet(expected))
+    assert(got.map(_.count(_ != null)) == Set(3, 5), got)
+  }
+
   test("canonName: strip + lower + underscore") {
     assert(Normalize.canonName("  Churn Reason ") === "churn_reason")
     assert(Normalize.canonName("customerID") === "customerid")
@@ -72,4 +113,17 @@ class NormalizeSpec extends SparkSpec {
     val out = Normalize.headers(raw)
     assert(out.columns.toSeq === Seq("customer_id", "unrelated"))
   }
+}
+
+/** The local file system under a scheme of its own (registered per
+  * test as `fs.<scheme>.impl`), so a landing zone can sit on a
+  * non-default scheme. */
+class SchemeLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${SchemeLocalFileSystem.Scheme}:///")
+  override def getScheme: String = SchemeLocalFileSystem.Scheme
+}
+
+object SchemeLocalFileSystem {
+  val Scheme = "graftlocal"
 }

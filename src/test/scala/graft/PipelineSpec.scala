@@ -2,7 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SqlExecutions
+import org.apache.spark.sql.graftbridge.{SparkJobs, SqlExecutions}
+import graft.ops.Ledger
 import graft.pipeline._
 
 /** End-to-end medallion pipeline over a churn-shaped fixture
@@ -197,6 +198,36 @@ class PipelineSpec extends SparkSpec {
       fact.select("customer_key").distinct().count() == 7)
   }
 
+  test("the fact's customer_key is the key a dim_customer join gives, NULL ids included") {
+    val root = freshRoot("derived_key"); val layers = Warehouse.Layers(root)
+    val landing = s"$root/landing"
+    writeCsv(landing, "classic.csv",
+      ClassicHeader +: (1 to 4).map(i => classicRow(s"D00$i")))
+    Warehouse.run(spark, landing, layers, "2026-04-01")
+    // silver gains two new ids and a NULL id (which staging would
+    // reject, so it is planted straight into the layer)
+    val silver0 = spark.read.schema(ChurnSchema.silver).parquet(layers.silver)
+    val template = silver0.filter(col("customer_id") === "D001")
+    graft.ops.Upsert.atomicOverwrite(silver0
+      .unionByName(template.withColumn("customer_id", lit("D900")))
+      .unionByName(template.withColumn("customer_id", lit("D901")))
+      .unionByName(template.withColumn("customer_id", lit(null).cast("string"))),
+      layers.silver)
+    Warehouse.loadGold(spark, layers, "2026-04-02")
+    Warehouse.loadGold(spark, layers, "2026-04-03") // a rerun adds nothing
+    val silver = spark.read.parquet(layers.silver)
+    val dim = spark.read.parquet(layers.dim("customer"))
+    // the fact as a join against the dim would key it: one row per
+    // silver row whose id the dim holds; a NULL id joins nothing
+    val viaJoin = silver.join(dim, Seq("customer_id")).select("customer_key")
+    val fact = spark.read.parquet(layers.fact).select("customer_key")
+    assert(fact.count() == 6)
+    assert(fact.collect().map(_.getLong(0)).sorted.toSeq ==
+      viaJoin.collect().map(_.getLong(0)).sorted.toSeq)
+    assert(dim.filter(col("customer_id").isNull).count() > 0,
+      "the NULL id reached the dim, so the join had a row to skip")
+  }
+
   /** Every file under the five gold dims. */
   private def dimFiles(layers: Warehouse.Layers): Set[String] =
     Seq("customer", "contract", "payment_method", "churn_reason", "services")
@@ -277,6 +308,94 @@ class PipelineSpec extends SparkSpec {
     // a different day's batch still accumulates
     Warehouse.run(spark, landing, layers, "2026-04-02")
     assert(spark.read.parquet(layers.quarantine).count() == 2)
+  }
+
+  /** A warm tick: a 40-row base through the ledgered nightly, then a
+    * delta in both dialects beside it: 15 updated and 15 new classic
+    * ids, 8 new export ids, and 3 bad rows (a negative tenure and both
+    * copies of a duplicated id: 3 of 40, under the 10% breaker). */
+  private def warmTick(tag: String): (Warehouse.Layers, String) = {
+    val root = freshRoot(tag); val layers = Warehouse.Layers(root)
+    val landing = s"$root/landing"
+    writeCsv(landing, "base.csv",
+      ClassicHeader +: (1 to 40).map(i => classicRow(f"W$i%03d")))
+    Warehouse.runWithLedger(spark, landing, layers, "2026-05-01")
+    writeCsv(landing, "delta_classic.csv", ClassicHeader +:
+      ((1 to 30).map(i => classicRow(f"W${i + 25}%03d", charges = "70.0")) :+
+        classicRow("W900", tenure = "-4")))
+    writeCsv(landing, "delta_export.csv", ExportHeader +:
+      ((1 to 8).map(i => exportRow(f"X$i%03d", "2026-05-02 08:00:00")) :+
+        exportRow("X001", "2026-05-02 09:00:00")))
+    (layers, landing)
+  }
+
+  /** `body`'s result, SQL executions and Spark jobs. */
+  private def shape[T](body: => T): (T, Int, Int) = {
+    val ((out, jobs), executions) =
+      SqlExecutions.during(spark)(SparkJobs.during(spark)(body))
+    (out, executions.size, jobs)
+  }
+
+  test("warm tick: every nightly stage runs a pinned number of executions") {
+    val (layers, landing) = warmTick("shape")
+    val ledgerSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "file_name STRING, size_bytes LONG, checksum STRING")
+    val prior = spark.read.schema(ledgerSchema).parquet(layers.ledger)
+    // the nightly's chain, stage by stage, as runWithLedger calls it
+    val (decisions, decideX, decideJ) = shape {
+      val d = Ledger.decide(Ledger.scan(spark, landing, "*.csv"), prior)
+      d.collect(); d
+    }
+    val (toProcess, pickX, pickJ) = shape(Ledger.toProcess(decisions)
+      .select("file_name").collect().map(_.getString(0)).sorted.toIndexedSeq)
+    assert(toProcess == Seq("delta_classic.csv", "delta_export.csv"))
+    val files = toProcess.map(n => new org.apache.hadoop.fs.Path(landing, n))
+    val (staging, loadX, loadJ) = shape(graft.ops.CsvIngest
+      .ingestFiles(spark, files, ChurnSchema.staging).drop("src_file"))
+    val (clean, validateX, validateJ) = shape(
+      Warehouse.validateStaging(spark, staging, layers, "2026-05-02"))
+    val (_, bronzeX, bronzeJ) = shape(Warehouse.upsertBronze(spark, clean, layers))
+    val (_, bronzeDqX, bronzeDqJ) = shape(Warehouse.dqBronzeCheck(spark, layers))
+    val (_, silverX, silverJ) = shape(Warehouse.refreshSilver(spark, layers))
+    val (_, goldX, goldJ) = shape(Warehouse.loadGold(spark, layers, "2026-05-02"))
+    val (_, goldDqX, goldDqJ) = shape(Warehouse.dqGoldCheck(spark, layers))
+    val (_, updateX, updateJ) = shape {
+      val processed = decisions.filter(col("file_name").isin(toProcess: _*))
+        .select("file_name", "size_bytes", "checksum")
+      graft.ops.Upsert.atomicOverwrite(Ledger.update(prior, processed),
+        layers.ledger)
+    }
+    val (quality, qualityX, qualityJ) = shape(Quality.runAll(spark, layers))
+    assert(quality.filter(!col("pass")).isEmpty)
+    assert(spark.read.parquet(layers.quarantine)
+      .filter(col("run_date") === "2026-05-02").count() == 3)
+
+    // the same tick through runWithLedger itself, on a twin warehouse
+    val (twin, twinLanding) = warmTick("shape_twin")
+    val ((_, q), runX, runJ) = shape(
+      Warehouse.runWithLedger(spark, twinLanding, twin, "2026-05-02"))
+    assert(q.isDefined && q.get.filter(!col("pass")).isEmpty)
+
+    // (stage, SQL executions, pinned executions, Spark jobs, job bound):
+    // a stage re-split into more executions fails here
+    Seq(
+      ("Ledger.decide", decideX, 2, decideJ, 1),
+      ("Ledger.toProcess", pickX, 1, pickJ, 0),
+      ("CsvIngest.ingestFiles", loadX, 6, loadJ, 0),
+      ("validateStaging", validateX, 5, validateJ, 6),
+      ("upsertBronze", bronzeX, 1, bronzeJ, 4),
+      ("dqBronzeCheck", bronzeDqX, 1, bronzeDqJ, 2),
+      ("refreshSilver", silverX, 1, silverJ, 1),
+      ("loadGold", goldX, 7, goldJ, 13),
+      ("dqGoldCheck", goldDqX, 1, goldDqJ, 2),
+      ("Ledger.update", updateX, 2, updateJ, 1),
+      ("Quality.runAll", qualityX, 1, qualityJ, 4),
+      ("runWithLedger", runX, 27, runJ, 34)).foreach {
+      case (stage, executions, pinned, jobs, bound) =>
+        assert(executions == pinned,
+          s"$stage ran $executions SQL executions, pinned at $pinned")
+        assert(jobs <= bound, s"$stage ran $jobs Spark jobs, bound at $bound")
+    }
   }
 
   test("ledger-driven run: skip-processed, skip-empty, archive, ledger upsert") {
@@ -394,8 +513,11 @@ class PipelineSpec extends SparkSpec {
       classicRow("R001", tenure = "99"),
       classicRow("R900").replace("Month-to-month", "Weekly"),
       classicRow("R901", tenure = "twelve")))
-    val (accepted, rejected) = Reprocess.run(spark, fixes, layers)
+    val ((accepted, rejected), jobs) =
+      SparkJobs.during(spark)(Reprocess.run(spark, fixes, layers))
     assert(accepted == 1 && rejected == 2)
+    // one counting pass fills the cache: a second count would add jobs
+    assert(jobs <= 7, s"the correction loop ran $jobs Spark jobs")
     assert(spark.read.parquet(layers.reprocessQuarantine)
       .filter(col("error_details") === "Tenure not numeric").count() == 1)
     val silver = spark.read.parquet(layers.silver)

@@ -982,7 +982,8 @@ class TableStoreSpec extends SparkSpec {
           1L << 30)),
       "optimizeLayoutCurve" -> (() =>
         TableStore.optimizeLayoutCurve(spark, root, "id", "id", 9,
-          1L << 30)))
+          1L << 30)),
+      "restore" -> (() => TableStore.restore(spark, root, 1L)))
     rewrites.foreach { case (op, run) =>
       val ex = intercept[IllegalArgumentException](run())
       assert(ex.getMessage.startsWith(s"requirement failed: $op plans"),

@@ -32,13 +32,6 @@ class UpsertSpec extends SparkSpec {
       Seq(1L, "b", 2, "updated"), Seq(2L, "c", 3, "new")))
   }
 
-  test("upsertAll refreshes every non-key column") {
-    val existing = df(Seq((1L, "a", 1, "x")))
-    val incoming = df(Seq((1L, "b", 2, "y")))
-    val out = Upsert.upsertAll(existing, incoming, Seq("id"))
-    assert(rowsAsSet(out) === Set(Seq(1L, "b", 2, "y")))
-  }
-
   test("replaceByKey replaces matching keys wholesale and appends fresh ones") {
     val target = df(Seq((1L, "t1", 1, "a"), (2L, "t2", 2, "b")))
     val fixed = df(Seq((2L, "FIX", 20, "B"), (3L, "t3", 3, "c")))
