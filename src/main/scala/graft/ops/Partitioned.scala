@@ -25,8 +25,15 @@ object Partitioned {
     // opens a writer per partition value (tasks x partitions small
     // files); with it each partition directory gets one writer's
     // output. At skewed scale add a salt column to the repartition.
-    df.repartition(col(partCol))
-      .write
+    writeAsLaidOut(df.repartition(col(partCol)), path, partCol)
+  }
+
+  /** [[writeBy]] without its repartition: each task of `df` writes the
+    * partitions its rows fall in. For a frame already laid out by
+    * `partCol`, such as one whose rows all share one value. */
+  private[graft] def writeAsLaidOut(df: DataFrame, path: String,
+                                    partCol: String): Unit = {
+    df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)

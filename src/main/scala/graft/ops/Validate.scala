@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -46,18 +46,8 @@ object Validate {
     * driver — no shuffle, so a persisted frame is filled and counted by
     * the same job. */
   def counts(annotated: DataFrame): (Long, Long) = {
-    import annotated.sparkSession.implicits._
-    val perPartition = annotated
-      .select((col("error_details") =!= "").as("bad"))
-      .mapPartitions { rows =>
-        var total, bad = 0L
-        rows.foreach { r =>
-          total += 1
-          if (!r.isNullAt(0) && r.getBoolean(0)) bad += 1
-        }
-        Iterator((total, bad))
-      }.collect()
-    (perPartition.map(_._1).sum, perPartition.map(_._2).sum)
+    val (total, bad, _) = tally(annotated, keep = 0)
+    (total, bad)
   }
 
   /** Error-rate circuit breaker (reference: 10% threshold,
@@ -79,21 +69,51 @@ object Validate {
     * rejecting run_date can still see the prior run's partition. */
   def gateCounted(annotated: DataFrame,
                   thresholdPct: Double = 10.0): (DataFrame, Long) = {
-    val (clean, _, bad) = gateTotals(annotated, thresholdPct)
+    val (clean, _, bad, _) = gateTotals(annotated, thresholdPct)
     (clean, bad)
   }
 
-  /** [[gateCounted]] with the batch's total row count as well, from
-    * the same pass: (clean rows, total, bad). */
-  private[graft] def gateTotals(annotated: DataFrame,
-                                thresholdPct: Double): (DataFrame, Long, Long) = {
-    val (total, bad) = counts(annotated)
+  /** [[gateCounted]] with the batch's total row count and its first
+    * `keep` bad rows as well, from the same pass: (clean rows, total,
+    * bad, head of the bad rows). */
+  private[graft] def gateTotals(annotated: DataFrame, thresholdPct: Double,
+                                keep: Int = 0): (DataFrame, Long, Long, Seq[Row]) = {
+    val (total, bad, head) = tally(annotated, keep)
     val rate = if (total == 0) 0.0 else bad * 100.0 / total
     if (rate > thresholdPct)
       throw new IllegalStateException(
         f"error rate $rate%.2f%% exceeds $thresholdPct%.1f%% — halting before cleanup")
-    (good(annotated), total, bad)
+    (good(annotated), total, bad, head)
   }
+
+  /** [[counts]]' pass, also keeping the first `keep` bad rows in
+    * partition order — the rows `bad(annotated).coalesce(1).limit(keep)`
+    * returns; each partition sends at most `keep` rows to the driver. */
+  private def tally(annotated: DataFrame, keep: Int): (Long, Long, Seq[Row]) = {
+    val read = if (keep == 0) annotated.select("error_details") else annotated
+    val i = read.schema.fieldIndex("error_details")
+    val perPartition = read.rdd.mapPartitions { rows =>
+      var total, bad = 0L
+      val head = Seq.newBuilder[Row]
+      rows.foreach { r =>
+        total += 1
+        if (!r.isNullAt(i) && r.getString(i) != "") {
+          if (bad < keep) head += r
+          bad += 1
+        }
+      }
+      Iterator((total, bad, head.result()))
+    }.collect()
+    (perPartition.map(_._1).sum, perPartition.map(_._2).sum,
+      perPartition.flatMap(_._3).take(keep).toSeq)
+  }
+
+  /** Rows of `df`, counted within each partition and summed on the
+    * driver: one Spark job, where `count()`'s global aggregate adds an
+    * exchange that adaptive execution runs as a job of its own. */
+  private[graft] def rowCount(df: DataFrame): Long =
+    df.select(lit(1)).mapPartitions(rows => Iterator(rows.size.toLong))(
+      org.apache.spark.sql.Encoders.scalaLong).collect().sum
 
   /** A12: value-check assertion — the reference's SQLValueCheckOperator
     * (dags/DataWarehouse.py:810-819,843-863): a scalar query result
@@ -101,12 +121,16 @@ object Validate {
     * Airflow: |actual − expected| ≤ expected·tolerance) or the
     * pipeline fails at that task. `df` must be a 1×1 frame. */
   def valueCheck(df: DataFrame, expected: Double, tolerance: Double = 0.0,
-                 name: String = "value check"): Unit = {
-    val actual = df.head().get(0) match {
+                 name: String = "value check"): Unit =
+    checkValue(df.head().get(0) match {
       case n: Number => n.doubleValue()
       case other => throw new IllegalArgumentException(
         s"$name: non-numeric check result $other")
-    }
+    }, expected, tolerance, name)
+
+  /** [[valueCheck]] of a result already on the driver. */
+  private[graft] def checkValue(actual: Double, expected: Double,
+                                tolerance: Double, name: String): Unit = {
     val allowed = math.abs(expected) * tolerance
     if (math.abs(actual - expected) > allowed)
       throw new IllegalStateException(

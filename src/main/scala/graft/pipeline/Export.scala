@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.ops.Incremental
 
 /** The incremental churn-export pipeline — the reference's
@@ -15,11 +16,14 @@ import graft.ops.Incremental
   */
 object Export {
 
-  /** Window extract over a bronze-shaped frame (P7 + F11). */
+  /** Window extract over a bronze-shaped frame (P7 + F11). The bounds
+    * are cast row by row from per-run [[graft.GraftSession.constant]]
+    * strings, so every run's extract is the same generated code. */
   def extractWindow(bronze: DataFrame, lastWm: String, runTs: String): DataFrame =
     Incremental.window(bronze,
       Incremental.changeTs(col("created_at"), col("updated_at")),
-      lit(lastWm).cast("timestamp"), lit(runTs).cast("timestamp"))
+      GraftSession.constant(lastWm).cast("timestamp"),
+      GraftSession.constant(runTs).cast("timestamp"))
 
   /** One export run. Returns exported row count (0 = skipped batch,
     * watermark untouched). The export file name carries the window

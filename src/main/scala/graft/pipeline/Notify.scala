@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Pluggable notification events — the engine-side contract behind the
   * reference's email callbacks (dags/DataWarehouse.py:499-506: the
@@ -36,14 +36,17 @@ object Notify {
 
   /** Bounded preview extract: limit + collect + stringify (nulls stay
     * null). `total` is passed in, not recounted here. */
-  def preview(df: DataFrame, total: Long, stage: String): QuarantinePreview = {
-    val header = df.columns.toIndexedSeq
-    val rows = df.limit(PreviewRows).collect().toIndexedSeq.map { r =>
+  def preview(df: DataFrame, total: Long, stage: String): QuarantinePreview =
+    previewOf(df.columns.toIndexedSeq, df.limit(PreviewRows).collect().toIndexedSeq,
+      total, stage)
+
+  /** [[preview]] of rows already on the driver, under `header`. */
+  private[pipeline] def previewOf(header: Seq[String], rows: Seq[Row],
+                                  total: Long, stage: String): QuarantinePreview =
+    QuarantinePreview(stage, total, header, rows.take(PreviewRows).map { r =>
       header.indices.map(i =>
         if (r.isNullAt(i)) null else String.valueOf(r.get(i)))
-    }
-    QuarantinePreview(stage, total, header, rows)
-  }
+    })
 }
 
 trait NotifyHook extends Serializable {

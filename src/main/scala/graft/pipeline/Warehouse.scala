@@ -7,7 +7,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.GraftSession
 import graft.ops._
 
 /** The full medallion composition — the reference's
@@ -62,15 +65,16 @@ object Warehouse {
   /** Read a layer with its schema PINNED, or an empty typed frame when
     * the layer doesn't exist yet — inference on a dim that was written
     * empty throws 'Unable to infer schema', and inferred key types can
-    * drift where an explicit schema fails loudly. */
+    * drift where an explicit schema fails loudly. The empty frame is a
+    * parquet scan of no files: the plan, and so the generated code, of
+    * a first run is then the plan of every later run. */
   private def readOrEmpty(spark: SparkSession, path: String,
                           schema: org.apache.spark.sql.types.StructType): DataFrame = {
     // a missing layer may be a crashed overwrite swap, not "no data" —
     // restore before concluding empty (silent-truncation guard)
     Upsert.recoverCrashedSwap(spark, path)
-    if (pathExists(spark, path)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val read = spark.read.schema(schema)
+    if (pathExists(spark, path)) read.parquet(path) else read.parquet()
   }
 
   /** S12: DDL bootstrap — every layer exists (possibly empty) with its
@@ -99,9 +103,9 @@ object Warehouse {
     * Returns the staging layer as written.
     *
     * The annotated batch is computed once: the gate's (total, bad)
-    * pass fills a persisted copy, and the quarantine write, the
-    * staging write and the quarantine preview all read that copy —
-    * the rule chain and its duplicate-key shuffle never run twice.
+    * pass fills a persisted copy and collects the quarantine preview's
+    * rows, and the quarantine and staging writes read that copy — the
+    * rule chain and its duplicate-key shuffle never run twice.
     *
     * The quarantine writes run-date-partitioned with DYNAMIC overwrite,
     * not append: the documented recovery for a mid-run crash is
@@ -134,17 +138,21 @@ object Warehouse {
       // quarantine dir can't answer that (a clean re-run of a
       // previously rejecting run_date still sees the old partition,
       // because dynamic overwrite of an empty frame replaces nothing)
-      val (clean, total, nBad) =
-        try Validate.gateTotals(annotated, thresholdPct)
+      // the gate's pass also brings the quarantine preview's rows
+      val (clean, total, nBad, head) =
+        try Validate.gateTotals(annotated, thresholdPct, Notify.PreviewRows)
         catch { case e: IllegalStateException =>
           // the reference's on_failure_callback mail: alert, then halt
           hook.send(Notify.GateFailure("staging_validate", e.getMessage))
           throw e
         }
       val rejected = Validate.bad(annotated).withColumn("run_date", lit(runDate))
-      if (nBad > 0)
-        graft.ops.Partitioned.writeBy(rejected, layers.quarantine, "run_date")
-      else {
+      if (nBad > 0) {
+        // every rejected row carries the one run_date, so one task
+        // writes the one partition: no exchange, one file
+        Partitioned.writeAsLaidOut(rejected.coalesce(1), layers.quarantine,
+          "run_date")
+      } else {
         // all-clean batch: clear any stale partition this run_date left
         // behind, so analysts never see a previous run's rejects
         val part = new org.apache.hadoop.fs.Path(
@@ -153,12 +161,12 @@ object Warehouse {
         if (fs.exists(part)) fs.delete(part, true)
       }
       Upsert.atomicOverwrite(clean.drop("error_details"), layers.staging)
-      // the quarantine-preview notification: the rows just written,
-      // from the persisted batch (never a recompute of the rule chain);
-      // one partition, so the bounded take is one job that stops at
-      // the preview's last row
+      // the quarantine-preview notification: the first rows just
+      // written, as the gate's pass collected them
       if (nBad > 0)
-        hook.send(Notify.preview(rejected.coalesce(1), nBad, "staging_quarantine"))
+        hook.send(Notify.previewOf(rejected.columns.toIndexedSeq,
+          head.map(r => Row.fromSeq(r.toSeq :+ runDate)), nBad,
+          "staging_quarantine"))
       (spark.read.schema(ChurnSchema.staging).parquet(layers.staging),
         total - nBad)
     } finally rows.unpersist()
@@ -170,9 +178,10 @@ object Warehouse {
     * values, conflicts stamp record_type='updated' and refresh
     * updated_at to the load time (F12: the reference's DEFAULT
     * CURRENT_TIMESTAMP on insert + updated_at=CURRENT_TIMESTAMP on
-    * conflict; current_timestamp() is pinned per query, so one load
-    * stamps one instant). */
+    * conflict; the instant is taken once per load, so one load stamps
+    * one instant). */
   def upsertBronze(spark: SparkSession, batch: DataFrame, layers: Layers): Unit = {
+    val now = GraftSession.constant(java.time.Instant.now())
     // tiebreak on a content hash: duplicate keys with tied (or NULL)
     // updated_at must pick the SAME survivor on every run regardless
     // of partition order
@@ -182,14 +191,13 @@ object Warehouse {
             xxhash64(batch.columns.map(col).toIndexedSeq: _*).asc)))
       .filter(col("_rn") === 1).drop("_rn")
       .withColumn("created_at",
-        coalesce(col("created_at"), current_timestamp()))
-      .withColumn("updated_at",
-        coalesce(col("updated_at"), current_timestamp()))
+        coalesce(col("created_at"), now))
+      .withColumn("updated_at", coalesce(col("updated_at"), now))
     val existing = spark.read.schema(ChurnSchema.bronze).parquet(layers.bronze)
     val merged = Upsert.merge(existing, latest, Seq("customer_id"),
       ChurnSchema.bronzeUpdateCols,
       Map("record_type" -> lit("updated"),
-        "updated_at" -> current_timestamp()))
+        "updated_at" -> now))
     Upsert.atomicOverwrite(merged, layers.bronze)
   }
 
@@ -406,6 +414,10 @@ object Warehouse {
     * NULL id matches no dim row). */
   def loadGold(spark: SparkSession, layers: Layers, runDate: String): Unit = {
     val silver = spark.read.schema(ChurnSchema.silver).parquet(layers.silver)
+    // to_date(runDate): Spark's own string-to-date rule, applied once
+    val runDay = DateTimeUtils.stringToDate(UTF8String.fromString(runDate))
+      .fold(lit(null).cast(DateType))(d =>
+        GraftSession.constant(java.time.LocalDate.ofEpochDay(d.toLong)))
 
     val contractNorm =
       regexp_replace(col("contract"), "Month-to-month", "Month-to-Month")
@@ -456,37 +468,31 @@ object Warehouse {
         col("total_charges"),
         col("churn_label").as("churn_flag"),
         col("churn_score"), col("cltv"),
-        to_date(lit(runDate)).as("run_date"))
-
-    val toAppend = if (pathExists(spark, layers.fact)) {
-      val existingFact = spark.read.schema(ChurnSchema.fact).parquet(layers.fact)
-      fact.join(existingFact.select("customer_key"),
-        Seq("customer_key"), "left_anti")
-    } else fact
-    appendFiles(toAppend, layers.fact)
+        runDay.as("run_date"))
+    appendFiles(fact.join(readOrEmpty(spark, layers.fact, ChurnSchema.fact)
+      .select("customer_key"), Seq("customer_key"), "left_anti"), layers.fact)
   }
 
   /** A12: the DAG's two hard value checks, at the DAG's positions —
     * bronze sanity after the upsert, fact integrity after gold load
     * (reference: dags/DataWarehouse.py:810-819,843-863; pass_value=0,
-    * tolerance=0 → any violation fails the run). */
+    * tolerance=0 → any violation fails the run). Each counts its
+    * violations in one Spark job ([[Validate.rowCount]]). */
   def dqBronzeCheck(spark: SparkSession, layers: Layers): Unit =
-    Validate.valueCheck(
+    Validate.checkValue(Validate.rowCount(
       spark.read.schema(ChurnSchema.bronze).parquet(layers.bronze)
-        .filter(col("customer_id").isNull || col("churn_label").isNull)
-        .agg(count(lit(1))),
-      expected = 0, name = "dq_bronze_sanity_check")
+        .filter(col("customer_id").isNull || col("churn_label").isNull)),
+      expected = 0, tolerance = 0, name = "dq_bronze_sanity_check")
 
   def dqGoldCheck(spark: SparkSession, layers: Layers): Unit =
-    Validate.valueCheck(
+    Validate.checkValue(Validate.rowCount(
       spark.read.schema(ChurnSchema.fact).parquet(layers.fact)
         .filter(col("customer_key").isNull ||
           col("contract_key").isNull || col("service_key").isNull ||
           col("monthly_charges_amount") < 0 || col("total_charges") < 0 ||
           (col("churn_score").isNotNull &&
-            (col("churn_score") < 0 || col("churn_score") > 100)))
-        .agg(count(lit(1))),
-      expected = 0, name = "dq_gold_fact_check")
+            (col("churn_score") < 0 || col("churn_score") > 100)))),
+      expected = 0, tolerance = 0, name = "dq_gold_fact_check")
 
   /** One full nightly run (the DAG's task chain, in order). Returns
     * the quality summary. */

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{SparkJobs, SqlExecutions}
+import org.apache.spark.sql.graftbridge.{Compiles, SparkJobs, SqlExecutions}
 import graft.ops.Ledger
 import graft.pipeline._
 
@@ -311,22 +311,79 @@ class PipelineSpec extends SparkSpec {
   }
 
   /** A warm tick: a 40-row base through the ledgered nightly, then a
-    * delta in both dialects beside it: 15 updated and 15 new classic
-    * ids, 8 new export ids, and 3 bad rows (a negative tenure and both
-    * copies of a duplicated id: 3 of 40, under the 10% breaker). */
+    * delta in both dialects beside it (see [[writeDelta]]). */
   private def warmTick(tag: String): (Warehouse.Layers, String) = {
     val root = freshRoot(tag); val layers = Warehouse.Layers(root)
     val landing = s"$root/landing"
     writeCsv(landing, "base.csv",
       ClassicHeader +: (1 to 40).map(i => classicRow(f"W$i%03d")))
     Warehouse.runWithLedger(spark, landing, layers, "2026-05-01")
-    writeCsv(landing, "delta_classic.csv", ClassicHeader +:
-      ((1 to 30).map(i => classicRow(f"W${i + 25}%03d", charges = "70.0")) :+
-        classicRow("W900", tenure = "-4")))
-    writeCsv(landing, "delta_export.csv", ExportHeader +:
-      ((1 to 8).map(i => exportRow(f"X$i%03d", "2026-05-02 08:00:00")) :+
-        exportRow("X001", "2026-05-02 09:00:00")))
+    writeDelta(landing, 1)
     (layers, landing)
+  }
+
+  /** Tick `n`'s delta, the same shape on every tick: 15 updated and 15
+    * new classic ids, 8 new export ids, and 3 bad rows (a negative
+    * tenure and both copies of a duplicated id: 3 of 40, under the 10%
+    * breaker). */
+  private def writeDelta(landing: String, n: Int): Unit = {
+    val name = if (n == 1) "delta" else s"delta$n"
+    val (w, x) = (15 * (n - 1), 8 * (n - 1))
+    writeCsv(landing, s"${name}_classic.csv", ClassicHeader +:
+      ((1 to 30).map(i => classicRow(f"W${i + 25 + w}%03d", charges = "70.0")) :+
+        classicRow(f"W${899 + n}%03d", tenure = "-4")))
+    writeCsv(landing, s"${name}_export.csv", ExportHeader +:
+      ((1 to 8).map(i => exportRow(f"X${i + x}%03d", "2026-05-02 08:00:00")) :+
+        exportRow(f"X${1 + x}%03d", "2026-05-02 09:00:00")))
+  }
+
+  /** What a probe saw of one stage. */
+  private trait Probe[M] { def apply[T](body: => T): (T, M) }
+
+  /** `runWithLedger`'s chain for one tick, stage by stage as it calls
+    * them, each stage through `probe`; returns what the probe saw per
+    * stage, in order. Checks that the tick processed `files`, that its
+    * quality corpus passes and that it quarantined 3 rows. */
+  private def tickByStage[M](layers: Warehouse.Layers, landing: String,
+                             runDate: String, files: Seq[String])
+                            (probe: Probe[M]): Seq[(String, M)] = {
+    val ledgerSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "file_name STRING, size_bytes LONG, checksum STRING")
+    val prior = spark.read.schema(ledgerSchema).parquet(layers.ledger)
+    val seen = Seq.newBuilder[(String, M)]
+    def stage[T](name: String)(body: => T): T = {
+      val (out, m) = probe(body)
+      seen += name -> m
+      out
+    }
+    val decisions = stage("Ledger.decide") {
+      val d = Ledger.decide(Ledger.scan(spark, landing, "*.csv"), prior)
+      d.collect(); d
+    }
+    val toProcess = stage("Ledger.toProcess")(Ledger.toProcess(decisions)
+      .select("file_name").collect().map(_.getString(0)).sorted.toIndexedSeq)
+    assert(toProcess == files)
+    val paths = toProcess.map(n => new org.apache.hadoop.fs.Path(landing, n))
+    val staging = stage("CsvIngest.ingestFiles")(graft.ops.CsvIngest
+      .ingestFiles(spark, paths, ChurnSchema.staging).drop("src_file"))
+    val clean = stage("validateStaging")(
+      Warehouse.validateStaging(spark, staging, layers, runDate))
+    stage("upsertBronze")(Warehouse.upsertBronze(spark, clean, layers))
+    stage("dqBronzeCheck")(Warehouse.dqBronzeCheck(spark, layers))
+    stage("refreshSilver")(Warehouse.refreshSilver(spark, layers))
+    stage("loadGold")(Warehouse.loadGold(spark, layers, runDate))
+    stage("dqGoldCheck")(Warehouse.dqGoldCheck(spark, layers))
+    stage("Ledger.update") {
+      val processed = decisions.filter(col("file_name").isin(toProcess: _*))
+        .select("file_name", "size_bytes", "checksum")
+      graft.ops.Upsert.atomicOverwrite(Ledger.update(prior, processed),
+        layers.ledger)
+    }
+    val quality = stage("Quality.runAll")(Quality.runAll(spark, layers))
+    assert(quality.filter(!col("pass")).isEmpty)
+    assert(spark.read.parquet(layers.quarantine)
+      .filter(col("run_date") === runDate).count() == 3)
+    seen.result()
   }
 
   /** `body`'s result, SQL executions and Spark jobs. */
@@ -338,37 +395,13 @@ class PipelineSpec extends SparkSpec {
 
   test("warm tick: every nightly stage runs a pinned number of executions") {
     val (layers, landing) = warmTick("shape")
-    val ledgerSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "file_name STRING, size_bytes LONG, checksum STRING")
-    val prior = spark.read.schema(ledgerSchema).parquet(layers.ledger)
-    // the nightly's chain, stage by stage, as runWithLedger calls it
-    val (decisions, decideX, decideJ) = shape {
-      val d = Ledger.decide(Ledger.scan(spark, landing, "*.csv"), prior)
-      d.collect(); d
-    }
-    val (toProcess, pickX, pickJ) = shape(Ledger.toProcess(decisions)
-      .select("file_name").collect().map(_.getString(0)).sorted.toIndexedSeq)
-    assert(toProcess == Seq("delta_classic.csv", "delta_export.csv"))
-    val files = toProcess.map(n => new org.apache.hadoop.fs.Path(landing, n))
-    val (staging, loadX, loadJ) = shape(graft.ops.CsvIngest
-      .ingestFiles(spark, files, ChurnSchema.staging).drop("src_file"))
-    val (clean, validateX, validateJ) = shape(
-      Warehouse.validateStaging(spark, staging, layers, "2026-05-02"))
-    val (_, bronzeX, bronzeJ) = shape(Warehouse.upsertBronze(spark, clean, layers))
-    val (_, bronzeDqX, bronzeDqJ) = shape(Warehouse.dqBronzeCheck(spark, layers))
-    val (_, silverX, silverJ) = shape(Warehouse.refreshSilver(spark, layers))
-    val (_, goldX, goldJ) = shape(Warehouse.loadGold(spark, layers, "2026-05-02"))
-    val (_, goldDqX, goldDqJ) = shape(Warehouse.dqGoldCheck(spark, layers))
-    val (_, updateX, updateJ) = shape {
-      val processed = decisions.filter(col("file_name").isin(toProcess: _*))
-        .select("file_name", "size_bytes", "checksum")
-      graft.ops.Upsert.atomicOverwrite(Ledger.update(prior, processed),
-        layers.ledger)
-    }
-    val (quality, qualityX, qualityJ) = shape(Quality.runAll(spark, layers))
-    assert(quality.filter(!col("pass")).isEmpty)
-    assert(spark.read.parquet(layers.quarantine)
-      .filter(col("run_date") === "2026-05-02").count() == 3)
+    val stages = tickByStage(layers, landing, "2026-05-02",
+        Seq("delta_classic.csv", "delta_export.csv"))(new Probe[(Int, Int)] {
+      def apply[T](body: => T): (T, (Int, Int)) = {
+        val (out, executions, jobs) = shape(body)
+        (out, (executions, jobs))
+      }
+    }).toMap
 
     // the same tick through runWithLedger itself, on a twin warehouse
     val (twin, twinLanding) = warmTick("shape_twin")
@@ -376,26 +409,48 @@ class PipelineSpec extends SparkSpec {
       Warehouse.runWithLedger(spark, twinLanding, twin, "2026-05-02"))
     assert(q.isDefined && q.get.filter(!col("pass")).isEmpty)
 
-    // (stage, SQL executions, pinned executions, Spark jobs, job bound):
-    // a stage re-split into more executions fails here
+    // (stage, pinned SQL executions, Spark job bound): a stage re-split
+    // into more executions fails here
     Seq(
-      ("Ledger.decide", decideX, 2, decideJ, 1),
-      ("Ledger.toProcess", pickX, 1, pickJ, 0),
-      ("CsvIngest.ingestFiles", loadX, 6, loadJ, 0),
-      ("validateStaging", validateX, 5, validateJ, 6),
-      ("upsertBronze", bronzeX, 1, bronzeJ, 4),
-      ("dqBronzeCheck", bronzeDqX, 1, bronzeDqJ, 2),
-      ("refreshSilver", silverX, 1, silverJ, 1),
-      ("loadGold", goldX, 7, goldJ, 13),
-      ("dqGoldCheck", goldDqX, 1, goldDqJ, 2),
-      ("Ledger.update", updateX, 2, updateJ, 1),
-      ("Quality.runAll", qualityX, 1, qualityJ, 4),
-      ("runWithLedger", runX, 27, runJ, 34)).foreach {
-      case (stage, executions, pinned, jobs, bound) =>
-        assert(executions == pinned,
-          s"$stage ran $executions SQL executions, pinned at $pinned")
-        assert(jobs <= bound, s"$stage ran $jobs Spark jobs, bound at $bound")
+      ("Ledger.decide", 2, 1),
+      ("Ledger.toProcess", 1, 0),
+      ("CsvIngest.ingestFiles", 6, 0),
+      ("validateStaging", 4, 4),
+      ("upsertBronze", 1, 4),
+      ("dqBronzeCheck", 1, 1),
+      ("refreshSilver", 1, 1),
+      ("loadGold", 7, 13),
+      ("dqGoldCheck", 1, 1),
+      ("Ledger.update", 2, 1),
+      ("Quality.runAll", 1, 4),
+      ("runWithLedger", 26, 30)).foreach { case (stage, pinned, bound) =>
+      val (executions, jobs) = stages.getOrElse(stage, (runX, runJ))
+      assert(executions == pinned,
+        s"$stage ran $executions SQL executions, pinned at $pinned")
+      assert(jobs <= bound, s"$stage ran $jobs Spark jobs, bound at $bound")
     }
+  }
+
+  test("warm ticks: a second tick of the same shape compiles no class again") {
+    // the session's bound reached the JVM-wide cache, which reads it once
+    assert(Compiles.cacheCapacity ==
+      spark.conf.get("spark.sql.codegen.cache.maxEntries").toLong)
+    val (layers, landing) = warmTick("codegen")
+    Warehouse.runWithLedger(spark, landing, layers, "2026-05-02")
+    writeDelta(landing, 2)
+    val stages = tickByStage(layers, landing, "2026-05-03",
+        Seq("delta2_classic.csv", "delta2_export.csv"))(new Probe[Compiles.Cost] {
+      def apply[T](body: => T): (T, Compiles.Cost) = Compiles.during(body)
+    })
+    val seen = stages.mkString(", ")
+    Seq("refreshSilver", "dqBronzeCheck", "dqGoldCheck", "Quality.runAll")
+      .foreach { stage =>
+        assert(stages.toMap.apply(stage).classes == 0,
+          s"$stage compiled classes again: $seen")
+      }
+    // every per-run value reaches the generated code as a reference
+    val nightly = stages.map(_._2).reduce(_ + _)
+    assert(nightly.classes <= 0, s"the second tick compiled $nightly: $seen")
   }
 
   test("ledger-driven run: skip-processed, skip-empty, archive, ledger upsert") {
