@@ -109,9 +109,8 @@ object DerivedView {
               transform: DataFrame => DataFrame): Option[Long] = {
     val to = TableStore.versions(spark, srcRoot).lastOption
       .getOrElse(return None)
-    val from = TableStore.versions(spark, viewRoot).lastOption
-      .flatMap(v => TableStore.latestMeta(spark, viewRoot, "viewpos", v))
-      .map(_.toLong).getOrElse(0L)
+    val from = TableStore.snapshotOf(spark, viewRoot)
+      .flatMap(_.meta("viewpos")).map(_.toLong).getOrElse(0L)
     if (to <= from) return None
     val delta = TableStore.readChangesSince(spark, srcRoot, from, Some(to))
       .drop("_commit_version")
@@ -155,9 +154,8 @@ object DerivedView {
       .getOrElse(return None)
     val toB = TableStore.versions(spark, bRoot).lastOption
       .getOrElse(return None)
-    val (fromA, fromB) = TableStore.versions(spark, viewRoot)
-      .lastOption
-      .flatMap(v => TableStore.latestMeta(spark, viewRoot, "viewpos", v))
+    val (fromA, fromB) = TableStore.snapshotOf(spark, viewRoot)
+      .flatMap(_.meta("viewpos"))
       .map { p =>
         val Array(a, b) = p.split(','); (a.toLong, b.toLong)
       }.getOrElse((0L, 0L))

@@ -330,10 +330,11 @@ object Dml {
     * Returns the committed version, or the current latest when no
     * row matches (a provable no-op commits nothing). */
   def delete(spark: SparkSession, root: String, pred: Column): Long = {
-    val vs = TableStore.versions(spark, root)
-    if (vs.isEmpty) return 0L // anchored-but-empty store: typed no-op
-    val prev = vs.last
-    val live = TableStore.liveAt(spark, root, prev)
+    val snap = TableStore.snapshotOf(spark, root) match {
+      case Some(s) => s
+      case None => return 0L // anchored-but-empty store: typed no-op
+    }
+    val (prev, live) = (snap.version, snap.live)
     if (live.isEmpty) return prev
     // unconditional delete: no scan can change the answer — remove
     // every live file as one metadata commit (truncation is O(log)).
@@ -354,9 +355,8 @@ object Dml {
     // copy-on-write refuses outstanding vectors (the deleteWhere
     // contract); merge-on-read composes with them (the new vector
     // covers only rows still VISIBLE)
-    if (!mor) TableStore.requireNoDvs(spark, root, prev, live,
-      "Dml.delete")
-    val snapshot = TableStore.read(spark, root, Some(prev))
+    if (!mor) snap.requireNoDvs("Dml.delete")
+    val snapshot = TableStore.readSnapshot(spark, root, Some(snap))
     requireDeterministicPred(snapshot, "a DELETE predicate", pred)
     // one driver-side subquery evaluation serves BOTH passes below
     // (and unlocks the stats prune); no-op unless a small uncorrelated
@@ -370,8 +370,7 @@ object Dml {
       // merge-on-read: vector the matching rows of the pruned
       // candidates; data files stay byte-identical (the KB-sized
       // right-to-be-forgotten commit — purge_deletes folds later)
-      return TableStore.deleteMoRTouched(spark, root, predM, prev,
-        candidates)
+      return TableStore.deleteMoRTouched(spark, snap, predM, candidates)
     // exact discovery: which candidates HOLD a definitely-matching row
     val hitUris = target(spark, root, snapshot, candidates)
       .where(coalesce(predM, lit(false)))
@@ -404,13 +403,14 @@ object Dml {
              set: Seq[(String, Column)],
              pred: Option[Column] = None): Long = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
-    val vs = TableStore.versions(spark, root)
-    if (vs.isEmpty) return 0L // anchored-but-empty store: typed no-op
-    val prev = vs.last
-    val live = TableStore.liveAt(spark, root, prev)
-    TableStore.requireNoDvs(spark, root, prev, live, "Dml.update")
+    val snap = TableStore.snapshotOf(spark, root) match {
+      case Some(s) => s
+      case None => return 0L // anchored-but-empty store: typed no-op
+    }
+    val (prev, live) = (snap.version, snap.live)
+    snap.requireNoDvs("Dml.update")
     if (live.isEmpty) return prev
-    val snapshot = TableStore.read(spark, root, Some(prev))
+    val snapshot = TableStore.readSnapshot(spark, root, Some(snap))
     val fields = snapshot.schema.fields.map(f => f.name -> f).toMap
     set.foreach { case (c, _) =>
       require(fields.contains(c),
@@ -474,7 +474,7 @@ object Dml {
     val adds = TableStore.writeData(rewritten, root, n,
       carriedStatsCols(live))
     // updated rows are NEW content: re-validate against constraints
-    TableStore.enforceConstraints(spark, root, adds)
+    TableStore.enforceConstraints(spark, Some(snap), adds)
     // race screen judges the ORIGINAL predicate: a materialized
     // subquery's result could still change under serial execution
     TableStore.commitRewriteRebasing(spark, root, n, adds,
@@ -523,17 +523,11 @@ object Dml {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE with no clauses is a no-op " +
       "by construction — refuse loudly instead of committing nothing")
-    val vs = TableStore.versions(spark, root)
     // an anchored-but-empty store still merges: nothing matches, the
     // NOT MATCHED inserts land as the first real commit
-    val prev = if (vs.isEmpty) 0L else vs.last
-    val live =
-      if (vs.isEmpty) Seq.empty[FileEntry]
-      else TableStore.liveAt(spark, root, prev)
-    if (vs.nonEmpty)
-      TableStore.requireNoDvs(spark, root, prev, live, "Dml.merge")
-    val snapshot = TableStore.read(spark, root,
-      if (vs.isEmpty) None else Some(prev))
+    val snap = TableStore.snapshotOf(spark, root)
+    snap.foreach(_.requireNoDvs("Dml.merge"))
+    val snapshot = TableStore.readSnapshot(spark, root, snap)
     val tCols = snapshot.columns.toIndexedSeq
     require(tCols.contains(targetKey),
       s"merge key $targetKey is not a column of $root [${tCols.mkString(",")}]")
@@ -569,7 +563,7 @@ object Dml {
     // batch-sized by assumption; the TABLE is what's 100 TB)
     source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try mergeBody(spark, root, source, on, targetKey, sourceKey,
-      matched, notMatched, notMatchedBySource, prev, live, snapshot,
+      matched, notMatched, notMatchedBySource, snap, snapshot,
       tCols, fields)
     finally source.unpersist()
   }
@@ -579,10 +573,12 @@ object Dml {
                         sourceKey: Column, matched: Seq[WhenMatched],
                         notMatched: Seq[WhenNotMatched],
                         notMatchedBySource: Seq[WhenNotMatchedBySource],
-                        prev: Long, live: Seq[FileEntry],
+                        snap: Option[TableStore.Snapshot],
                         snapshot: DataFrame,
                         tCols: IndexedSeq[String],
                         fields: Map[String, org.apache.spark.sql.types.StructField]): Long = {
+    val prev = snap.fold(0L)(_.version)
+    val live = snap.fold(Seq.empty[FileEntry])(_.live)
     // the source's key span as filters — drives BOTH the candidate
     // prune and the commit-race serializability screen (a concurrent
     // add the span refutes cannot change any clause's match set).
@@ -738,7 +734,7 @@ object Dml {
     if (touched.isEmpty && insertAdds.isEmpty) return prev
     // rewritten rows may carry UPDATE-assigned values and inserts are
     // new content — both re-validate against the CHECK constraints
-    TableStore.enforceConstraints(spark, root, rewriteAdds ++ insertAdds)
+    TableStore.enforceConstraints(spark, snap, rewriteAdds ++ insertAdds)
     // a SELF-READING source voids the key-span screen (a concurrent
     // add its span refutes can still change what the source computes)
     // — refuse on any concurrent add then, like subquery predicates

@@ -9,8 +9,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, Filter,
-  GreaterThanOrEqual, In, LessThanOrEqual, StringStartsWith}
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sources.StatsSkipping
@@ -364,20 +363,8 @@ object TableStore {
     }
     writer.parquet(dir.toString)
     // first-touch schema anchor: keeps all-empty stores readable
-    // (the [[Partitioned.anchorSchema]] posture). Published by
-    // RENAME so concurrent first-touch writers can't tear it — the
-    // first rename wins, losers drop their (identical-schema) copy
-    val anchor = new Path(s"$root/_schema")
-    val afs = fsOf(spark, anchor)
-    if (!afs.exists(anchor)) {
-      val stagedAnchor = new Path(s"$root/.schema_tmp-$attempt")
-      writeSchemaDir(spark, stagedAnchor, df.schema)
-      if (afs.rename(stagedAnchor, anchor)) {
-        // rename-into-existing-dir nests the source: sweep if we lost
-        val nested = new Path(anchor, stagedAnchor.getName)
-        if (afs.exists(nested)) afs.delete(nested, true)
-      } else afs.delete(stagedAnchor, true)
-    }
+    // (the [[Partitioned.anchorSchema]] posture)
+    if (!hasAnchor(spark, root)) publishAnchor(spark, root, df.schema)
     val fs = fsOf(spark, dir)
     fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -398,6 +385,31 @@ object TableStore {
       .filter(_.rows > 0)
   }
 
+  private def hasAnchor(spark: SparkSession, root: String): Boolean = {
+    val anchor = new Path(s"$root/_schema")
+    fsOf(spark, anchor).exists(anchor)
+  }
+
+  /** Publish `schema` as `root`'s schema anchor by RENAME, so racing
+    * first-touch writers can't tear it: the first rename wins, and a
+    * loser drops its (identical-schema) copy. True when this call's
+    * copy won. */
+  private def publishAnchor(spark: SparkSession, root: String,
+      schema: org.apache.spark.sql.types.StructType): Boolean = {
+    val anchor = new Path(s"$root/_schema")
+    val fs = fsOf(spark, anchor)
+    val staged = new Path(
+      s"$root/.schema_tmp-${java.util.UUID.randomUUID.toString.take(8)}")
+    writeSchemaDir(spark, staged, schema)
+    val won = fs.rename(staged, anchor)
+    if (!won) fs.delete(staged, true)
+    // rename-into-existing-dir nests the source: sweep the nested copy
+    // if a racer's anchor landed between the check and the rename
+    val nested = new Path(anchor, staged.getName)
+    if (won && fs.exists(nested)) fs.delete(nested, true)
+    won
+  }
+
   /** Stage the action rows and RENAME into place — the commit point.
     * `batchId` rides INSIDE the commit (the Delta txn-action move):
     * a streaming batch is recorded exactly when its files are, so a
@@ -409,35 +421,27 @@ object TableStore {
                         marker: Option[String] = None,
                         metaRows: Seq[(String, String, String)] = Nil)
       : Unit = {
-    val none = Map.empty[String, Long]
-    val snone = Map.empty[String, String]
-    val noMeta = None: Option[String]
     // commit-TYPE markers ride as inert rows (the vacuum "txn"
-    // posture — liveAt filters on "add", so they never affect a
-    // snapshot): "layout" = content-identical rewrite (compact/
+    // posture — a live set reads only add and remove rows, so they
+    // never affect a snapshot): "layout" = content-identical rewrite (compact/
     // optimize; an incremental reader skips it), "rewrite" =
     // content-CHANGING non-append (delete/restore; an incremental
     // reader must resync, loudly). metaRows carry table METADATA
     // as (name, action, payload) — constraints today — versioned
     // exactly like data actions.
     val rows =
-      adds.map(e => LogRow(n, e.path, "add", e.rows, batchId,
-          e.mins, e.maxs, e.smins, e.smaxs, noMeta, e.bytes)) ++
-        removes.map(p => LogRow(n, p, "remove", 0L, batchId, none,
-          none, snone, snone, noMeta, 0L)) ++
-        marker.map(m => LogRow(n, "", m, 0L, None, none, none,
-          snone, snone, noMeta, 0L)) ++
+      adds.map(LogRow.add(n, _, batchId)) ++
+        removes.map(LogRow.meta(n, _, "remove", batchId)) ++
+        marker.map(LogRow.meta(n, "", _)) ++
         metaRows.map { case (name, action, payload) =>
-          LogRow(n, name, action, 0L, None, none, none,
-            snone, snone, Some(payload), 0L) } ++
+          LogRow.meta(n, name, action, payload = Some(payload)) } ++
         // a batch id normally rides on the add/remove rows; a commit
         // with NEITHER (e.g. an empty-content overwrite from an
         // incremental tick) must still record it — losing the id
         // would replay the batch forever (inert txn row, the vacuum
         // checkpoint posture)
         (if (batchId.nonEmpty && adds.isEmpty && removes.isEmpty)
-           Seq(LogRow(n, "", "txn", 0L, batchId, none, none, snone,
-             snone, noMeta, 0L))
+           Seq(LogRow.meta(n, "", "txn", batchId))
          else Nil)
     // the drop-tombstone fence: a store whose v1 is a `dropped`
     // marker is being recursively deleted — any commit racing past it
@@ -539,38 +543,51 @@ object TableStore {
   private[graft] def commitLayoutRebasing(spark: SparkSession,
                                           root: String, first: Long,
                                           adds: Seq[FileEntry],
-                                          removes: Seq[String]): Long = {
+                                          removes: Seq[String]): Long =
+    commitRetrying(spark, root, first, "layout rewrite", adds, removes,
+        marker = Some("layout")) { (n, now, e) =>
+      def refuse(why: String): Nothing =
+        throw new java.util.ConcurrentModificationException(
+          s"layout rewrite at $root lost the version-$n race and " +
+            s"cannot rebase: $why — re-plan from version ${now.version}", e)
+      val liveP = now.live.map(_.path).toSet
+      val lost = removes.filterNot(liveP.contains)
+      if (lost.nonEmpty)
+        refuse(s"a concurrent writer removed ${lost.size} of its " +
+          s"source files (e.g. ${lost.head})")
+      val removedNames = removes.map(_.split('/').last).toSet
+      if (now.dvs.keys.exists(f => removedNames(f.split('/').last)))
+        refuse("a concurrent merge-on-read delete vector landed on " +
+          "a source file; rewriting its raw content would " +
+          "resurrect the deleted rows")
+    }
+
+  /** Commit `adds`/`removes` at version `first`; on each lost version
+    * race, `rebase` checks the FRESH latest snapshot — the racers'
+    * commits — and refuses by throwing, else the commit retries at the
+    * next version. The attempt cap turns a pathological livelock (a
+    * writer that can never win) into a loud error naming `what`
+    * instead of an infinite loop. Returns the version committed. */
+  private def commitRetrying(spark: SparkSession, root: String, first: Long,
+                             what: String, adds: Seq[FileEntry],
+                             removes: Seq[String],
+                             batchId: Option[Long] = None,
+                             marker: Option[String] = None)(
+      rebase: (Long, Snapshot, CommitConflictException) => Unit): Long = {
     var n = first
     var attempts = 0
     while (attempts < 64) {
-      try {
-        commitLog(spark, root, n, adds, removes,
-          marker = Some("layout"))
-        return n
-      } catch { case e: CommitConflictException =>
+      try { commitLog(spark, root, n, adds, removes, batchId, marker); return n }
+      catch { case e: CommitConflictException =>
         attempts += 1
-        val latest = versions(spark, root).lastOption.getOrElse(0L)
-        val live = liveAt(spark, root, latest)
-        def refuse(why: String): Nothing =
-          throw new java.util.ConcurrentModificationException(
-            s"layout rewrite at $root lost the version-$n race and " +
-              s"cannot rebase: $why — re-plan from version $latest", e)
-        val liveP = live.map(_.path).toSet
-        val lost = removes.filterNot(liveP.contains)
-        if (lost.nonEmpty)
-          refuse(s"a concurrent writer removed ${lost.size} of its " +
-            s"source files (e.g. ${lost.head})")
-        if (dvsAt(spark, root, latest,
-            live.filter(f => removes.contains(f.path))).nonEmpty)
-          refuse("a concurrent merge-on-read delete vector landed on " +
-            "a source file; rewriting its raw content would " +
-            "resurrect the deleted rows")
-        n = math.max(n + 1, latest + 1)
+        val now = resolved(spark, root)
+        rebase(n, now, e)
+        n = math.max(n + 1, now.version + 1)
       }
     }
     throw new java.io.IOException(
-      s"layout rewrite lost the commit race $attempts times at $root " +
-        "— livelocked against a faster writer")
+      s"$what lost the commit race $attempts times at $root — " +
+        "livelocked against a faster writer")
   }
 
   /** Commit for CONTENT-CHANGING row-level rewrites (DELETE / UPDATE /
@@ -607,72 +624,59 @@ object TableStore {
       screenFilters: Seq[org.apache.spark.sql.sources.Filter],
       marker: Option[String] = Some("rewrite")): Long = {
     val base = first - 1
-    var n = first
-    var attempts = 0
-    while (attempts < 64) {
-      try {
-        commitLog(spark, root, n, adds, removes, marker = marker)
-        return n
-      } catch { case e: CommitConflictException =>
-        attempts += 1
-        val latest = versions(spark, root).lastOption.getOrElse(0L)
-        def refuse(why: String): Nothing =
-          throw new java.util.ConcurrentModificationException(
-            s"row-level rewrite at $root lost the version-$n race " +
-              s"and cannot rebase: $why — re-read version $latest " +
-              "and re-run the operation", e)
-        val live = liveAt(spark, root, latest)
-        val liveP = live.map(_.path).toSet
-        val lost = removes.filterNot(liveP.contains)
-        if (lost.nonEmpty)
-          refuse(s"a concurrent writer removed ${lost.size} of its " +
-            s"touched files (e.g. ${lost.head})")
-        // any dv/constraint action in (base, latest] — metadata-sized
-        val windowMeta = readLogTo(spark, root, latest)
-          .find(r => r.v > base &&
-            Set("dv", "constraint", "constraint_drop")(r.action))
-        windowMeta.foreach(m =>
-          refuse(s"a concurrent ${m.action} " +
-            "action landed in the race window; this rewrite's scans " +
-            "and validation predate it"))
-        // serializability screen: every file the racers ADDED must be
-        // REFUTED by the predicate's necessary conditions
-        val baseP =
-          if (versions(spark, root).contains(base))
-            liveAt(spark, root, base).map(_.path).toSet
-          else Set.empty[String]
-        val newAdds = live.filterNot(f => baseP.contains(f.path))
-        val unrefuted =
-          graft.sources.StatsSkipping.prune(newAdds, screenFilters)
-        if (unrefuted.nonEmpty)
-          refuse(s"${unrefuted.size} concurrently added file(s) " +
-            s"(e.g. ${unrefuted.head.path}) might hold rows the " +
-            "predicate matches — serial execution could differ")
-        // the empty-filter contract ("refuse on ANY live-set change")
-        // must cover REMOVES too: a racer can commit removes with zero
-        // adds (a COW DELETE whose matched files rewrite to zero rows
-        // drops the empty parts), and for a subquery predicate or a
-        // self-reading MERGE source the match set depends on rows in
-        // files this op never touched — removing them changes the
-        // subquery/source result, so serial execution could differ.
-        // With non-empty filters removes stay irrelevant: the
-        // predicate is per-row and a vanished row this op didn't
-        // touch can't change which of ITS rows match.
-        if (screenFilters.isEmpty) {
-          val goneElsewhere = baseP -- liveP -- removes
-          if (goneElsewhere.nonEmpty)
-            refuse(s"${goneElsewhere.size} file(s) beyond this op's " +
-              s"touched set (e.g. ${goneElsewhere.head}) were " +
-              "concurrently removed — a subquery/self-reading/" +
-              "unconditional operation's match set could depend on " +
-              "their rows, so serial execution could differ")
-        }
-        n = math.max(n + 1, latest + 1)
+    commitRetrying(spark, root, first, "row-level rewrite", adds, removes,
+        marker = marker) { (n, now, e) =>
+      def refuse(why: String): Nothing =
+        throw new java.util.ConcurrentModificationException(
+          s"row-level rewrite at $root lost the version-$n race " +
+            s"and cannot rebase: $why — re-read version ${now.version} " +
+            "and re-run the operation", e)
+      val live = now.live
+      val liveP = live.map(_.path).toSet
+      val lost = removes.filterNot(liveP.contains)
+      if (lost.nonEmpty)
+        refuse(s"a concurrent writer removed ${lost.size} of its " +
+          s"touched files (e.g. ${lost.head})")
+      // any dv/constraint action in (base, latest] — metadata-sized
+      val windowMeta = now.log
+        .find(r => r.v > base &&
+          Set("dv", "constraint", "constraint_drop")(r.action))
+      windowMeta.foreach(m =>
+        refuse(s"a concurrent ${m.action} " +
+          "action landed in the race window; this rewrite's scans " +
+          "and validation predate it"))
+      // serializability screen: every file the racers ADDED must be
+      // REFUTED by the predicate's necessary conditions
+      val baseP =
+        if (now.versions.contains(base)) now.at(base).live.map(_.path).toSet
+        else Set.empty[String]
+      val newAdds = live.filterNot(f => baseP.contains(f.path))
+      val unrefuted =
+        graft.sources.StatsSkipping.prune(newAdds, screenFilters)
+      if (unrefuted.nonEmpty)
+        refuse(s"${unrefuted.size} concurrently added file(s) " +
+          s"(e.g. ${unrefuted.head.path}) might hold rows the " +
+          "predicate matches — serial execution could differ")
+      // the empty-filter contract ("refuse on ANY live-set change")
+      // must cover REMOVES too: a racer can commit removes with zero
+      // adds (a COW DELETE whose matched files rewrite to zero rows
+      // drops the empty parts), and for a subquery predicate or a
+      // self-reading MERGE source the match set depends on rows in
+      // files this op never touched — removing them changes the
+      // subquery/source result, so serial execution could differ.
+      // With non-empty filters removes stay irrelevant: the
+      // predicate is per-row and a vanished row this op didn't
+      // touch can't change which of ITS rows match.
+      if (screenFilters.isEmpty) {
+        val goneElsewhere = baseP -- liveP -- removes
+        if (goneElsewhere.nonEmpty)
+          refuse(s"${goneElsewhere.size} file(s) beyond this op's " +
+            s"touched set (e.g. ${goneElsewhere.head}) were " +
+            "concurrently removed — a subquery/self-reading/" +
+            "unconditional operation's match set could depend on " +
+            "their rows, so serial execution could differ")
       }
     }
-    throw new java.io.IOException(
-      s"row-level rewrite lost the commit race $attempts times at " +
-        s"$root — livelocked against a faster writer")
   }
 
   // ------------------------------------------------------------------
@@ -680,8 +684,8 @@ object TableStore {
   // CONTRACT — actions, not data — so replaying it through a Spark
   // job paid ~100-300 ms of scheduler+shuffle latency per snapshot
   // resolution for work a driver loop does in microseconds. Every
-  // gate operation used to cost 2-3 such jobs (liveAt window +
-  // dvsAt + declaredSchemaAt) before its first byte of data IO; at
+  // gate operation used to cost 2-3 such jobs (live set, delete
+  // vectors, declared schema) before its first byte of data IO; at
   // cluster scale the same jobs serialize on the driver anyway, so
   // DRIVER-side parsing is strictly better at every scale. Delta
   // reads its log on the driver for the same reason. Files are
@@ -700,6 +704,21 @@ object TableStore {
       meta: Option[String], bytes: Long) {
     def toEntry: FileEntry =
       FileEntry(path, nRows, mins, maxs, smins, smaxs, bytes)
+  }
+
+  private[graft] object LogRow {
+    /** The add action of file `e` at version `v`. */
+    def add(v: Long, e: FileEntry, batchId: Option[Long] = None): LogRow =
+      LogRow(v, e.path, "add", e.rows, batchId, e.mins, e.maxs, e.smins,
+        e.smaxs, None, e.bytes)
+
+    /** A stat-less action row: a remove, a commit marker, or table
+      * metadata carrying `payload`. */
+    def meta(v: Long, path: String, action: String,
+             batchId: Option[Long] = None,
+             payload: Option[String] = None): LogRow =
+      LogRow(v, path, action, 0L, batchId, Map.empty, Map.empty,
+        Map.empty, Map.empty, payload, 0L)
   }
 
   private def groupStr(g: org.apache.parquet.example.data.Group,
@@ -794,18 +813,11 @@ object TableStore {
 
   /** The full log replay, driver-side: every action row of every
     * committed version (ascending), after [[versions]]' crash
-    * recovery. Bounded by the planning budget (actions ∝ files
-    * touched per commit × retention window, never data rows). */
-  private[graft] def readLog(spark: SparkSession, root: String)
-      : Seq[LogRow] =
-    versions(spark, root).flatMap(v => readLogDir(spark, root, v))
-
-  /** Log replay capped at `asOf` — the common snapshot-resolution
-    * read; versions above the cap are never opened. */
-  private[graft] def readLogTo(spark: SparkSession, root: String,
-                               asOf: Long): Seq[LogRow] =
-    versions(spark, root).filter(_ <= asOf)
-      .flatMap(v => readLogDir(spark, root, v))
+    * recovery — the latest [[Snapshot]]'s log, empty with no commits.
+    * Bounded by the planning budget (actions ∝ files touched per
+    * commit × retention window, never data rows). */
+  private def readLog(spark: SparkSession, root: String): Seq[LogRow] =
+    snapshotOf(spark, root).fold(Seq.empty[LogRow])(_.log)
 
   /** The parquet schema of a log file, structurally identical to what
     * Spark wrote for the same rows (map fields in Spark's 3-level
@@ -872,23 +884,33 @@ object TableStore {
     * the `spark_schema` footer stamp, so `spark.read.parquet(anchor)`
     * resolves the identical StructType. */
   private[graft] def writeSchemaDir(spark: SparkSession, dir: Path,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    parquetFileIn(spark, dir, Bridge.parquetMessageType(schema),
+      schema.json).close() // zero rows: the schema is the payload
+
+  /** A writer of ONE new parquet file inside `dir` (created here),
+    * driver-side, named by the Spark-write part-file convention and
+    * stamped with Spark's row-metadata schema `sparkSchemaJson`, so
+    * `spark.read.parquet` resolves the same StructType Spark wrote. */
+  private def parquetFileIn(spark: SparkSession, dir: Path,
+      messageType: org.apache.parquet.schema.MessageType,
+      sparkSchemaJson: String)
+      : org.apache.parquet.hadoop.ParquetWriter[
+        org.apache.parquet.example.data.Group] = {
     val conf = spark.sparkContext.hadoopConfiguration
     fsOf(spark, dir).mkdirs(dir)
     val name = s"part-00000-${java.util.UUID.randomUUID}-c000" +
       ".snappy.parquet"
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+    org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
         .fromPath(new Path(dir, name), conf))
-      .withType(org.apache.spark.sql.graftbridge.Bridge
-        .parquetMessageType(schema))
+      .withType(messageType)
       .withConf(conf)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .withExtraMetaData(java.util.Collections.singletonMap(
-        "org.apache.spark.sql.parquet.row.metadata", schema.json))
+        "org.apache.spark.sql.parquet.row.metadata", sparkSchemaJson))
       .build()
-    writer.close() // zero rows: the schema is the payload
   }
 
   /** Write `rows` as ONE parquet file inside `dir` (created here),
@@ -899,21 +921,7 @@ object TableStore {
     * downstream can tell the difference. */
   private def writeLogFile(spark: SparkSession, dir: Path,
                            rows: Seq[LogRow]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(dir)
-    val name = s"part-00000-${java.util.UUID.randomUUID}-c000" +
-      ".snappy.parquet"
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new Path(dir, name), conf))
-      .withType(logMessageType)
-      .withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .withExtraMetaData(java.util.Collections.singletonMap(
-        "org.apache.spark.sql.parquet.row.metadata", logRowMetadataJson))
-      .build()
+    val writer = parquetFileIn(spark, dir, logMessageType, logRowMetadataJson)
     try rows.foreach { r =>
       val g = new org.apache.parquet.example.data.simple.SimpleGroup(
         logMessageType)
@@ -943,99 +951,139 @@ object TableStore {
     } finally writer.close()
   }
 
-  /** Live [[FileEntry]]s at `asOf`: per path, the latest action at a
-    * version <= asOf must be an add. Metadata-sized. */
-  private[graft] def liveAt(spark: SparkSession, root: String,
-                     asOf: Long): Seq[FileEntry] =
-    liveIn(logAt(spark, root, versions(spark, root), asOf))
+  /** The store at `version`: the committed `versions` from ONE `_log`
+    * listing, and the log up to `version` from at most ONE replay, run
+    * on first use. Every op takes its live files, delete vectors,
+    * declared schema and metadata rows from here, and an earlier
+    * version by projection ([[at]]), with no further IO. Commit-time
+    * conflict checks never reuse an op's snapshot: they resolve anew. */
+  private[graft] final class Snapshot(val root: String,
+                                      val versions: Seq[Long],
+                                      val version: Long,
+                                      replay: => Seq[LogRow]) {
 
-  /** The log replay up to `asOf`, which must be one of the committed
-    * versions `vs` — one listing serves the check and the replay. */
-  private def logAt(spark: SparkSession, root: String, vs: Seq[Long],
-                    asOf: Long): Seq[LogRow] = {
-    require(vs.contains(asOf),
-      s"version $asOf not committed at $root (have ${vs.mkString(",")})" +
+    /** Every action row of the committed versions up to [[version]]. */
+    lazy val log: Seq[LogRow] = replay
+
+    /** Per path, the newest row among the two `actions` (one per
+      * path and version by construction), kept when it is the first
+      * of them — the replay rule shared by files and constraints. */
+    private def newest(actions: (String, String)): Seq[LogRow] =
+      log.filter(r => r.action == actions._1 || r.action == actions._2)
+        .groupBy(_.path).values.map(_.maxBy(_.v))
+        .filter(_.action == actions._1).toSeq.sortBy(_.path)
+
+    /** Live files: per path, the latest DATA action must be an add.
+      * Metadata rows (dv vectors, constraints) share the path column,
+      * and letting them into the pick would shadow a file's add. */
+    lazy val live: Seq[FileEntry] = newest(("add", "remove")).map(_.toEntry)
+
+    /** Merge-on-read delete vectors on live files: data-file name →
+      * the dv parquet dirs holding its deleted row indexes. File NAMES
+      * key the vectors (parquet part names embed the write job's UUID
+      * — unique within a store), so applying them is one equi
+      * anti-join, no path arithmetic. */
+    lazy val dvs: Map[String, Seq[String]] = {
+      val liveNames = live.map(e => e.path.split('/').last).toSet
+      log
+        .filter(_.action == "dv")
+        .map(r => (r.path, r.meta.getOrElse("")))
+        .filter { case (f, _) => liveNames.contains(f.split('/').last) }
+        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
+    }
+
+    private lazy val vectoredNames = dvs.keySet.map(_.split('/').last)
+
+    /** Does a delete vector apply to live file `e`? */
+    def vectored(e: FileEntry): Boolean =
+      vectoredNames.contains(e.path.split('/').last)
+
+    /** The DECLARED schema: the payload of the newest `schema` action,
+      * written by [[alterSchema]] (SQL `ALTER TABLE`). None for
+      * never-ALTERed stores, whose reads infer from data files. */
+    lazy val declared: Option[org.apache.spark.sql.types.StructType] =
+      meta("schema").map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+    /** Latest metadata payload committed for `action`, or None. */
+    def meta(action: String): Option[String] =
+      log.filter(_.action == action).maxByOption(_.v).flatMap(_.meta)
+
+    /** CHECK constraints: (name, boolean SQL expr) pairs, latest
+      * declaration per name wins, drops remove — versioned exactly
+      * like data, so time travel knows when enforcement started. */
+    def constraints: Seq[(String, String)] =
+      newest(("constraint", "constraint_drop"))
+        .map(r => (r.path, r.meta.getOrElse("")))
+
+    /** The snapshot at committed version `v` <= [[version]]. */
+    def at(v: Long): Snapshot = {
+      requireCommitted(root, versions.filter(_ <= version), v)
+      new Snapshot(root, versions, v, log.filter(_.v <= v))
+    }
+
+    /** Loud contract for operations that plan at FILE granularity:
+      * merge-on-read delete vectors make a file's logical content a
+      * (file, dv) pair, so stats pruning, file-diff feeds, clones and
+      * rewrites that read files raw would silently resurrect deleted
+      * rows. They refuse instead, naming the remedy. Returns this. */
+    def requireNoDvs(op: String): Snapshot = {
+      require(dvs.isEmpty,
+        s"$op plans at file granularity, but merge-on-read delete " +
+          s"vectors are present at $root — run purgeDeletes first")
+      this
+    }
+  }
+
+  private def requireCommitted(root: String, vs: Seq[Long], v: Long): Unit =
+    require(vs.contains(v),
+      s"version $v not committed at $root (have ${vs.mkString(",")})" +
         " — vacuumed past the horizon or never written")
-    vs.filter(_ <= asOf).flatMap(v => readLogDir(spark, root, v))
-  }
 
-  /** The live files of a log replay. */
-  private def liveIn(log: Seq[LogRow]): Seq[FileEntry] =
-    // DATA actions only: metadata rows (dv vectors, constraints) share
-    // the path column, and letting them into the latest-action pick
-    // would shadow a file's add (the dv row would "win" and silently
-    // drop the file from every snapshot). Driver replay — bounded by
-    // file count, the planning budget; per-file schema variance
-    // (pre-upgrade logs lacking the string-stat maps) resolves to
-    // empty inside the reader.
-    log
-      .filter(r => r.action == "add" || r.action == "remove")
-      .groupBy(_.path)
-      .flatMap { case (_, rs) =>
-        // one data action per (path, version) by construction, so the
-        // max-version row IS the latest action
-        val last = rs.maxBy(_.v)
-        if (last.action == "add") Some(last.toEntry) else None
-      }
-      .toSeq.sortBy(_.path)
-
-  /** Merge-on-read delete vectors active at `asOf`, restricted to
-    * `live` files: data-file name → the dv parquet dirs holding its
-    * deleted row indexes. File NAMES key the vectors (parquet part
-    * names embed the write job's UUID — unique within a store), so
-    * applying them is one equi anti-join, no path arithmetic. */
-  private[graft] def dvsAt(spark: SparkSession, root: String, asOf: Long,
-                    live: Seq[FileEntry]): Map[String, Seq[String]] =
-    dvsIn(readLogTo(spark, root, asOf), live) // bounded: dv'd files, not rows
-
-  private def dvsIn(log: Seq[LogRow],
-                    live: Seq[FileEntry]): Map[String, Seq[String]] = {
-    val liveNames = live.map(e => e.path.split('/').last).toSet
-    log
-      .filter(_.action == "dv")
-      .map(r => (r.path, r.meta.getOrElse("")))
-      .filter { case (f, _) => liveNames.contains(f.split('/').last) }
-      .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
-  }
-
-  /** Loud contract for operations that plan at FILE granularity:
-    * merge-on-read delete vectors make a file's logical content a
-    * (file, dv) pair, so stats pruning, file-diff feeds, clones and
-    * rewrites that read files raw would silently resurrect deleted
-    * rows. They refuse instead, naming the remedy. */
-  private[graft] def requireNoDvs(spark: SparkSession, root: String,
-                           asOf: Long, live: Seq[FileEntry],
-                           op: String): Unit =
-    requireNoDvsIn(readLogTo(spark, root, asOf), root, live, op)
-
-  private def requireNoDvsIn(log: Seq[LogRow], root: String,
-                             live: Seq[FileEntry], op: String): Unit =
-    require(dvsIn(log, live).isEmpty,
-      s"$op plans at file granularity, but merge-on-read delete " +
-        s"vectors are present at $root — run purgeDeletes first")
-
-  /** A snapshot resolved for a file-granular operation `op`: ONE
-    * versions listing and ONE log replay give its version (default:
-    * the latest), live files and declared schema, and refuse under
-    * delete vectors ([[requireNoDvs]]). */
-  private def fileSnapshot(spark: SparkSession, root: String,
-                           version: Option[Long], op: String)
-      : (Long, Seq[FileEntry],
-         Option[org.apache.spark.sql.types.StructType]) = {
+  /** The snapshot at `version` (default: the latest), or None on a
+    * store with no commits — the one resolver. A version pinned on a
+    * store with no commits, or one outside the retention window, is
+    * loud. */
+  private[graft] def snapshotOf(spark: SparkSession, root: String,
+                                version: Option[Long] = None)
+      : Option[Snapshot] = {
     val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val v = version.getOrElse(vs.max)
-    val log = logAt(spark, root, vs, v)
-    val live = liveIn(log)
-    requireNoDvsIn(log, root, live, op)
-    (v, live, schemaIn(log))
+    if (vs.isEmpty) {
+      require(version.isEmpty, s"no committed versions at $root")
+      None
+    } else {
+      val v = version.getOrElse(vs.last)
+      requireCommitted(root, vs, v)
+      Some(new Snapshot(root, vs, v,
+        vs.filter(_ <= v).flatMap(readLogDir(spark, root, _))))
+    }
   }
 
-  /** Scan a subset of LIVE data files under the snapshot's EFFECTIVE
-    * schema: the declared (ALTER-evolved) schema when one is in force
-    * at `asOf` — files predating an added column null-fill it inside
-    * the reader, and a REWRITE of this frame CARRIES the column —
-    * else the schema Spark would infer, resolved on the driver from
+  /** [[snapshotOf]] a store that must have commits. */
+  private def resolved(spark: SparkSession, root: String,
+                       version: Option[Long] = None): Snapshot = {
+    val s = snapshotOf(spark, root, version)
+    require(s.nonEmpty, s"no committed versions at $root")
+    s.get
+  }
+
+  /** [[resolved]] for a file-granular operation `op`: refused under
+    * delete vectors ([[Snapshot.requireNoDvs]]). */
+  private def fileSnapshot(spark: SparkSession, root: String,
+                           version: Option[Long], op: String): Snapshot =
+    resolved(spark, root, version).requireNoDvs(op)
+
+  /** Live [[FileEntry]]s at committed version `asOf`. */
+  private[graft] def liveAt(spark: SparkSession, root: String,
+                            asOf: Long): Seq[FileEntry] =
+    resolved(spark, root, Some(asOf)).live
+
+  /** Scan a subset of LIVE data files of snapshot `s` under its
+    * EFFECTIVE schema: the declared (ALTER-evolved) schema when one is
+    * in force — files predating an added column null-fill it inside
+    * the reader, and a REWRITE of this frame CARRIES the column — else
+    * the schema Spark would infer, resolved on the driver from
     * memoized footers ([[scanSchema]]; uniform live sets by
     * construction).
     * Every content-rewrite path (compaction, layout, DML,
@@ -1043,10 +1091,9 @@ object TableStore {
     * a raw read of a mixed-schema live set infers ONE file's shape,
     * and a rewrite of that frame would silently drop the ALTERed
     * column's values from every rewritten file. */
-  private[graft] def readLiveFiles(spark: SparkSession, root: String,
-                                   asOf: Long,
-                                   entries: Seq[FileEntry]): DataFrame =
-    scanFiles(spark, root, declaredSchemaAt(spark, root, asOf), entries)
+  private def readLiveFiles(spark: SparkSession, s: Snapshot,
+                            entries: Seq[FileEntry]): DataFrame =
+    scanFiles(spark, s.root, s.declared, entries)
 
   /** [[readLiveFiles]] with the declared schema already resolved: the
     * one scan of store data files, typed, SQL, DML or change feed — a
@@ -1092,16 +1139,16 @@ object TableStore {
         })
     }
 
-  /** Apply `dvs` to a scan of `dirty` files: anti-join on
-    * (file name, row index) removes exactly the vectored rows. */
-  private def applyDvs(spark: SparkSession, root: String,
-                       dirty: Seq[FileEntry],
-                       dvs: Map[String, Seq[String]], asOf: Long): DataFrame = {
+  /** Apply snapshot `s`'s delete vectors to a scan of its `dirty`
+    * files: anti-join on (file name, row index) removes exactly the
+    * vectored rows. */
+  private def applyDvs(spark: SparkSession, s: Snapshot,
+                       dirty: Seq[FileEntry]): DataFrame = {
     val dvRows = spark.read.option("ignoreMissingFiles", "false")
-      .parquet(dvs.values.flatten.toSeq.distinct
-        .map(p => resolve(root, p)): _*)
+      .parquet(s.dvs.values.flatten.toSeq.distinct
+        .map(p => resolve(s.root, p)): _*)
       .select(col("fname").as("__dv_fname"), col("idx").as("__dv_idx"))
-    val scan = readLiveFiles(spark, root, asOf, dirty)
+    val scan = readLiveFiles(spark, s, dirty)
     val cols = scan.columns
     scan
       .withColumn("__dv_fname",
@@ -1122,10 +1169,10 @@ object TableStore {
     * semantics, the deleteWhere contract).
     *
     * Contract: vectors are a TRANSIENT state. Snapshot reads
-    * (read/readAt, any version) are vector-aware; every operation
-    * that plans at file granularity (compaction, OPTIMIZE, merge,
-    * range/point/prefix reads, clones, feeds, restore, vacuum)
-    * refuses loudly until [[purgeDeletes]] folds the vectors back
+    * ([[read]], any version) are vector-aware; every operation that
+    * plans at file granularity (compaction, OPTIMIZE, merge,
+    * [[readWhere]] and its aliases, clones, feeds, restore) refuses
+    * loudly until [[purgeDeletes]] folds the vectors back
     * into clean files. Returns the committed version, or the current
     * one when nothing matched (no-op, no commit). */
   def deleteWhereMoR(spark: SparkSession, root: String,
@@ -1133,29 +1180,25 @@ object TableStore {
                      pruneBy: (String, Long, Long)): Long = {
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    val touched = prunedFiles(spark, root, live,
-      declaredSchemaAt(spark, root, prev), within(pcol, lo, hi))
-    deleteMoRTouched(spark, root, pred, prev, touched)
+    val s = resolved(spark, root)
+    deleteMoRTouched(spark, s, pred,
+      prunedFiles(spark, root, s.live, s.declared, within(pcol, lo, hi)))
   }
 
   /** The merge-on-read delete core over an explicit candidate set —
     * shared by [[deleteWhereMoR]] (interval-hint pruning) and the SQL
     * DML path ([[Dml]] — predicate-derived pruning). Commits a delete
-    * VECTOR for the definitely-matching rows of `touched`; data files
-    * stay byte-identical. */
-  private[graft] def deleteMoRTouched(spark: SparkSession, root: String,
+    * VECTOR for the definitely-matching rows of snapshot `s`'s
+    * `touched` files; data files stay byte-identical. */
+  private[graft] def deleteMoRTouched(spark: SparkSession, s: Snapshot,
                                       pred: org.apache.spark.sql.Column,
-                                      prev: Long,
                                       touched: Seq[FileEntry]): Long = {
+    val (root, prev) = (s.root, s.version)
     if (touched.isEmpty) return prev
     val n = prev + 1
     val attempt = java.util.UUID.randomUUID.toString.take(8)
     val dvRel = s"dv/v$n-$attempt"
-    val raw = readLiveFiles(spark, root, prev, touched)
+    val raw = readLiveFiles(spark, s, touched)
       // aliased for correlated-subquery predicates from the SQL DML
       // path (their rebound outer refs are Dml.TargetAlias-qualified);
       // transparent to plain predicates
@@ -1168,7 +1211,9 @@ object TableStore {
     // rows already vectored away are not re-deleted: the new vector
     // covers only rows live in the MoR view, so a delete that matches
     // nothing VISIBLE stays a no-op even over dirty files
-    val existing = dvsAt(spark, root, prev, touched)
+    val touchedNames = touched.map(_.path.split('/').last).toSet
+    val existing =
+      s.dvs.filter { case (f, _) => touchedNames(f.split('/').last) }
     val fresh =
       if (existing.isEmpty) raw
       else raw.join(
@@ -1200,15 +1245,11 @@ object TableStore {
   def purgeDeletes(spark: SparkSession, root: String,
                    statsCols: Seq[String] = Nil,
                    bloomCols: Seq[String] = Nil): Long = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val live = liveAt(spark, root, prev)
-    val dvs = dvsAt(spark, root, prev, live)
-    if (dvs.isEmpty) return prev
-    val dirtyNames = dvs.keySet.map(_.split('/').last)
-    val dirty = live.filter(e => dirtyNames.contains(e.path.split('/').last))
-    val cleaned = applyDvs(spark, root, dirty, dvs, prev)
+    val s = resolved(spark, root)
+    val prev = s.version
+    if (s.dvs.isEmpty) return prev
+    val dirty = s.live.filter(s.vectored)
+    val cleaned = applyDvs(spark, s, dirty)
     val n = prev + 1
     commitExclusive(spark, root, n,
       writeData(cleaned, root, n, statsCols, bloomCols),
@@ -1282,19 +1323,10 @@ object TableStore {
     }
     require(!fs.exists(anchor) && !fs.exists(logDir),
       s"$root is already a store — CREATE refuses to clobber it")
-    val attempt = java.util.UUID.randomUUID.toString.take(8)
-    val staged = new Path(s"$root/.schema_tmp-$attempt")
-    writeSchemaDir(spark, staged, schema)
-    if (!fs.rename(staged, anchor)) {
-      fs.delete(staged, true)
+    if (!publishAnchor(spark, root, schema))
       throw new IllegalStateException(
         s"concurrent CREATE published an anchor at $root first — " +
           "re-read the table instead of re-creating it")
-    }
-    // rename-into-existing-dir nests the source (writeData's lesson):
-    // sweep the nested copy if a racer's anchor landed between checks
-    val nested = new Path(anchor, staged.getName)
-    if (fs.exists(nested)) fs.delete(nested, true)
     // the layout declaration lands AFTER the anchor wins its race (a
     // loser must not pollute the winner's store). A crash in between
     // leaves an anchored unpartitioned store with zero commits — the
@@ -1327,16 +1359,16 @@ object TableStore {
     if (!fs.exists(anchor) && !fs.exists(logDir))
       throw new IllegalStateException(
         s"no store at $root — nothing to drop")
-    val vs = versions(spark, root)
+    val snap = snapshotOf(spark, root)
     // crash recovery: a previous DROP that died between the v1
     // tombstone commit and the recursive delete leaves versions=[1]
     // with the `dropped` marker — the root is fenced (every writer's
     // v1→v2 step refuses) but still on disk. Re-running DROP must
     // RESUME the delete (idempotent drop), not refuse with the
     // misleading committed-history error that would brick the path.
-    val resumingDrop = vs == Seq(1L) &&
-      readLogDir(spark, root, 1L).exists(_.action == "dropped")
-    require(resumingDrop || vs.isEmpty,
+    val resumingDrop = snap.exists(s => s.versions == Seq(1L) &&
+      s.log.exists(_.action == "dropped"))
+    require(resumingDrop || snap.isEmpty,
       s"$root has committed versions — history retires through " +
         "vacuum retention, not DROP")
     // TOMBSTONE fence: claim version 1 with a `dropped` marker — the
@@ -1372,46 +1404,36 @@ object TableStore {
     * `ignoreMissingFiles=false` so a permissive session config can
     * never turn retired history into silent partial rows. */
   def read(spark: SparkSession, root: String,
-           version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty && version.isEmpty) {
-      // a store that has seen data shapes (anchor written) but never
-      // committed — e.g. an all-empty stream — reads as typed empty;
-      // an untouched path is still a loud error
-      val anchor = new Path(s"$root/_schema")
-      require(fsOf(spark, anchor).exists(anchor),
-        s"no committed versions at $root")
-      return spark.read.parquet(anchor.toString).limit(0)
-    }
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val v = version.getOrElse(vs.max)
-    val entries = liveAt(spark, root, v)
-    val dvs = dvsAt(spark, root, v, entries)
-    // an ALTER-evolved snapshot reads under its DECLARED schema:
-    // by-name parquet resolution fills pre-ALTER files' missing
-    // columns with null inside the reader (the readAs posture,
-    // versioned). Never-ALTERed stores skip this entirely.
-    val declared = declaredSchemaAt(spark, root, v)
-    if (entries.isEmpty && declared.isEmpty)
+           version: Option[Long] = None): DataFrame =
+    readSnapshot(spark, root, snapshotOf(spark, root, version))
+
+  /** [[read]] of an already-resolved snapshot — None for a store with
+    * no commits, which reads as typed empty when something anchored
+    * its schema (e.g. an all-empty stream); an untouched path is
+    * still a loud error. */
+  private[graft] def readSnapshot(spark: SparkSession, root: String,
+                                  snap: Option[Snapshot]): DataFrame =
+    snap match {
+      case None =>
+        require(hasAnchor(spark, root), s"no committed versions at $root")
+        spark.read.parquet(s"$root/_schema").limit(0)
       // empty never-ALTERed snapshot (all-empty commits, overwrite-
       // with-empty): the first-touch anchor's schema
-      spark.read.parquet(s"$root/_schema").limit(0)
-    else if (dvs.isEmpty) scanFiles(spark, root, declared, entries)
-    else {
-      // declared schema + outstanding vectors composes: both the
-      // dirty scan (applyDvs) and the clean scan below read through
-      // readLiveFiles, which applies the declared schema — an ALTER
-      // landing between a MoR delete and its purge cannot brick reads
-      // merge-on-read: vectored files anti-join their delete vectors;
-      // clean files keep the plain columnar scan
-      val dirtyNames = dvs.keySet.map(_.split('/').last)
-      val (dirty, clean) = entries.partition(e =>
-        dirtyNames.contains(e.path.split('/').last))
-      val mor = applyDvs(spark, root, dirty, dvs, v)
-      if (clean.isEmpty) mor
-      else mor.unionByName(readLiveFiles(spark, root, v, clean))
+      case Some(s) if s.live.isEmpty && s.declared.isEmpty =>
+        spark.read.parquet(s"$root/_schema").limit(0)
+      // every scan reads under the snapshot's DECLARED schema when an
+      // ALTER set one (readLiveFiles): pre-ALTER files null-fill its
+      // columns inside the reader, also when an ALTER lands between a
+      // MoR delete and its purge
+      case Some(s) if s.dvs.isEmpty => readLiveFiles(spark, s, s.live)
+      case Some(s) =>
+        // merge-on-read: vectored files anti-join their delete
+        // vectors; clean files keep the plain columnar scan
+        val (dirty, clean) = s.live.partition(s.vectored)
+        val mor = applyDvs(spark, s, dirty)
+        if (clean.isEmpty) mor
+        else mor.unionByName(readLiveFiles(spark, s, clean))
     }
-  }
 
   /** Snapshot read under an explicit TARGET schema — the
     * [[SchemaEvolution]] posture joined to versioning: files
@@ -1423,8 +1445,8 @@ object TableStore {
   def readAs(spark: SparkSession, root: String,
              target: org.apache.spark.sql.types.StructType,
              version: Option[Long] = None): DataFrame = {
-    val (_, entries, _) = fileSnapshot(spark, root, version, "readAs")
-    scanFiles(spark, root, Some(target), entries)
+    scanFiles(spark, root, Some(target),
+      fileSnapshot(spark, root, version, "readAs").live)
   }
 
   /** Metadata-only table digest at `version` (default: latest): file
@@ -1445,10 +1467,11 @@ object TableStore {
   def metaStats(spark: SparkSession, root: String,
                 version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val (v, live, _) = fileSnapshot(spark, root, version, "metaStats")
+    val s = fileSnapshot(spark, root, version, "metaStats")
+    val live = s.live
     val bytes: Option[Long] =
       if (live.forall(_.bytes > 0)) Some(live.map(_.bytes).sum) else None
-    Seq((v, live.size.toLong, live.map(_.rows).sum, bytes))
+    Seq((s.version, live.size.toLong, live.map(_.rows).sum, bytes))
       .toDF("version", "n_files", "n_rows", "n_bytes")
   }
 
@@ -1468,7 +1491,7 @@ object TableStore {
                  version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     require(cols.nonEmpty, "metaBounds needs at least one column")
-    val (v, live, _) = fileSnapshot(spark, root, version, "metaBounds")
+    val live = fileSnapshot(spark, root, version, "metaBounds").live
     cols.map { c =>
       val missing = live.filter(e =>
         !e.mins.contains(c) || !e.maxs.contains(c))
@@ -1479,31 +1502,6 @@ object TableStore {
       if (live.isEmpty) (c, None: Option[Long], None: Option[Long])
       else (c, Some(live.map(_.mins(c)).min), Some(live.map(_.maxs(c)).max))
     }.toDF("column", "min_val", "max_val")
-  }
-
-  /** Optimistic append commit: on a lost version race, re-read the
-    * log and retry at the next version. Append file sets are disjoint
-    * by construction (attempt-unique data dirs), so only the
-    * metadata-sized log commit re-runs — the data files are already
-    * final. The attempt cap turns a pathological livelock (a writer
-    * that can never win) into a loud error instead of an infinite
-    * loop. */
-  private def appendRetrying(spark: SparkSession, root: String,
-                             first: Long, adds: Seq[FileEntry],
-                             batchId: Option[Long]): Long = {
-    var n = first
-    var attempts = 0
-    while (attempts < 64) {
-      try { commitLog(spark, root, n, adds, Seq.empty, batchId); return n }
-      catch { case _: CommitConflictException =>
-        attempts += 1
-        n = math.max(n + 1,
-          versions(spark, root).lastOption.getOrElse(0L) + 1)
-      }
-    }
-    throw new java.io.IOException(
-      s"append lost the commit race $attempts times at $root — " +
-        "livelocked against a faster writer")
   }
 
   /** Append `df` as a new version; returns the committed version.
@@ -1519,8 +1517,11 @@ object TableStore {
     val hint = versions(spark, root).lastOption.getOrElse(0L) + 1
     val (laid, stats) = withDeclaredLayout(df, root, statsCols)
     val adds = writeData(laid, root, hint, stats, bloomCols)
-    enforceConstraints(spark, root, adds)
-    appendRetrying(spark, root, hint, adds, None)
+    enforceConstraints(spark, snapshotOf(spark, root), adds)
+    // append file sets are disjoint by construction (attempt-unique
+    // data dirs), so a lost race needs no check: only the
+    // metadata-sized log commit re-runs at the next version
+    commitRetrying(spark, root, hint, "append", adds, Nil)((_, _, _) => ())
   }
 
   /** Replace the table's content with `df` as a new version; every
@@ -1533,15 +1534,14 @@ object TableStore {
                 bloomCols: Seq[String] = Nil,
                 batchId: Option[Long] = None): Long = {
     val spark = df.sparkSession
-    val prev = versions(spark, root).lastOption
-    val removes = prev.map(liveAt(spark, root, _).map(_.path))
-      .getOrElse(Seq.empty)
-    val n = prev.getOrElse(0L) + 1
+    val snap = snapshotOf(spark, root)
+    val n = snap.fold(0L)(_.version) + 1
     val (laid, stats) = withDeclaredLayout(df, root, statsCols)
     val adds = writeData(laid, root, n, stats, bloomCols)
-    enforceConstraints(spark, root, adds)
-    commitExclusive(spark, root, n, adds, removes,
-      marker = prev.map(_ => "rewrite"), batchId = batchId)
+    enforceConstraints(spark, snap, adds)
+    commitExclusive(spark, root, n, adds,
+      snap.fold(Seq.empty[String])(_.live.map(_.path)),
+      marker = snap.map(_ => "rewrite"), batchId = batchId)
     n
   }
 
@@ -1558,24 +1558,12 @@ object TableStore {
       metaRows: Seq[(String, String, String)],
       statsCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val n = versions(spark, root).lastOption.getOrElse(0L) + 1
+    val snap = snapshotOf(spark, root)
+    val n = snap.fold(0L)(_.version) + 1
     val adds = writeData(df, root, n, statsCols)
-    enforceConstraints(spark, root, adds)
+    enforceConstraints(spark, snap, adds)
     commitExclusive(spark, root, n, adds, Seq.empty, metaRows = metaRows)
     n
-  }
-
-  /** Latest metadata payload committed for `action` at or below
-    * `asOf`, or None. Bounded: one row back. */
-  private[graft] def latestMeta(spark: SparkSession, root: String,
-                                action: String,
-                                asOf: Long): Option[String] =
-    latestMetaIn(readLogTo(spark, root, asOf), action)
-
-  private def latestMetaIn(log: Seq[LogRow],
-                           action: String): Option[String] = {
-    val hits = log.filter(_.action == action)
-    if (hits.isEmpty) None else hits.maxBy(_.v).meta
   }
 
   /** Rows ADDED per version in `(fromExclusive, toInclusive]` — from
@@ -1587,8 +1575,9 @@ object TableStore {
                                         fromExclusive: Long,
                                         toInclusive: Long)
       : Map[Long, Long] =
-    readLogTo(spark, root, toInclusive)
-      .filter(r => r.v > fromExclusive && r.action == "add")
+    readLog(spark, root)
+      .filter(r => r.v > fromExclusive && r.v <= toInclusive &&
+        r.action == "add")
       .groupBy(_.v).map { case (v, rs) => v -> rs.map(_.nRows).sum }
 
   /** Rows CHANGED per version in `(fromExclusive, toInclusive]` for
@@ -1615,56 +1604,21 @@ object TableStore {
       .map { case (v, rs) => v -> rs.map(_._2).sum }
   }
 
-  /** The DECLARED schema in force at `asOf`: the payload of the
-    * newest `schema` action at v <= asOf — written by [[addColumn]]
-    * (SQL `ALTER TABLE ADD COLUMN`). None for never-ALTERed stores,
-    * whose reads infer from data files (the original contract, zero
-    * cost preserved). */
-  private[graft] def declaredSchemaAt(spark: SparkSession, root: String,
-                                      asOf: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    schemaIn(readLogTo(spark, root, asOf))
-
-  private def schemaIn(log: Seq[LogRow])
-      : Option[org.apache.spark.sql.types.StructType] =
-    latestMetaIn(log, "schema").map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** `ALTER TABLE ADD COLUMN` as a COMMIT — the [[SchemaEvolution]]
-    * readAs posture made first-class on the store itself: at 100 TB
-    * you cannot rewrite history for a column add, so the new column
-    * is one metadata row (the full target schema as JSON) and ZERO
-    * data IO. From the commit on, [[read]] resolves files by NAME
-    * under the declared schema — files predating the column surface
-    * it as null inside the parquet reader (no extra pass, pruning
-    * and pushdown intact). Time travel keeps each version's OWN
-    * contract: a snapshot pinned before the ALTER reads with the
-    * pre-ALTER schema (the Iceberg/Delta posture — history's shape
-    * is part of history). Nullable, defaultless, top-level columns
-    * only: anything else would need a backfill pass, which belongs
-    * to an explicit UPDATE the operator prices, never a hidden one.
-    * Returns the committed version. */
-  def addColumn(spark: SparkSession, root: String, colName: String,
-                dataType: org.apache.spark.sql.types.DataType): Long =
-    addColumns(spark, root, Seq(colName -> dataType))
-
-  /** Multi-column ADD as ONE schema commit — the catalog's
-    * `ALTER TABLE t ADD COLUMNS (a …, b …)` must be atomic (Spark's
-    * alterTable contract is apply-all-or-none): every column is
-    * validated against the current schema AND against its siblings
-    * before the single metadata row lands, so a bad column in the
-    * list leaves the table untouched. */
-  def addColumns(spark: SparkSession, root: String,
-                 cols: Seq[(String, org.apache.spark.sql.types.DataType)])
-      : Long = alterSchema(spark, root, cols, Nil)
-
-  /** Column ADDS and type WIDENINGS as ONE schema commit — the shape
-    * MERGE schema evolution needs (a source can both carry a new
-    * column and widen an existing one; two commits would let a crash
-    * land half the evolution). Every change is validated against the
-    * current schema AND its siblings before the single metadata row
-    * lands. */
+  /** `ALTER TABLE ADD COLUMN` / `ALTER COLUMN TYPE` as ONE COMMIT —
+    * the [[SchemaEvolution]] readAs posture made first-class: at 100 TB
+    * history is never rewritten for a column add or a key that outgrew
+    * INT, so the change is one metadata row (the target schema as
+    * JSON) and ZERO data IO. From the commit on, reads resolve files by
+    * NAME under the declared schema: pre-ALTER files surface an added
+    * column as null and up-cast a widened one in the parquet reader,
+    * pruning and pushdown intact; a snapshot pinned before the ALTER
+    * keeps its own schema. `adds` are nullable, defaultless, top-level
+    * columns (anything else needs a priced UPDATE backfill); `widens`
+    * are value-preserving only ([[isSafeWidening]]) — Long log bounds
+    * compare exactly under the wider type. Both land in one commit, so
+    * MERGE schema evolution and a multi-column ALTER are
+    * all-or-nothing: every change is validated against the current
+    * schema AND its siblings first. Returns the committed version. */
   def alterSchema(spark: SparkSession, root: String,
                   adds: Seq[(String, org.apache.spark.sql.types.DataType)],
                   widens: Seq[(String, org.apache.spark.sql.types.DataType)])
@@ -1680,10 +1634,9 @@ object TableStore {
       .filter(_._2.size > 1)
     require(dupNew.isEmpty,
       s"ALTER lists a column twice: ${dupNew.keys.mkString(",")}")
-    val vs = versions(spark, root)
-    val prev = vs.lastOption.getOrElse(0L)
-    val cur = read(spark, root,
-      if (vs.isEmpty) None else Some(prev)).schema
+    val snap = snapshotOf(spark, root)
+    val prev = snap.fold(0L)(_.version)
+    val cur = readSnapshot(spark, root, snap).schema
     adds.foreach { case (colName, _) =>
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(colName)),
         s"column $colName already exists at $root " +
@@ -1746,26 +1699,6 @@ object TableStore {
     }
   }
 
-  /** `ALTER TABLE … ALTER COLUMN … TYPE` as a COMMIT — the widening
-    * half of schema evolution: at 100 TB you cannot rewrite history
-    * because a key outgrew INT, so the type change is one metadata
-    * row (the full target schema as JSON) and ZERO data IO. From the
-    * commit on, every read path resolves files under the DECLARED
-    * schema and the parquet reader up-casts pre-widen files' values
-    * in place (int32 read as BIGINT — reader-level, pruning and
-    * pushdown intact). Only provably value-preserving widenings are
-    * accepted ([[isSafeWidening]]); narrowing and cross-family casts
-    * refuse loudly toward an explicit UPDATE the operator prices.
-    * Log-stats soundness: numeric bounds are logged as Long, so a
-    * widened integer column's existing [min, max] entries compare
-    * exactly under the new type — no stats rewrite needed. Time
-    * travel keeps each version's own contract (a snapshot pinned
-    * before the widen reads with the narrow schema). Returns the
-    * committed version. */
-  def widenColumns(spark: SparkSession, root: String,
-                   cols: Seq[(String, org.apache.spark.sql.types.DataType)])
-      : Long = alterSchema(spark, root, Nil, cols)
-
   /** The one LAYOUT rewrite behind every maintenance op `op`: `pick`
     * files from the latest (live, declared schema), refused as `op`
     * under delete vectors, fold them into ~`targetBytes` files, rows
@@ -1780,8 +1713,9 @@ object TableStore {
       pick: (Seq[FileEntry], Option[org.apache.spark.sql.types.StructType])
         => Seq[FileEntry]): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val (prev, live, declared) = fileSnapshot(spark, root, None, op)
-    val files = pick(live, declared)
+    val snap = fileSnapshot(spark, root, None, op)
+    val (prev, declared) = (snap.version, snap.declared)
+    val files = pick(snap.live, declared)
     if (files.size < minFiles) return prev
     val n = prev + 1
     val adds = if (files.isEmpty) Seq.empty else {
@@ -1810,7 +1744,7 @@ object TableStore {
     Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
 
   /** The live files that may hold a row satisfying all `filters` —
-    * the ONE file pruner behind every store read: the typed reads and
+    * the ONE file pruner behind every store read: [[readWhere]] and
     * interval-scoped rewrites here, the SQL file index
     * ([[graft.sources.GraftFileIndex]]) and [[Dml]]'s candidates.
     *
@@ -1983,95 +1917,68 @@ object TableStore {
       }
     }
 
-  /** The typed reads' one code path: resolve the snapshot once, keep
-    * what [[prunedFiles]] cannot rule out, and scan it under the
-    * snapshot's schema with `residual` re-applied — the filters only
-    * choose files, the residual keeps the rows exact (and prunes the
-    * scan's index through the same function, so to the same files).
-    * Returns (frame, files touched, files live). */
-  private def prunedRead(spark: SparkSession, root: String,
-                         version: Option[Long], filters: Seq[Filter],
-                         residual: org.apache.spark.sql.Column)
-      : (DataFrame, Int, Int) = {
-    val (v, live, declared) =
-      fileSnapshot(spark, root, version, "stats- and bloom-pruned reads")
+  /** The one filtered read: the rows of the snapshot at `version`
+    * (default: latest) satisfying every one of `filters` — range,
+    * string range, prefix, point and box probes, or any conjunction of
+    * them — scanning only the live files [[prunedFiles]] cannot rule
+    * out, log bounds, footer bounds and blooms (an `EqualTo`/`In` skips
+    * files that provably lack every key, where min/max cannot when
+    * files span the key space; a null key matches nothing). The same
+    * filters, re-applied as a residual, keep the rows exact and prune
+    * the scan's index to the same files.
+    *
+    * Planning runs no Spark job: memoized footers, one 32-byte block
+    * per bloom probe ([[BloomProbe]]), and the schema of what is
+    * scanned (of every live file when all are refuted) resolved on the
+    * driver ([[scanSchema]]). Plans at file granularity, so it refuses
+    * under delete vectors. Returns the frame plus (files touched, files
+    * live) — the skipping economics a layout is judged by. */
+  def readWhere(spark: SparkSession, root: String, filters: Seq[Filter],
+                version: Option[Long] = None): (DataFrame, Int, Int) = {
+    val snap = fileSnapshot(spark, root, version,
+      "stats- and bloom-pruned reads")
+    val (live, declared) = (snap.live, snap.declared)
+    val residual = filters.map(residualOf).reduceOption(_ && _)
+      .getOrElse(lit(true))
     val touched = prunedFiles(spark, root, live, declared, filters)
-    // the schema of what is scanned (a store appended with a wider
-    // frame is not uniform), or with every file refuted, of them all
     val df =
-      if (live.isEmpty) read(spark, root, Some(v)).where(residual).limit(0)
+      if (live.isEmpty) readSnapshot(spark, root, Some(snap)).where(residual)
+        .limit(0)
       else scanFiles(spark, root, Some(scanSchema(spark, root, declared,
         if (touched.isEmpty) live else touched)), touched).where(residual)
     (df, touched.size, live.size)
   }
 
-  /** Manifest-pruned range read: the rows with `pcol` ∈ [lo, hi],
-    * scanning only the live files whose bounds can intersect it.
-    * Returns the frame plus the (files touched, files live) evidence
-    * pair — the skipping economics a layout is judged by. */
+  /** A pruning filter as the row predicate it stands for: the shapes
+    * the log and footer bounds prune on ([[StatsSkipping.mayContain]]). */
+  private def residualOf(f: Filter): org.apache.spark.sql.Column =
+    f match {
+      case And(l, r) => residualOf(l) && residualOf(r)
+      case Or(l, r) => residualOf(l) || residualOf(r)
+      case EqualTo(c, v) => col(c) === lit(v)
+      case EqualNullSafe(c, v) => col(c) <=> lit(v)
+      case In(c, vs) => col(c).isin(vs.toSeq: _*)
+      case GreaterThan(c, v) => col(c) > lit(v)
+      case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
+      case LessThan(c, v) => col(c) < lit(v)
+      case LessThanOrEqual(c, v) => col(c) <= lit(v)
+      case StringStartsWith(c, p) => col(c).startsWith(p)
+      case other => throw new IllegalArgumentException(
+        s"readWhere prunes on no filter of the shape $other")
+    }
+
+  /** [[readWhere]] of `pcol` ∈ [lo, hi]. */
   def readRange(spark: SparkSession, root: String,
                 pcol: String, lo: Long, hi: Long,
                 version: Option[Long] = None): (DataFrame, Int, Int) =
-    prunedRead(spark, root, version, within(pcol, lo, hi),
-      col(pcol) >= lo && col(pcol) <= hi)
+    readWhere(spark, root, within(pcol, lo, hi), version)
 
-  /** [[readRange]] over a STRING key, compared in Spark's string
-    * order — the shape for tables ingested in key order on URLs,
-    * content hashes or date-string keys. Returns the frame plus
-    * (files touched, files live). */
-  def readRangeString(spark: SparkSession, root: String,
-                      pcol: String, lo: String, hi: String,
-                      version: Option[Long] = None)
-      : (DataFrame, Int, Int) =
-    prunedRead(spark, root, version, within(pcol, lo, hi),
-      col(pcol) >= lit(lo) && col(pcol) <= lit(hi))
-
-  /** Manifest-pruned PREFIX scan: the rows whose `pcol` starts with
-    * `prefix`, scanning only the live files whose string bounds can
-    * hold such a key — the domain/path-prefix probe of a URL-keyed
-    * corpus ("all of en.wikipedia.org"). Returns the frame plus
-    * (files touched, files live). */
-  def readPrefix(spark: SparkSession, root: String,
-                 pcol: String, prefix: String,
-                 version: Option[Long] = None): (DataFrame, Int, Int) = {
-    require(prefix.nonEmpty, "readPrefix needs a non-empty prefix")
-    prunedRead(spark, root, version, Seq(StringStartsWith(pcol, prefix)),
-      col(pcol).startsWith(prefix))
-  }
-
-  /** Point lookup with BLOOM skipping: the rows whose `pcol` is one of
-    * `values`. Beyond what ranges prune, a per-file bloom written at
-    * commit time ([[append]]'s `bloomCols`) skips every file that
-    * provably lacks all probed keys — the prune min/max cannot make
-    * when every file spans the key space (hash-distributed ingest).
-    * False positives only ever ADD a file, never lose a row.
-    *
-    * Planning runs no Spark job and reads O(live files) bytes: the
-    * log prunes, memoized footers ([[footerOf]]) give row-group bounds
-    * and bloom offsets, each surviving bloom is probed one 32-byte
-    * block per key ([[BloomProbe]]), and the frame's schema resolves
-    * on the driver ([[scanSchema]]). Collecting the frame is the one
-    * job. Returns the frame plus (files touched, files live). */
-  def pointLookup(spark: SparkSession, root: String,
-                  pcol: String, values: Seq[Long],
-                  version: Option[Long] = None): (DataFrame, Int, Int) = {
-    require(values.nonEmpty, "pointLookup needs at least one value")
-    prunedRead(spark, root, version, Seq(In(pcol, values.toArray[Any])),
-      col(pcol).isin(values: _*))
-  }
-
-  /** [[pointLookup]] for STRING keys — the high-cardinality id shape
-    * of document stores (URLs, content hashes, doc ids). A null value
-    * matches nothing (SQL IN). Returns the frame plus
-    * (files touched, files live). */
+  /** [[readWhere]] of `pcol` IN `values`, for STRING keys. */
   def pointLookupString(spark: SparkSession, root: String,
                         pcol: String, values: Seq[String],
                         version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    require(values.nonEmpty, "pointLookupString needs at least one value")
-    prunedRead(spark, root, version, Seq(In(pcol, values.toArray[Any])),
-      col(pcol).isin(values: _*))
-  }
+      : (DataFrame, Int, Int) =
+    readWhere(spark, root, Seq(In(pcol, values.toArray[Any])), version)
 
   /** Exactly-once streaming append: commit `df` as a new version
     * carrying `batchId` INSIDE the commit, or return None when some
@@ -2084,27 +1991,27 @@ object TableStore {
   def appendBatch(df: DataFrame, root: String, batchId: Long,
                   statsCols: Seq[String] = Nil): Option[Long] = {
     val spark = df.sparkSession
-    def seen = versions(spark, root).nonEmpty &&
-      readLog(spark, root).exists(_.batchId.contains(batchId))
-    if (seen) None // cheap fast path before paying the data write
+    val first = snapshotOf(spark, root)
+    if (carries(first, batchId)) None // cheap fast path before the data write
     else {
-      val hint = versions(spark, root).lastOption.getOrElse(0L) + 1
+      val hint = first.fold(0L)(_.version) + 1
       val (laid, stats) = withDeclaredLayout(df, root, statsCols)
       val adds = writeData(laid, root, hint, stats)
-      enforceConstraints(spark, root, adds)
+      enforceConstraints(spark, snapshotOf(spark, root), adds)
       if (adds.isEmpty) None
       else {
         var attempts = 0
         while (attempts < 64) {
-          val n = versions(spark, root).lastOption.getOrElse(0L) + 1
-          // ORDER MATTERS: the marker check happens AFTER observing
-          // version n-1 committed. A twin writer (restarted stream,
-          // zombie executor) offering the same batch either committed
-          // before that observation — visible here, we stand down —
-          // or commits after it, claiming version n and forcing our
-          // commit into this conflict-and-recheck loop. Either way
-          // the store ingests the batch exactly once.
-          if (seen) return None
+          val snap = snapshotOf(spark, root)
+          val n = snap.fold(0L)(_.version) + 1
+          // ORDER MATTERS: the marker check reads the log of the same
+          // snapshot that observed version n-1 committed. A twin writer
+          // (restarted stream, zombie executor) offering the same batch
+          // either committed before that observation — visible here,
+          // we stand down — or commits after it, claiming version n
+          // and forcing our commit into this conflict-and-recheck
+          // loop. Either way the store ingests the batch exactly once.
+          if (carries(snap, batchId)) return None
           try {
             commitLog(spark, root, n, adds, Seq.empty, Some(batchId))
             return Some(n)
@@ -2116,6 +2023,10 @@ object TableStore {
       }
     }
   }
+
+  /** Does some commit of `snap` carry `batchId`? */
+  private def carries(snap: Option[Snapshot], batchId: Long): Boolean =
+    snap.exists(_.log.exists(_.batchId.contains(batchId)))
 
   /** Rewrite only the live files SMALLER than `smallBytes` into
     * ~`targetBytes` files as a new version — the steady-state
@@ -2147,7 +2058,7 @@ object TableStore {
       * a checkpoint replay must leave the store byte-identical). */
     private[graft] def afterCommit(spark: SparkSession, root: String,
                                    statsCols: Seq[String]): Unit =
-      if (liveAt(spark, root, versions(spark, root).last).size > maxLiveFiles)
+      if (resolved(spark, root).live.size > maxLiveFiles)
         compactSmall(spark, root, targetBytes, targetBytes, statsCols)
   }
 
@@ -2166,18 +2077,22 @@ object TableStore {
   def sinkStream(stream: DataFrame, root: String,
                  checkpoint: String,
                  maintenance: Option[SinkMaintenance] = None,
-                 statsCols: Seq[String] = Nil): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (appendBatch(b, root, id, statsCols).nonEmpty)
-          maintenance.foreach(_.afterCommit(b.sparkSession, root, statsCols))
-        ()
-      }
+                 statsCols: Seq[String] = Nil): Unit =
+    drain(stream, checkpoint) { (b, id) =>
+      if (appendBatch(b, root, id, statsCols).nonEmpty)
+        maintenance.foreach(_.afterCommit(b.sparkSession, root, statsCols))
+    }
+
+  /** Run `stream` AvailableNow through `batch` per micro-batch, and
+    * block until drained. */
+  private def drain(stream: DataFrame, checkpoint: String)(
+      batch: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .foreachBatch(batch)
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** Copy-on-write row deletes — the right-to-be-forgotten op a
     * training-data store must answer without rewriting the world.
@@ -2203,15 +2118,15 @@ object TableStore {
                   bloomCols: Seq[String] = Nil): Long = {
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val (prev, liveNow, declared) =
-      fileSnapshot(spark, root, None, "deleteWhere")
+    val snap = fileSnapshot(spark, root, None, "deleteWhere")
+    val prev = snap.version
     val touched =
-      prunedFiles(spark, root, liveNow, declared, within(pcol, lo, hi))
+      prunedFiles(spark, root, snap.live, snap.declared, within(pcol, lo, hi))
     if (touched.isEmpty) return prev
     // keep a row unless the predicate is DEFINITELY true: under
     // three-valued logic `!pred` drops NULL-valued rows the caller
     // never selected — a silent data loss, not a delete
-    val kept = readLiveFiles(spark, root, prev, touched)
+    val kept = readLiveFiles(spark, snap, touched)
       .where(!coalesce(pred, lit(false)))
     val n = prev + 1
     commitExclusive(spark, root, n,
@@ -2245,9 +2160,9 @@ object TableStore {
     val spark = df.sparkSession
     val (pcol, lo, hi) = pruneBy
     require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val (prev, live, declared) =
-      fileSnapshot(spark, root, None, "replaceWhere")
-    val store = read(spark, root, Some(prev))
+    val snap = fileSnapshot(spark, root, None, "replaceWhere")
+    val prev = snap.version
+    val store = readSnapshot(spark, root, Some(snap))
     require(df.columns.sorted.sameElements(store.columns.sorted),
       s"replaceWhere schema mismatch at $root: batch " +
         s"[${df.columns.sorted.mkString(",")}] vs table " +
@@ -2280,13 +2195,13 @@ object TableStore {
           "duplicate")
     }
     val touched =
-      prunedFiles(spark, root, live, declared, within(pcol, lo, hi))
+      prunedFiles(spark, root, snap.live, snap.declared, within(pcol, lo, hi))
     val kept =
       if (touched.isEmpty) df.limit(0).select(store.columns.map(col): _*)
-      else readLiveFiles(spark, root, prev, touched)
+      else readLiveFiles(spark, snap, touched)
         .where(!coalesce(pred, lit(false)))
     val adds = batchAdds ++ writeData(kept, root, n, statsCols, bloomCols)
-    enforceConstraints(spark, root, adds)
+    enforceConstraints(spark, Some(snap), adds)
     commitExclusive(spark, root, n, adds, touched.map(_.path),
       marker = Some("rewrite"))
     n
@@ -2390,8 +2305,9 @@ object TableStore {
                         precomputedSpan: Option[org.apache.spark.sql.Row]
                           = None): Long = {
     val spark = inserts.sparkSession
-    val (prev, live, declared) = fileSnapshot(spark, root, None, opName)
-    val store = read(spark, root, Some(prev))
+    val snap = fileSnapshot(spark, root, None, opName)
+    val prev = snap.version
+    val store = readSnapshot(spark, root, Some(snap))
     // schema contract: an upsert that widened or narrowed the row
     // shape would leave a mixed-schema live set behind — loud, not
     // latent (column ADDS go through readAs/SchemaEvolution)
@@ -2410,9 +2326,9 @@ object TableStore {
       if (span.isNullAt(0)) Seq.empty // no non-null keys: no matches
       else keyRows.schema(key).dataType match {
         case ByteType | ShortType | IntegerType | LongType | StringType =>
-          prunedFiles(spark, root, live, declared,
+          prunedFiles(spark, root, snap.live, snap.declared,
             within(key, span.get(0), span.get(1)))
-        case _ => live // unpruneable key type: exact scan decides
+        case _ => snap.live // unpruneable key type: exact scan decides
       }
     val keys = keyRows.select(col(key).as("__merge_key"))
       .where(col("__merge_key").isNotNull).distinct()
@@ -2424,7 +2340,7 @@ object TableStore {
     // it hides; sequential stands.)
     val touched: Seq[String] =
       if (candidates.isEmpty) Seq.empty
-      else readLiveFiles(spark, root, prev, candidates)
+      else readLiveFiles(spark, snap, candidates)
         .select(col(key), col("_metadata.file_path").as("__f"))
         .join(keys, col(key) === col("__merge_key"))
         .select("__f").distinct()
@@ -2438,7 +2354,7 @@ object TableStore {
       if (touched.isEmpty) None
       else {
         val byPath = candidates.map(e => e.path -> e).toMap
-        Some(readLiveFiles(spark, root, prev, touched.map(byPath))
+        Some(readLiveFiles(spark, snap, touched.map(byPath))
           .join(keys, col(key) === col("__merge_key"), "left_anti"))
       }
     val n = prev + 1
@@ -2449,10 +2365,9 @@ object TableStore {
     // new content (survivors are a subset of rows that already
     // passed; re-validating them would re-read the whole rewrite).
     val adds =
-      if (survivors.isEmpty ||
-          activeConstraints(spark, root, prev).nonEmpty) {
+      if (survivors.isEmpty || snap.constraints.nonEmpty) {
         val newAdds = writeData(aligned, root, n, statsCols, bloomCols)
-        enforceConstraints(spark, root, newAdds)
+        enforceConstraints(spark, Some(snap), newAdds)
         newAdds ++
           survivors.map(sv => writeData(sv, root, n, statsCols, bloomCols))
             .getOrElse(Seq.empty)
@@ -2487,9 +2402,7 @@ object TableStore {
       "mergeBatch needs latestBy columns — without an order, which of " +
         "a key's rows within one batch wins is nondeterministic")
     val spark = updates.sparkSession
-    def seen = versions(spark, root).nonEmpty &&
-      readLog(spark, root).exists(_.batchId.contains(batchId))
-    if (seen) return None
+    if (carries(snapshotOf(spark, root), batchId)) return None
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key)).orderBy(latestBy.map(col(_).desc): _*)
     val latest = updates.withColumn("__rn", row_number().over(w))
@@ -2512,17 +2425,10 @@ object TableStore {
     * [[mergeBatch]]). */
   def sinkStreamMerge(stream: DataFrame, root: String, key: String,
                       checkpoint: String, latestBy: Seq[String],
-                      statsCols: Seq[String] = Nil): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        mergeBatch(b, root, key, id, latestBy, statsCols)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      statsCols: Seq[String] = Nil): Unit =
+    drain(stream, checkpoint) { (b, id) =>
+      mergeBatch(b, root, key, id, latestBy, statsCols)
+    }
 
   /** The latest version whose commit was PUBLISHED at or before
     * `tsMillis` — time travel by timestamp, resolved from the log
@@ -2536,24 +2442,13 @@ object TableStore {
     * named. */
   def versionAt(spark: SparkSession, root: String,
                 tsMillis: Long): Long = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val fs = fsOf(spark, new Path(s"$root/$Log"))
-    val stamped = vs.map(v =>
-      v -> fs.getFileStatus(new Path(s"$root/$Log/v=$v"))
-        .getModificationTime)
+    val stamped = published(spark, resolved(spark, root))
     val at = stamped.filter(_._2 <= tsMillis).map(_._1)
     require(at.nonEmpty,
       s"timestamp $tsMillis precedes every commit at $root " +
         s"(oldest published ${stamped.head._2}) — nothing to read")
     at.max
   }
-
-  /** Snapshot read as of a wall-clock instant:
-    * `read(root, versionAt(ts))`. */
-  def readAt(spark: SparkSession, root: String,
-             tsMillis: Long): DataFrame =
-    read(spark, root, Some(versionAt(spark, root, tsMillis)))
 
   /** Time-based retention — the operational dial ("keep 7 days")
     * composed from [[versionAt]]'s publish-time model and [[vacuum]]:
@@ -2563,34 +2458,18 @@ object TableStore {
     * testable; the vacuum caveats (checkpoint at the horizon,
     * in-flight-writer safety, pinned readers fail loudly past the
     * horizon) apply unchanged. */
-  def vacuumOlderThan(spark: SparkSession, root: String,
-                      cutoffMillis: Long): Unit = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return
-    val fs = fsOf(spark, new Path(s"$root/$Log"))
-    val keep = vs.count(v =>
-      fs.getFileStatus(new Path(s"$root/$Log/v=$v"))
-        .getModificationTime >= cutoffMillis)
-    vacuum(spark, root, keepVersions = math.max(1, keep))
-  }
+  private[graft] def vacuumOlderThan(spark: SparkSession, root: String,
+                                     cutoffMillis: Long): Unit =
+    snapshotOf(spark, root).foreach { s =>
+      val keep = published(spark, s).count(_._2 >= cutoffMillis)
+      vacuum(spark, root, keepVersions = math.max(1, keep))
+    }
 
-  /** CHECK constraints active at `asOf`: (name, boolean SQL expr)
-    * pairs, latest declaration per name wins, drops remove. Replayed
-    * from the log's metadata rows — versioned exactly like data, so
-    * time travel knows when enforcement started, and [[vacuum]]'s
-    * checkpoint carries the active set past the horizon. */
-  def activeConstraints(spark: SparkSession, root: String,
-                        asOf: Long): Seq[(String, String)] = {
-    readLogTo(spark, root, asOf) // bounded: constraints, not rows
-      .filter(r => r.action == "constraint" ||
-        r.action == "constraint_drop")
-      .groupBy(_.path)
-      .flatMap { case (name, rs) =>
-        val last = rs.maxBy(_.v)
-        if (last.action == "constraint")
-          Some((name, last.meta.getOrElse(""))) else None
-      }
-      .toSeq.sortBy(_._1)
+  /** Each committed version of `s` with its log dir's publish time. */
+  private def published(spark: SparkSession, s: Snapshot): Seq[(Long, Long)] = {
+    val fs = fsOf(spark, new Path(s"${s.root}/$Log"))
+    s.versions.map(v => v ->
+      fs.getFileStatus(new Path(s"${s.root}/$Log/v=$v")).getModificationTime)
   }
 
   /** Declare a CHECK constraint as a commit: every future write of
@@ -2606,10 +2485,9 @@ object TableStore {
                     name: String, exprSql: String): Long = {
     require(name.nonEmpty && !name.contains("/") && !name.contains("="),
       s"constraint name must be a plain identifier: $name")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val prev = vs.last
-    val bad = read(spark, root, Some(prev))
+    val snap = resolved(spark, root)
+    val prev = snap.version
+    val bad = readSnapshot(spark, root, Some(snap))
       .where(!coalesce(expr(exprSql), lit(true))).limit(1).collect()
     require(bad.isEmpty,
       s"cannot add CHECK constraint $name at $root: existing rows " +
@@ -2625,39 +2503,37 @@ object TableStore {
     * a typo here would otherwise silently keep enforcing. */
   def dropConstraint(spark: SparkSession, root: String,
                      name: String): Long = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    require(activeConstraints(spark, root, vs.last).exists(_._1 == name),
+    val snap = resolved(spark, root)
+    require(snap.constraints.exists(_._1 == name),
       s"no active constraint named $name at $root")
-    val n = vs.last + 1
+    val n = snap.version + 1
     commitExclusive(spark, root, n, Seq.empty, Seq.empty,
       metaRows = Seq((name, "constraint_drop", "")))
     n
   }
 
-  /** Validate freshly-written NEW-content files against the active
-    * constraints BEFORE their commit: reads back what was actually
-    * persisted (column-pruned to the expressions' needs), so even a
+  /** Validate freshly-written NEW-content files against the
+    * constraints active at `snap` — the snapshot the commit builds on;
+    * None for a first-ever write, where nothing is declared yet —
+    * BEFORE their commit: reads back what was actually persisted
+    * (column-pruned to the expressions' needs), so even a
     * nondeterministic upstream can't sneak a violation in. On
     * violation the staged files stay unreferenced (vacuum sweeps
     * them) and the commit never happens. */
-  private[graft] def enforceConstraints(spark: SparkSession, root: String,
-                                        entries: Seq[FileEntry]): Unit = {
-    if (entries.isEmpty) return
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return // first-ever write: nothing declared yet
-    val cs = activeConstraints(spark, root, vs.max)
-    if (cs.isEmpty) return
-    val df = readLiveFiles(spark, root, vs.max, entries)
-    cs.foreach { case (name, exprSql) =>
-      val bad = df.where(!coalesce(expr(exprSql), lit(true)))
-        .limit(1).collect()
-      if (bad.nonEmpty) throw new IllegalArgumentException(
-        s"CHECK constraint $name violated at $root: ($exprSql) is " +
-          s"false for row ${bad.head} — commit refused, staged files " +
-          "abandoned to the vacuum sweep")
+  private[graft] def enforceConstraints(spark: SparkSession,
+                                        snap: Option[Snapshot],
+                                        entries: Seq[FileEntry]): Unit =
+    snap.filter(_ => entries.nonEmpty).foreach { s =>
+      lazy val df = readLiveFiles(spark, s, entries)
+      s.constraints.foreach { case (name, exprSql) =>
+        val bad = df.where(!coalesce(expr(exprSql), lit(true)))
+          .limit(1).collect()
+        if (bad.nonEmpty) throw new IllegalArgumentException(
+          s"CHECK constraint $name violated at ${s.root}: ($exprSql) " +
+            s"is false for row ${bad.head} — commit refused, staged " +
+            "files abandoned to the vacuum sweep")
+      }
     }
-  }
 
   /** Zero-copy SHALLOW CLONE: `dstRoot`'s version 1 re-ADDS the live
     * files of `srcRoot` at `version` by ABSOLUTE path — an instantly
@@ -2672,7 +2548,7 @@ object TableStore {
     * standard lakehouse clone contract: the SOURCE's vacuum does not
     * know about clones; keep source retention wider than any clone's
     * pin, or the clone fails loudly on the missing files it reads
-    * (`ignoreMissingFiles=false`), never partial rows. A typed read
+    * (`ignoreMissingFiles=false`), never partial rows. A [[readWhere]]
     * whose prune refutes every file from the log or memoized footers
     * reads no file, so it answers empty without noticing the loss —
     * still the snapshot's content for that filter. */
@@ -2681,28 +2557,16 @@ object TableStore {
                    version: Option[Long] = None): Long = {
     require(srcRoot.startsWith("/") || srcRoot.contains("://"),
       s"shallowClone needs an absolute source root: $srcRoot")
-    val vs = versions(spark, srcRoot)
-    require(vs.nonEmpty, s"no committed versions at $srcRoot")
-    require(versions(spark, dstRoot).isEmpty,
-      s"clone target $dstRoot already has commits")
-    val v = version.getOrElse(vs.max)
-    val srcLive = liveAt(spark, srcRoot, v)
     // a clone re-references FILES; active delete vectors would be
     // left behind, silently resurrecting deleted rows in the clone
-    requireNoDvs(spark, srcRoot, v, srcLive, "shallowClone")
-    val entries = srcLive.map(e => e.copy(path = resolve(srcRoot, e.path)))
+    val src = fileSnapshot(spark, srcRoot, version, "shallowClone")
+    require(versions(spark, dstRoot).isEmpty,
+      s"clone target $dstRoot already has commits")
+    val entries = src.live.map(e => e.copy(path = resolve(srcRoot, e.path)))
     // schema anchor: clones of empty snapshots still read typed-empty
-    val anchor = new Path(s"$dstRoot/_schema")
-    val afs = fsOf(spark, anchor)
-    if (!afs.exists(anchor)) {
-      val staged = new Path(s"$dstRoot/.schema_tmp-clone")
-      writeSchemaDir(spark, staged,
-        read(spark, srcRoot, Some(v)).schema)
-      if (afs.rename(staged, anchor)) {
-        val nested = new Path(anchor, staged.getName)
-        if (afs.exists(nested)) afs.delete(nested, true)
-      } else afs.delete(staged, true)
-    }
+    if (!hasAnchor(spark, dstRoot))
+      publishAnchor(spark, dstRoot,
+        readSnapshot(spark, srcRoot, Some(src)).schema)
     commitLog(spark, dstRoot, 1L, entries, Seq.empty)
     1L
   }
@@ -2722,11 +2586,11 @@ object TableStore {
     // restore re-ADDS files; delete vectors are versioned separately
     // and would re-apply to the restored files out of their epoch, so
     // both snapshots refuse under them
-    val (prev, live, _) = fileSnapshot(spark, root, None, "restore")
-    val (_, target, _) = // loud if the target was vacuumed
-      fileSnapshot(spark, root, Some(toVersion), "restore (target)")
-    val current = live.map(_.path)
-    val n = prev + 1
+    val snap = fileSnapshot(spark, root, None, "restore")
+    // loud if the target was vacuumed
+    val target = snap.at(toVersion).requireNoDvs("restore (target)").live
+    val current = snap.live.map(_.path)
+    val n = snap.version + 1
     // a file live in BOTH stays live: remove only what the target
     // lacks, add only what the current set lacks — the minimal diff
     // keeps the log commit proportional to the actual change
@@ -2789,8 +2653,8 @@ object TableStore {
     * persisted (schema unchanged): a curve maps 1-D file boundaries
     * to compact 2-D tiles, so every rewritten file's per-column
     * [min, max] for BOTH xCol and yCol come out simultaneously
-    * narrow, and the ordinary log-stats pruning ([[readBox]]) does
-    * the rest — the same design every lakehouse Z-ORDER ships.
+    * narrow, and the ordinary log-stats pruning of a two-column
+    * [[readWhere]] box does the rest — the same design every lakehouse Z-ORDER ships.
     * Compare [[optimizeLayout]]: a 1-D range cluster makes one
     * column's ranges disjoint and leaves the other's spanning the
     * whole table, so a probe tight only in the second column prunes
@@ -2805,21 +2669,6 @@ object TableStore {
     rewriteLayout(spark, root, "optimizeLayoutCurve", targetBytes, 0,
       (statsCols ++ Seq(xCol, yCol)).distinct, bloomCols,
       Some(Layout.hilbertValue(col(xCol), col(yCol), bits)))((live, _) => live)
-
-  /** Manifest-pruned 2-D box read: the rows with `x` ∈ [xlo, xhi]
-    * AND `y` ∈ [ylo, yhi], scanning only the live files whose bounds
-    * can intersect both. On an [[optimizeLayoutCurve]]d table a box
-    * tight in EITHER dimension prunes, because curve tiles are compact
-    * in both. Returns the frame plus (files touched, files live). */
-  def readBox(spark: SparkSession, root: String,
-              x: (String, Long, Long), y: (String, Long, Long),
-              version: Option[Long] = None): (DataFrame, Int, Int) = {
-    require(x._2 <= x._3 && y._2 <= y._3,
-      s"empty box [${x._2},${x._3}]×[${y._2},${y._3}]")
-    prunedRead(spark, root, version,
-      within(x._1, x._2, x._3) ++ within(y._1, y._2, y._3),
-      col(x._1).between(x._2, x._3) && col(y._1).between(y._2, y._3))
-  }
 
   /** Zero-mutation VACUUM DRY RUN — what [[vacuum]](keepVersions)
     * would do, answered from the COMMIT LOG ALONE: the horizon, how
@@ -2837,16 +2686,16 @@ object TableStore {
                  keepVersions: Int): DataFrame = {
     import spark.implicits._
     require(keepVersions >= 1, s"keepVersions must be >= 1")
-    val vs = versions(spark, root)
+    val snap = snapshotOf(spark, root)
     val empty = (0L, 0L, 0L, 0L)
-    if (vs.isEmpty)
+    if (snap.isEmpty)
       return Seq(empty).toDF("horizon", "n_versions_dropped",
         "n_files_swept", "bytes_swept").limit(0)
-    val horizon = math.max(vs.head, vs.last - keepVersions + 1)
-    val dropped = vs.filter(_ < horizon)
-    val keepSet = vs.filter(_ >= horizon)
-      .flatMap(liveAt(spark, root, _)).map(_.path).toSet
-    val swept = dropped.flatMap(liveAt(spark, root, _))
+    val s = snap.get
+    val horizon = horizonOf(s, keepVersions)
+    val keepSet = keptFiles(s, horizon)
+    val dropped = s.versions.filter(_ < horizon)
+    val swept = dropped.flatMap(s.at(_).live)
       .filter(e => !keepSet.contains(e.path) &&
         !e.path.startsWith("/") && !e.path.contains("://"))
       .groupBy(_.path).map(_._2.head).toSeq
@@ -2855,6 +2704,15 @@ object TableStore {
       .toDF("horizon", "n_versions_dropped", "n_files_swept",
         "bytes_swept")
   }
+
+  /** The horizon when `s`'s store keeps its last `keepVersions`. */
+  private def horizonOf(s: Snapshot, keepVersions: Int): Long =
+    math.max(s.versions.head, s.versions.last - keepVersions + 1)
+
+  /** Every file a version at or above `horizon` references, each live
+    * set a projection of `s`'s one replay. */
+  private def keptFiles(s: Snapshot, horizon: Long): Set[String] =
+    s.versions.filter(_ >= horizon).flatMap(s.at(_).live).map(_.path).toSet
 
   /** Retire history: keep the last `keepVersions` snapshots readable,
     * write a full-manifest CHECKPOINT at the new horizon (so replay
@@ -2869,33 +2727,34 @@ object TableStore {
     * the vacuum fails at execution with a missing-file error rather
     * than returning the subset of rows whose files survived
     * (`ignoreMissingFiles` is pinned false on every store read). A
-    * typed read that prunes every file away reads none and answers
+    * [[readWhere]] that prunes every file away reads none and answers
     * empty, which is still that snapshot's content for its filter.
     * Operators size `keepVersions` to cover their longest reader —
     * the same contract every lakehouse retention knob carries. */
   def vacuum(spark: SparkSession, root: String,
              keepVersions: Int): Unit = {
     require(keepVersions >= 1, s"keepVersions must be >= 1")
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return
-    val horizon = math.max(vs.head, vs.last - keepVersions + 1)
+    val snap = snapshotOf(spark, root) match {
+      case Some(s) => s
+      case None => return
+    }
+    val vs = snap.versions
+    val horizon = horizonOf(snap, keepVersions)
     if (horizon == vs.head) return
     val kept = vs.filter(_ >= horizon)
-    val keepFiles = kept.flatMap(liveAt(spark, root, _))
-      .map(_.path).distinct
+    val keepSet = keptFiles(snap, horizon)
     val fs = fsOf(spark, new Path(root))
     // checkpoint BEFORE dropping logs: horizon's log becomes a full
     // add-manifest of its live set (rename-committed like any version)
-    val horizonLive = liveAt(spark, root, horizon)
+    val atHorizon = snap.at(horizon)
+    val horizonLive = atHorizon.live
     // batch ids recorded at or below the horizon must SURVIVE the
     // checkpoint (Delta keeps SetTransaction actions in checkpoints
     // for the same reason): a streaming retry after vacuum re-offers
     // an old batch id, and losing the marker would double-ingest it.
-    // Inert `txn` marker rows carry them — liveAt filters on "add",
-    // so they never affect snapshots.
-    val none = Map.empty[String, Long]
-    val snone = Map.empty[String, String]
-    val seenBatches = readLogTo(spark, root, horizon)
+    // Inert `txn` marker rows carry them — a snapshot's live set
+    // reads only add/remove rows, so they never affect snapshots.
+    val seenBatches = atHorizon.log
       .flatMap(_.batchId).distinct.sorted // bounded: batches, not rows
     val target = new Path(s"$root/$Log/v=$horizon")
     val staged = new Path(s"$root/$Log/.tmp_ckpt_v$horizon")
@@ -2903,39 +2762,30 @@ object TableStore {
     // constraints declared at or below the horizon must also survive
     // the checkpoint (same posture as batch-id markers): losing one
     // would silently stop enforcing it on future writes
-    val keptConstraints = activeConstraints(spark, root, horizon)
+    val keptConstraints = atHorizon.constraints
     // ...and so must delete vectors still active on the horizon's
     // live files: dropping one would resurrect deleted rows in every
     // surviving snapshot that shares the file
-    val keptDvs = dvsAt(spark, root, horizon, horizonLive)
+    val keptDvs = atHorizon.dvs
     // ...and the latest incremental-view position marker (the
     // DerivedView consumed-positions row): losing it would make the
     // next tick replay from an older position and DOUBLE-append its
     // delta — the same must-survive class as batch-id markers
-    val keptViewPos = latestMeta(spark, root, "viewpos", horizon)
+    val keptViewPos = atHorizon.meta("viewpos")
     // ...and the declared (ALTERed) schema: losing it would silently
     // shrink every surviving snapshot back to its data files' shape
-    val keptSchema = latestMeta(spark, root, "schema", horizon)
-    val noMeta = None: Option[String]
+    val keptSchema = atHorizon.meta("schema")
     writeLogFile(spark, staged,
-      horizonLive
-        .map(e => LogRow(horizon, e.path, "add", e.rows, None,
-          e.mins, e.maxs, e.smins, e.smaxs, noMeta, e.bytes)) ++
-        seenBatches.map(b =>
-          LogRow(horizon, "", "txn", 0L, Some(b), none, none,
-            snone, snone, noMeta, 0L)) ++
+      horizonLive.map(LogRow.add(horizon, _)) ++
+        seenBatches.map(b => LogRow.meta(horizon, "", "txn", Some(b))) ++
         keptConstraints.map { case (name, expr) =>
-          LogRow(horizon, name, "constraint", 0L, None, none, none,
-            snone, snone, Some(expr), 0L) } ++
+          LogRow.meta(horizon, name, "constraint", payload = Some(expr)) } ++
         keptDvs.toSeq.flatMap { case (f, dvRels) => dvRels.map(d =>
-          LogRow(horizon, f, "dv", 0L, None, none, none,
-            snone, snone, Some(d), 0L)) } ++
+          LogRow.meta(horizon, f, "dv", payload = Some(d))) } ++
         keptViewPos.map(p =>
-          LogRow(horizon, "", "viewpos", 0L, None, none, none,
-            snone, snone, Some(p), 0L)) ++
+          LogRow.meta(horizon, "", "viewpos", payload = Some(p))) ++
         keptSchema.map(j =>
-          LogRow(horizon, "", "schema", 0L, None, none, none,
-            snone, snone, Some(j), 0L)))
+          LogRow.meta(horizon, "", "schema", payload = Some(j))))
     val old = new Path(s"$root/$Log/.old_ckpt_v$horizon")
     fs.delete(old, true)
     if (!fs.rename(target, old))
@@ -2957,7 +2807,6 @@ object TableStore {
     // drop pre-horizon logs, then any data file nothing kept references
     vs.filter(_ < horizon).foreach(v =>
       fs.delete(new Path(s"$root/$Log/v=$v"), true))
-    val keepSet = keepFiles.toSet
     val dataRoot = new Path(s"$root/$Data")
     // a shallow clone that never rewrote anything owns no data dir at
     // all — nothing to sweep (its externally-referenced source files
@@ -2999,9 +2848,7 @@ object TableStore {
     // horizon is garbage exactly like the file rewrite it avoided)
     val dvRoot = new Path(s"$root/dv")
     if (fs.exists(dvRoot)) {
-      val keepDvDirs = kept.flatMap { v =>
-        dvsAt(spark, root, v, liveAt(spark, root, v)).values.flatten
-      }.toSet
+      val keepDvDirs = kept.flatMap(snap.at(_).dvs.values.flatten).toSet
       fs.listStatus(dvRoot).toSeq
         .filter(d => d.isDirectory &&
           dirHint(d.getPath.getName) < horizon &&
@@ -3037,14 +2884,9 @@ object TableStore {
   def readChangesSince(spark: SparkSession, root: String,
                        sinceVersion: Long,
                        toVersion: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val to = toVersion.getOrElse(vs.max)
-    require(sinceVersion == 0 || vs.contains(sinceVersion),
-      s"since-version $sinceVersion not committed at $root " +
-        s"(have ${vs.mkString(",")}) — vacuumed past the horizon?")
-    require(vs.contains(to), s"to-version $to not committed at $root")
-    val range = readLogTo(spark, root, to).filter(_.v > sinceVersion)
+    val snap = windowEnd(spark, root, sinceVersion, toVersion)
+    val to = snap.version
+    val range = snap.log.filter(_.v > sinceVersion)
     val marked = range // bounded: one row per non-append commit
       .filter(r => r.action == "layout" || r.action == "rewrite")
     val rewrites = marked.filter(_.action == "rewrite")
@@ -3058,11 +2900,9 @@ object TableStore {
     val adds = range // bounded by files added in the window
       .filter(r => r.action == "add" && !layoutVs.contains(r.v))
       .map(r => (r.toEntry, r.v))
-    if (adds.isEmpty) {
-      val anchor = new Path(s"$root/_schema")
-      return spark.read.parquet(anchor.toString).limit(0)
+    if (adds.isEmpty)
+      return spark.read.parquet(s"$root/_schema").limit(0)
         .withColumn("_commit_version", lit(0L))
-    }
     // union by NAME with missing columns resolved to null: a feed
     // window spanning a column add would fail a positional union
     // (mixed shapes) — this is the readAs posture applied to the
@@ -3073,6 +2913,17 @@ object TableStore {
       scanFiles(spark, root, None, rows.map(_._1))
         .withColumn("_commit_version", lit(v))
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+  }
+
+  /** The snapshot closing the change window `(since, to]` (`to`
+    * defaults to the latest); `since` is 0 or a committed version. */
+  private def windowEnd(spark: SparkSession, root: String, since: Long,
+                        to: Option[Long]): Snapshot = {
+    val snap = resolved(spark, root, to)
+    require(since == 0 || snap.versions.contains(since),
+      s"since-version $since not committed at $root " +
+        s"(have ${snap.versions.mkString(",")}) — vacuumed past the horizon?")
+    snap
   }
 
   /** ROW-level change feed across ANY commits in `(since, to]` —
@@ -3096,32 +2947,24 @@ object TableStore {
   def readRowChanges(spark: SparkSession, root: String,
                      sinceVersion: Long,
                      toVersion: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions at $root")
-    val to = toVersion.getOrElse(vs.max)
-    require(sinceVersion == 0 || vs.contains(sinceVersion),
-      s"since-version $sinceVersion not committed at $root " +
-        s"(have ${vs.mkString(",")}) — vacuumed past the horizon?")
-    require(vs.contains(to), s"to-version $to not committed at $root")
-    require(sinceVersion <= to,
-      s"empty change window ($sinceVersion, $to]")
-    val before =
-      if (sinceVersion == 0) Seq.empty[FileEntry]
-      else liveAt(spark, root, sinceVersion)
-    val after = liveAt(spark, root, to)
+    val snap = windowEnd(spark, root, sinceVersion, toVersion)
+    require(sinceVersion <= snap.version,
+      s"empty change window ($sinceVersion, ${snap.version}]")
     // the file-set diff reads files RAW: an active delete vector at
     // either end would resurrect its rows into the feed (a vector
     // both added and purged strictly inside the window cancels and
     // is fine — both ends are vector-free for the affected files)
-    if (sinceVersion > 0)
-      requireNoDvs(spark, root, sinceVersion, before,
-        "readRowChanges (window start)")
-    requireNoDvs(spark, root, to, after, "readRowChanges (window end)")
+    val before =
+      if (sinceVersion == 0) Seq.empty[FileEntry]
+      else snap.at(sinceVersion)
+        .requireNoDvs("readRowChanges (window start)").live
+    snap.requireNoDvs("readRowChanges (window end)")
+    val after = snap.live
     val beforeP = before.map(_.path).toSet
     val afterP = after.map(_.path).toSet
     val addedFiles = after.filterNot(e => beforeP.contains(e.path))
     val removedFiles = before.filterNot(e => afterP.contains(e.path))
-    val target = read(spark, root, Some(to)).schema
+    val target = readSnapshot(spark, root, Some(snap)).schema
     val a = scanFiles(spark, root, Some(target), addedFiles)
     val r = scanFiles(spark, root, Some(target), removedFiles)
     // Multiset difference in ONE pass. The previous shape —
@@ -3212,10 +3055,8 @@ object TableStore {
     * ([[DerivedView]]): the position lives INSIDE the consumer's own
     * commits, so a crashed tick replays from the last one that
     * actually landed. */
-  def maxBatchId(spark: SparkSession, root: String): Option[Long] = {
-    if (versions(spark, root).isEmpty) return None
-    readLog(spark, root).flatMap(_.batchId).maxOption
-  }
+  def maxBatchId(spark: SparkSession, root: String): Option[Long] =
+    snapshotOf(spark, root).flatMap(_.log.flatMap(_.batchId).maxOption)
 
   /** Per-version commit summary — the store's audit surface. Every
     * committed version appears, including no-action commits
@@ -3224,8 +3065,9 @@ object TableStore {
   def history(spark: SparkSession, root: String): DataFrame = {
     val spark0 = spark
     import spark0.implicits._
-    val byV = readLog(spark, root).groupBy(_.v)
-    versions(spark, root).sorted.map { v =>
+    val snap = snapshotOf(spark, root)
+    val byV = snap.fold(Seq.empty[LogRow])(_.log).groupBy(_.v)
+    snap.fold(Seq.empty[Long])(_.versions).map { v =>
       val rs = byV.getOrElse(v, Seq.empty)
       (v, rs.count(_.action == "add").toLong,
         rs.count(_.action == "remove").toLong,

@@ -89,7 +89,8 @@ object Validate {
   /** [[counts]]' pass, also keeping the first `keep` bad rows in
     * partition order — the rows `bad(annotated).coalesce(1).limit(keep)`
     * returns; each partition sends at most `keep` rows to the driver. */
-  private def tally(annotated: DataFrame, keep: Int): (Long, Long, Seq[Row]) = {
+  private[graft] def tally(annotated: DataFrame,
+                           keep: Int): (Long, Long, Seq[Row]) = {
     val read = if (keep == 0) annotated.select("error_details") else annotated
     val i = read.schema.fieldIndex("error_details")
     val perPartition = read.rdd.mapPartitions { rows =>

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 
 /** Pluggable notification events — the engine-side contract behind the
   * reference's email callbacks (dags/DataWarehouse.py:499-506: the
@@ -34,13 +34,9 @@ object Notify {
   /** A hard gate tripped; the run aborts right after this fires. */
   final case class GateFailure(stage: String, reason: String) extends Event
 
-  /** Bounded preview extract: limit + collect + stringify (nulls stay
-    * null). `total` is passed in, not recounted here. */
-  def preview(df: DataFrame, total: Long, stage: String): QuarantinePreview =
-    previewOf(df.columns.toIndexedSeq, df.limit(PreviewRows).collect().toIndexedSeq,
-      total, stage)
-
-  /** [[preview]] of rows already on the driver, under `header`. */
+  /** Bounded preview of rows already on the driver, under `header`:
+    * at most [[PreviewRows]], stringified (nulls stay null). `total`
+    * is passed in, not recounted here. */
   private[pipeline] def previewOf(header: Seq[String], rows: Seq[Row],
                                   total: Long, stage: String): QuarantinePreview =
     QuarantinePreview(stage, total, header, rows.take(PreviewRows).map { r =>

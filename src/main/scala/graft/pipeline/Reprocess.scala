@@ -60,8 +60,10 @@ object Reprocess {
     try {
       val rejected = Validate.bad(annotated)
       val accepted = Validate.good(annotated).drop("error_details")
-      // one pass fills the cache and counts both sides
-      val (total, nRejected) = Validate.counts(annotated)
+      // one pass fills the cache, counts both sides and keeps the
+      // quarantine preview's rows
+      val (total, nRejected, head) =
+        Validate.tally(annotated, Notify.PreviewRows)
       val nAccepted = total - nRejected
       if (nRejected > 0) {
         rejected.write.mode("append").parquet(layers.reprocessQuarantine)
@@ -73,10 +75,10 @@ object Reprocess {
         Xlsx.writeReport(rejected,
           s"${layers.reprocessQuarantine}_report/" +
             s"report_${new java.io.File(correctionsDir).getName}.xlsx")
-        // the reference mails the same preview it attaches (rejected
-        // is persisted above, so this is a bounded re-read, not a
-        // rule-chain recompute)
-        hook.send(Notify.preview(rejected, nRejected, "reprocess_quarantine"))
+        // the reference mails the same preview it attaches, here the
+        // first rejected rows as the counting pass collected them
+        hook.send(Notify.previewOf(rejected.columns.toIndexedSeq, head,
+          nRejected, "reprocess_quarantine"))
       }
       if (nAccepted > 0) {
         // a silver swap that crashed between its renames left the

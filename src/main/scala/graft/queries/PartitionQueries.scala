@@ -1,6 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In,
+  LessThanOrEqual, StringStartsWith}
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.ops.Partitioned
@@ -431,8 +433,8 @@ object PartitionQueries extends QueryPack {
     * commit rewrites the live set Hilbert-clustered on (xk, yk),
     * after which the files' per-column ranges are compact in both
     * dims at once and the SAME box probe ([[graft.ops.TableStore
-    * .readBox]] — plain per-column stats, the curve key is never
-    * persisted) skips most files. Economics are enforced loudly in
+    * .readWhere]] over both columns — plain per-column stats, the
+    * curve key is never persisted) skips most files. Economics are enforced loudly in
     * the body; the oracle pins CONTENT invariance across the rewrite
     * — both phases must equal the source box digest. */
   val storeOptimizeCurve = GQuery(
@@ -450,9 +452,10 @@ object PartitionQueries extends QueryPack {
           src.where(col("o_orderkey") % 3 === i).coalesce(1), root,
           statsCols = Seq("xk", "yk"))
       }
-      val box = (("xk", 0L, 255L), ("yk", 16L, 47L))
-      val (_, tBefore, totBefore) = graft.ops.TableStore.readBox(
-        s, root, box._1, box._2)
+      val box = Seq(GreaterThanOrEqual("xk", 0L), LessThanOrEqual("xk", 255L),
+        GreaterThanOrEqual("yk", 16L), LessThanOrEqual("yk", 47L))
+      val (_, tBefore, totBefore) =
+        graft.ops.TableStore.readWhere(s, root, box)
       require(tBefore == totBefore,
         s"round-robin commits must all overlap the box: $tBefore/$totBefore")
       // ~8 output files at ANY scale factor: size the target from the
@@ -467,8 +470,8 @@ object PartitionQueries extends QueryPack {
         math.max(4L << 10, du(new java.io.File(s"$root/data")) / 8)
       val vOpt = graft.ops.TableStore.optimizeLayoutCurve(
         s, root, "xk", "yk", bits = 8, targetBytes = targetBytes)
-      val (_, tAfter, totAfter) = graft.ops.TableStore.readBox(
-        s, root, box._1, box._2)
+      val (_, tAfter, totAfter) =
+        graft.ops.TableStore.readWhere(s, root, box)
       // economics by FRACTION of the live set, not absolute count —
       // the optimize produces more, smaller files, so touching 3 of 8
       // beats touching 3 of 3
@@ -478,8 +481,7 @@ object PartitionQueries extends QueryPack {
         s"curve-clustered box probe must skip a larger fraction: " +
           s"$tAfter/$totAfter (before $tBefore/$totBefore)")
       Seq(("before", vOpt - 1), ("after", vOpt)).map { case (tag, v) =>
-        graft.ops.TableStore.readBox(s, root, box._1, box._2, Some(v))
-          ._1
+        graft.ops.TableStore.readWhere(s, root, box, Some(v))._1
           .agg(
             lit(tag).as("phase"),
             count(lit(1)).as("n_orders"),
@@ -594,7 +596,8 @@ object PartitionQueries extends QueryPack {
     """),
     eager = true)
 
-  /** Log-carried STRING bounds ([[graft.ops.TableStore.readPrefix]]):
+  /** Log-carried STRING bounds (a [[graft.ops.TableStore.readWhere]]
+    * prefix probe):
     * documents keyed by a `domNN/doc_id` string land in four commits
     * clustered by domain — the natural shape of a URL-keyed corpus
     * ingested crawl-by-crawl. A domain-prefix probe must answer from
@@ -618,8 +621,8 @@ object PartitionQueries extends QueryPack {
             col("doc_id") % 8 === 2 * i + 1).coalesce(1), root,
           statsCols = Seq("k"))
       }
-      val (df, touched, total) = graft.ops.TableStore.readPrefix(
-        s, root, "k", "dom03/")
+      val (df, touched, total) = graft.ops.TableStore.readWhere(
+        s, root, Seq(StringStartsWith("k", "dom03/")))
       require(total == 0 || touched < total,
         s"string log bounds must skip at least one commit: $touched/$total")
       df.select("k", "doc_id", "text_len").orderBy("doc_id")
@@ -1457,8 +1460,8 @@ object PartitionQueries extends QueryPack {
     """),
     eager = true)
 
-  /** Bloom-skipped point lookup
-    * ([[graft.ops.TableStore.pointLookup]]): three round-robin
+  /** Bloom-skipped point lookup (a [[graft.ops.TableStore.readWhere]]
+    * `IN` probe): three round-robin
     * appends make every file's [min, max] span the whole key space —
     * range stats prune NOTHING — but each commit wrote a parquet
     * bloom on the key, so probing three keys that all live in one
@@ -1480,8 +1483,8 @@ object PartitionQueries extends QueryPack {
           bloomCols = Seq("o_orderkey"))
       }
       val keys = Seq(300L, 600L, 900L) // all ≡ 0 mod 3: one commit
-      val (probe, touched, total) = graft.ops.TableStore.pointLookup(
-        s, root, "o_orderkey", keys)
+      val (probe, touched, total) = graft.ops.TableStore.readWhere(
+        s, root, Seq(In("o_orderkey", keys.toArray[Any])))
       require(total == 0 || (touched <= 2 && touched < total),
         s"bloom prune must beat the full scan: $touched/$total")
       probe.agg(

@@ -893,7 +893,7 @@ object SqlQueries extends QueryPack {
 
   /** `ALTER TABLE ADD COLUMN` on the SQL surface
     * ([[graft.sources.GraftCatalog]].alterTable →
-    * [[graft.ops.TableStore.addColumn]]): one metadata commit, zero
+    * [[graft.ops.TableStore.alterSchema]]): one metadata commit, zero
     * data IO (the in-body `require` pins the live file set
     * byte-identical across the ALTER), pre-ALTER files resolve the
     * column to null inside the reader, a post-ALTER INSERT carries
@@ -1054,7 +1054,7 @@ object SqlQueries extends QueryPack {
     * (the reference's DDL declares INTEGER keys,
     * dags/SQL/create_table_datawarehouse.sql; at 100 TB the fix must
     * be metadata-only). [[graft.sources.GraftCatalog.alterTable]] →
-    * [[graft.ops.TableStore.widenColumns]]: one schema commit, zero
+    * [[graft.ops.TableStore.alterSchema]]: one schema commit, zero
     * data IO, pre-widen files up-cast inside the parquet reader,
     * log-stats pruning still exact in the widened type (in-body
     * StatsSkipping evidence rides the hash), pre-widen snapshots

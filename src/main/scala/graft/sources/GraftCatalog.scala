@@ -185,9 +185,8 @@ class GraftCatalog extends TableCatalog
     new GraftStoreTable(p, None, Some(schema))
   }
 
-  /** `ALTER TABLE ADD COLUMN` maps onto [[TableStore.addColumns]] and
-    * `ALTER TABLE … ALTER COLUMN … TYPE` onto
-    * [[TableStore.widenColumns]] — each one metadata commit, zero
+  /** `ALTER TABLE ADD COLUMN` and `ALTER TABLE … ALTER COLUMN … TYPE`
+    * map onto [[TableStore.alterSchema]] — each one metadata commit, zero
     * data IO, history untouched (pre-ALTER snapshots keep their own
     * schema; pre-widen files up-cast inside the parquet reader).
     * Only shapes the commit can honor without a hidden backfill or

@@ -17,7 +17,8 @@ import graft.ops.TableStore.FileEntry
   * parquet predicate pushdown) over files the COMMIT LOG names, never
   * a filesystem listing. `listFiles` translates the query's data
   * filters to the `sources.Filter` ADT and keeps what
-  * [[TableStore.prunedFiles]] cannot rule out.
+  * [[TableStore.prunedFiles]] cannot rule out — the same pruner, so
+  * the same files, as [[TableStore.readWhere]] for the same filters.
   *
   * Scale shape: the file list is fixed at construction (the snapshot
   * pin) and its paths are qualified there once, as Spark's own
@@ -29,9 +30,13 @@ class GraftFileIndex(spark: SparkSession, root: String,
                      live: Seq[FileEntry], dataSchema: StructType)
     extends FileIndex {
 
+  private def this(spark: SparkSession, root: String,
+                   snap: TableStore.Snapshot) =
+    this(spark, root, snap.live,
+      TableStore.readSnapshot(spark, root, Some(snap)).schema)
+
   def this(spark: SparkSession, root: String, version: Long) =
-    this(spark, root, TableStore.liveAt(spark, root, version),
-      TableStore.read(spark, root, Some(version)).schema)
+    this(spark, root, TableStore.snapshotOf(spark, root, Some(version)).get)
 
   private val statuses: Seq[(FileEntry, FileStatus)] = {
     val conf = spark.sparkContext.hadoopConfiguration

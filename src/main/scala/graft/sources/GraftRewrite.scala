@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *  - Catalyst's own pushdown: filters reach the scan as
   *    `PushedFilters` (parquet row-group pruning) AND reach the
   *    file index as data filters (FILE pruning: log bounds, footer
-  *    bounds and bloom probes — the typed reads' one pruner);
+  *    bounds and bloom probes — `TableStore.readWhere`'s one pruner);
   *  - column pruning into the reader (`ReadSchema`), AQE, runtime
   *    filters — everything the planner knows how to do with a
   *    HadoopFsRelation.
@@ -43,7 +43,7 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   /** A bare graft snapshot under aliases/trivial projections — the
     * only shape whose row count the LOG answers exactly (any Filter
     * or join in between makes the count data-dependent). Matches the
-    * V2 relation only: a typed read's file-index relation must scan,
+    * V2 relation only: a `readWhere` file-index relation must scan,
     * so a vacuumed file fails it loudly. Yields the log-exact row
     * count. */
   private object MetaCountable {

@@ -56,32 +56,27 @@ class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
       fs.exists(new org.apache.hadoop.fs.Path(s"$root/_schema"))
   }
 
-  /** The pinned snapshot version: requested (validated by the read
-    * below) or latest-at-load. */
-  lazy val resolvedVersion: Long = requestedVersion.getOrElse {
-    val vs = TableStore.versions(spark, root)
-    // an anchored-but-never-committed store (all-empty stream) still
-    // loads — version 0 reads as typed empty through TableStore.read
-    if (vs.isEmpty) 0L else vs.max
-  }
+  /** The pinned snapshot: requested (loud when not committed) or
+    * latest-at-load, resolved once. None for an anchored-but-never-
+    * committed store (all-empty stream), which still loads and reads
+    * as typed empty. */
+  private lazy val resolved: Option[TableStore.Snapshot] =
+    TableStore.snapshotOf(spark, root, requestedVersion)
 
   private[sources] lazy val liveEntries: Seq[TableStore.FileEntry] =
-    if (resolvedVersion == 0L) Seq.empty
-    else TableStore.liveAt(spark, root, resolvedVersion)
+    resolved.fold(Seq.empty[TableStore.FileEntry])(_.live)
 
   /** Outstanding merge-on-read delete vectors make a file's logical
     * content a (file, dv) pair — raw file scans are then wrong, and
     * both read paths must route through the dv-aware
     * [[TableStore.read]]. */
   private[sources] lazy val hasDeleteVectors: Boolean =
-    liveEntries.nonEmpty &&
-      TableStore.dvsAt(spark, root, resolvedVersion, liveEntries).nonEmpty
+    resolved.exists(_.dvs.nonEmpty)
 
   /** The dv-aware snapshot frame — the hash target both read paths
     * must match. */
   private[sources] def snapshot: org.apache.spark.sql.DataFrame =
-    TableStore.read(spark, root,
-      if (resolvedVersion == 0L) None else Some(resolvedVersion))
+    TableStore.readSnapshot(spark, root, resolved)
 
   /** An existing store's commit log is the source of truth (a
     * user-provided schema is ignored there, the Delta posture); a

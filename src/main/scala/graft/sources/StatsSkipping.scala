@@ -10,7 +10,7 @@ import graft.ops.TableStore.FileEntry
   * `sources.Filter`? Every store read prunes through
   * [[TableStore.prunedFiles]], which asks it first of the commit log's
   * bounds (zero IO) and then of one row group's footer bounds handed
-  * in as a [[FileEntry]]; the typed reads, the SQL file index, the
+  * in as a [[FileEntry]]; [[TableStore.readWhere]], the SQL file index, the
   * DSv2 fallback scan and the DML planner all reach it there. Only
   * the commit-race screen calls [[prune]] directly, on log bounds.
   *
@@ -105,7 +105,7 @@ object StatsSkipping {
         .orElse(asString(v).map(s => strOverlap(e, a, None, Some(s))))
         .getOrElse(true)
     case StringStartsWith(a, p) if p.nonEmpty =>
-      // [p, successor(p)): the readPrefix window; a successor-less
+      // [p, successor(p)): the prefix window; a successor-less
       // prefix (all chars >= 0x7f) prunes on the lower side only
       strOverlap(e, a, Some(p), prefixSuccessor(p))
     case _ => true // IsNull/IsNotNull/Not/unknown: no null counts, no proof

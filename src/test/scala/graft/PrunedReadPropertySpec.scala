@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In,
+  LessThanOrEqual, StringStartsWith}
 import org.apache.spark.sql.types.StringType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
@@ -16,7 +18,9 @@ import graft.sources.GraftFileIndex
   * exactly the rows of a full snapshot read under the same residual.
   * Every read's `touched` must also equal what the SQL surface's
   * [[GraftFileIndex]] keeps for the same predicate, footer bounds and
-  * blooms included: one pruner, two callers. Every frame's schema, which
+  * blooms included: one pruner, two callers. One generated conjunction
+  * mixes a long range, a string IN and a prefix, a probe only
+  * [[TableStore.readWhere]]'s filter list can express. Every frame's schema, which
   * the store resolves on the driver, must equal what Spark infers for
   * the snapshot's live files (merged, once an ALTER declared one),
   * including a snapshot pinned before the ALTER.
@@ -73,7 +77,7 @@ class PrunedReadPropertySpec extends SparkSpec {
         case Bloom => TableStore.append(df, root,
           bloomCols = cols.filterNot(_ == "y"))
       }
-      if (pre) TableStore.addColumn(spark, root, "s", StringType)
+      if (pre) TableStore.alterSchema(spark, root, Seq("s" -> StringType), Nil)
     }
     root
   }
@@ -106,7 +110,8 @@ class PrunedReadPropertySpec extends SparkSpec {
   private def inferred(root: String, v: Long) = {
     val files = TableStore.liveAt(spark, root, v)
       .map(e => TableStore.resolve(root, e.path))
-    val merged = TableStore.declaredSchemaAt(spark, root, v).isDefined
+    val merged =
+      TableStore.snapshotOf(spark, root, Some(v)).exists(_.declared.isDefined)
     spark.read.option("mergeSchema", merged.toString)
       .parquet(files: _*).schema
   }
@@ -160,24 +165,38 @@ class PrunedReadPropertySpec extends SparkSpec {
           TableStore.readRange(spark, root, "k", lo, hi),
           col("k") >= lo && col("k") <= hi)
         agree(root, "readRangeString",
-          TableStore.readRangeString(spark, root, "s", slo, shi),
+          TableStore.readWhere(spark, root,
+            Seq(GreaterThanOrEqual("s", slo), LessThanOrEqual("s", shi))),
           col("s") >= lit(slo) && col("s") <= lit(shi))
         agree(root, "readPrefix",
-          TableStore.readPrefix(spark, root, "s", prefix),
+          TableStore.readWhere(spark, root, Seq(StringStartsWith("s", prefix))),
           col("s").startsWith(prefix))
         agree(root, "pointLookup",
-          TableStore.pointLookup(spark, root, "k", keys),
+          TableStore.readWhere(spark, root, Seq(In("k", keys.toArray[Any]))),
           col("k").isin(keys: _*))
         agree(root, "pointLookupString",
           TableStore.pointLookupString(spark, root, "s", strKeys),
           col("s").isin(strKeys: _*))
         agree(root, "readBox",
-          TableStore.readBox(spark, root, ("k", lo, hi), ("y", ylo, yhi)),
+          TableStore.readWhere(spark, root,
+            Seq(GreaterThanOrEqual("k", lo), LessThanOrEqual("k", hi),
+              GreaterThanOrEqual("y", ylo), LessThanOrEqual("y", yhi))),
           col("k").between(lo, hi) && col("y").between(ylo, yhi))
+        // a long range, a string IN and a prefix on another column at
+        // once; the prefix is a held key's, so matches exist
+        val heldPrefix = s"p${keys(1) / 100}/"
+        agree(root, "readWhere",
+          TableStore.readWhere(spark, root,
+            Seq(GreaterThanOrEqual("y", ylo), LessThanOrEqual("y", yhi),
+              In("s", strKeys.toArray[Any]),
+              StringStartsWith("s", heldPrefix))),
+          col("y").between(ylo, yhi) && col("s").isin(strKeys: _*) &&
+            col("s").startsWith(heldPrefix))
         if (shape.preAlter) {
           // version 1 predates the ALTER: its reads resolve from footers
           val before = Seq(TableStore.read(spark, root, Some(1L)),
-            TableStore.pointLookup(spark, root, "k", keys, Some(1L))._1,
+            TableStore.readWhere(spark, root,
+              Seq(In("k", keys.toArray[Any])), Some(1L))._1,
             TableStore.readRange(spark, root, "k", lo, hi, Some(1L))._1)
           before.foreach(df => assert(df.schema == inferred(root, 1L),
             "pre-ALTER snapshot schema differs"))

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual,
+  StringStartsWith}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.TableStore
 
 /** `ALTER TABLE ADD COLUMN` as a metadata commit
-  * ([[TableStore.addColumn]] + the catalog's alterTable): declared
+  * ([[TableStore.alterSchema]] + the catalog's alterTable): declared
   * schemas version with the log, pre-ALTER files resolve the new
   * column to null inside the reader, time travel keeps each
   * snapshot's OWN shape, the change feed resolves across the
@@ -35,7 +37,7 @@ class SchemaAlterSpec extends SparkSpec {
     TableStore.append(mk(1L, 2L).coalesce(1), root) // v1
     TableStore.append(mk(3L).coalesce(1), root)     // v2
     val filesBefore = TableStore.liveAt(spark, root, 2L).map(_.path).toSet
-    assert(TableStore.addColumn(spark, root, "note", StringType) == 3L)
+    assert(TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil) == 3L)
     // zero data IO: the same files are live, byte-identical
     assert(TableStore.liveAt(spark, root, 3L).map(_.path).toSet ==
       filesBefore)
@@ -46,8 +48,10 @@ class SchemaAlterSpec extends SparkSpec {
     // typo — every file predates it, so none can match
     assert(post.where(col("note") === "x").count() == 0L)
     Seq(TableStore.pointLookupString(spark, root, "note", Seq("x")),
-      TableStore.readRangeString(spark, root, "note", "a", "z"),
-      TableStore.readPrefix(spark, root, "note", "x")).foreach {
+      TableStore.readWhere(spark, root,
+        Seq(GreaterThanOrEqual("note", "a"), LessThanOrEqual("note", "z"))),
+      TableStore.readWhere(spark, root,
+        Seq(StringStartsWith("note", "x")))).foreach {
       case (df, touched, live) =>
         assert(df.count() == 0L && touched == 0 && live == 2)
     }
@@ -93,7 +97,7 @@ class SchemaAlterSpec extends SparkSpec {
     }
     assert(e4.getMessage.contains("already exists"), e4.getMessage)
     intercept[Exception] {
-      TableStore.addColumn(spark, root, "_commit_version", LongType)
+      TableStore.alterSchema(spark, root, Seq("_commit_version" -> LongType), Nil)
     }
     // multi-column ADD is ATOMIC: a bad column anywhere in the list
     // leaves the table untouched (apply-all-or-none)
@@ -120,7 +124,7 @@ class SchemaAlterSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val root = tmp()
     TableStore.append(mk(1L).coalesce(1), root)       // v1
-    TableStore.addColumn(spark, root, "note", StringType) // v2
+    TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil) // v2
     TableStore.append(Seq((2L, 20L, "n2")).toDF("id", "v", "note")
       .coalesce(1), root) // v3
     // adds-only feed across (0, 3]: pre-ALTER file null-fills
@@ -139,7 +143,7 @@ class SchemaAlterSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val root = tmp()
     TableStore.append(mk(1L).coalesce(1), root)           // v1
-    TableStore.addColumn(spark, root, "note", StringType) // v2
+    TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil) // v2
     TableStore.append(Seq((2L, 20L, "n2")).toDF("id", "v", "note")
       .coalesce(1), root) // v3
     TableStore.append(mk(4L).withColumn("note", lit(null)
@@ -160,7 +164,7 @@ class SchemaAlterSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1L, 2L, 3L).coalesce(1), root,
       statsCols = Seq("id"))
-    TableStore.addColumn(spark, root, "note", StringType)
+    TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil)
     TableStore.append(Seq((4L, 40L, "n4")).toDF("id", "v", "note")
       .coalesce(1), root, statsCols = Seq("id"))
     TableStore.deleteWhereMoR(spark, root, col("id") === 2L,
@@ -188,7 +192,7 @@ class SchemaAlterSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val root = tmp()
     TableStore.append(mk(1L, 2L).coalesce(1), root)           // v1: no note
-    TableStore.addColumn(spark, root, "note", StringType)     // v2
+    TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil)     // v2
     TableStore.append(Seq((3L, 30L, "keepme")).toDF("id", "v", "note")
       .coalesce(1), root) // v3: carries values
     // a raw mixed read would infer ONE file's shape; if that file is
@@ -230,7 +234,7 @@ class SchemaAlterSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val root = tmp()
     TableStore.append(mk(1L, 2L).coalesce(1), root) // v1: no note
-    TableStore.addColumn(spark, root, "note", StringType)
+    TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil)
     TableStore.append(Seq((3L, 30L, "a"), (4L, 40L, null))
       .toDF("id", "v", "note").coalesce(1), root, bloomCols = Seq("note"))
     val g = cat("galtnull")
@@ -254,7 +258,7 @@ class SchemaAlterSpec extends SparkSpec {
     val root = tmp()
     TableStore.createEmpty(spark, root, StructType(Seq(
       StructField("id", LongType), StructField("v", LongType))))
-    assert(TableStore.addColumn(spark, root, "note", StringType) == 1L)
+    assert(TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil) == 1L)
     val empty = TableStore.read(spark, root)
     assert(empty.schema.fieldNames.toSeq == Seq("id", "v", "note"))
     assert(empty.count() == 0L)
@@ -268,7 +272,7 @@ class SchemaAlterSpec extends SparkSpec {
     TableStore.append(Seq((1, 10L), (2, 20L)).toDF("k", "v")
       .coalesce(1), root, statsCols = Seq("k")) // v1, int k
     val filesBefore = TableStore.liveAt(spark, root, 1L).map(_.path).toSet
-    assert(TableStore.widenColumns(spark, root,
+    assert(TableStore.alterSchema(spark, root, Nil,
       Seq("k" -> org.apache.spark.sql.types.LongType)) == 2L)
     assert(TableStore.liveAt(spark, root, 2L).map(_.path).toSet ==
       filesBefore, "widening must move zero data")
@@ -305,7 +309,7 @@ class SchemaAlterSpec extends SparkSpec {
         .toDF("k", "f", "d", "n")
         .withColumn("d", col("d").cast(DecimalType(6, 2)))
         .coalesce(1), root)
-    TableStore.widenColumns(spark, root, Seq(
+    TableStore.alterSchema(spark, root, Nil, Seq(
       "f" -> DoubleType, "d" -> DecimalType(12, 4)))
     val r = TableStore.read(spark, root).orderBy("k").collect()
     assert(r.map(_.getDouble(1)).toSeq == Seq(1.5, 2.5))
@@ -313,20 +317,20 @@ class SchemaAlterSpec extends SparkSpec {
       Seq("12.3400", "99.9900"))
     val vsBefore = TableStore.versions(spark, root)
     val e1 = intercept[IllegalArgumentException] {
-      TableStore.widenColumns(spark, root, Seq("k" -> ShortType))
+      TableStore.alterSchema(spark, root, Nil, Seq("k" -> ShortType))
     }
     assert(e1.getMessage.contains("value-preserving"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      TableStore.widenColumns(spark, root, Seq("k" -> StringType))
+      TableStore.alterSchema(spark, root, Nil, Seq("k" -> StringType))
     }
     assert(e2.getMessage.contains("value-preserving"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException] {
-      TableStore.widenColumns(spark, root, Seq("nope" -> LongType))
+      TableStore.alterSchema(spark, root, Nil, Seq("nope" -> LongType))
     }
     assert(e3.getMessage.contains("unknown column"), e3.getMessage)
     // LONG -> DOUBLE is lossy past 2^53 and must refuse
     val e4 = intercept[IllegalArgumentException] {
-      TableStore.widenColumns(spark, root, Seq("n" -> DoubleType))
+      TableStore.alterSchema(spark, root, Nil, Seq("n" -> DoubleType))
     }
     assert(e4.getMessage.contains("value-preserving"), e4.getMessage)
     assert(TableStore.versions(spark, root) == vsBefore,

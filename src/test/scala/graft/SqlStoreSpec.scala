@@ -319,7 +319,8 @@ class SqlStoreSpec extends SparkSpec {
       TableStore.pointLookupString(spark, root, "cid",
         Seq("id-5", "id-9")) -> "cid IN ('id-5', 'id-9')",
       // an int column: SQL probes it with an Integer literal
-      TableStore.pointLookup(spark, root, "n", Seq(5L)) -> "n = 5"
+      TableStore.readWhere(spark, root,
+        Seq(org.apache.spark.sql.sources.In("n", Array(5L)))) -> "n = 5"
     ).foreach { case ((typed, touched, live), cond) =>
       assert(live == 4)
       val viaSql = spark.sql(s"SELECT id, cid FROM $g.`$root` WHERE $cond")

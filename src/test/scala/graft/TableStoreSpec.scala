@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In,
+  LessThanOrEqual, StringStartsWith}
 import graft.ops.TableStore
 
 /** Commit-log table store: version numbering, snapshot isolation
@@ -350,8 +352,9 @@ class TableStoreSpec extends SparkSpec {
         .toDF("id", "x", "y").coalesce(1)
       TableStore.append(slice, root, statsCols = Seq("x", "y"))
     }
-    val (_, t0, tot0) = TableStore.readBox(spark, root,
-      ("x", 0L, 63L), ("y", 8L, 15L))
+    val (_, t0, tot0) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("x", 0L), LessThanOrEqual("x", 63L),
+        GreaterThanOrEqual("y", 8L), LessThanOrEqual("y", 15L)))
     assert(t0 == 3 && tot0 == 3, "scattered layout cannot prune")
     val v = TableStore.optimizeLayoutCurve(spark, root, "x", "y",
       bits = 6, targetBytes = 4L << 10)
@@ -363,19 +366,23 @@ class TableStoreSpec extends SparkSpec {
     assert(ids(root, Some(v)) == ids(root, Some(v - 1)))
     // a y-tight box (x unconstrained) now prunes: 1-D x-clustering
     // could never skip a file for this probe
-    val (df1, t1, tot1) = TableStore.readBox(spark, root,
-      ("x", 0L, 63L), ("y", 8L, 15L))
+    val (df1, t1, tot1) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("x", 0L), LessThanOrEqual("x", 63L),
+        GreaterThanOrEqual("y", 8L), LessThanOrEqual("y", 15L)))
     assert(tot1 > 2, s"curve optimize must produce multiple files: $tot1")
     assert(t1 < tot1, s"y-slab must skip files: $t1/$tot1")
     assert(df1.count() ==
       (0L until 4096L).count(id => (id * 37) % 64 >= 8 && (id * 37) % 64 <= 15))
     // an x-tight box prunes too — compactness holds in BOTH dims
-    val (_, t2, _) = TableStore.readBox(spark, root,
-      ("x", 8L, 15L), ("y", 0L, 63L))
+    val (_, t2, _) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("x", 8L), LessThanOrEqual("x", 15L),
+        GreaterThanOrEqual("y", 0L), LessThanOrEqual("y", 63L)))
     assert(t2 < tot1, s"x-slab must skip files: $t2/$tot1")
     // the pinned pre-optimize version still probes its own layout
-    val (_, tOld, totOld) = TableStore.readBox(spark, root,
-      ("x", 0L, 63L), ("y", 8L, 15L), version = Some(v - 1))
+    val (_, tOld, totOld) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("x", 0L), LessThanOrEqual("x", 63L),
+        GreaterThanOrEqual("y", 8L), LessThanOrEqual("y", 15L)),
+      version = Some(v - 1))
     assert(tOld == 3 && totOld == 3)
   }
 
@@ -389,24 +396,24 @@ class TableStoreSpec extends SparkSpec {
     TableStore.append(mk((0L until 1000L).filter(_ % 2 == 1): _*)
       .coalesce(1), root,
       statsCols = Seq("id"), bloomCols = Seq("id"))
-    val (df, touched, total) = TableStore.pointLookup(
-      spark, root, "id", Seq(84L, 422L, 918L)) // all even: file 1
+    val (df, touched, total) = TableStore.readWhere(
+      spark, root, Seq(In("id", Array(84L, 422L, 918L)))) // all even: file 1
     assert(total == 2 && touched == 1)
     assert(df.select("id").collect().map(_.getLong(0)).toSet ==
       Set(84L, 422L, 918L))
     // keys from both parities touch both files
-    val (_, t2, _) = TableStore.pointLookup(
-      spark, root, "id", Seq(84L, 85L))
+    val (_, t2, _) = TableStore.readWhere(
+      spark, root, Seq(In("id", Array(84L, 85L))))
     assert(t2 == 2)
     // absent keys: blooms may skip everything; result stays exact
-    val (miss, t3, _) = TableStore.pointLookup(
-      spark, root, "id", Seq(5000L, 6000L))
+    val (miss, t3, _) = TableStore.readWhere(
+      spark, root, Seq(In("id", Array(5000L, 6000L))))
     assert(miss.count() == 0L && t3 <= 2)
     // a file written WITHOUT a bloom is never skipped (not skippable)
     TableStore.append(mk(2000L).coalesce(1), root,
       statsCols = Seq("id"))
-    val (hit, t4, _) = TableStore.pointLookup(
-      spark, root, "id", Seq(2000L))
+    val (hit, t4, _) = TableStore.readWhere(
+      spark, root, Seq(In("id", Array(2000L))))
     assert(hit.count() == 1L && t4 == 1) // range stats already prune the others
   }
 
@@ -553,11 +560,13 @@ class TableStoreSpec extends SparkSpec {
     assert(bounds.length == 2 && bounds.forall(b =>
       b._1 != null && b._2 != null))
     assert(bounds.map(_._1).sorted.head == "dom-a/0000")
-    val (pf, pt, ptot) = TableStore.readPrefix(spark, root, "k", "dom-a/")
+    val (pf, pt, ptot) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", "dom-a/")))
     assert(ptot == 2 && pt == 1)
     assert(pf.count() == 200L)
-    val (rf, rt, _) = TableStore.readRangeString(
-      spark, root, "k", "dom-b/0010", "dom-b/0012")
+    val (rf, rt, _) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("k", "dom-b/0010"),
+        LessThanOrEqual("k", "dom-b/0012")))
     assert(rt == 1)
     assert(rf.select("v").collect().map(_.getLong(0)).toSet ==
       Set(10L, 11L, 12L))
@@ -565,10 +574,12 @@ class TableStoreSpec extends SparkSpec {
     // column stays loud
     TableStore.append(Seq((99L, "pre")).toDF("v", "payload")
       .coalesce(1), root)
-    val (_, pt2, ptot2) = TableStore.readPrefix(spark, root, "k", "dom-a/")
+    val (_, pt2, ptot2) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", "dom-a/")))
     assert(ptot2 == 3 && pt2 == 1)
     val ex = intercept[IllegalArgumentException] {
-      TableStore.readPrefix(spark, root, "k_typo", Seq("x").head)
+      TableStore.readWhere(spark, root,
+        Seq(StringStartsWith("k_typo", Seq("x").head)))
     }
     assert(ex.getMessage.contains("misspelled"))
   }
@@ -591,13 +602,14 @@ class TableStoreSpec extends SparkSpec {
       .select(col("smax_vals")("k")).collect().map(_.getString(0)).sorted
     assert(mx.head == "a" * 63 + "b") // bumped, tail dropped
     assert(mx.forall(_.length <= 64))
-    val (df, t, tot) = TableStore.readRangeString(
-      spark, root, "k", a69 + "4", a69 + "9")
+    val (df, t, tot) = TableStore.readWhere(spark, root,
+      Seq(GreaterThanOrEqual("k", a69 + "4"), LessThanOrEqual("k", a69 + "9")))
     assert(tot == 2 && t == 1, "the long-key file must survive pruning")
     assert(df.select("k").collect().map(_.getString(0)).toSet ==
       Set(a69 + "5"))
     // prefix probe landing past the truncation point: same soundness
-    val (pf, pt, _) = TableStore.readPrefix(spark, root, "k", a69)
+    val (pf, pt, _) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", a69)))
     assert(pt == 1 && pf.count() == 2L)
   }
 
@@ -610,7 +622,8 @@ class TableStoreSpec extends SparkSpec {
       .toDF("k", "v").coalesce(1), root)
     TableStore.append((0 until 50).map(i => (s"q/$i", i.toLong))
       .toDF("k", "v").coalesce(1), root)
-    val (df, t, tot) = TableStore.readPrefix(spark, root, "k", "q/")
+    val (df, t, tot) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", "q/")))
     assert(tot == 2 && t == 1)
     assert(df.count() == 50L)
   }
@@ -638,12 +651,14 @@ class TableStoreSpec extends SparkSpec {
     // snapshot read, prefix read (footer fallback), and a NEW commit
     // mixing schemas in one log all work
     assert(TableStore.read(spark, root).count() == 30L)
-    val (df, t, tot) = TableStore.readPrefix(spark, root, "k", "k2")
+    val (df, t, tot) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", "k2")))
     assert(tot == 1 && t == 1 && df.count() == 11L) // k2, k20..k29
     TableStore.append(Seq(("z9", 99L)).toDF("k", "v").coalesce(1),
       root, statsCols = Seq("k"))
     assert(TableStore.read(spark, root).count() == 31L)
-    val (_, t2, tot2) = TableStore.readPrefix(spark, root, "k", "z")
+    val (_, t2, tot2) =
+      TableStore.readWhere(spark, root, Seq(StringStartsWith("k", "z")))
     assert(tot2 == 2 && t2 == 1) // new commit prunes from the log
   }
 
@@ -924,8 +939,8 @@ class TableStoreSpec extends SparkSpec {
     assert(TableStore.versionAt(spark, root, between) == 1L)
     assert(TableStore.versionAt(spark, root,
       System.currentTimeMillis()) == 2L)
-    assert(TableStore.readAt(spark, root, between)
-      .count() == 1L)
+    assert(TableStore.read(spark, root,
+      Some(TableStore.versionAt(spark, root, between))).count() == 1L)
     // a timestamp before the first commit is loud, never "oldest"
     val ex = intercept[IllegalArgumentException] {
       TableStore.versionAt(spark, root, 1L)
@@ -1093,8 +1108,8 @@ class TableStoreSpec extends SparkSpec {
     TableStore.append(
       (1 to 100).map(i => (i, s"r$i")).toDF("id", "payload")
         .coalesce(1), root, bloomCols = Seq("id"))
-    val (df, touched, _) = TableStore.pointLookup(
-      spark, root, "id", Seq(42L))
+    val (df, touched, _) = TableStore.readWhere(
+      spark, root, Seq(In("id", Array(42L))))
     assert(touched == 1)
     assert(df.count() == 1L)
   }
@@ -1107,12 +1122,12 @@ class TableStoreSpec extends SparkSpec {
       (100L to 120L).map(i => (i, s"r$i", i * 10)).toDF(
         "id", "payload", "extra").coalesce(1), root,
       bloomCols = Seq("extra"))
-    val (hit, t, tot) = TableStore.pointLookup(
-      spark, root, "extra", Seq(1100L))
+    val (hit, t, tot) = TableStore.readWhere(
+      spark, root, Seq(In("extra", Array(1100L))))
     assert(tot == 2 && t == 1) // legacy file provably null, skipped
     assert(hit.count() == 1L)
     val ex = intercept[IllegalArgumentException] {
-      TableStore.pointLookup(spark, root, "extrra", Seq(1L))
+      TableStore.readWhere(spark, root, Seq(In("extrra", Array(1L))))
     }
     assert(ex.getMessage.contains("misspelled"))
   }
@@ -1668,9 +1683,9 @@ test("merge on a CONSTRAINED store: a violating batch refuses with " +
       .toDF("id", "payload", "dec", "ts", "arr", "m", "st", "region")
     def frames(root: String, v: Option[Long] = None) = Seq(
       TableStore.read(spark, root, v),
-      TableStore.pointLookup(spark, root, "id", Seq(3L), v)._1,
+      TableStore.readWhere(spark, root, Seq(In("id", Array(3L))), v)._1,
       // refuted by every file: the empty frame never touches a file
-      TableStore.pointLookup(spark, root, "id", Seq(-9L), v)._1,
+      TableStore.readWhere(spark, root, Seq(In("id", Array(-9L))), v)._1,
       TableStore.pointLookupString(spark, root, "payload", Seq("r5"), v)._1,
       TableStore.readRange(spark, root, "id", 0L, 30L, v)._1)
     def same(root: String, v: Option[Long] = None): Unit =
@@ -1691,7 +1706,8 @@ test("merge on a CONSTRAINED store: a violating batch refuses with " +
     same(clone)
     // pre-ALTER: the snapshot before the ALTER resolves from footers
     val pre = TableStore.versions(spark, plain).max
-    TableStore.addColumn(spark, plain, "extra", org.apache.spark.sql.types.StringType)
+    TableStore.alterSchema(spark, plain,
+      Seq("extra" -> org.apache.spark.sql.types.StringType), Nil)
     same(plain, Some(pre))
     assert(TableStore.read(spark, plain).columns.last == "extra")
 
@@ -1719,7 +1735,7 @@ test("merge on a CONSTRAINED store: a violating batch refuses with " +
     TableStore.append(mk(51L to 100L: _*).coalesce(1), root,
       statsCols = Seq("id"), bloomCols = Seq("id", "payload"))
     val (built, planJobs) = SparkJobs.during(spark) {
-      Seq(TableStore.pointLookup(spark, root, "id", Seq(7L)),
+      Seq(TableStore.readWhere(spark, root, Seq(In("id", Array(7L)))),
         TableStore.pointLookupString(spark, root, "payload", Seq("r70")),
         TableStore.readRange(spark, root, "id", 10L, 20L))
     }

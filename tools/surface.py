@@ -1,0 +1,36 @@
+#!/usr/bin/env python3
+"""Print the two size numbers the ROADMAP's design aim tracks: the line
+count of src/main, and the public defs of the versioned store
+(`ops/TableStore.scala`: defs at the object's top level, two-space
+indent, with no access modifier).
+
+Usage: surface.py [repo] [--list]
+
+`repo` defaults to the checkout this script lives in; `--list` also
+prints the public defs' names in file order. Standard library only.
+"""
+import pathlib
+import re
+import sys
+
+
+def main(argv):
+    args = [a for a in argv if not a.startswith("--")]
+    repo = pathlib.Path(args[0]) if args else \
+        pathlib.Path(__file__).resolve().parent.parent
+    main_dir = repo / "src" / "main"
+    lines = sum(p.read_bytes().count(b"\n")
+                for p in sorted(main_dir.rglob("*.scala")))
+    store = main_dir / "scala" / "graft" / "ops" / "TableStore.scala"
+    defs = [m.group(1) for m in
+            re.finditer(r"^  def ([A-Za-z_][A-Za-z0-9_]*)",
+                        store.read_text(encoding="utf-8"), re.M)]
+    print(f"src/main lines: {lines}")
+    print(f"TableStore public defs: {len(defs)}")
+    if "--list" in argv:
+        for d in defs:
+            print(f"  {d}")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])
