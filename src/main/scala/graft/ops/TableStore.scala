@@ -1964,7 +1964,7 @@ object TableStore {
       case LessThanOrEqual(c, v) => col(c) <= lit(v)
       case StringStartsWith(c, p) => col(c).startsWith(p)
       case other => throw new IllegalArgumentException(
-        s"readWhere prunes on no filter of the shape $other")
+        s"readWhere takes the filter shapes the store prunes on, not $other")
     }
 
   /** [[readWhere]] of `pcol` ∈ [lo, hi]. */

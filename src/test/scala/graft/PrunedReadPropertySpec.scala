@@ -20,10 +20,10 @@ import graft.sources.GraftFileIndex
   * [[GraftFileIndex]] keeps for the same predicate, footer bounds and
   * blooms included: one pruner, two callers. One generated conjunction
   * mixes a long range, a string IN and a prefix, a probe only
-  * [[TableStore.readWhere]]'s filter list can express. Every frame's schema, which
-  * the store resolves on the driver, must equal what Spark infers for
-  * the snapshot's live files (merged, once an ALTER declared one),
-  * including a snapshot pinned before the ALTER.
+  * [[TableStore.readWhere]]'s filter list can express. Every frame's
+  * schema, which the store resolves on the driver, must equal what
+  * Spark infers for the snapshot's live files (merged, once an ALTER
+  * declared one), including a snapshot pinned before the ALTER.
   */
 class PrunedReadPropertySpec extends SparkSpec {
 
