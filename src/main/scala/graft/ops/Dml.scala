@@ -196,19 +196,19 @@ object Dml {
     * holding its keys instead of scanning the table.
     *
     * Gated on the subquery's INPUT bytes (leaf plan statistics, the
-    * broadcast-threshold discipline) so a subquery over a 100 TB
-    * table is never executed speculatively, plus a hard cap on the
-    * collected distinct values as the driver-safety net; over either
+    * broadcast-threshold discipline; `inputBytesBound`, 64 MB) so a
+    * subquery over a 100 TB table is never executed speculatively,
+    * plus a hard cap on the collected distinct values as the
+    * driver-safety net (`valuesBound`, 131,072); over either
     * bound — or correlated, or multi-column — the predicate and both
     * plans stay exactly as they were. The COMMIT-RACE screen keeps
     * judging the ORIGINAL predicate: materialization pins the
     * subquery's result to this snapshot, but a concurrent add could
     * still have changed that result under serial execution, so the
     * refuse-on-any-add screen stands ([[screenFilters]]). */
-  private val InSubqueryInputBytesBound = 64L << 20
-  private val InSubqueryValuesBound = 1 << 17
-  private def materializeInSubqueries(spark: SparkSession,
-                                      pred: Column): Column = {
+  private[graft] def materializeInSubqueries(spark: SparkSession,
+      pred: Column, inputBytesBound: Long = 64L << 20,
+      valuesBound: Int = 1 << 17): Column = {
     import org.apache.spark.sql.catalyst.expressions.{In, InSubquery,
       ListQuery, Literal}
     val e = Bridge.expression(pred)
@@ -218,10 +218,10 @@ object Dml {
       case in @ InSubquery(values, lq: ListQuery)
           if values.size == 1 && lq.plan.output.size == 1 &&
             lq.outerAttrs.isEmpty && lq.joinCond.isEmpty &&
-            lq.plan.stats.sizeInBytes <= InSubqueryInputBytesBound =>
+            lq.plan.stats.sizeInBytes <= inputBytesBound =>
         val rows = Bridge.dataFrame(spark, lq.plan)
-          .distinct().limit(InSubqueryValuesBound + 1).collect()
-        if (rows.length > InSubqueryValuesBound) in
+          .distinct().limit(valuesBound + 1).collect()
+        if (rows.length > valuesBound) in
         else if (rows.isEmpty) Literal.FalseLiteral
         else In(values.head, rows.toSeq.map(r =>
           Literal.create(r.get(0), lq.plan.output.head.dataType)))
@@ -329,7 +329,13 @@ object Dml {
     * zero data IO — truncating a 100 TB table costs one log write.
     * Returns the committed version, or the current latest when no
     * row matches (a provable no-op commits nothing). */
-  def delete(spark: SparkSession, root: String, pred: Column): Long = {
+  def delete(spark: SparkSession, root: String, pred: Column): Long =
+    delete(spark, root, pred, materializeInSubqueries(spark, _))
+
+  /** [[delete]] with the IN-subquery step as a parameter, so a test
+    * can force either branch of [[materializeInSubqueries]]' gate. */
+  private[graft] def delete(spark: SparkSession, root: String, pred: Column,
+                            materialize: Column => Column): Long = {
     val snap = TableStore.snapshotOf(spark, root) match {
       case Some(s) => s
       case None => return 0L // anchored-but-empty store: typed no-op
@@ -361,7 +367,7 @@ object Dml {
     // one driver-side subquery evaluation serves BOTH passes below
     // (and unlocks the stats prune); no-op unless a small uncorrelated
     // IN-subquery is present — see materializeInSubqueries
-    val predM = materializeInSubqueries(spark, pred)
+    val predM = materialize(pred)
     val filters = predicateFilters(snapshot, predM)
     val candidates = TableStore.prunedFiles(spark, root, live,
       Some(snapshot.schema), filters)
@@ -401,7 +407,14 @@ object Dml {
     * committed version, or the latest when nothing matches. */
   def update(spark: SparkSession, root: String,
              set: Seq[(String, Column)],
-             pred: Option[Column] = None): Long = {
+             pred: Option[Column] = None): Long =
+    update(spark, root, set, pred, materializeInSubqueries(spark, _))
+
+  /** [[update]] with the IN-subquery step as a parameter (see the
+    * [[delete]] twin). */
+  private[graft] def update(spark: SparkSession, root: String,
+                            set: Seq[(String, Column)], pred: Option[Column],
+                            materialize: Column => Column): Long = {
     require(set.nonEmpty, "UPDATE needs at least one assignment")
     val snap = TableStore.snapshotOf(spark, root) match {
       case Some(s) => s
@@ -426,7 +439,7 @@ object Dml {
     // one driver-side subquery evaluation serves discovery AND the
     // rewrite (which then also takes the single-scan CASE shape);
     // no-op unless a small uncorrelated IN-subquery is present
-    val cond = materializeInSubqueries(spark, cond0)
+    val cond = materialize(cond0)
     // unconditional update: empty filters (touches everything, and
     // the commit-race screen must refuse on any concurrent add)
     val filters = pred.map(_ => predicateFilters(snapshot, cond))

@@ -345,21 +345,27 @@ object TableStore {
     val attempt = java.util.UUID.randomUUID.toString.take(8)
     val sub = s"v$n-$attempt"
     val dir = new Path(s"$root/$Data/$sub")
-    // bloom sizing does NOT follow per-file NDV: with no expected NDV
-    // declared, parquet allocates the whole max.bytes cap for every
-    // bloom column, so each bloom is 16 MB however few rows the file
-    // holds. The cap was raised from parquet's default 1 MB because
-    // that saturates around ~1M distinct keys per file (measured at
-    // the sf10 gate: fpp collapsed to ~1 and pruning died); 16 MB
-    // holds fpp through ~10M-key files. Lookups never read a bloom
-    // whole: `prunedFiles` reads one 32-byte block per probed key
+    // each file keeps the smallest bloom that holds its distinct keys
+    // at fpp 0.001: parquet's adaptive writer fills 16/8/4/2/1 MB
+    // candidates side by side, drops each one its distinct count
+    // outgrows, and writes the smallest left. The 16 MB cap holds fpp
+    // through ~10M-key files (parquet's default 1 MB saturated at the
+    // sf10 gate around ~1M keys and pruning died). The 1 MB floor
+    // (~583k keys) is deliberate: with KB-sized blooms the dead copies
+    // copy-on-write merges leave become most of a store's bytes
+    // (space amplification 1.51 → 1.87 on the daily-merge benchmark).
+    // The price is 31 MB of candidates per bloom column per open
+    // writer. Lookups never read a bloom whole: `prunedFiles` reads
+    // one 32-byte block per probed key, whatever size was kept
     val writer0 =
       if (bloomCols.isEmpty) df.write.mode("overwrite")
       else df.write.mode("overwrite")
         .option("parquet.bloom.filter.max.bytes", (16L << 20).toString)
+        .option("parquet.bloom.filter.adaptive.enabled", "true")
     val writer = bloomCols.foldLeft(writer0) {
       (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.fpp#$c", "0.001")
+        .option(s"parquet.bloom.filter.candidates.number#$c", "5")
     }
     writer.parquet(dir.toString)
     // first-touch schema anchor: keeps all-empty stores readable
@@ -1760,9 +1766,10 @@ object TableStore {
     * EqualTo/In a bloom can refute; it then survives iff some row
     * group's footer bounds pass them and its blooms may hold every
     * probe. Blooms are probed one 32-byte block per distinct hash
-    * ([[BloomProbe]]), not read whole: the store's blooms are 16 MB
-    * each. Null probes match nothing (SQL IN). A probed column in no
-    * logged bounds, no consulted footer and not `declared` (the
+    * ([[BloomProbe]]), not read whole: the store's blooms are 1 to
+    * 16 MB each (16 MB in files written before blooms were sized to
+    * their keys). Null probes match nothing (SQL IN). A probed column
+    * in no logged bounds, no consulted footer and not `declared` (the
     * snapshot's declared schema, or the SQL/DML relation's) is a
     * misspelling, not an evolved column: loud. */
   private[graft] def prunedFiles(spark: SparkSession, root: String,
@@ -1997,12 +2004,14 @@ object TableStore {
       val hint = first.fold(0L)(_.version) + 1
       val (laid, stats) = withDeclaredLayout(df, root, statsCols)
       val adds = writeData(laid, root, hint, stats)
-      enforceConstraints(spark, snapshotOf(spark, root), adds)
       if (adds.isEmpty) None
       else {
+        // the constraint check and the first commit attempt share one
+        // snapshot; only a lost race resolves again
+        var snap = snapshotOf(spark, root)
+        enforceConstraints(spark, snap, adds)
         var attempts = 0
         while (attempts < 64) {
-          val snap = snapshotOf(spark, root)
           val n = snap.fold(0L)(_.version) + 1
           // ORDER MATTERS: the marker check reads the log of the same
           // snapshot that observed version n-1 committed. A twin writer
@@ -2015,7 +2024,10 @@ object TableStore {
           try {
             commitLog(spark, root, n, adds, Seq.empty, Some(batchId))
             return Some(n)
-          } catch { case _: CommitConflictException => attempts += 1 }
+          } catch { case _: CommitConflictException =>
+            attempts += 1
+            snap = snapshotOf(spark, root)
+          }
         }
         throw new java.io.IOException(
           s"appendBatch($batchId) lost the commit race $attempts " +

@@ -3,10 +3,13 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.format.Util
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.functions.{col, format_string}
+import org.apache.spark.sql.sources.In
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.ops.TableStore
@@ -15,9 +18,12 @@ import graft.ops.TableStore
   * 32-byte block per distinct hash, against parquet-mr's whole-filter
   * read and `findHash`. Random files carry INT32, INT64 and BINARY
   * bloom columns of random bloom size in several row groups, next to
-  * an INT64 column without a bloom; every chunk is probed with held,
-  * absent and null values, alone and in lists, and both answers must
-  * agree exactly, false positives included.
+  * an INT64 column without a bloom; the same rows are also written
+  * through the store's own writer ([[TableStore.append]]), whose
+  * blooms take whatever size parquet's adaptive writer kept. Every
+  * chunk is probed with held, absent and null values, alone and in
+  * lists, and both answers must agree exactly, false positives
+  * included.
   */
 class BloomProbeSpec extends SparkSpec {
 
@@ -58,14 +64,16 @@ class BloomProbeSpec extends SparkSpec {
       .withInitialSeed(Seed(20261018L))
     val prop = Prop.forAllNoShrink(genShape, Gen.long) { (shape, salt) =>
       val dir = TempRoots.create("graft_bloomprobe") + "/f"
-      val w = shape.rows.toDF("i", "l", "s", "y").repartition(shape.files)
-        .write
+      val df = shape.rows.toDF("i", "l", "s", "y").repartition(shape.files)
+      val w = df.write
         // small row groups: parquet checks the size every 100 rows
         .option("parquet.block.size", "1024")
         .option("parquet.bloom.filter.max.bytes", shape.bloomBytes.toString)
       Seq("i", "l", "s").foldLeft(w)((w, c) =>
         w.option(s"parquet.bloom.filter.enabled#$c", "true"))
         .parquet(dir)
+      val store = TempRoots.create("graft_bloomprobe") + "/t"
+      TableStore.append(df, store, bloomCols = Seq("i", "l", "s"))
       val rnd = new scala.util.Random(salt)
       val held = shape.rows.map(_._4)
       def probes(f: Long => Any): Seq[Seq[Any]] = {
@@ -79,8 +87,10 @@ class BloomProbeSpec extends SparkSpec {
         "s" -> probes(k => s"key-$k"),
         "y" -> probes(k => java.lang.Long.valueOf(k)))
       val fs = new Path(dir).getFileSystem(conf)
-      fs.listStatus(new Path(dir)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).foreach { p =>
+      val stored = TableStore.liveAt(spark, store, 1L)
+        .map(e => new Path(TableStore.resolve(store, e.path)))
+      (fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")) ++ stored).foreach { p =>
           val reader = ParquetFileReader.open(
             HadoopInputFile.fromPath(p, conf))
           val probe = new TableStore.BloomProbe(spark, p.toString)
@@ -106,5 +116,37 @@ class BloomProbeSpec extends SparkSpec {
     assert(groups > 12, s"only $groups row groups")
     assert(refuted > 0 && bloomless > 0,
       s"vacuous: $refuted refutations, $bloomless bloomless chunks")
+  }
+
+  test("a store file with more than 583k distinct keys keeps a bloom " +
+    "over 1 MB, and absent keys still refute it") {
+    val root = TempRoots.create("graft_bloomwide") + "/t"
+    // a 1 MB bloom holds about 583k keys at fpp 0.001
+    TableStore.append(spark.range(700000L)
+      .select(format_string("key-%d", col("id")).as("k")).coalesce(1),
+      root, bloomCols = Seq("k"))
+    val Seq(entry) = TableStore.liveAt(spark, root, 1L)
+    val path = new Path(TableStore.resolve(root, entry.path))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val in = path.getFileSystem(conf).open(path)
+    val probe = new TableStore.BloomProbe(spark, path.toString)
+    try {
+      val chunks = reader.getFooter.getBlocks.asScala.toSeq
+        .map(_.getColumns.get(0))
+      chunks.foreach { cc =>
+        in.seek(cc.getBloomFilterOffset)
+        val bytes = Util.readBloomFilterHeader(in).getNumBytes
+        assert(bytes > (1 << 20), s"a $bytes-byte bloom for 700k keys")
+      }
+      def mayHold(v: String) = chunks.exists(probe.mayHold(_, Seq(v)))
+      assert(Seq("key-0", "key-350000", "key-699999").forall(mayHold))
+      val absent = (0 until 200).map(j => s"absent-$j")
+      val refuted = absent.filterNot(mayHold)
+      assert(refuted.size >= absent.size - 2,
+        s"only ${refuted.size} of ${absent.size} absent keys refuted")
+      assert(TableStore.readWhere(spark, root,
+        Seq(In("k", Array[Any](refuted.head))))._2 == 0)
+    } finally { probe.close(); in.close(); reader.close() }
   }
 }

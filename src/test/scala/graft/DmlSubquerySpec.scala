@@ -233,4 +233,75 @@ class DmlSubquerySpec extends SparkSpec {
     assert(e3.getMessage.contains("subquer"), e3.getMessage)
     assert(ids(root).size == 9, "refused statements must not mutate")
   }
+
+  test("both branches of the IN-subquery gate leave identical tables " +
+    "(seeded differential: empty, all-NULL, duplicate and NULL keys)") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      SubqueryExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.graftbridge.Bridge
+    import graft.ops.Dml
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    def key(nullPct: Int): Option[Long] =
+      if (rnd.nextInt(100) < nullPct) None else Some(rnd.nextInt(12).toLong)
+    // the gate's branches: materialized under the default bounds, live
+    // over the input-bytes bound, live over the distinct-values bound
+    val gates = Seq[(String, Column => Column)](
+      "materialized" -> (Dml.materializeInSubqueries(spark, _)),
+      "live (bytes)" -> (Dml.materializeInSubqueries(spark, _,
+        inputBytesBound = -1L)),
+      "live (values)" -> (Dml.materializeInSubqueries(spark, _,
+        valuesBound = 0)))
+    def live(c: Column) = SubqueryExpression.hasSubquery(Bridge.expression(c))
+    val subqueries = Seq(
+      "empty" -> Seq.empty[Option[Long]],
+      "all-NULL" -> Seq.fill(3)(Option.empty[Long]),
+      "duplicates" -> Seq.fill(8)(key(0)),
+      "mixed" -> Seq.fill(8)(key(25)))
+    subqueries.foreach { case (what, keys) =>
+      // target files with duplicate and NULL keys
+      val files = Seq.fill(2)(Seq.fill(15 + rnd.nextInt(10))(
+        (key(15), rnd.nextInt(1000).toLong)))
+      // the resolved predicate the SQL surface hands to Dml: analyzed,
+      // with the target column unbound again
+      keys.toDF("k").createOrReplaceTempView("dmlsub_gate")
+      def resolved(p: String) = Bridge.column(Seq(Option(0L)).toDF("id")
+        .where(expr(p)).queryExecution.analyzed
+        .collectFirst { case f: Filter => f.condition }
+        .get.transform {
+          case a: AttributeReference => UnresolvedAttribute(a.name)
+        })
+      val in = resolved("id IN (SELECT k FROM dmlsub_gate)")
+      val notIn = resolved("id NOT IN (SELECT k FROM dmlsub_gate)")
+      Seq(in, notIn).foreach { p =>
+        assert(live(gates(1)._2(p)),
+          s"$what: $p materialized over the bytes bound")
+        assert(!live(gates(0)._2(p)),
+          s"$what: $p left live under the default bounds")
+      }
+      val roots = gates.map { case (g, _) =>
+        val root = graft.TempRoots.create("graft_dmlsub_gate") + "/t"
+        files.foreach(f => TableStore.append(
+          f.toDF("id", "v").coalesce(1), root, statsCols = Seq("id")))
+        root
+      }
+      def rows(root: String) = TableStore.read(spark, root).collect()
+        .map(r => (Option(r.get(0)), r.getLong(1))).toSeq.sortBy(_.toString)
+      val ops = Seq[(String, (String, Column => Column) => Long)](
+        "UPDATE IN" -> ((root, m) => Dml.update(spark, root,
+          Seq("v" -> (col("v") + 1)), Some(in), m)),
+        "DELETE IN" -> ((root, m) => Dml.delete(spark, root, in, m)),
+        "DELETE NOT IN" -> ((root, m) => Dml.delete(spark, root, notIn, m)))
+      ops.foreach { case (op, run) =>
+        roots.zip(gates).foreach { case (root, (_, m)) => run(root, m) }
+        val want = rows(roots.head)
+        roots.zip(gates).tail.foreach { case (root, (g, _)) =>
+          assert(rows(root) == want, s"$what, $op: $g differs")
+        }
+      }
+    }
+  }
 }

@@ -11,7 +11,9 @@ import graft.sources.GraftCatalog
 /** Every store op resolves its snapshot from ONE listing of the
   * `_log` root: reads, the change feed, metadata digests, vacuum
   * plans, a SQL SELECT through the catalog table, and DML, counted on
-  * a store that lives on [[LogListingFileSystem]]'s scheme. */
+  * a store that lives on [[LogListingFileSystem]]'s scheme. A
+  * streaming batch append lists it twice: once before and once after
+  * its data write. */
 class SnapshotListingSpec extends SparkSpec {
 
   test("each store op lists the _log root once") {
@@ -47,6 +49,11 @@ class SnapshotListingSpec extends SparkSpec {
       "Dml.delete" -> listings(Dml.delete(spark, root, col("id") === 3L)))
     assert(counts.forall(_._2 == 1), s"_log root listings: $counts")
     assert(TableStore.read(spark, root).count() == 19L)
+    // appendBatch resolves once for its batch-id fast path, then once
+    // for both the constraint check and the commit that follows it
+    val batched = listings(TableStore.appendBatch(mk(100L), root, 7L))
+    assert(batched == 2, s"appendBatch: $batched _log root listings")
+    assert(TableStore.read(spark, root).count() == 29L)
   }
 }
 

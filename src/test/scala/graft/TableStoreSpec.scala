@@ -1747,4 +1747,29 @@ test("merge on a CONSTRAINED store: a violating batch refuses with " +
     assert(got.map(_.getLong(0)).toSeq == Seq(7L))
     assert(jobs == 1, s"a one-file lookup ran $jobs Spark jobs")
   }
+
+  test("a 25-row merge into a 4-file bloom store writes under 16 MB") {
+    import scala.jdk.CollectionConverters._
+    val s = spark; import s.implicits._
+    val root = tmp()
+    def rows(ks: Seq[Int], v: Long) =
+      ks.map(k => (f"c$k%05d", k.toLong, v)).toDF("cid", "key_num", "v")
+    (0 until 4).foreach { f =>
+      TableStore.append(rows(f * 1250 until (f + 1) * 1250, 0L).coalesce(1),
+        root, statsCols = Seq("key_num"), bloomCols = Seq("cid"))
+    }
+    def written(): Long =
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesWritten).sum
+    val b0 = written()
+    // 20 updates spread over all four files, 5 new keys
+    TableStore.merge(rows((0 until 20).map(_ * 250) ++ (5000 until 5005), 1L),
+      root, "cid", statsCols = Seq("key_num"), bloomCols = Seq("cid"))
+    val bytes = written() - b0
+    // each rewritten file carries a bloom sized to its 1,250 keys (the
+    // 1 MB floor), not the 16 MB cap
+    assert(bytes < (16L << 20), s"the merge wrote $bytes bytes")
+    val got = TableStore.read(spark, root)
+    assert(got.count() == 5005L && got.where(col("v") === 1L).count() == 25L)
+  }
 }
