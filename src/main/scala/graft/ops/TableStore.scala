@@ -353,10 +353,12 @@ object TableStore {
     // sf10 gate around ~1M keys and pruning died). The 1 MB floor
     // (~583k keys) is deliberate: with KB-sized blooms the dead copies
     // copy-on-write merges leave become most of a store's bytes
-    // (space amplification 1.51 → 1.87 on the daily-merge benchmark).
-    // The price is 31 MB of candidates per bloom column per open
-    // writer. Lookups never read a bloom whole: `prunedFiles` reads
-    // one 32-byte block per probed key, whatever size was kept
+    // (space amplification 1.51 → 1.87 on the daily-merge benchmark);
+    // the candidate count, parquet's default 5, is pinned here because
+    // it sets that floor (16 MB / 2^4). The price is 31 MB of
+    // candidates per bloom column per open writer, held until the
+    // writer closes. Lookups never read a bloom whole: `prunedFiles`
+    // reads one 32-byte block per probed key, whatever size was kept
     val writer0 =
       if (bloomCols.isEmpty) df.write.mode("overwrite")
       else df.write.mode("overwrite")

@@ -59,6 +59,10 @@ class BloomProbeSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     var groups, refuted, bloomless = 0
+    // the store's files keep their own counts: one row group each, with
+    // a 1 MB bloom that refutes nearly every absent key, they must not
+    // stand in for the small-block random files in the guards below
+    var storeChunks, storeRefuted = 0
     val params = SCTest.Parameters.default
       .withMinSuccessfulTests(6)
       .withInitialSeed(Seed(20261018L))
@@ -89,26 +93,29 @@ class BloomProbeSpec extends SparkSpec {
       val fs = new Path(dir).getFileSystem(conf)
       val stored = TableStore.liveAt(spark, store, 1L)
         .map(e => new Path(TableStore.resolve(store, e.path)))
-      (fs.listStatus(new Path(dir)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")) ++ stored).foreach { p =>
+      val random = fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+      (random.map(_ -> false) ++ stored.map(_ -> true)).foreach {
+        case (p, isStore) =>
           val reader = ParquetFileReader.open(
             HadoopInputFile.fromPath(p, conf))
           val probe = new TableStore.BloomProbe(spark, p.toString)
           try reader.getFooter.getBlocks.asScala.foreach { block =>
-            groups += 1
+            if (!isStore) groups += 1
             block.getColumns.asScala.foreach { cc =>
               val bf = reader.readBloomFilter(cc)
-              if (bf == null) bloomless += 1
+              if (isStore && bf != null) storeChunks += 1
+              if (!isStore && bf == null) bloomless += 1
               val t = cc.getPrimitiveType.getPrimitiveTypeName
               byCol(cc.getPath.toDotString).foreach { vs =>
                 val want = whole(bf, t, vs)
-                if (!want) refuted += 1
+                if (!want) { if (isStore) storeRefuted += 1 else refuted += 1 }
                 assert(probe.mayHold(cc, vs) == want,
                   s"${cc.getPath} in $p: probe of $vs disagrees")
               }
             }
           } finally { probe.close(); reader.close() }
-        }
+      }
       true
     }
     val res = SCTest.check(params, prop)
@@ -116,6 +123,8 @@ class BloomProbeSpec extends SparkSpec {
     assert(groups > 12, s"only $groups row groups")
     assert(refuted > 0 && bloomless > 0,
       s"vacuous: $refuted refutations, $bloomless bloomless chunks")
+    assert(storeChunks > 0 && storeRefuted > 0, s"vacuous store files: " +
+      s"$storeChunks bloom chunks, $storeRefuted refutations")
   }
 
   test("a store file with more than 583k distinct keys keeps a bloom " +

@@ -249,6 +249,8 @@ class DmlSubquerySpec extends SparkSpec {
       if (rnd.nextInt(100) < nullPct) None else Some(rnd.nextInt(12).toLong)
     // the gate's branches: materialized under the default bounds, live
     // over the input-bytes bound, live over the distinct-values bound
+    // (an empty subquery holds no values, so a zero values bound still
+    // materializes it, to FALSE)
     val gates = Seq[(String, Column => Column)](
       "materialized" -> (Dml.materializeInSubqueries(spark, _)),
       "live (bytes)" -> (Dml.materializeInSubqueries(spark, _,
@@ -281,6 +283,8 @@ class DmlSubquerySpec extends SparkSpec {
           s"$what: $p materialized over the bytes bound")
         assert(!live(gates(0)._2(p)),
           s"$what: $p left live under the default bounds")
+        assert(live(gates(2)._2(p)) == keys.nonEmpty,
+          s"$what: $p live over the values bound: ${keys.nonEmpty} expected")
       }
       val roots = gates.map { case (g, _) =>
         val root = graft.TempRoots.create("graft_dmlsub_gate") + "/t"
