@@ -8,10 +8,11 @@ import TableStore.FileEntry
 
 /** Row-level DML over the versioned store with AUTOMATIC pruning —
   * the engine behind `DELETE FROM` / `UPDATE` / `MERGE INTO` on the
-  * SQL surface (graft.sources.GraftDml*), and a first-class API in
-  * its own right. Where [[TableStore.deleteWhere]] takes the caller's
-  * explicit skipping hint, these ops derive the candidate file set
-  * from the predicate ITSELF: the condition is translated to
+  * SQL surface (graft.sources.GraftDml*), a first-class API in its
+  * own right, and the one copy-on-write [[rewrite]] behind the
+  * store's keyed upserts ([[TableStore.merge]], `applyChanges`,
+  * `mergeBatch`) and `replaceWhere`. These ops derive the candidate
+  * file set from the predicate ITSELF: the condition is translated to
   * `sources.Filter`s (Spark's own translation) and handed to
   * [[TableStore.prunedFiles]] — the same pruner every read path runs:
   * log bounds, then footer bounds and bloom probes. The reference
@@ -36,18 +37,19 @@ import TableStore.FileEntry
   *     UPDATE touches the files the layout localizes the key to,
   *     never the table.
   *
+  * Levels 2 and 3 run in [[rewrite]] for every op; each op supplies
+  * its level-1 candidates and its row transforms.
+  *
   * Determinism contract: predicates and assignment values must be
   * deterministic — discovery and rewrite evaluate them in separate
   * jobs, and a `rand()` that "matched" in discovery could keep
   * different rows in the rewrite (callers on the SQL path are
   * screened by [[graft.sources.GraftDmlRule]]; API callers own it).
-  * Snapshots carrying merge-on-read delete vectors refuse loudly
-  * (the [[TableStore.deleteWhere]] posture): fold vectors back with
-  * `purgeDeletes` first.
+  * Snapshots carrying merge-on-read delete vectors refuse loudly:
+  * fold vectors back with `purgeDeletes` first.
   *
   * Three-valued logic: a row is affected only when the predicate is
-  * DEFINITELY true; NULL keeps the row (the deleteWhere contract,
-  * and SQL's own WHERE semantics). */
+  * DEFINITELY true; NULL keeps the row (SQL's own WHERE semantics). */
 object Dml {
 
   /** The subquery-correlation anchor: every frame a DML predicate is
@@ -62,11 +64,11 @@ object Dml {
     * alias unchanged, so API callers never see it. */
   private[graft] val TargetAlias = "__graft_target"
 
-  /** Stats columns to re-declare on rewritten files: every column any
-    * live file carries logged bounds for — so a DML rewrite never
-    * silently degrades the table's future pruning. (Bloom filters are
-    * parquet-file-level, not logged; rewritten files drop them —
-    * re-establish with a stats-bearing OPTIMIZE if needed.) */
+  /** Stats columns every [[rewrite]] re-declares on top of the
+    * caller's: every column any live file carries logged bounds for —
+    * so a rewrite never silently degrades the table's future pruning.
+    * (Blooms are carried from the touched files' footers, see
+    * [[rewrite]].) */
   private def carriedStatsCols(live: Seq[FileEntry]): Seq[String] =
     live.flatMap(e => e.mins.keySet ++ e.maxs.keySet ++
       e.smins.keySet ++ e.smaxs.keySet).distinct.sorted
@@ -89,7 +91,7 @@ object Dml {
     * every conjunct, a file these filters REFUTE cannot hold a
     * matching row — sound for the candidate prune AND for the
     * commit-race serializability screen. */
-  private def predicateFilters(snapshot: DataFrame, pred: Column)
+  private[graft] def predicateFilters(snapshot: DataFrame, pred: Column)
       : Seq[org.apache.spark.sql.sources.Filter] =
     snapshot.alias(TargetAlias).where(pred).queryExecution.analyzed.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -149,24 +151,14 @@ object Dml {
     }.nonEmpty
   }
 
+  /** Refuse a nondeterministic predicate (`pred`) or assignment
+    * values (`cols`): discovery and rewrite evaluate them in separate
+    * jobs. The predicate is analyzed through a FILTER, the only
+    * position IN/EXISTS subqueries are plannable in. */
   private def requireDeterministic(snapshot: DataFrame, what: String,
-                                   cols: Column*): Unit =
-    cols.foreach { c =>
-      val e = snapshot.select(c).queryExecution.analyzed.expressions
-      require(e.forall(_.deterministic),
-        s"$what must be deterministic — discovery and rewrite evaluate " +
-          "it in separate jobs, and a nondeterministic match set would " +
-          "tear between them")
-    }
-
-  /** The predicate-position twin of [[requireDeterministic]]: analyze
-    * through a FILTER, the only position IN/EXISTS subqueries are
-    * plannable in — a subquery-bearing DELETE/UPDATE predicate would
-    * fail analysis inside a bare projection. */
-  private def requireDeterministicPred(snapshot: DataFrame, what: String,
-                                       pred: Column): Unit = {
-    val e = snapshot.alias(TargetAlias).where(pred)
-      .queryExecution.analyzed.expressions
+                                   pred: Column, cols: Column*): Unit = {
+    val e = snapshot.alias(TargetAlias).where(pred).select(cols: _*)
+      .queryExecution.analyzed.collect { case p => p.expressions }.flatten
     require(e.forall(_.deterministic),
       s"$what must be deterministic — discovery and rewrite evaluate " +
         "it in separate jobs, and a nondeterministic match set would " +
@@ -175,10 +167,12 @@ object Dml {
 
   /** Does a (possibly still name-bound) predicate carry a subquery?
     * Decides which rewrite shape the op takes — subquery predicates
-    * must stay in Filter position end to end. */
+    * must stay in Filter position end to end. Read from the whole
+    * column tree ([[Bridge.expressionTree]]): `col(k).isin(ds)` hides
+    * its subquery from a lazy top node. */
   private def hasSubquery(pred: Column): Boolean =
     org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-      .hasSubquery(Bridge.expression(pred))
+      .hasSubquery(Bridge.expressionTree(pred))
 
   /** Size-gated driver materialization of uncorrelated single-column
     * `IN (subquery)` predicates — the adaptive-strategy posture
@@ -211,7 +205,9 @@ object Dml {
       valuesBound: Int = 1 << 17): Column = {
     import org.apache.spark.sql.catalyst.expressions.{In, InSubquery,
       ListQuery, Literal}
-    val e = Bridge.expression(pred)
+    // the whole column tree: `col(k).isin(ds)` and a Column `!` over
+    // an analyzed IN-subquery only show their InSubquery there
+    val e = Bridge.expressionTree(pred)
     if (!org.apache.spark.sql.catalyst.expressions.SubqueryExpression
         .hasSubquery(e)) return pred
     val out = e.transform {
@@ -297,6 +293,23 @@ object Dml {
     }
   }
 
+  /** The frame a row-level op analyzes its predicate against and
+    * rewrites under: every live file scanned under the declared
+    * schema, else under the live files' footer schemas MERGED (one
+    * memoized footer per live file) — a column only some files carry
+    * (appended without an ALTER) resolves in a predicate and is
+    * carried through a rewrite, never dropped with the first file's
+    * shape. A snapshot with no live files reads as [[TableStore.read]]
+    * does. */
+  private[graft] def frameOf(spark: SparkSession, root: String,
+                             snap: Option[TableStore.Snapshot]): DataFrame =
+    snap.filter(_.live.nonEmpty) match {
+      case Some(s) => TableStore.scanFiles(spark, root,
+        Some(TableStore.scanSchema(spark, root, s.declared, s.live,
+          mergeAll = true)), s.live)
+      case None => TableStore.readSnapshot(spark, root, snap)
+    }
+
   /** The store's one scan ([[TableStore.scanFiles]]) of candidate
     * files under the snapshot's EFFECTIVE schema: the snapshot frame's
     * own schema is declared-aware ([[TableStore.read]]), so on an
@@ -312,6 +325,84 @@ object Dml {
                      entries: Seq[FileEntry]): DataFrame =
     TableStore.scanFiles(spark, root, Some(snapshot.schema), entries)
       .alias(TargetAlias)
+
+  /** The one row-level rewrite — levels 2 and 3 of the discovery
+    * contract (see the object doc), the write, the constraint check
+    * and the commit — behind [[delete]], [[update]], [[merge]] and the
+    * store's keyed upserts and `replaceWhere`:
+    *  - `hits` maps the scan of the level-1 `candidates` to one column
+    *    of `_metadata.file_path`s, one per changed row; [[toEntries]]
+    *    attributes the distinct paths exactly;
+    *  - `rewritten` maps the scan of those files to their rows after
+    *    the op: NEW content when `rewrittenIsNew` (an assignment may
+    *    have changed them), else survivors, which already passed the
+    *    table's constraints;
+    *  - `fresh` rows and survivors land in ONE write on a store with
+    *    no constraints; a constrained one writes and checks the new
+    *    content (plus `staged`, new files the caller already wrote)
+    *    first, then writes the survivors;
+    *  - files declare the caller's `statsCols` plus the stats the log
+    *    carries for live files, and the caller's `bloomCols` plus the
+    *    blooms the touched files' footers carry;
+    *  - `screen` None commits via [[TableStore.commitExclusive]] (a
+    *    lost race is loud); `Some(filters)` via
+    *    [[TableStore.commitRewriteRebasing]] under those filters.
+    * Nothing touched and nothing written commits nothing and returns
+    * the snapshot's version; else the committed version. */
+  private[graft] def rewrite(spark: SparkSession, root: String,
+      snap: Option[TableStore.Snapshot], snapshot: DataFrame,
+      candidates: Seq[FileEntry], hits: DataFrame => DataFrame,
+      rewritten: DataFrame => DataFrame, rewrittenIsNew: Boolean,
+      fresh: Option[DataFrame],
+      screen: Option[Seq[org.apache.spark.sql.sources.Filter]],
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      staged: Seq[FileEntry] = Nil, batchId: Option[Long] = None): Long = {
+    val prev = snap.fold(0L)(_.version)
+    val live = snap.fold(Seq.empty[FileEntry])(_.live)
+    // (Measured-and-rejected, r15: overlapping discovery with the
+    // new-content write on a two-thread pool made every DML gate
+    // SLOWER — concurrent Catalyst planning on the driver contends
+    // worse than the ~2 small jobs it hides; sequential stands.)
+    val touched =
+      if (candidates.isEmpty) Seq.empty[FileEntry]
+      else toEntries(hits(target(spark, root, snapshot, candidates))
+        .distinct().collect().map(_.getString(0)).toSeq, // bounded by file count
+        root, candidates)
+    val changed =
+      if (touched.isEmpty) None
+      else Some(rewritten(target(spark, root, snapshot, touched)))
+    val (news, kept) =
+      if (rewrittenIsNew) (fresh.toSeq ++ changed, Nil)
+      else (fresh.toSeq, changed.toSeq)
+    val n = prev + 1
+    val stats = (statsCols ++ carriedStatsCols(live)).distinct
+    val blooms =
+      (bloomCols ++ TableStore.bloomColsOf(spark, root, touched)).distinct
+    def write(dfs: Seq[DataFrame]): Seq[FileEntry] =
+      dfs.reduceOption(_ unionByName _)
+        .fold(Seq.empty[FileEntry])(TableStore.writeData(_, root, n, stats,
+          blooms))
+    val adds =
+      if (snap.forall(_.constraints.isEmpty)) write(news ++ kept)
+      else {
+        val newAdds = write(news)
+        TableStore.enforceConstraints(spark, snap, staged ++ newAdds)
+        newAdds ++ write(kept)
+      }
+    if (touched.isEmpty && staged.isEmpty && adds.isEmpty) return prev
+    // a rewrite that touched nothing is a pure append: no rewrite
+    // marker, so an adds-only change feed stays consumable across it
+    val marker = if (touched.isEmpty) None else Some("rewrite")
+    screen match {
+      case None =>
+        TableStore.commitExclusive(spark, root, n, staged ++ adds,
+          touched.map(_.path), marker, batchId)
+        n
+      case Some(filters) =>
+        TableStore.commitRewriteRebasing(spark, root, n, staged ++ adds,
+          touched.map(_.path), filters, marker)
+    }
+  }
 
   /** The DELETE execution mode knob the SQL surface reads:
     * `SET spark.graft.dml.deleteMode = mor` switches [[delete]] from
@@ -358,12 +449,12 @@ object Dml {
     }
     val mor = spark.conf.get(DeleteModeKey, "cow")
       .equalsIgnoreCase("mor")
-    // copy-on-write refuses outstanding vectors (the deleteWhere
-    // contract); merge-on-read composes with them (the new vector
-    // covers only rows still VISIBLE)
+    // copy-on-write refuses outstanding vectors; merge-on-read
+    // composes with them (the new vector covers only rows still
+    // VISIBLE)
     if (!mor) snap.requireNoDvs("Dml.delete")
-    val snapshot = TableStore.readSnapshot(spark, root, Some(snap))
-    requireDeterministicPred(snapshot, "a DELETE predicate", pred)
+    val snapshot = frameOf(spark, root, Some(snap))
+    requireDeterministic(snapshot, "a DELETE predicate", pred)
     // one driver-side subquery evaluation serves BOTH passes below
     // (and unlocks the stats prune); no-op unless a small uncorrelated
     // IN-subquery is present — see materializeInSubqueries
@@ -377,25 +468,15 @@ object Dml {
       // candidates; data files stay byte-identical (the KB-sized
       // right-to-be-forgotten commit — purge_deletes folds later)
       return TableStore.deleteMoRTouched(spark, snap, predM, candidates)
-    // exact discovery: which candidates HOLD a definitely-matching row
-    val hitUris = target(spark, root, snapshot, candidates)
-      .where(coalesce(predM, lit(false)))
-      .select(col("_metadata.file_path")).distinct()
-      .collect().map(_.getString(0)).toSeq // bounded by file count
-    if (hitUris.isEmpty) return prev
-    val touched = toEntries(hitUris, root, candidates)
-    val kept = target(spark, root, snapshot, touched)
-      .where(!coalesce(predM, lit(false)))
-    val n = prev + 1
-    val adds = TableStore.writeData(kept, root, n,
-      carriedStatsCols(live))
-    // kept rows are a subset of rows that already passed the table's
-    // constraints — nothing new to validate. A lost version race
-    // rebases when the racer is provably disjoint (pure appends the
-    // predicate's filters refute) — the streaming-sink coexistence
+    val matched = coalesce(predM, lit(false))
+    // kept rows are survivors: nothing new to validate. A lost version
+    // race rebases when the racer is provably disjoint (pure appends
+    // the predicate's filters refute) — the streaming-sink coexistence
     // contract layout rewrites already have.
-    TableStore.commitRewriteRebasing(spark, root, n, adds,
-      touched.map(_.path), screenFilters(snapshot, pred, filters))
+    rewrite(spark, root, Some(snap), snapshot, candidates,
+      hits = _.where(matched).select(col("_metadata.file_path")),
+      rewritten = _.where(!matched), rewrittenIsNew = false,
+      fresh = None, screen = Some(screenFilters(snapshot, pred, filters)))
   }
 
   /** `UPDATE store SET c = v, … WHERE pred` — copy-on-write, one
@@ -423,7 +504,7 @@ object Dml {
     val (prev, live) = (snap.version, snap.live)
     snap.requireNoDvs("Dml.update")
     if (live.isEmpty) return prev
-    val snapshot = TableStore.readSnapshot(spark, root, Some(snap))
+    val snapshot = frameOf(spark, root, Some(snap))
     val fields = snapshot.schema.fields.map(f => f.name -> f).toMap
     set.foreach { case (c, _) =>
       require(fields.contains(c),
@@ -433,9 +514,8 @@ object Dml {
       "UPDATE assigns a column twice")
     // (an anchored-but-empty store exits at live.isEmpty above)
     val cond0 = pred.getOrElse(lit(true))
-    requireDeterministicPred(snapshot, "an UPDATE predicate", cond0)
-    requireDeterministic(snapshot, "an UPDATE assignment",
-      set.map(_._2): _*)
+    requireDeterministic(snapshot, "an UPDATE predicate or assignment",
+      cond0, set.map(_._2): _*)
     // one driver-side subquery evaluation serves discovery AND the
     // rewrite (which then also takes the single-scan CASE shape);
     // no-op unless a small uncorrelated IN-subquery is present
@@ -450,12 +530,7 @@ object Dml {
       case None => live // unconditional update touches everything
     }
     if (candidates.isEmpty) return prev
-    val hitUris = target(spark, root, snapshot, candidates)
-      .where(coalesce(cond, lit(false)))
-      .select(col("_metadata.file_path")).distinct()
-      .collect().map(_.getString(0)).toSeq // bounded by file count
-    if (hitUris.isEmpty) return prev
-    val touched = toEntries(hitUris, root, candidates)
+    val matched = coalesce(cond, lit(false))
     val assigned = set.toMap
     // assignments evaluate against the ORIGINAL row in both shapes
     // (simultaneous-assignment semantics: a select's projections all
@@ -468,30 +543,25 @@ object Dml {
       assigned.get(c).map(_.cast(fields(c).dataType).as(c))
         .getOrElse(col(c))
     }
-    val rewritten =
-      if (hasSubquery(cond)) {
-        val base = target(spark, root, snapshot, touched)
-        base.where(coalesce(cond, lit(false))).select(applied: _*)
-          .unionByName(base.where(!coalesce(cond, lit(false)))
+    def rewritten(t: DataFrame): DataFrame =
+      if (hasSubquery(cond))
+        t.where(matched).select(applied: _*)
+          .unionByName(t.where(!matched)
             .select(snapshot.columns.toIndexedSeq.map(col): _*))
-      } else target(spark, root, snapshot, touched).select(
-        snapshot.columns.toIndexedSeq.map { c =>
-          assigned.get(c) match {
-            case Some(v) =>
-              when(coalesce(cond, lit(false)),
-                v.cast(fields(c).dataType)).otherwise(col(c)).as(c)
-            case None => col(c)
-          }
-        }: _*)
-    val n = prev + 1
-    val adds = TableStore.writeData(rewritten, root, n,
-      carriedStatsCols(live))
-    // updated rows are NEW content: re-validate against constraints
-    TableStore.enforceConstraints(spark, Some(snap), adds)
-    // race screen judges the ORIGINAL predicate: a materialized
+      else t.select(snapshot.columns.toIndexedSeq.map { c =>
+        assigned.get(c) match {
+          case Some(v) =>
+            when(matched, v.cast(fields(c).dataType)).otherwise(col(c)).as(c)
+          case None => col(c)
+        }
+      }: _*)
+    // updated rows are NEW content, re-validated against constraints;
+    // the race screen judges the ORIGINAL predicate: a materialized
     // subquery's result could still change under serial execution
-    TableStore.commitRewriteRebasing(spark, root, n, adds,
-      touched.map(_.path), screenFilters(snapshot, cond0, filters))
+    rewrite(spark, root, Some(snap), snapshot, candidates,
+      hits = _.where(matched).select(col("_metadata.file_path")),
+      rewritten = rewritten, rewrittenIsNew = true, fresh = None,
+      screen = Some(screenFilters(snapshot, cond0, filters)))
   }
 
   /** One WHEN MATCHED clause: `set = None` is DELETE, `Some(…)` is
@@ -540,7 +610,7 @@ object Dml {
     // NOT MATCHED inserts land as the first real commit
     val snap = TableStore.snapshotOf(spark, root)
     snap.foreach(_.requireNoDvs("Dml.merge"))
-    val snapshot = TableStore.readSnapshot(spark, root, snap)
+    val snapshot = frameOf(spark, root, snap)
     val tCols = snapshot.columns.toIndexedSeq
     require(tCols.contains(targetKey),
       s"merge key $targetKey is not a column of $root [${tCols.mkString(",")}]")
@@ -590,7 +660,6 @@ object Dml {
                         snapshot: DataFrame,
                         tCols: IndexedSeq[String],
                         fields: Map[String, org.apache.spark.sql.types.StructField]): Long = {
-    val prev = snap.fold(0L)(_.version)
     val live = snap.fold(Seq.empty[FileEntry])(_.live)
     // the source's key span as filters — drives BOTH the candidate
     // prune and the commit-race serializability screen (a concurrent
@@ -619,11 +688,10 @@ object Dml {
     val srcPresent = col("__graft_src_present")
     val src = source.withColumn("__graft_src_present", lit(true))
 
-    // the matched / not-matched split: LEFT join of candidate content
+    // the matched / not-matched split: LEFT join of a target scan
     // against the source under the FULL on-condition
-    def joined(entries: Seq[FileEntry]): DataFrame =
-      target(spark, root, snapshot, entries)
-        .withColumn("__graft_file", col("_metadata.file_path"))
+    def joined(t: DataFrame): DataFrame =
+      t.withColumn("__graft_file", col("_metadata.file_path"))
         .withColumn("__graft_rid", col("_metadata.row_index"))
         .join(src, on, "left")
 
@@ -641,27 +709,18 @@ object Dml {
       }
     }
 
-    // exact discovery: files holding a row some clause CHANGES, plus
-    // the cardinality guard (>1 source rows matching one target row).
-    // Both only matter when a clause can touch target rows at all —
-    // an insert-only merge rewrites nothing, and a multi-matched
-    // target row is then unambiguous (it just isn't inserted), so the
-    // SQL standard allows it there.
+    // exact discovery covers files holding a row some clause CHANGES;
+    // the cardinality guard (>1 source rows matching one target row)
+    // runs first. Both only matter when a clause can touch target rows
+    // at all — an insert-only merge rewrites nothing, and a
+    // multi-matched target row is then unambiguous (it just isn't
+    // inserted), so the SQL standard allows it there.
     val rowClauses = matched.nonEmpty || notMatchedBySource.nonEmpty
-    val (touched, cardinalityBad): (Seq[FileEntry], Boolean) =
-      if (candidates.isEmpty || !rowClauses) (Seq.empty, false)
-      else {
-        val j = joined(candidates)
-        val dup =
-          if (matched.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else j.where(srcPresent.isNotNull)
-            .groupBy(col("__graft_file"), col("__graft_rid"))
-            .count().where(col("count") > 1).limit(1).collect()
-        val hitUris = j.where(actionCol() >= 0)
-          .select(col("__graft_file")).distinct()
-          .collect().map(_.getString(0)).toSeq // bounded by file count
-        (toEntries(hitUris, root, candidates), dup.nonEmpty)
-      }
+    val cardinalityBad = candidates.nonEmpty && matched.nonEmpty &&
+      joined(target(spark, root, snapshot, candidates))
+        .where(srcPresent.isNotNull)
+        .groupBy(col("__graft_file"), col("__graft_rid"))
+        .count().where(col("count") > 1).limit(1).collect().nonEmpty
     require(!cardinalityBad,
       s"MERGE cardinality violation at $root: a target row matches " +
         "more than one source row under WHEN MATCHED clauses — the " +
@@ -669,44 +728,41 @@ object Dml {
         "on the merge key")
 
     // rewrite pass: only the touched files, clause actions applied
-    val rewritten: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else {
-        val j = joined(touched)
-        val act = actionCol().as("__graft_act")
-        val deleteActs =
-          matched.zipWithIndex.collect { case (wm, i) if wm.set.isEmpty => i } ++
-            notMatchedBySource.zipWithIndex.collect {
-              case (wn, i) if wn.set.isEmpty => 100 + i }
-        val updateActs: Seq[(Int, Map[String, Column])] =
-          matched.zipWithIndex.collect { case (wm, i) if wm.set.isDefined =>
-            (i, wm.set.get.toMap) } ++
-            notMatchedBySource.zipWithIndex.collect {
-              case (wn, i) if wn.set.isDefined => (100 + i, wn.set.get.toMap) }
-        // one output row per surviving TARGET row: with no matched
-        // clauses the cardinality guard is off, so a multi-matched
-        // kept row appears once per source match in the left join —
-        // (file, row-index) is the row's identity, and every copy
-        // projects to the same target columns (act -1 keeps, NMBS
-        // rows are unmatched and unique), so any-one-of is exact
-        val withAct = j.withColumn("__graft_act", act)
-          .where(!col("__graft_act").isin(deleteActs: _*))
-          .dropDuplicates("__graft_file", "__graft_rid")
-        Some(withAct.select(tCols.map { c =>
-          updateActs.foldLeft(null: Column) { case (acc, (i, setMap)) =>
-            setMap.get(c) match {
-              case Some(v) =>
-                val cast = v.cast(fields(c).dataType)
-                if (acc == null) when(col("__graft_act") === i, cast)
-                else acc.when(col("__graft_act") === i, cast)
-              case None => acc
-            }
-          } match {
-            case null => col(c).as(c)
-            case chain => chain.otherwise(col(c)).as(c)
+    def rewritten(t: DataFrame): DataFrame = {
+      val act = actionCol().as("__graft_act")
+      val deleteActs =
+        matched.zipWithIndex.collect { case (wm, i) if wm.set.isEmpty => i } ++
+          notMatchedBySource.zipWithIndex.collect {
+            case (wn, i) if wn.set.isEmpty => 100 + i }
+      val updateActs: Seq[(Int, Map[String, Column])] =
+        matched.zipWithIndex.collect { case (wm, i) if wm.set.isDefined =>
+          (i, wm.set.get.toMap) } ++
+          notMatchedBySource.zipWithIndex.collect {
+            case (wn, i) if wn.set.isDefined => (100 + i, wn.set.get.toMap) }
+      // one output row per surviving TARGET row: with no matched
+      // clauses the cardinality guard is off, so a multi-matched
+      // kept row appears once per source match in the left join —
+      // (file, row-index) is the row's identity, and every copy
+      // projects to the same target columns (act -1 keeps, NMBS
+      // rows are unmatched and unique), so any-one-of is exact
+      val withAct = joined(t).withColumn("__graft_act", act)
+        .where(!col("__graft_act").isin(deleteActs: _*))
+        .dropDuplicates("__graft_file", "__graft_rid")
+      withAct.select(tCols.map { c =>
+        updateActs.foldLeft(null: Column) { case (acc, (i, setMap)) =>
+          setMap.get(c) match {
+            case Some(v) =>
+              val cast = v.cast(fields(c).dataType)
+              if (acc == null) when(col("__graft_act") === i, cast)
+              else acc.when(col("__graft_act") === i, cast)
+            case None => acc
           }
-        }: _*))
-      }
+        } match {
+          case null => col(c).as(c)
+          case chain => chain.otherwise(col(c)).as(c)
+        }
+      }: _*)
+    }
 
     // inserts: source rows matching NO target row in the candidate set
     // (candidates cover every file that can hold the key — a row
@@ -735,25 +791,15 @@ object Dml {
         }: _*))
       }
 
-    if (touched.isEmpty && inserts.isEmpty) return prev
-    val n = prev + 1
-    val stats = carriedStatsCols(live)
-    val rewriteAdds =
-      rewritten.map(TableStore.writeData(_, root, n, stats))
-        .getOrElse(Seq.empty)
-    val insertAdds =
-      inserts.map(TableStore.writeData(_, root, n, stats))
-        .getOrElse(Seq.empty)
-    if (touched.isEmpty && insertAdds.isEmpty) return prev
     // rewritten rows may carry UPDATE-assigned values and inserts are
-    // new content — both re-validate against the CHECK constraints
-    TableStore.enforceConstraints(spark, snap, rewriteAdds ++ insertAdds)
-    // a SELF-READING source voids the key-span screen (a concurrent
-    // add its span refutes can still change what the source computes)
-    // — refuse on any concurrent add then, like subquery predicates
-    TableStore.commitRewriteRebasing(spark, root, n,
-      rewriteAdds ++ insertAdds, touched.map(_.path),
-      if (readsStore(source, root)) Seq.empty else spanFilters,
-      marker = if (touched.isEmpty) None else Some("rewrite"))
+    // new content — both re-validate against the CHECK constraints. A
+    // SELF-READING source voids the key-span screen (a concurrent add
+    // its span refutes can still change what the source computes) —
+    // refuse on any concurrent add then, like subquery predicates
+    rewrite(spark, root, snap, snapshot,
+      if (rowClauses) candidates else Seq.empty,
+      hits = joined(_).where(actionCol() >= 0).select(col("__graft_file")),
+      rewritten = rewritten, rewrittenIsNew = true, fresh = inserts,
+      screen = Some(if (readsStore(source, root)) Seq.empty else spanFilters))
   }
 }

@@ -266,6 +266,16 @@ object TableStore {
     footer
   }
 
+  /** The columns whose blooms the footers of `entries` carry. */
+  private[graft] def bloomColsOf(spark: SparkSession, root: String,
+                                 entries: Seq[FileEntry]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    entries.flatMap(e => footerOf(spark, resolve(root, e.path), e.bytes)
+      .getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString))
+      .distinct
+  }
+
   /** Rows + per-column [min, max] per declared stats column, from
     * file `f`'s footer. Columns dispatch on their PHYSICAL storage:
     * plain integers ride the long maps, UTF-8 strings ride the
@@ -1127,11 +1137,13 @@ object TableStore {
     * `ParquetFileFormat.readSchemaFromFooter`. The merge branch is
     * driver-serial: a footer not yet memoized is one file open after
     * another, where Spark's inference would read them in one parallel
-    * job. No store caller sets that conf. `entries` must be non-empty
+    * job. No store caller sets that conf; a row-level rewrite merges
+    * with `mergeAll` ([[Dml.frameOf]]). `entries` must be non-empty
     * when nothing is declared. */
-  private def scanSchema(spark: SparkSession, root: String,
-                         declared: Option[org.apache.spark.sql.types.StructType],
-                         entries: Seq[FileEntry])
+  private[graft] def scanSchema(spark: SparkSession, root: String,
+                                declared: Option[org.apache.spark.sql.types.StructType],
+                                entries: Seq[FileEntry],
+                                mergeAll: Boolean = false)
       : org.apache.spark.sql.types.StructType =
     declared.getOrElse {
       val conf = spark.sparkContext.hadoopConfiguration
@@ -1139,8 +1151,8 @@ object TableStore {
         val p = new Path(resolve(root, e.path))
         (p.getFileSystem(conf).makeQualified(p), e)
       }.sortBy(_._1.toString)
-      val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
-        .toBoolean
+      val merge = mergeAll ||
+        spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
       Bridge.footerSchema(spark,
         (if (merge) byPath else byPath.take(1)).map { case (p, e) =>
           new Footer(p, footerOf(spark, resolve(root, e.path), e.bytes))
@@ -1167,14 +1179,14 @@ object TableStore {
   }
 
   /** Merge-on-read row deletes — the cheap half of the delete
-    * spectrum: instead of rewriting every touched file ([[deleteWhere]]
-    * — copy-on-write), commit a DELETE VECTOR of (file name, row
-    * index) pairs; the data files stay byte-identical and [[read]]
-    * applies the vectors with one anti-join. Deleting one row from a
-    * 100 TB table costs a KB-sized vector write, not a file rewrite.
-    * `pruneBy` is the same explicit skipping hint as deleteWhere;
-    * rows where the predicate is NULL are KEPT (three-valued
-    * semantics, the deleteWhere contract).
+    * spectrum: instead of rewriting every touched file
+    * ([[Dml.delete]] — copy-on-write), commit a DELETE VECTOR of
+    * (file name, row index) pairs; the data files stay byte-identical
+    * and [[read]] applies the vectors with one anti-join. Deleting one
+    * row from a 100 TB table costs a KB-sized vector write, not a
+    * file rewrite. Candidates are pruned by the predicate's own
+    * translated filters, as [[Dml.delete]]'s are; rows where the
+    * predicate is NULL are KEPT (three-valued semantics).
     *
     * Contract: vectors are a TRANSIENT state. Snapshot reads
     * ([[read]], any version) are vector-aware; every operation that
@@ -1184,18 +1196,16 @@ object TableStore {
     * into clean files. Returns the committed version, or the current
     * one when nothing matched (no-op, no commit). */
   def deleteWhereMoR(spark: SparkSession, root: String,
-                     pred: org.apache.spark.sql.Column,
-                     pruneBy: (String, Long, Long)): Long = {
-    val (pcol, lo, hi) = pruneBy
-    require(lo <= hi, s"empty prune interval [$lo, $hi]")
+                     pred: org.apache.spark.sql.Column): Long = {
     val s = resolved(spark, root)
-    deleteMoRTouched(spark, s, pred,
-      prunedFiles(spark, root, s.live, s.declared, within(pcol, lo, hi)))
+    val frame = Dml.frameOf(spark, root, Some(s))
+    deleteMoRTouched(spark, s, pred, prunedFiles(spark, root, s.live,
+      Some(frame.schema), Dml.predicateFilters(frame, pred)))
   }
 
   /** The merge-on-read delete core over an explicit candidate set —
-    * shared by [[deleteWhereMoR]] (interval-hint pruning) and the SQL
-    * DML path ([[Dml]] — predicate-derived pruning). Commits a delete
+    * shared by [[deleteWhereMoR]] and the SQL DML path ([[Dml]]),
+    * both pruned by the predicate's own filters. Commits a delete
     * VECTOR for the definitely-matching rows of snapshot `s`'s
     * `touched` files; data files stay byte-identical. */
   private[graft] def deleteMoRTouched(spark: SparkSession, s: Snapshot,
@@ -2108,47 +2118,6 @@ object TableStore {
       .start()
       .awaitTermination()
 
-  /** Copy-on-write row deletes — the right-to-be-forgotten op a
-    * training-data store must answer without rewriting the world.
-    * `pred` selects the rows to REMOVE; `pruneBy = (column, lo, hi)`
-    * is the caller's skipping hint ("every matching row has `column`
-    * in [lo, hi]" — the same explicit-interval contract file-skipping
-    * readers run): live files whose footer [min, max] for that column
-    * doesn't intersect [lo, hi] are not read, not rewritten, and stay
-    * live; only intersecting files are rewritten with the matching
-    * rows dropped. At 100 TB deleting one user's documents touches
-    * the files that can contain them, proportional to the key's
-    * locality in the layout, never the table. Old snapshots keep the
-    * deleted rows until [[vacuum]] retires them — deletion is a new
-    * VERSION, so the audit trail survives exactly as long as the
-    * retention window says it should.
-    *
-    * Returns the committed version, or the current latest when no
-    * file overlaps the hint (a provable no-op commits nothing). */
-  def deleteWhere(spark: SparkSession, root: String,
-                  pred: org.apache.spark.sql.Column,
-                  pruneBy: (String, Long, Long),
-                  statsCols: Seq[String] = Nil,
-                  bloomCols: Seq[String] = Nil): Long = {
-    val (pcol, lo, hi) = pruneBy
-    require(lo <= hi, s"empty prune interval [$lo, $hi]")
-    val snap = fileSnapshot(spark, root, None, "deleteWhere")
-    val prev = snap.version
-    val touched =
-      prunedFiles(spark, root, snap.live, snap.declared, within(pcol, lo, hi))
-    if (touched.isEmpty) return prev
-    // keep a row unless the predicate is DEFINITELY true: under
-    // three-valued logic `!pred` drops NULL-valued rows the caller
-    // never selected — a silent data loss, not a delete
-    val kept = readLiveFiles(spark, snap, touched)
-      .where(!coalesce(pred, lit(false)))
-    val n = prev + 1
-    commitExclusive(spark, root, n,
-      writeData(kept, root, n, statsCols, bloomCols),
-      touched.map(_.path), marker = Some("rewrite"))
-    n
-  }
-
   /** Predicate-scoped atomic overwrite — "replace this slice" as ONE
     * commit: every live row matching `pred` is removed and `df`
     * inserted, so readers see either the old slice or the new one,
@@ -2162,26 +2131,22 @@ object TableStore {
     * row of `df` must DEFINITELY satisfy `pred` — otherwise a retried
     * backfill would duplicate the out-of-scope rows it smuggled in,
     * exactly the corruption the operation exists to prevent. NULL
-    * predicate rows fail the check (not definitely in scope).
-    * `pruneBy` must cover `pred` (the [[deleteWhere]] hint contract);
-    * rows where `pred` is NULL are KEPT (three-valued delete
-    * semantics). Returns the committed version. */
+    * predicate rows fail the check (not definitely in scope). The
+    * removed rows go through the one row-level [[Dml.rewrite]]: files
+    * are pruned by the predicate's own filters and only files holding
+    * a matching row are rewritten; rows where `pred` is NULL are KEPT
+    * (three-valued delete semantics). Returns the committed version. */
   def replaceWhere(df: DataFrame, root: String,
                    pred: org.apache.spark.sql.Column,
-                   pruneBy: (String, Long, Long),
                    statsCols: Seq[String] = Nil,
                    bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val (pcol, lo, hi) = pruneBy
-    require(lo <= hi, s"empty prune interval [$lo, $hi]")
     val snap = fileSnapshot(spark, root, None, "replaceWhere")
-    val prev = snap.version
-    val store = readSnapshot(spark, root, Some(snap))
+    val store = Dml.frameOf(spark, root, Some(snap))
     require(df.columns.sorted.sameElements(store.columns.sorted),
       s"replaceWhere schema mismatch at $root: batch " +
         s"[${df.columns.sorted.mkString(",")}] vs table " +
         s"[${store.columns.sorted.mkString(",")}]")
-    val n = prev + 1
     // stage the batch's files FIRST, then probe containment on the
     // staged bytes themselves: a non-deterministic df could pass a
     // pre-write probe and still write rows outside pred — re-creating
@@ -2189,12 +2154,13 @@ object TableStore {
     // (ADVICE r11). A violation deletes the staged files and aborts
     // before any commit.
     val batchAdds = writeData(
-      df.select(store.columns.map(col): _*), root, n, statsCols,
-      bloomCols)
+      df.select(store.columns.map(col): _*), root, snap.version + 1,
+      statsCols, bloomCols)
     val staged =
       if (batchAdds.isEmpty) df.limit(0)
       else scanFiles(spark, root, None, batchAdds)
-    val escapee = staged.where(!coalesce(pred, lit(false))).limit(1)
+    val matched = coalesce(pred, lit(false))
+    val escapee = staged.where(!matched).limit(1)
       .collect() // bounded: first violation only
     if (escapee.nonEmpty) {
       val fs = fsOf(spark, new Path(root))
@@ -2202,42 +2168,27 @@ object TableStore {
         .distinct.foreach(d => fs.delete(new Path(s"$root/$d"), true))
       throw new IllegalArgumentException(
         s"replaceWhere batch carries a row OUTSIDE its own predicate " +
-          s"(e.g. $pcol=${escapee.headOption.map(r =>
-            if (r.schema.fieldNames.contains(pcol))
-              r.get(r.fieldIndex(pcol)) else r).orNull}) — a replaced " +
-          "slice must contain only rows it replaces, or re-runs " +
-          "duplicate")
+          s"(e.g. ${escapee.head}) — a replaced slice must contain " +
+          "only rows it replaces, or re-runs duplicate")
     }
-    val touched =
-      prunedFiles(spark, root, snap.live, snap.declared, within(pcol, lo, hi))
-    val kept =
-      if (touched.isEmpty) df.limit(0).select(store.columns.map(col): _*)
-      else readLiveFiles(spark, snap, touched)
-        .where(!coalesce(pred, lit(false)))
-    val adds = batchAdds ++ writeData(kept, root, n, statsCols, bloomCols)
-    enforceConstraints(spark, Some(snap), adds)
-    commitExclusive(spark, root, n, adds, touched.map(_.path),
-      marker = Some("rewrite"))
-    n
+    Dml.rewrite(spark, root, Some(snap), store,
+      prunedFiles(spark, root, snap.live, Some(store.schema),
+        Dml.predicateFilters(store, pred)),
+      hits = _.where(matched).select(col("_metadata.file_path")),
+      rewritten = _.where(!matched), rewrittenIsNew = false, fresh = None,
+      screen = None, statsCols = statsCols, bloomCols = bloomCols,
+      staged = batchAdds)
   }
 
   /** Copy-on-write MERGE — upsert by `key`, the CDC ingestion
     * workhorse: every live row whose key appears (non-null) in
     * `updates` is replaced by its update row; unmatched update rows
-    * insert. Three-level touch discovery keeps the rewrite
-    * proportional to the CHANGE, not the table:
-    *
-    *  1. the log-carried [min, max] of the update batch's key span
-    *     prunes whole files with ZERO IO (long and string keys both;
-    *     other key types fall through to level 2);
-    *  2. ONE distributed scan of the surviving candidates, joined to
-    *     the distinct update keys on `_metadata.file_path`, yields
-    *     the files that actually hold a matched row — range overlaps
-    *     that hold no key drop out here, so a false candidate costs
-    *     a scan, never a rewrite;
-    *  3. only those files are rewritten (matched rows anti-joined
-    *     away); the update rows land as fresh files in the same
-    *     commit.
+    * insert. The rewrite is proportional to the CHANGE, not the table,
+    * by [[Dml]]'s three-level discovery: here level 1 prunes on the
+    * log-carried [min, max] of the batch's key span (long and string
+    * keys; other key types scan every live file), and level 2 joins
+    * the scanned candidates to the distinct update keys. The update
+    * rows land as fresh files in the same commit.
     *
     * Soundness: pruning only ever widens the candidate set, and the
     * exact scan catches every file the prune admits — a file outside
@@ -2245,8 +2196,8 @@ object TableStore {
     * equal anything (SQL join semantics): null-keyed update rows
     * insert, null-keyed target rows survive. Snapshot-dependent: a
     * concurrent commit between the live-set read and this commit
-    * fails loudly (re-read and retry). An all-null or empty update
-    * batch is a no-action commit.
+    * fails loudly (re-read and retry). A batch that matches nothing
+    * and inserts nothing commits nothing.
     *
     * At 100 TB this is the shape that matters: a CDC batch touching
     * 0.1% of keys rewrites ~0.1% of a key-clustered table's files
@@ -2307,10 +2258,11 @@ object TableStore {
         Some(org.apache.spark.sql.Row(screen.get(2), screen.get(3))))
   }
 
-  /** Shared copy-on-write upsert machinery: rows of `keyRows` whose
-    * `key` is live get their files rewritten without them; `inserts`
-    * lands as fresh files in the same commit. See [[merge]] for the
-    * three-level touch discovery and its soundness argument. */
+  /** The keyed upsert behind [[merge]], [[applyChanges]] and
+    * [[mergeBatch]]: rows of `keyRows` whose `key` is live get their
+    * files rewritten without them; `inserts` lands as fresh files in
+    * the same commit. This picks the level-1 candidates (see
+    * [[merge]]); [[Dml.rewrite]] does the rest. */
   private def cowUpsert(inserts: DataFrame, keyRows: DataFrame,
                         root: String, key: String,
                         statsCols: Seq[String],
@@ -2320,8 +2272,7 @@ object TableStore {
                           = None): Long = {
     val spark = inserts.sparkSession
     val snap = fileSnapshot(spark, root, None, opName)
-    val prev = snap.version
-    val store = readSnapshot(spark, root, Some(snap))
+    val store = Dml.frameOf(spark, root, Some(snap))
     // schema contract: an upsert that widened or narrowed the row
     // shape would leave a mixed-schema live set behind — loud, not
     // latent (column ADDS go through readAs/SchemaEvolution)
@@ -2330,7 +2281,6 @@ object TableStore {
         s"[${inserts.columns.sorted.mkString(",")}] vs table " +
         s"[${store.columns.sorted.mkString(",")}]")
     require(inserts.columns.contains(key), s"$opName key $key not in batch")
-    val aligned = inserts.select(store.columns.map(col): _*)
     import org.apache.spark.sql.types._
     // level 1: log-stats prune on the batch's key span (one agg job,
     // or zero when the caller's batch screen already computed it)
@@ -2346,54 +2296,14 @@ object TableStore {
       }
     val keys = keyRows.select(col(key).as("__merge_key"))
       .where(col("__merge_key").isNotNull).distinct()
-    // level 2: exact touched-file discovery — bounded by file count.
-    // (Measured-and-rejected, r15: overlapping the discovery chain
-    // with the new-content write on a two-thread pool made every DML
-    // gate SLOWER — q_store_mirror 5.8→9.7 s — concurrent Catalyst
-    // planning on the driver contends worse than the ~2 small jobs
-    // it hides; sequential stands.)
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else readLiveFiles(spark, snap, candidates)
-        .select(col(key), col("_metadata.file_path").as("__f"))
-        .join(keys, col(key) === col("__merge_key"))
-        .select("__f").distinct()
-        .collect().map(_.getString(0)).toSeq
-        .map(u => candidates.map(_.path)
-          .find(p => u.endsWith("/" + p) || u.endsWith(p))
-          .getOrElse(throw new IllegalStateException(
-            s"scanned file $u is not a candidate of $root")))
-    // level 3: rewrite ONLY the touched files, matched rows dropped
-    val survivors =
-      if (touched.isEmpty) None
-      else {
-        val byPath = candidates.map(e => e.path -> e).toMap
-        Some(readLiveFiles(spark, snap, touched.map(byPath))
-          .join(keys, col(key) === col("__merge_key"), "left_anti"))
-      }
-    val n = prev + 1
-    // Constraint-free stores (the common case) land new content and
-    // survivor rewrites in ONE write job — same files' worth of
-    // content, one scheduler round trip instead of two. A constrained
-    // store keeps the two-write shape: validation must see ONLY the
-    // new content (survivors are a subset of rows that already
-    // passed; re-validating them would re-read the whole rewrite).
-    val adds =
-      if (survivors.isEmpty || snap.constraints.nonEmpty) {
-        val newAdds = writeData(aligned, root, n, statsCols, bloomCols)
-        enforceConstraints(spark, Some(snap), newAdds)
-        newAdds ++
-          survivors.map(sv => writeData(sv, root, n, statsCols, bloomCols))
-            .getOrElse(Seq.empty)
-      } else
-        writeData(aligned.unionByName(survivors.get), root, n,
-          statsCols, bloomCols)
-    // a batch that touched nothing is a pure append: no rewrite
-    // marker, so an adds-only change feed stays consumable across it
-    commitExclusive(spark, root, n, adds, touched,
-      marker = if (touched.isEmpty) None else Some("rewrite"),
+    val isKey = col(key) === col("__merge_key")
+    Dml.rewrite(spark, root, Some(snap), store, candidates,
+      hits = _.select(col(key), col("_metadata.file_path").as("__f"))
+        .join(keys, isKey).select("__f"),
+      rewritten = _.join(keys, isKey, "left_anti"), rewrittenIsNew = false,
+      fresh = Some(inserts.select(store.columns.map(col): _*)),
+      screen = None, statsCols = statsCols, bloomCols = bloomCols,
       batchId = batchId)
-    n
   }
 
   /** Exactly-once streaming MERGE: reduce the micro-batch to its
@@ -2554,7 +2464,7 @@ object TableStore {
     * materialized dev/experiment branch of a 100 TB table, no data
     * movement, stats maps carried so pruning works unchanged. The
     * clone owns none of the referenced data: copy-on-write ops
-    * (merge/applyChanges/deleteWhere/compact/optimize) write their
+    * (merge/applyChanges/Dml DELETE/compact/optimize) write their
     * rewrites into the clone's own data dir and re-reference less
     * and less of the source, the source is never mutated, and the
     * clone's [[vacuum]] can never delete source files (its sweep

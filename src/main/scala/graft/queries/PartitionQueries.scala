@@ -199,7 +199,7 @@ object PartitionQueries extends QueryPack {
     """),
     eager = true)
 
-  /** Copy-on-write row deletion ([[graft.ops.TableStore.deleteWhere]])
+  /** Copy-on-write row deletion ([[graft.ops.Dml.delete]])
     * — the right-to-be-forgotten path: three key-ranged appends, then
     * delete o_orderkey ∈ [500, 1500]; the footer-stats prune
     * guarantees only the first commit's files get rewritten (spec
@@ -222,9 +222,8 @@ object PartitionQueries extends QueryPack {
           col("o_orderkey") < 10000L), root)
       graft.ops.TableStore.append(
         src.where(col("o_orderkey") >= 10000L), root)
-      val vDel = graft.ops.TableStore.deleteWhere(s, root,
-        col("o_orderkey").between(500L, 1500L),
-        ("o_orderkey", 500L, 1500L))
+      val vDel = graft.ops.Dml.delete(s, root,
+        col("o_orderkey").between(500L, 1500L))
       Seq(("before", vDel - 1), ("after", vDel)).map { case (tag, v) =>
         graft.ops.TableStore.read(s, root, Some(v))
           .agg(
@@ -1005,8 +1004,7 @@ object PartitionQueries extends QueryPack {
           statsCols = Seq("o_orderkey"))
       }
       val v = graft.ops.TableStore.deleteWhereMoR(s, root,
-        col("o_orderkey") % 100 === 7 && col("o_orderkey") < third,
-        pruneBy = ("o_orderkey", 0L, third - 1))
+        col("o_orderkey") % 100 === 7 && col("o_orderkey") < third)
       if (v > 3L) {
         val h = graft.ops.TableStore.history(s, root)
           .where(col("version") === v).collect()(0)
@@ -1114,9 +1112,8 @@ object PartitionQueries extends QueryPack {
           col("o_orderkey") < 10000L), root, statsCols = stats)
       val v0 = graft.ops.TableStore.append(
         src.where(col("o_orderkey") >= 10000L), root, statsCols = stats)
-      val vDel = graft.ops.TableStore.deleteWhere(s, root,
-        col("o_orderkey").between(500L, 1500L),
-        ("o_orderkey", 500L, 1500L), statsCols = stats)
+      val vDel = graft.ops.Dml.delete(s, root,
+        col("o_orderkey").between(500L, 1500L))
       val vCmp = graft.ops.TableStore.compact(s, root,
         targetBytes = 64L << 20, statsCols = stats)
       val rows = Seq(("initial", v0), ("deleted", vDel),
@@ -1176,8 +1173,7 @@ object PartitionQueries extends QueryPack {
       val redone = src.where(col("o_orderkey").between(2000L, 4000L))
         .withColumn("cents", col("cents") * 2L)
       val vNew = graft.ops.TableStore.replaceWhere(redone, root,
-        col("o_orderkey").between(2000L, 4000L),
-        ("o_orderkey", 2000L, 4000L), statsCols = stats)
+        col("o_orderkey").between(2000L, 4000L), statsCols = stats)
       Seq(("before", vNew - 1), ("after", vNew)).map { case (tag, v) =>
         graft.ops.TableStore.read(s, root, Some(v))
           .agg(
@@ -1527,8 +1523,7 @@ object PartitionQueries extends QueryPack {
       graft.ops.TableStore.append(
         src.where(col("o_orderkey") >= 5000L).coalesce(1), root,
         statsCols = Seq("o_orderkey"))
-      graft.ops.TableStore.deleteWhere(s, root,
-        col("o_orderkey").between(100L, 200L), ("o_orderkey", 100L, 200L))
+      graft.ops.Dml.delete(s, root, col("o_orderkey").between(100L, 200L))
       graft.ops.TableStore.compact(s, root, targetBytes = 64L << 20)
       graft.ops.TableStore.history(s, root).orderBy("version")
     },

@@ -25,12 +25,30 @@ object SqlQueries extends QueryPack {
                            d: String)(root: String): Unit = {
     val src = Tables.orders(s, d)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    Seq(col("o_orderkey") < 5000L,
-      col("o_orderkey") >= 5000L && col("o_orderkey") < 10000L,
-      col("o_orderkey") >= 10000L).foreach(p =>
+    val (lo, hi) = split3(s, d)
+    Seq(col("o_orderkey") < lo,
+      col("o_orderkey") >= lo && col("o_orderkey") < hi,
+      col("o_orderkey") >= hi).foreach(p =>
       graft.ops.TableStore.append(src.where(p).coalesce(1), root,
         statsCols = Seq("o_orderkey")))
   }
+
+  /** The orders3 split keys: 5000 and 10000 once the dense keys
+    * 0..max number 15000 or more, else the key range's thirds — three
+    * non-empty files at every SF. Oracles restate it as [[Split3Sql]]. */
+  private def split3(s: org.apache.spark.sql.SparkSession,
+                     d: String): (Long, Long) = {
+    val mx = Tables.orders(s, d).agg(max(col("o_orderkey")).cast("long"))
+      .collect()(0)
+    val n = if (mx.isNullAt(0)) 0L else mx.getLong(0) + 1
+    (math.min(5000L, n / 3), math.min(10000L, 2 * n / 3))
+  }
+
+  /** [[split3]] as a DuckDB CTE body: one row (lo, hi). */
+  private val Split3Sql =
+    """SELECT LEAST(5000, (MAX(o_orderkey) + 1) // 3) AS lo,
+              LEAST(10000, 2 * (MAX(o_orderkey) + 1) // 3) AS hi
+       FROM orders"""
 
   /** (o_orderkey, o_custkey, o_totalprice) in one file — the
     * delete-exists twin stores' seeding. */
@@ -256,9 +274,10 @@ object SqlQueries extends QueryPack {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       s.conf.set("spark.sql.catalog.gdmlq",
         classOf[graft.sources.GraftCatalog].getName)
+      val (lo, hi) = split3(s, d)
       val before = graft.ops.TableStore.liveAt(s, root, 1L).map(_.path)
-      s.sql(s"DELETE FROM gdmlq.`$root` WHERE o_orderkey >= 5000 " +
-        "AND o_orderkey < 10000 AND o_orderkey % 2 = 0").collect()
+      s.sql(s"DELETE FROM gdmlq.`$root` WHERE o_orderkey >= $lo " +
+        s"AND o_orderkey < $hi AND o_orderkey % 2 = 0").collect()
       val after = graft.ops.TableStore.liveAt(s, root,
         graft.ops.TableStore.versions(s, root).last).map(_.path).toSet
       require(before.isEmpty || before.count(after.contains) == 2,
@@ -276,13 +295,14 @@ object SqlQueries extends QueryPack {
         FROM gdmlq.`$root` VERSION AS OF 1
         ORDER BY leg""")
     },
-    Some("""
+    Some(s"""
+      WITH b AS ($Split3Sql)
       SELECT 'latest' AS leg, COUNT(*) AS n_rows,
              CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
              CAST(SUM(CAST(ROUND(o_totalprice * 1e2) AS BIGINT)) AS DOUBLE) / 1e2
                AS total_price
-      FROM orders
-      WHERE NOT (o_orderkey >= 5000 AND o_orderkey < 10000
+      FROM orders, b
+      WHERE NOT (o_orderkey >= b.lo AND o_orderkey < b.hi
                  AND o_orderkey % 2 = 0)
       UNION ALL
       SELECT 'pre_delete', COUNT(*), CAST(SUM(o_orderkey) AS BIGINT),
@@ -422,11 +442,12 @@ object SqlQueries extends QueryPack {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       s.conf.set("spark.sql.catalog.gdmlq",
         classOf[graft.sources.GraftCatalog].getName)
+      val (lo, hi) = split3(s, d)
       val before = graft.ops.TableStore.liveAt(s, root, 1L).map(_.path)
       s.sql(s"UPDATE gdmlq.`$root` SET " +
         "o_totalprice = o_totalprice + 1000.0, " +
         "o_orderstatus = concat('U', o_orderstatus) " +
-        "WHERE o_orderkey >= 5000 AND o_orderkey < 10000").collect()
+        s"WHERE o_orderkey >= $lo AND o_orderkey < $hi").collect()
       val after = graft.ops.TableStore.liveAt(s, root,
         graft.ops.TableStore.versions(s, root).last).map(_.path).toSet
       require(before.isEmpty || before.count(after.contains) == 2,
@@ -441,17 +462,18 @@ object SqlQueries extends QueryPack {
         GROUP BY o_orderstatus
         ORDER BY o_orderstatus""")
     },
-    Some("""
-      SELECT CASE WHEN o_orderkey >= 5000 AND o_orderkey < 10000
+    Some(s"""
+      WITH b AS ($Split3Sql)
+      SELECT CASE WHEN o_orderkey >= b.lo AND o_orderkey < b.hi
                   THEN 'U' || o_orderstatus ELSE o_orderstatus END
                AS o_orderstatus,
              COUNT(*) AS n_rows,
              CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
              CAST(SUM(CAST(ROUND(
-               (CASE WHEN o_orderkey >= 5000 AND o_orderkey < 10000
+               (CASE WHEN o_orderkey >= b.lo AND o_orderkey < b.hi
                      THEN o_totalprice + 1000.0 ELSE o_totalprice END)
                * 1e2) AS BIGINT)) AS DOUBLE) / 1e2 AS total_price
-      FROM orders
+      FROM orders, b
       GROUP BY 1
       ORDER BY o_orderstatus
     """),
@@ -846,7 +868,11 @@ object SqlQueries extends QueryPack {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       s.conf.set("spark.sql.catalog.gusub",
         classOf[graft.sources.GraftCatalog].getName)
-      src.where(col("o_orderkey").between(6000L, 7000L))
+      // the selected band sits inside the updated range: 6000..7000
+      // at the 5000/10000 split
+      val (lo, hi) = split3(s, d)
+      src.where(col("o_orderkey").between(lo + (hi - lo) / 5,
+          lo + 2 * (hi - lo) / 5))
         .select("o_orderkey")
         .createOrReplaceTempView("gate_updsub_sel")
       val before = graft.ops.TableStore.liveAt(s, root, 1L).map(_.path)
@@ -854,7 +880,7 @@ object SqlQueries extends QueryPack {
         UPDATE gusub.`$root`
         SET o_totalprice = o_totalprice + 100.0,
             o_orderstatus = concat('R', o_orderstatus)
-        WHERE o_orderkey >= 5000 AND o_orderkey < 10000
+        WHERE o_orderkey >= $lo AND o_orderkey < $hi
           AND o_orderkey IN (SELECT o_orderkey FROM gate_updsub_sel)""")
         .collect()
       val after = graft.ops.TableStore.liveAt(s, root,
@@ -872,17 +898,20 @@ object SqlQueries extends QueryPack {
         GROUP BY o_orderstatus
         ORDER BY o_orderstatus""")
     },
-    Some("""
-      SELECT CASE WHEN o_orderkey BETWEEN 6000 AND 7000
+    Some(s"""
+      WITH b AS ($Split3Sql),
+      r AS (SELECT lo + (hi - lo) // 5 AS a,
+                   lo + 2 * (hi - lo) // 5 AS z FROM b)
+      SELECT CASE WHEN o_orderkey BETWEEN r.a AND r.z
                   THEN 'R' || o_orderstatus ELSE o_orderstatus END
                AS o_orderstatus,
              COUNT(*) AS n_rows,
              CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
              CAST(SUM(CAST(ROUND(
-               (CASE WHEN o_orderkey BETWEEN 6000 AND 7000
+               (CASE WHEN o_orderkey BETWEEN r.a AND r.z
                      THEN o_totalprice + 100.0 ELSE o_totalprice END)
                * 1e2) AS BIGINT)) AS DOUBLE) / 1e2 AS total_price
-      FROM orders
+      FROM orders, r
       GROUP BY 1
       ORDER BY o_orderstatus
     """),

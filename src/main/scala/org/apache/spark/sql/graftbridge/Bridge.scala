@@ -14,6 +14,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** [[expression]] converted through the whole column tree: where
+    * [[expression]] hands an API-built column back as one opaque lazy
+    * node, this yields the Catalyst tree a tree walk can see — a
+    * `Column.isin(Dataset)` as `InSubquery`, a `!` as the function
+    * over its converted child. */
+  def expressionTree(c: Column): Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
   /** Catalyst predicate → `sources.Filter`, Spark's own translation
     * (`protected[sql]` on DataSourceStrategy) — used by the graft
     * file index to hand the query's data filters to the log-stats

@@ -125,7 +125,7 @@ class DmlRebaseSpec extends SparkSpec {
     ranged(root)
     val (adds, touched) = stageDelete12(root)
     TableStore.deleteWhereMoR(spark, root,
-      col("id") === 21L, ("id", 21L, 21L)) // v4: dv action
+      col("id") === 21L) // v4: dv action
     val ex = intercept[java.util.ConcurrentModificationException] {
       TableStore.commitRewriteRebasing(
         spark, root, 4L, adds, touched, filters1113)

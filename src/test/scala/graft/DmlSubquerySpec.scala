@@ -278,7 +278,11 @@ class DmlSubquerySpec extends SparkSpec {
         })
       val in = resolved("id IN (SELECT k FROM dmlsub_gate)")
       val notIn = resolved("id NOT IN (SELECT k FROM dmlsub_gate)")
-      Seq(in, notIn).foreach { p =>
+      // the two DataFrame-API forms: a Dataset IN-subquery, and the
+      // Column `!` over the analyzed IN
+      val inDs = col("id").isin(spark.table("dmlsub_gate"))
+      val bangIn = !in
+      Seq(in, notIn, inDs, bangIn).foreach { p =>
         assert(live(gates(1)._2(p)),
           s"$what: $p materialized over the bytes bound")
         assert(!live(gates(0)._2(p)),
@@ -298,7 +302,10 @@ class DmlSubquerySpec extends SparkSpec {
         "UPDATE IN" -> ((root, m) => Dml.update(spark, root,
           Seq("v" -> (col("v") + 1)), Some(in), m)),
         "DELETE IN" -> ((root, m) => Dml.delete(spark, root, in, m)),
-        "DELETE NOT IN" -> ((root, m) => Dml.delete(spark, root, notIn, m)))
+        "DELETE NOT IN" -> ((root, m) => Dml.delete(spark, root, notIn, m)),
+        "UPDATE isin(ds)" -> ((root, m) => Dml.update(spark, root,
+          Seq("v" -> (col("v") * 2)), Some(inDs), m)),
+        "DELETE !IN" -> ((root, m) => Dml.delete(spark, root, bangIn, m)))
       ops.foreach { case (op, run) =>
         roots.zip(gates).foreach { case (root, (_, m)) => run(root, m) }
         val want = rows(roots.head)

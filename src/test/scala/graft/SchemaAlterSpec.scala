@@ -167,8 +167,7 @@ class SchemaAlterSpec extends SparkSpec {
     TableStore.alterSchema(spark, root, Seq("note" -> StringType), Nil)
     TableStore.append(Seq((4L, 40L, "n4")).toDF("id", "v", "note")
       .coalesce(1), root, statsCols = Seq("id"))
-    TableStore.deleteWhereMoR(spark, root, col("id") === 2L,
-      ("id", 2L, 2L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 2L)
     def state() = TableStore.read(spark, root).orderBy("id")
       .collect().map(r => (r.getLong(0), Option(r.getString(2)))).toSeq
     // the MoR read applies the vector AND the declared schema
@@ -181,8 +180,7 @@ class SchemaAlterSpec extends SparkSpec {
     val root2 = tmp()
     TableStore.append(mk(7L, 8L).coalesce(1), root2,
       statsCols = Seq("id"))
-    TableStore.deleteWhereMoR(spark, root2, col("id") === 7L,
-      ("id", 7L, 7L))
+    TableStore.deleteWhereMoR(spark, root2, col("id") === 7L)
     graft.ops.Dml.delete(spark, root2, lit(true))
     assert(TableStore.read(spark, root2).count() == 0L)
   }

@@ -98,8 +98,7 @@ class SqlProcSpec extends SparkSpec {
   test("CALL purge_deletes folds merge-on-read vectors") {
     val root = manySmall("purge", commits = 2)
     val g = cat("gproc")
-    TableStore.deleteWhereMoR(spark, root, col("id") === 1001L,
-      ("id", 1001L, 1001L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 1001L)
     val r = spark.sql(
       s"CALL $g.purge_deletes(table => '$root')").collect().head
     assert(r.getLong(0) == 4L, s"purge commit: $r")

@@ -153,7 +153,7 @@ class SqlStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1L to 50L: _*), root, statsCols = Seq("id"))
     TableStore.deleteWhereMoR(spark, root,
-      col("id").between(10L, 20L), ("id", 10L, 20L))
+      col("id").between(10L, 20L))
     spark.conf.set("spark.sql.catalog.gsql",
       classOf[GraftCatalog].getName)
     val viaSql = spark.sql(s"SELECT id FROM gsql.`$root`")
@@ -330,6 +330,30 @@ class SqlStoreSpec extends SparkSpec {
     }
   }
 
+  test("a SQL UPDATE keeps the rewritten file's bloom: = probes of " +
+      "absent in-range keys still refute it") {
+    val s = spark; import s.implicits._
+    val root = tmp()
+    // two files of even keys; min/max cannot refute an odd key
+    Seq(0 until 40, 40 until 80).foreach { ks =>
+      TableStore.append(ks.map(i => (i.toLong, s"id-${2 * i}", 0L))
+        .toDF("id", "cid", "v").coalesce(1), root, bloomCols = Seq("cid"))
+    }
+    val g = "gsqlbloomupd"
+    spark.conf.set(s"spark.sql.catalog.$g", classOf[GraftCatalog].getName)
+    val before = TableStore.liveAt(spark, root, 2L).map(_.path).toSet
+    spark.sql(s"UPDATE $g.`$root` SET v = 1 WHERE id = 50").collect()
+    val after = TableStore.liveAt(spark, root,
+      TableStore.versions(spark, root).last).map(_.path).toSet
+    assert((before -- after).size == 1 && (after -- before).size == 1,
+      s"the UPDATE rewrites exactly one file: $before -> $after")
+    Seq("id-101", "id-115", "id-133", "id-157").foreach { k =>
+      val viaSql = spark.sql(s"SELECT id FROM $g.`$root` WHERE cid = '$k'")
+      assert(fileScan(viaSql).selectedPartitions.totalNumberOfFiles == 0,
+        s"cid = '$k' scanned a file its bloom refutes")
+    }
+  }
+
   private def hasAnyScan(df: DataFrame): Boolean = {
     df.collect()
     def leaves(p: org.apache.spark.sql.execution.SparkPlan)
@@ -393,8 +417,7 @@ class SqlStoreSpec extends SparkSpec {
     val root = threeRangedCommits()
     spark.conf.set("spark.sql.catalog.gsqlc",
       classOf[graft.sources.GraftCatalog].getName)
-    TableStore.deleteWhereMoR(spark, root, col("id") === 5L,
-      ("id", 5L, 5L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 5L)
     val c = spark.sql(s"SELECT COUNT(*) AS n FROM gsqlc.`$root`")
     assert(c.collect().head.getLong(0) == 299L,
       "the vectored row must not be counted")
@@ -408,8 +431,7 @@ class SqlStoreSpec extends SparkSpec {
     // the dv forces the fallback path (the rewrite refuses dv
     // snapshots) — exactly where missing stats used to default the
     // relation to "huge" and break broadcast decisions
-    TableStore.deleteWhereMoR(spark, root, col("id") === 1L,
-      ("id", 1L, 1L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 1L)
     // AQE off: the broadcast decision must come from PLAN-time stats
     // (AQE's runtime re-plan would mask a missing estimate)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")

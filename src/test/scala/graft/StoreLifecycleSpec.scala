@@ -71,7 +71,7 @@ class StoreLifecycleSpec extends SparkSpec {
 
     // 5. MoR delete, reads stay exact, then purge
     TableStore.deleteWhereMoR(spark, root,
-      col("id") >= 100L && col("id") < 110L, pruneBy = ("id", 100L, 109L))
+      col("id") >= 100L && col("id") < 110L)
     model = model.filterNot { case (k, _) => k >= 100L && k < 110L }
     assertState("mor")
     TableStore.purgeDeletes(spark, root, statsCols = Seq("id"))

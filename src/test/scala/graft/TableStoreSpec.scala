@@ -126,8 +126,8 @@ class TableStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1L to 100L: _*).coalesce(1), root)
     TableStore.append(mk(1000L to 1100L: _*).coalesce(1), root)
-    val v = TableStore.deleteWhere(spark, root,
-      col("id").between(1050L, 1060L), ("id", 1050L, 1060L))
+    val v = graft.ops.Dml.delete(spark, root,
+      col("id").between(1050L, 1060L))
     assert(v == 3L)
     assert(ids(root) ==
       ((1L to 100L) ++ (1000L to 1049L) ++ (1061L to 1100L)).toSet)
@@ -139,8 +139,8 @@ class TableStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1L to 100L: _*).coalesce(1), root)   // one file
     TableStore.append(mk(1000L to 1100L: _*).coalesce(1), root) // one file
-    TableStore.deleteWhere(spark, root,
-      col("id").between(1050L, 1060L), ("id", 1050L, 1060L))
+    graft.ops.Dml.delete(spark, root,
+      col("id").between(1050L, 1060L))
     // only commit 2's file was rewritten: exactly one remove action,
     // and it names a data/v2 file
     val removes = TableStore.history(spark, root)
@@ -155,8 +155,8 @@ class TableStoreSpec extends SparkSpec {
   test("deleteWhere outside every file's range is a version no-op") {
     val root = tmp()
     TableStore.append(mk(1L to 50L: _*), root)
-    val v = TableStore.deleteWhere(spark, root,
-      col("id").between(900L, 950L), ("id", 900L, 950L))
+    val v = graft.ops.Dml.delete(spark, root,
+      col("id").between(900L, 950L))
     assert(v == 1L) // nothing touched, nothing committed
     assert(TableStore.versions(spark, root) == Seq(1L))
     assert(ids(root) == (1L to 50L).toSet)
@@ -209,8 +209,8 @@ class TableStoreSpec extends SparkSpec {
     assert(TableStore.overwrite(empty, root) == 3L)
     assert(TableStore.compact(spark, root, 1L << 20) == 4L)
     // delete on an empty table is a provable no-op
-    assert(TableStore.deleteWhere(spark, root,
-      col("id") === 1L, ("id", 1L, 1L)) == 4L)
+    assert(graft.ops.Dml.delete(spark, root,
+      col("id") === 1L) == 4L)
     (1L to 4L).foreach { v =>
       val snap = TableStore.read(spark, root, Some(v))
       assert(snap.count() == 0L)
@@ -426,8 +426,8 @@ class TableStoreSpec extends SparkSpec {
       .toDF("id", "payload").coalesce(1)
       .write.parquet(s"$root/stage")
     TableStore.append(spark.read.parquet(s"$root/stage"), s"$root/t")
-    TableStore.deleteWhere(spark, s"$root/t",
-      col("payload") === "r1", ("id", 1L, 3L))
+    graft.ops.Dml.delete(spark, s"$root/t",
+      col("payload") === "r1")
     assert(ids(s"$root/t") == Set(2L, 3L))
   }
 
@@ -466,8 +466,8 @@ class TableStoreSpec extends SparkSpec {
         "id", "payload", "extra").coalesce(1), root)
     // delete on the evolved column: the v1 file provably holds only
     // nulls for it — skipped, not a crash
-    TableStore.deleteWhere(spark, root,
-      col("extra").between(1000L, 1100L), ("extra", 1000L, 1100L))
+    graft.ops.Dml.delete(spark, root,
+      col("extra").between(1000L, 1100L))
     val snap = TableStore.readAs(spark, root,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
@@ -725,6 +725,24 @@ class TableStoreSpec extends SparkSpec {
       Map("a1" -> 1L, "a2" -> 2L, "b1" -> 1L, "b2" -> 20L, "c1" -> 30L))
   }
 
+  test("applyChanges without statsCols keeps the store's logged bounds") {
+    val s = spark; import s.implicits._
+    val root = tmp()
+    TableStore.append(mk(1L to 50L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    TableStore.append(mk(51L to 100L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    val v = TableStore.applyChanges(Seq((10L, "x", "upsert"),
+      (60L, "y", "delete")).toDF("id", "payload", "_op"), root, "id")
+    val live = TableStore.liveAt(spark, root, v)
+    assert(live.forall(_.path.startsWith("data/v3-")),
+      s"both files hold a changed key and are rewritten: $live")
+    assert(live.forall(e => e.mins.contains("id") && e.maxs.contains("id")),
+      s"a rewritten file lost its logged bounds: $live")
+    val b = TableStore.metaBounds(spark, root, Seq("id")).collect()(0)
+    assert(b.getLong(1) == 1L && b.getLong(2) == 100L)
+  }
+
   test("applyChanges: upserts and deletes land in one proportional commit") {
     val s = spark; import s.implicits._
     val root = tmp()
@@ -854,8 +872,7 @@ class TableStoreSpec extends SparkSpec {
     // COW on the clone: source stays untouched
     TableStore.merge(Seq((5L, "NEW5"), (400L, "NEW400"))
       .toDF("id", "payload"), dst, "id", statsCols = Seq("id"))
-    TableStore.deleteWhere(spark, dst, col("id") === 250L,
-      pruneBy = ("id", 250L, 250L))
+    graft.ops.Dml.delete(spark, dst, col("id") === 250L)
     assert(ids(src) == (0L until 300L).toSet)
     val dr = TableStore.read(spark, dst)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -960,8 +977,7 @@ class TableStoreSpec extends SparkSpec {
     val dataFiles = TableStore.read(spark, root).inputFiles.toSet
     // delete two rows from the middle file: NO data file changes
     val v = TableStore.deleteWhereMoR(spark, root,
-      col("id") === 150L || col("id") === 160L,
-      pruneBy = ("id", 150L, 160L))
+      col("id") === 150L || col("id") === 160L)
     assert(v == 4L)
     val after = TableStore.read(spark, root)
     assert(after.count() == 298L)
@@ -975,13 +991,11 @@ class TableStoreSpec extends SparkSpec {
     // time travel BEFORE the delete still sees the rows
     assert(TableStore.read(spark, root, Some(3L)).count() == 300L)
     // a second vector on the SAME file accumulates
-    TableStore.deleteWhereMoR(spark, root, col("id") === 151L,
-      pruneBy = ("id", 151L, 151L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 151L)
     assert(TableStore.read(spark, root).count() == 297L)
     // a no-match MoR delete is a no-op, no commit
     val vsNow = TableStore.versions(spark, root)
-    assert(TableStore.deleteWhereMoR(spark, root, col("id") === 150L,
-      pruneBy = ("id", 150L, 150L)) == vsNow.last)
+    assert(TableStore.deleteWhereMoR(spark, root, col("id") === 150L) == vsNow.last)
     assert(TableStore.versions(spark, root) == vsNow)
     // file-granularity ops refuse until purged, naming the remedy;
     // every layout rewrite names itself
@@ -1044,8 +1058,7 @@ class TableStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append((0 until 100).map(k => (k.toLong, s"r$k"))
       .toDF("id", "payload").coalesce(1), root, statsCols = Seq("id"))
-    TableStore.deleteWhereMoR(spark, root, col("id") < 10L,
-      pruneBy = ("id", 0L, 9L))
+    TableStore.deleteWhereMoR(spark, root, col("id") < 10L)
     TableStore.append(Seq((500L, "x")).toDF("id", "payload"), root)
     // horizon lands ON a vectored state: the checkpoint must carry it
     TableStore.vacuum(spark, root, keepVersions = 2)
@@ -1333,8 +1346,8 @@ class TableStoreSpec extends SparkSpec {
     assert(changes(4L) == Set(6L -> 5L))
     // a content-REWRITING commit in the window must fail loudly —
     // an adds-only feed cannot express its removals
-    TableStore.deleteWhere(spark, root,
-      col("id") === 3L, ("id", 3L, 3L))           // v6
+    graft.ops.Dml.delete(spark, root,
+      col("id") === 3L)           // v6
     val ex = intercept[IllegalArgumentException] {
       TableStore.readChangesSince(spark, root, 4L)
     }
@@ -1477,8 +1490,7 @@ class TableStoreSpec extends SparkSpec {
       .getAs[Long]("n_rows") == 22L)
     // outstanding merge-on-read vectors make footer counts lies —
     // refuse with the purge remedy, never over-count
-    TableStore.deleteWhereMoR(spark, root, col("id") === 5L,
-      ("id", 5L, 5L))
+    TableStore.deleteWhereMoR(spark, root, col("id") === 5L)
     val exS = intercept[IllegalArgumentException] {
       TableStore.metaStats(spark, root)
     }
@@ -1497,7 +1509,7 @@ class TableStoreSpec extends SparkSpec {
     val redone = Seq((5L, "new5"), (6L, "new6"))
       .toDF("id", "payload")
     val v = TableStore.replaceWhere(redone, root,
-      col("id").between(5L, 8L), ("id", 5L, 8L),
+      col("id").between(5L, 8L),
       statsCols = Seq("id"))
     assert(v == 3L) // exactly one version: no delete+append gap
     val now = TableStore.read(spark, root).collect()
@@ -1511,7 +1523,7 @@ class TableStoreSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       TableStore.replaceWhere(
         Seq((5L, "ok"), (99L, "escapee")).toDF("id", "payload"),
-        root, col("id").between(5L, 8L), ("id", 5L, 8L))
+        root, col("id").between(5L, 8L))
     }
     assert(ex.getMessage.contains("OUTSIDE its own predicate"))
     assert(TableStore.versions(spark, root).last == 3L) // nothing landed
@@ -1521,7 +1533,7 @@ class TableStoreSpec extends SparkSpec {
     TableStore.append(Seq((Some(1L), "a"), (None, "nullkey"))
       .toDF("id", "payload"), root2, statsCols = Seq("id"))
     TableStore.replaceWhere(Seq((1L, "a2")).toDF("id", "payload"),
-      root2, col("id") === 1L, ("id", 1L, 1L))
+      root2, col("id") === 1L)
     val kept = TableStore.read(spark, root2).collect()
       .map(_.getString(1)).toSet
     assert(kept == Set("a2", "nullkey"))
@@ -1594,7 +1606,7 @@ class TableStoreSpec extends SparkSpec {
     // the racer merge-on-read-deletes a row: the file stays LIVE, but
     // rewriting its raw bytes would resurrect the deleted row
     TableStore.deleteWhereMoR(spark, root,
-      col("id") === 1L, ("id", 1L, 1L)) // v2
+      col("id") === 1L) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
       TableStore.commitLayoutRebasing(
         spark, root, 2L, adds, live.map(_.path))
