@@ -45,8 +45,9 @@ import TableStore.FileEntry
   * jobs, and a `rand()` that "matched" in discovery could keep
   * different rows in the rewrite (callers on the SQL path are
   * screened by [[graft.sources.GraftDmlRule]]; API callers own it).
-  * Snapshots carrying merge-on-read delete vectors refuse loudly:
-  * fold vectors back with `purgeDeletes` first.
+  * Merge-on-read delete vectors compose: every scan here applies
+  * them ([[TableStore.scanFiles]]), so discovery sees only visible
+  * rows and a rewritten file's vectors leave the log with it.
   *
   * Three-valued logic: a row is affected only when the predicate is
   * DEFINITELY true; NULL keeps the row (SQL's own WHERE semantics). */
@@ -304,7 +305,7 @@ object Dml {
   private[graft] def frameOf(spark: SparkSession, root: String,
                              snap: Option[TableStore.Snapshot]): DataFrame =
     snap.filter(_.live.nonEmpty) match {
-      case Some(s) => TableStore.scanFiles(spark, root,
+      case Some(s) => TableStore.scanFiles(spark, s,
         Some(TableStore.scanSchema(spark, root, s.declared, s.live,
           mergeAll = true)), s.live)
       case None => TableStore.readSnapshot(spark, root, snap)
@@ -319,12 +320,13 @@ object Dml {
     * values. Aliased so a correlated subquery's rebound outer
     * references (`TargetAlias.col`) resolve against THIS scan —
     * transparent to unqualified predicates and to the merge join
-    * (plain columns resolve through a SubqueryAlias unchanged). */
-  private def target(spark: SparkSession, root: String,
+    * (plain columns resolve through a SubqueryAlias unchanged). The
+    * scan hides vectored rows and keeps `_metadata` resolvable. */
+  private def target(spark: SparkSession, snap: TableStore.Snapshot,
                      snapshot: DataFrame,
                      entries: Seq[FileEntry]): DataFrame =
-    TableStore.scanFiles(spark, root, Some(snapshot.schema), entries)
-      .alias(TargetAlias)
+    TableStore.scanFiles(spark, snap, Some(snapshot.schema), entries,
+      Some(TargetAlias))
 
   /** The one row-level rewrite — levels 2 and 3 of the discovery
     * contract (see the object doc), the write, the constraint check
@@ -365,12 +367,12 @@ object Dml {
     // worse than the ~2 small jobs it hides; sequential stands.)
     val touched =
       if (candidates.isEmpty) Seq.empty[FileEntry]
-      else toEntries(hits(target(spark, root, snapshot, candidates))
+      else toEntries(hits(target(spark, snap.get, snapshot, candidates))
         .distinct().collect().map(_.getString(0)).toSeq, // bounded by file count
         root, candidates)
     val changed =
       if (touched.isEmpty) None
-      else Some(rewritten(target(spark, root, snapshot, touched)))
+      else Some(rewritten(target(spark, snap.get, snapshot, touched)))
     val (news, kept) =
       if (rewrittenIsNew) (fresh.toSeq ++ changed, Nil)
       else (fresh.toSeq, changed.toSeq)
@@ -409,9 +411,10 @@ object Dml {
     * copy-on-write rewrites to MERGE-ON-READ delete vectors — a
     * one-row delete then costs a KB-sized vector commit instead of a
     * file rewrite (the right-to-be-forgotten shape at 100 TB), at the
-    * price of the DV transient state (file-granularity ops refuse
-    * until `CALL purge_deletes`). Unconditional deletes stay
-    * metadata-only in both modes. */
+    * price of an anti-join on every scan of the vectored files until
+    * `CALL purge_deletes` (the ops that answer from files alone
+    * refuse until then, see `TableStore.deleteWhereMoR`).
+    * Unconditional deletes stay metadata-only in both modes. */
   val DeleteModeKey = "spark.graft.dml.deleteMode"
 
   /** `DELETE FROM store WHERE pred` — copy-on-write, one commit,
@@ -434,11 +437,8 @@ object Dml {
     val (prev, live) = (snap.version, snap.live)
     if (live.isEmpty) return prev
     // unconditional delete: no scan can change the answer — remove
-    // every live file as one metadata commit (truncation is O(log)).
-    // BEFORE any DV or read gate on purpose: a truncate is sound with
-    // outstanding vectors (the removed files take their vectors'
-    // relevance with them), and it is the natural escape hatch from
-    // any state where reads refuse — it must not itself refuse.
+    // every live file as one metadata commit (truncation is O(log));
+    // the removed files take their vectors with them
     if (isUnconditional(spark, pred)) {
       // truncation rebases past metadata-only racers; the empty
       // filter set refuses on any concurrent ADD (a truncate's
@@ -449,10 +449,6 @@ object Dml {
     }
     val mor = spark.conf.get(DeleteModeKey, "cow")
       .equalsIgnoreCase("mor")
-    // copy-on-write refuses outstanding vectors; merge-on-read
-    // composes with them (the new vector covers only rows still
-    // VISIBLE)
-    if (!mor) snap.requireNoDvs("Dml.delete")
     val snapshot = frameOf(spark, root, Some(snap))
     requireDeterministic(snapshot, "a DELETE predicate", pred)
     // one driver-side subquery evaluation serves BOTH passes below
@@ -502,7 +498,6 @@ object Dml {
       case None => return 0L // anchored-but-empty store: typed no-op
     }
     val (prev, live) = (snap.version, snap.live)
-    snap.requireNoDvs("Dml.update")
     if (live.isEmpty) return prev
     val snapshot = frameOf(spark, root, Some(snap))
     val fields = snapshot.schema.fields.map(f => f.name -> f).toMap
@@ -609,7 +604,6 @@ object Dml {
     // an anchored-but-empty store still merges: nothing matches, the
     // NOT MATCHED inserts land as the first real commit
     val snap = TableStore.snapshotOf(spark, root)
-    snap.foreach(_.requireNoDvs("Dml.merge"))
     val snapshot = frameOf(spark, root, snap)
     val tCols = snapshot.columns.toIndexedSeq
     require(tCols.contains(targetKey),
@@ -717,7 +711,7 @@ object Dml {
     // inserted), so the SQL standard allows it there.
     val rowClauses = matched.nonEmpty || notMatchedBySource.nonEmpty
     val cardinalityBad = candidates.nonEmpty && matched.nonEmpty &&
-      joined(target(spark, root, snapshot, candidates))
+      joined(target(spark, snap.get, snapshot, candidates))
         .where(srcPresent.isNotNull)
         .groupBy(col("__graft_file"), col("__graft_rid"))
         .count().where(col("count") > 1).limit(1).collect().nonEmpty
@@ -772,7 +766,7 @@ object Dml {
       else {
         val unmatchedSrc =
           if (candidates.isEmpty) source
-          else source.join(target(spark, root, snapshot, candidates), on,
+          else source.join(target(spark, snap.get, snapshot, candidates), on,
             "left_anti")
         val insertAct = notMatched.zipWithIndex.reverse
           .foldLeft(lit(-1): Column) { case (els, (wn, i)) =>

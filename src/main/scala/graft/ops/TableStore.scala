@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData,
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -548,9 +549,10 @@ object TableStore {
     * starves under the sink's NORMAL state. Rebase validity is
     * exactly the content-identity claim re-checked at the new latest:
     * every removed path must still be LIVE (nobody else rewrote,
-    * deleted or compacted it) and DELETE-VECTOR-FREE (a merge-on-read
-    * delete landing on a source file would make the raw-content
-    * rewrite resurrect its deleted rows). A racer that passes both
+    * deleted or compacted it) and must have taken no delete vector in
+    * the race window (the rewrite folded only the vectors it read; a
+    * later one would be dropped with the file, resurrecting its rows).
+    * A racer that passes both
     * checks — a pure append, a metadata commit, a rewrite of DISJOINT
     * files — composes with this rewrite in either order, so the
     * rebased commit publishes the same table content the two ops
@@ -561,7 +563,8 @@ object TableStore {
   private[graft] def commitLayoutRebasing(spark: SparkSession,
                                           root: String, first: Long,
                                           adds: Seq[FileEntry],
-                                          removes: Seq[String]): Long =
+                                          removes: Seq[String]): Long = {
+    val base = first - 1
     commitRetrying(spark, root, first, "layout rewrite", adds, removes,
         marker = Some("layout")) { (n, now, e) =>
       def refuse(why: String): Nothing =
@@ -574,11 +577,13 @@ object TableStore {
         refuse(s"a concurrent writer removed ${lost.size} of its " +
           s"source files (e.g. ${lost.head})")
       val removedNames = removes.map(_.split('/').last).toSet
-      if (now.dvs.keys.exists(f => removedNames(f.split('/').last)))
+      if (now.log.exists(r => r.v > base && r.action == "dv" &&
+          removedNames(r.path.split('/').last)))
         refuse("a concurrent merge-on-read delete vector landed on " +
-          "a source file; rewriting its raw content would " +
-          "resurrect the deleted rows")
+          "a source file; dropping the file with this rewrite would " +
+          "resurrect the rows it deletes")
     }
+  }
 
   /** Commit `adds`/`removes` at version `first`; on each lost version
     * race, `rebase` checks the FRESH latest snapshot — the racers'
@@ -632,7 +637,7 @@ object TableStore {
     *    deleted the very rows this op rewrote;
     *  - ANY delete-vector action in the race window: a MoR delete
     *    changes logical content without moving file liveness, and
-    *    this op's scans read raw bytes;
+    *    this op's scans applied only the vectors they read;
     *  - a constraint change in the window: the op validated its
     *    rewritten rows against the constraints it READ.
     * Returns the version actually committed. */
@@ -994,27 +999,37 @@ object TableStore {
     /** Live files: per path, the latest DATA action must be an add.
       * Metadata rows (dv vectors, constraints) share the path column,
       * and letting them into the pick would shadow a file's add. */
-    lazy val live: Seq[FileEntry] = newest(("add", "remove")).map(_.toEntry)
+    private lazy val liveRows: Seq[LogRow] = newest(("add", "remove"))
 
-    /** Merge-on-read delete vectors on live files: data-file name →
+    lazy val live: Seq[FileEntry] = liveRows.map(_.toEntry)
+
+    /** Merge-on-read delete vectors on live files: data-file path →
       * the dv parquet dirs holding its deleted row indexes. File NAMES
-      * key the vectors (parquet part names embed the write job's UUID
-      * — unique within a store), so applying them is one equi
-      * anti-join, no path arithmetic. */
+      * match the vectors (parquet part names embed the write job's
+      * UUID — unique within a store), so applying them is one equi
+      * anti-join, no path arithmetic. A vector applies to the add it
+      * follows (a checkpoint writes both at its version): a file
+      * [[restore]] re-adds sheds the vectors of its earlier add. */
     lazy val dvs: Map[String, Seq[String]] = {
-      val liveNames = live.map(e => e.path.split('/').last).toSet
+      val addedAt = liveRows.map(r => r.path.split('/').last -> r.v).toMap
       log
-        .filter(_.action == "dv")
-        .map(r => (r.path, r.meta.getOrElse("")))
-        .filter { case (f, _) => liveNames.contains(f.split('/').last) }
-        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2) }
+        .filter(r => r.action == "dv" &&
+          addedAt.get(r.path.split('/').last).exists(_ <= r.v))
+        .groupBy(_.path)
+        .map { case (f, xs) => f -> xs.map(_.meta.getOrElse("")) }
     }
 
-    private lazy val vectoredNames = dvs.keySet.map(_.split('/').last)
+    private lazy val vectorsByName =
+      dvs.map { case (f, d) => f.split('/').last -> d }
 
     /** Does a delete vector apply to live file `e`? */
     def vectored(e: FileEntry): Boolean =
-      vectoredNames.contains(e.path.split('/').last)
+      vectorsByName.contains(e.path.split('/').last)
+
+    /** The dv dirs of those of `entries` a vector applies to. */
+    def vectorsOf(entries: Seq[FileEntry]): Seq[String] =
+      entries.flatMap(e => vectorsByName.getOrElse(e.path.split('/').last,
+        Nil)).distinct
 
     /** The DECLARED schema: the payload of the newest `schema` action,
       * written by [[alterSchema]] (SQL `ALTER TABLE`). None for
@@ -1041,11 +1056,12 @@ object TableStore {
       new Snapshot(root, versions, v, log.filter(_.v <= v))
     }
 
-    /** Loud contract for operations that plan at FILE granularity:
+    /** Loud contract for operations that answer from FILES alone:
       * merge-on-read delete vectors make a file's logical content a
-      * (file, dv) pair, so stats pruning, file-diff feeds, clones and
-      * rewrites that read files raw would silently resurrect deleted
-      * rows. They refuse instead, naming the remedy. Returns this. */
+      * (file, dv) pair, so log row counts and bounds, file-diff feeds
+      * and clones that re-reference files would silently count or
+      * resurrect deleted rows. They refuse instead, naming the remedy.
+      * Every scan applies the vectors ([[scanFiles]]). Returns this. */
     def requireNoDvs(op: String): Snapshot = {
       require(dvs.isEmpty,
         s"$op plans at file granularity, but merge-on-read delete " +
@@ -1086,47 +1102,53 @@ object TableStore {
     s.get
   }
 
-  /** [[resolved]] for a file-granular operation `op`: refused under
-    * delete vectors ([[Snapshot.requireNoDvs]]). */
-  private def fileSnapshot(spark: SparkSession, root: String,
-                           version: Option[Long], op: String): Snapshot =
-    resolved(spark, root, version).requireNoDvs(op)
-
   /** Live [[FileEntry]]s at committed version `asOf`. */
   private[graft] def liveAt(spark: SparkSession, root: String,
                             asOf: Long): Seq[FileEntry] =
     resolved(spark, root, Some(asOf)).live
 
-  /** Scan a subset of LIVE data files of snapshot `s` under its
-    * EFFECTIVE schema: the declared (ALTER-evolved) schema when one is
-    * in force — files predating an added column null-fill it inside
-    * the reader, and a REWRITE of this frame CARRIES the column — else
-    * the schema Spark would infer, resolved on the driver from
-    * memoized footers ([[scanSchema]]; uniform live sets by
-    * construction).
-    * Every content-rewrite path (compaction, layout, DML,
-    * replaceWhere, purge) and every pruned read must go through here:
-    * a raw read of a mixed-schema live set infers ONE file's shape,
-    * and a rewrite of that frame would silently drop the ALTERed
-    * column's values from every rewritten file. */
-  private def readLiveFiles(spark: SparkSession, s: Snapshot,
-                            entries: Seq[FileEntry]): DataFrame =
-    scanFiles(spark, s.root, s.declared, entries)
-
-  /** [[readLiveFiles]] with the declared schema already resolved: the
-    * one scan of store data files, typed, SQL, DML or change feed — a
-    * native parquet scan over a [[graft.sources.GraftFileIndex]] of
+  /** The one scan of store data files, typed, SQL, DML or change feed:
+    * a native parquet scan over a [[graft.sources.GraftFileIndex]] of
     * `entries`, so the query's own filters prune it through
-    * [[prunedFiles]] at planning. The scan always gets an explicit
-    * schema ([[scanSchema]]), so planning it runs no Spark job:
-    * Spark's own inference would launch one to read a footer the
-    * driver already holds. */
-  private[graft] def scanFiles(spark: SparkSession, root: String,
+    * [[prunedFiles]] at planning. Every content-rewrite path and every
+    * read goes through here under the snapshot's `declared`
+    * (ALTER-evolved) schema when one is in force — files predating an
+    * added column null-fill it, and a rewrite CARRIES it, where a raw
+    * read would infer ONE file's shape — else under [[scanSchema]]'s,
+    * so planning runs no Spark job.
+    *
+    * The only code that applies `s`'s delete vectors: when some of
+    * `entries` are vectored, a left anti-join on (file name,
+    * `_metadata.row_index`) against their vector files, read under
+    * the vectors' fixed schema, drops the deleted rows; vector-free
+    * entries scan as the bare relation. `_metadata` stays resolvable
+    * ([[Bridge.keepMetadata]]), under `alias` when given. `output`
+    * pins the relation's attributes (the SQL rewrite keeps its own). */
+  private[graft] def scanFiles(spark: SparkSession, s: Snapshot,
                                declared: Option[org.apache.spark.sql.types.StructType],
-                               entries: Seq[FileEntry]): DataFrame =
-    Bridge.dataFrame(spark, org.apache.spark.sql.execution.datasources
-      .LogicalRelation(graft.sources.GraftFileIndex.relation(spark, root,
-        entries, scanSchema(spark, root, declared, entries))))
+                               entries: Seq[FileEntry],
+                               alias: Option[String] = None,
+                               output: Seq[AttributeReference] = Nil)
+      : DataFrame = {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val rel = graft.sources.GraftFileIndex.relation(spark, s.root, entries,
+      scanSchema(spark, s.root, declared, entries))
+    val bare = Bridge.dataFrame(spark,
+      if (output.isEmpty) LogicalRelation(rel)
+      else LogicalRelation(rel, output, None, false, None))
+    val scan = alias.fold(bare)(bare.alias)
+    val vectors = s.vectorsOf(entries)
+    if (vectors.isEmpty) scan
+    else {
+      val dv = spark.read.schema("fname STRING, idx BIGINT")
+        .option("ignoreMissingFiles", "false")
+        .parquet(vectors.map(resolve(s.root, _)): _*)
+      Bridge.keepMetadata(scan.join(dv,
+        element_at(split(scan("_metadata.file_path"), "/"), -1) ===
+          dv("fname") && scan("_metadata.row_index") === dv("idx"),
+        "left_anti"))
+    }
+  }
 
   /** The schema a scan of `entries` reports: the declared one (built
     * from a scan's schema, so already nullable), else Spark's
@@ -1159,41 +1181,25 @@ object TableStore {
         })
     }
 
-  /** Apply snapshot `s`'s delete vectors to a scan of its `dirty`
-    * files: anti-join on (file name, row index) removes exactly the
-    * vectored rows. */
-  private def applyDvs(spark: SparkSession, s: Snapshot,
-                       dirty: Seq[FileEntry]): DataFrame = {
-    val dvRows = spark.read.option("ignoreMissingFiles", "false")
-      .parquet(s.dvs.values.flatten.toSeq.distinct
-        .map(p => resolve(s.root, p)): _*)
-      .select(col("fname").as("__dv_fname"), col("idx").as("__dv_idx"))
-    val scan = readLiveFiles(spark, s, dirty)
-    val cols = scan.columns
-    scan
-      .withColumn("__dv_fname",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__dv_idx", col("_metadata.row_index"))
-      .join(dvRows, Seq("__dv_fname", "__dv_idx"), "left_anti")
-      .select(cols.map(col): _*)
-  }
-
   /** Merge-on-read row deletes — the cheap half of the delete
     * spectrum: instead of rewriting every touched file
     * ([[Dml.delete]] — copy-on-write), commit a DELETE VECTOR of
     * (file name, row index) pairs; the data files stay byte-identical
-    * and [[read]] applies the vectors with one anti-join. Deleting one
-    * row from a 100 TB table costs a KB-sized vector write, not a
-    * file rewrite. Candidates are pruned by the predicate's own
-    * translated filters, as [[Dml.delete]]'s are; rows where the
-    * predicate is NULL are KEPT (three-valued semantics).
+    * and every scan applies the vectors with one anti-join
+    * ([[scanFiles]]). Deleting one row from a 100 TB table costs a
+    * KB-sized vector write, not a file rewrite. Candidates are pruned
+    * by the predicate's own translated filters, as [[Dml.delete]]'s
+    * are; rows where the predicate is NULL are KEPT (three-valued
+    * semantics).
     *
-    * Contract: vectors are a TRANSIENT state. Snapshot reads
-    * ([[read]], any version) are vector-aware; every operation that
-    * plans at file granularity (compaction, OPTIMIZE, merge,
-    * [[readWhere]] and its aliases, clones, feeds, restore) refuses
-    * loudly until [[purgeDeletes]] folds the vectors back
-    * into clean files. Returns the committed version, or the current
+    * Contract: every read, pruned read, row-level op and layout
+    * rewrite answers under vectors — a rewrite of a vectored file
+    * writes only its visible rows, so the file's vectors go with it.
+    * The ops that answer from files alone refuse until
+    * [[purgeDeletes]] folds the vectors back: [[metaStats]] and
+    * [[metaBounds]] (log counts and bounds), [[shallowClone]] (file
+    * references), [[restore]]'s target and [[readRowChanges]]' window
+    * ends (file diffs). Returns the committed version, or the current
     * one when nothing matched (no-op, no commit). */
   def deleteWhereMoR(spark: SparkSession, root: String,
                      pred: org.apache.spark.sql.Column): Long = {
@@ -1206,8 +1212,10 @@ object TableStore {
   /** The merge-on-read delete core over an explicit candidate set —
     * shared by [[deleteWhereMoR]] and the SQL DML path ([[Dml]]),
     * both pruned by the predicate's own filters. Commits a delete
-    * VECTOR for the definitely-matching rows of snapshot `s`'s
-    * `touched` files; data files stay byte-identical. */
+    * VECTOR for the definitely-matching VISIBLE rows of snapshot `s`'s
+    * `touched` files (the scan already hides vectored rows, so a
+    * delete that matches nothing visible stays a no-op); data files
+    * stay byte-identical. */
   private[graft] def deleteMoRTouched(spark: SparkSession, s: Snapshot,
                                       pred: org.apache.spark.sql.Column,
                                       touched: Seq[FileEntry]): Long = {
@@ -1216,31 +1224,16 @@ object TableStore {
     val n = prev + 1
     val attempt = java.util.UUID.randomUUID.toString.take(8)
     val dvRel = s"dv/v$n-$attempt"
-    val raw = readLiveFiles(spark, s, touched)
-      // aliased for correlated-subquery predicates from the SQL DML
-      // path (their rebound outer refs are Dml.TargetAlias-qualified);
-      // transparent to plain predicates
-      .alias(Dml.TargetAlias)
+    // aliased for correlated-subquery predicates from the SQL DML path
+    // (their rebound outer refs are Dml.TargetAlias-qualified);
+    // transparent to plain predicates
+    scanFiles(spark, s, s.declared, touched, Some(Dml.TargetAlias))
       .where(coalesce(pred, lit(false))) // definite-true rows only
       .select(
         element_at(split(col("_metadata.file_path"), "/"), -1)
           .as("fname"),
         col("_metadata.row_index").as("idx"))
-    // rows already vectored away are not re-deleted: the new vector
-    // covers only rows live in the MoR view, so a delete that matches
-    // nothing VISIBLE stays a no-op even over dirty files
-    val touchedNames = touched.map(_.path.split('/').last).toSet
-    val existing =
-      s.dvs.filter { case (f, _) => touchedNames(f.split('/').last) }
-    val fresh =
-      if (existing.isEmpty) raw
-      else raw.join(
-        spark.read.option("ignoreMissingFiles", "false")
-          .parquet(existing.values.flatten.toSeq.distinct
-            .map(p => resolve(root, p)): _*)
-          .select("fname", "idx"),
-        Seq("fname", "idx"), "left_anti")
-    fresh.write.parquet(s"$root/$dvRel")
+      .write.parquet(s"$root/$dvRel")
     // which touched files actually lost rows — bounded by file count
     val hitNames = spark.read.parquet(s"$root/$dvRel")
       .select("fname").distinct().collect().map(_.getString(0)).toSet
@@ -1256,24 +1249,18 @@ object TableStore {
     n
   }
 
-  /** Fold every outstanding delete vector back into clean files —
-    * ONE proportional rewrite of only the vectored files, after
-    * which the file-granularity operations work again. Content is
-    * unchanged (the vectors were already applied by every read). */
+  /** Fold every outstanding delete vector back into clean files — a
+    * layout rewrite ([[rewriteLayout]]) of only the vectored files,
+    * into ~128 MB files (OPTIMIZE's default target); a store with no
+    * vectors commits nothing. Content is unchanged (every scan already
+    * applied the vectors), so the commit is a "layout" one that change
+    * feeds skip, and it rebases past disjoint racers. Afterwards the
+    * file-answered ops (see [[deleteWhereMoR]]) work again. */
   def purgeDeletes(spark: SparkSession, root: String,
                    statsCols: Seq[String] = Nil,
-                   bloomCols: Seq[String] = Nil): Long = {
-    val s = resolved(spark, root)
-    val prev = s.version
-    if (s.dvs.isEmpty) return prev
-    val dirty = s.live.filter(s.vectored)
-    val cleaned = applyDvs(spark, s, dirty)
-    val n = prev + 1
-    commitExclusive(spark, root, n,
-      writeData(cleaned, root, n, statsCols, bloomCols),
-      dirty.map(_.path), marker = Some("rewrite"))
-    n
-  }
+                   bloomCols: Seq[String] = Nil): Long =
+    rewriteLayout(spark, root, 128L << 20, 1, statsCols, bloomCols, None)(
+      s => s.live.filter(s.vectored))
 
   /** Declared partition/cluster columns of a store — the
     * `PARTITIONED BY` of its CREATE ([[createEmpty]]'s sidecar), or
@@ -1440,17 +1427,10 @@ object TableStore {
       case Some(s) if s.live.isEmpty && s.declared.isEmpty =>
         spark.read.parquet(s"$root/_schema").limit(0)
       // every scan reads under the snapshot's DECLARED schema when an
-      // ALTER set one (readLiveFiles): pre-ALTER files null-fill its
+      // ALTER set one (scanFiles): pre-ALTER files null-fill its
       // columns inside the reader, also when an ALTER lands between a
       // MoR delete and its purge
-      case Some(s) if s.dvs.isEmpty => readLiveFiles(spark, s, s.live)
-      case Some(s) =>
-        // merge-on-read: vectored files anti-join their delete
-        // vectors; clean files keep the plain columnar scan
-        val (dirty, clean) = s.live.partition(s.vectored)
-        val mor = applyDvs(spark, s, dirty)
-        if (clean.isEmpty) mor
-        else mor.unionByName(readLiveFiles(spark, s, clean))
+      case Some(s) => scanFiles(spark, s, s.declared, s.live)
     }
 
   /** Snapshot read under an explicit TARGET schema — the
@@ -1463,8 +1443,8 @@ object TableStore {
   def readAs(spark: SparkSession, root: String,
              target: org.apache.spark.sql.types.StructType,
              version: Option[Long] = None): DataFrame = {
-    scanFiles(spark, root, Some(target),
-      fileSnapshot(spark, root, version, "readAs").live)
+    val s = resolved(spark, root, version)
+    scanFiles(spark, s, Some(target), s.live)
   }
 
   /** Metadata-only table digest at `version` (default: latest): file
@@ -1485,7 +1465,7 @@ object TableStore {
   def metaStats(spark: SparkSession, root: String,
                 version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val s = fileSnapshot(spark, root, version, "metaStats")
+    val s = resolved(spark, root, version).requireNoDvs("metaStats")
     val live = s.live
     val bytes: Option[Long] =
       if (live.forall(_.bytes > 0)) Some(live.map(_.bytes).sum) else None
@@ -1509,7 +1489,8 @@ object TableStore {
                  version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     require(cols.nonEmpty, "metaBounds needs at least one column")
-    val live = fileSnapshot(spark, root, version, "metaBounds").live
+    val live = resolved(spark, root, version).requireNoDvs("metaBounds")
+      .live
     cols.map { c =>
       val missing = live.filter(e =>
         !e.mins.contains(c) || !e.maxs.contains(c))
@@ -1717,29 +1698,29 @@ object TableStore {
     }
   }
 
-  /** The one LAYOUT rewrite behind every maintenance op `op`: `pick`
-    * files from the latest (live, declared schema), refused as `op`
-    * under delete vectors, fold them into ~`targetBytes` files, rows
-    * spread round-robin or range-clustered and sorted on `clusterKey`,
-    * and commit them via [[commitLayoutRebasing]]. Fewer than
-    * `minFiles` picked commits nothing; an empty pick at `minFiles` 0
-    * commits a no-action version. */
-  private def rewriteLayout(spark: SparkSession, root: String, op: String,
+  /** The one LAYOUT rewrite behind every maintenance op: `pick`
+    * files from the latest snapshot, fold their visible rows (the
+    * scan applies their delete vectors, which leave with the files)
+    * into ~`targetBytes` files, rows spread round-robin or
+    * range-clustered and sorted on `clusterKey`, and commit them via
+    * [[commitLayoutRebasing]]. Fewer than `minFiles` picked commits
+    * nothing; an empty pick at `minFiles` 0 commits a no-action
+    * version. */
+  private def rewriteLayout(spark: SparkSession, root: String,
                             targetBytes: Long, minFiles: Int,
                             statsCols: Seq[String], bloomCols: Seq[String],
                             clusterKey: Option[org.apache.spark.sql.Column])(
-      pick: (Seq[FileEntry], Option[org.apache.spark.sql.types.StructType])
-        => Seq[FileEntry]): Long = {
+      pick: Snapshot => Seq[FileEntry]): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val snap = fileSnapshot(spark, root, None, op)
-    val (prev, declared) = (snap.version, snap.declared)
-    val files = pick(snap.live, declared)
+    val snap = resolved(spark, root)
+    val prev = snap.version
+    val files = pick(snap)
     if (files.size < minFiles) return prev
     val n = prev + 1
     val adds = if (files.isEmpty) Seq.empty else {
       val bytes = files.map(sizeOf(spark, root, _)).sum
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val scan = scanFiles(spark, root, declared, files)
+      val scan = scanFiles(spark, snap, snap.declared, files)
       writeData(clusterKey.fold(scan.repartition(nOut))(k =>
         scan.repartitionByRange(nOut, k).sortWithinPartitions(k)),
         root, n, statsCols, bloomCols)
@@ -1754,8 +1735,8 @@ object TableStore {
   def compact(spark: SparkSession, root: String, targetBytes: Long,
               statsCols: Seq[String] = Nil,
               bloomCols: Seq[String] = Nil): Long =
-    rewriteLayout(spark, root, "compact", targetBytes, 0, statsCols,
-      bloomCols, None)((live, _) => live)
+    rewriteLayout(spark, root, targetBytes, 0, statsCols, bloomCols,
+      None)(_.live)
 
   /** `c` ∈ [lo, hi] as pruning filters. */
   private def within(c: String, lo: Any, hi: Any): Seq[Filter] =
@@ -1949,13 +1930,13 @@ object TableStore {
     * Planning runs no Spark job: memoized footers, one 32-byte block
     * per bloom probe ([[BloomProbe]]), and the schema of what is
     * scanned (of every live file when all are refuted) resolved on the
-    * driver ([[scanSchema]]). Plans at file granularity, so it refuses
-    * under delete vectors. Returns the frame plus (files touched, files
-    * live) — the skipping economics a layout is judged by. */
+    * driver ([[scanSchema]]). The scan applies the delete vectors of
+    * the files it keeps ([[scanFiles]]). Returns the frame plus (files
+    * touched, files live) — the skipping economics a layout is judged
+    * by. */
   def readWhere(spark: SparkSession, root: String, filters: Seq[Filter],
                 version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val snap = fileSnapshot(spark, root, version,
-      "stats- and bloom-pruned reads")
+    val snap = resolved(spark, root, version)
     val (live, declared) = (snap.live, snap.declared)
     val residual = filters.map(residualOf).reduceOption(_ && _)
       .getOrElse(lit(true))
@@ -1963,7 +1944,7 @@ object TableStore {
     val df =
       if (live.isEmpty) readSnapshot(spark, root, Some(snap)).where(residual)
         .limit(0)
-      else scanFiles(spark, root, Some(scanSchema(spark, root, declared,
+      else scanFiles(spark, snap, Some(scanSchema(spark, root, declared,
         if (touched.isEmpty) live else touched)), touched).where(residual)
     (df, touched.size, live.size)
   }
@@ -2067,9 +2048,8 @@ object TableStore {
                    smallBytes: Long, targetBytes: Long,
                    statsCols: Seq[String] = Nil,
                    bloomCols: Seq[String] = Nil): Long =
-    rewriteLayout(spark, root, "compactSmall", targetBytes, 2, statsCols,
-      bloomCols, None)(
-      (live, _) => live.filter(sizeOf(spark, root, _) < smallBytes))
+    rewriteLayout(spark, root, targetBytes, 2, statsCols, bloomCols, None)(
+      _.live.filter(sizeOf(spark, root, _) < smallBytes))
 
   /** Maintenance policy for a streaming sink: once the live set
     * exceeds `maxLiveFiles`, the sink folds the small-file backlog
@@ -2141,7 +2121,7 @@ object TableStore {
                    statsCols: Seq[String] = Nil,
                    bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val snap = fileSnapshot(spark, root, None, "replaceWhere")
+    val snap = resolved(spark, root)
     val store = Dml.frameOf(spark, root, Some(snap))
     require(df.columns.sorted.sameElements(store.columns.sorted),
       s"replaceWhere schema mismatch at $root: batch " +
@@ -2158,7 +2138,7 @@ object TableStore {
       statsCols, bloomCols)
     val staged =
       if (batchAdds.isEmpty) df.limit(0)
-      else scanFiles(spark, root, None, batchAdds)
+      else scanFiles(spark, snap, None, batchAdds)
     val matched = coalesce(pred, lit(false))
     val escapee = staged.where(!matched).limit(1)
       .collect() // bounded: first violation only
@@ -2271,7 +2251,7 @@ object TableStore {
                         precomputedSpan: Option[org.apache.spark.sql.Row]
                           = None): Long = {
     val spark = inserts.sparkSession
-    val snap = fileSnapshot(spark, root, None, opName)
+    val snap = resolved(spark, root)
     val store = Dml.frameOf(spark, root, Some(snap))
     // schema contract: an upsert that widened or narrowed the row
     // shape would leave a mixed-schema live set behind — loud, not
@@ -2448,7 +2428,7 @@ object TableStore {
                                         snap: Option[Snapshot],
                                         entries: Seq[FileEntry]): Unit =
     snap.filter(_ => entries.nonEmpty).foreach { s =>
-      lazy val df = readLiveFiles(spark, s, entries)
+      lazy val df = scanFiles(spark, s, s.declared, entries)
       s.constraints.foreach { case (name, exprSql) =>
         val bad = df.where(!coalesce(expr(exprSql), lit(true)))
           .limit(1).collect()
@@ -2483,7 +2463,7 @@ object TableStore {
       s"shallowClone needs an absolute source root: $srcRoot")
     // a clone re-references FILES; active delete vectors would be
     // left behind, silently resurrecting deleted rows in the clone
-    val src = fileSnapshot(spark, srcRoot, version, "shallowClone")
+    val src = resolved(spark, srcRoot, version).requireNoDvs("shallowClone")
     require(versions(spark, dstRoot).isEmpty,
       s"clone target $dstRoot already has commits")
     val entries = src.live.map(e => e.copy(path = resolve(srcRoot, e.path)))
@@ -2507,20 +2487,20 @@ object TableStore {
     * loudly in [[read]]'s version check. */
   def restore(spark: SparkSession, root: String,
               toVersion: Long): Long = {
-    // restore re-ADDS files; delete vectors are versioned separately
-    // and would re-apply to the restored files out of their epoch, so
-    // both snapshots refuse under them
-    val snap = fileSnapshot(spark, root, None, "restore")
-    // loud if the target was vacuumed
+    val snap = resolved(spark, root)
+    // restore re-ADDS the target's files raw, so a target under delete
+    // vectors refuses; loud too if the target was vacuumed
     val target = snap.at(toVersion).requireNoDvs("restore (target)").live
     val current = snap.live.map(_.path)
     val n = snap.version + 1
     // a file live in BOTH stays live: remove only what the target
     // lacks, add only what the current set lacks — the minimal diff
-    // keeps the log commit proportional to the actual change
+    // keeps the log commit proportional to the actual change. A shared
+    // file a vector hides rows of now is re-added: the re-add sheds
+    // the vector (Snapshot.dvs)
     val targetPaths = target.map(_.path).toSet
     commitExclusive(spark, root, n,
-      target.filterNot(e => current.contains(e.path)),
+      target.filter(e => !current.contains(e.path) || snap.vectored(e)),
       current.filterNot(targetPaths.contains),
       marker = Some("rewrite"))
     n
@@ -2541,9 +2521,9 @@ object TableStore {
                      clusterCol: String, targetBytes: Long,
                      statsCols: Seq[String] = Nil,
                      bloomCols: Seq[String] = Nil): Long =
-    rewriteLayout(spark, root, "optimizeLayout", targetBytes, 0,
+    rewriteLayout(spark, root, targetBytes, 0,
       (statsCols :+ clusterCol).distinct, bloomCols,
-      Some(col(clusterCol)))((live, _) => live)
+      Some(col(clusterCol)))(_.live)
 
   /** SCOPED layout OPTIMIZE — recluster only the live files whose
     * logged [min, max] for `clusterCol` can intersect [lo, hi]: the
@@ -2564,10 +2544,10 @@ object TableStore {
                           statsCols: Seq[String] = Nil,
                           bloomCols: Seq[String] = Nil): Long = {
     require(lo <= hi, s"empty scope interval [$lo, $hi]")
-    rewriteLayout(spark, root, "optimizeLayoutWhere", targetBytes, 2,
+    rewriteLayout(spark, root, targetBytes, 2,
       (statsCols :+ clusterCol).distinct, bloomCols, Some(col(clusterCol)))(
-      (live, declared) =>
-        prunedFiles(spark, root, live, declared, within(clusterCol, lo, hi)))
+      s => prunedFiles(spark, root, s.live, s.declared,
+        within(clusterCol, lo, hi)))
   }
 
   /** Multi-dimensional layout OPTIMIZE as a commit: rewrite the live
@@ -2590,9 +2570,9 @@ object TableStore {
                           targetBytes: Long,
                           statsCols: Seq[String] = Nil,
                           bloomCols: Seq[String] = Nil): Long =
-    rewriteLayout(spark, root, "optimizeLayoutCurve", targetBytes, 0,
+    rewriteLayout(spark, root, targetBytes, 0,
       (statsCols ++ Seq(xCol, yCol)).distinct, bloomCols,
-      Some(Layout.hilbertValue(col(xCol), col(yCol), bits)))((live, _) => live)
+      Some(Layout.hilbertValue(col(xCol), col(yCol), bits)))(_.live)
 
   /** Zero-mutation VACUUM DRY RUN — what [[vacuum]](keepVersions)
     * would do, answered from the COMMIT LOG ALONE: the horizon, how
@@ -2834,7 +2814,7 @@ object TableStore {
     // merged target schema via a mergeSchema footer scan of every
     // add file, which tripled the version-diff gate's cost)
     adds.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, rows) =>
-      scanFiles(spark, root, None, rows.map(_._1))
+      scanFiles(spark, snap, None, rows.map(_._1))
         .withColumn("_commit_version", lit(v))
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
@@ -2889,8 +2869,8 @@ object TableStore {
     val addedFiles = after.filterNot(e => beforeP.contains(e.path))
     val removedFiles = before.filterNot(e => afterP.contains(e.path))
     val target = readSnapshot(spark, root, Some(snap)).schema
-    val a = scanFiles(spark, root, Some(target), addedFiles)
-    val r = scanFiles(spark, root, Some(target), removedFiles)
+    val a = scanFiles(spark, snap, Some(target), addedFiles)
+    val r = scanFiles(spark, snap, Some(target), removedFiles)
     // Multiset difference in ONE pass. The previous shape —
     // a.exceptAll(r) UNION r.exceptAll(a) — scanned BOTH file sets
     // TWICE and ran two aggregates (Spark rewrites each exceptAll

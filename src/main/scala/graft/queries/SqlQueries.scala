@@ -1095,11 +1095,12 @@ object SqlQueries extends QueryPack {
       val base = Tables.orders(s, d)
         .select(col("o_orderkey").cast("int").as("o_key"),
           col("o_totalprice"))
+      val (lo, hi) = split3(s, d)
       graft.ops.TableStore.append(
-        base.where(col("o_key") < 10000).coalesce(1), root,
+        base.where(col("o_key") < hi).coalesce(1), root,
         statsCols = Seq("o_key"))
       graft.ops.TableStore.append(
-        base.where(col("o_key") >= 10000).coalesce(1), root,
+        base.where(col("o_key") >= hi).coalesce(1), root,
         statsCols = Seq("o_key"))
       s.conf.set("spark.sql.catalog.gwid",
         classOf[graft.sources.GraftCatalog].getName)
@@ -1121,7 +1122,7 @@ object SqlQueries extends QueryPack {
       // rows only BIGINT can hold land through the same surface
       s.sql(s"INSERT INTO gwid.`$root` " +
         "SELECT o_key + 5000000000, o_totalprice " +
-        s"FROM gwid.`$root` VERSION AS OF 2 WHERE o_key < 2500")
+        s"FROM gwid.`$root` VERSION AS OF 2 WHERE o_key < ${lo / 2}")
       // pruning evidence in the WIDENED type: a probe above 2^32
       // must touch only the post-widen file, proved by the same
       // evaluator the scan runs
@@ -1148,13 +1149,13 @@ object SqlQueries extends QueryPack {
         FROM gwid.`$root` VERSION AS OF 2
         ORDER BY leg""")
     },
-    Some("""
-      WITH base AS (
+    Some(s"""
+      WITH b AS ($Split3Sql), base AS (
         SELECT CAST(o_orderkey AS INTEGER) AS o_key, o_totalprice
         FROM orders
       ), ins AS (
         SELECT CAST(o_key AS BIGINT) + 5000000000 AS o_key
-        FROM base WHERE o_key < 2500
+        FROM base, b WHERE o_key < b.lo // 2
       ), latest AS (
         SELECT CAST(o_key AS BIGINT) AS o_key FROM base
         UNION ALL SELECT o_key FROM ins
@@ -1198,10 +1199,11 @@ object SqlQueries extends QueryPack {
         "PARTITIONED BY (o_month)")
       require(graft.ops.TableStore.partitionColsOf(s, root) ==
         Seq("o_month"), "CREATE must declare the layout")
+      val (lo, hi) = split3(s, d)
       val src = Tables.orders(s, d).select(
         col("o_orderkey").as("o_key"),
-        when(col("o_orderkey") < 5000L, "2024-01")
-          .when(col("o_orderkey") < 10000L, "2024-02")
+        when(col("o_orderkey") < lo, "2024-01")
+          .when(col("o_orderkey") < hi, "2024-02")
           .otherwise("2024-03").as("o_month"),
         col("o_totalprice").as("o_price"))
       src.createOrReplaceTempView("gate_part_src")
@@ -1229,14 +1231,14 @@ object SqlQueries extends QueryPack {
         GROUP BY o_month
         ORDER BY o_month""")
     },
-    Some("""
-      WITH src AS (
+    Some(s"""
+      WITH b AS ($Split3Sql), src AS (
         SELECT o_orderkey AS o_key,
-               CASE WHEN o_orderkey < 5000 THEN '2024-01'
-                    WHEN o_orderkey < 10000 THEN '2024-02'
+               CASE WHEN o_orderkey < b.lo THEN '2024-01'
+                    WHEN o_orderkey < b.hi THEN '2024-02'
                     ELSE '2024-03' END AS o_month,
                o_totalprice AS o_price
-        FROM orders
+        FROM orders, b
       )
       SELECT o_month, COUNT(*) AS n_rows,
              CAST(SUM(o_key) AS BIGINT) AS key_sum,

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Analysis rewrite: every [[GraftStoreTable]] relation becomes the
@@ -30,10 +29,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * `DeleteFromTable`/`UpdateTable`/`MergeIntoTable` in the same pass
   * its plan resolves (a merge's SOURCE still rewrites). The rewrite
   * preserves the relation's resolved output attributes (same names,
-  * types, exprIds), so parent operators are untouched. Snapshots
-  * carrying merge-on-read delete vectors are left on the dv-aware
-  * V1Scan path — a raw file scan would resurrect deleted rows;
-  * correctness owns the fork. */
+  * types, exprIds), so parent operators are untouched. The
+  * replacement is the store's one scan
+  * ([[graft.ops.TableStore.scanFiles]]): the bare relation for a
+  * vector-free snapshot, and under merge-on-read delete vectors the
+  * same pruned native scan with the vectored rows anti-joined away. */
 case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
   import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
@@ -78,7 +78,7 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     // difference between an instant dashboard tick and a full scan
     // (the metaStats contract on the query path). DV-carrying
     // snapshots fall through: their logical count is footer rows
-    // minus vectored rows, which the dv-aware scan owns.
+    // minus vectored rows, which only the scan knows.
     // transformDownWithSubqueries: a bare COUNT(*) inside a SCALAR
     // SUBQUERY (`SELECT (SELECT COUNT(*) FROM wh.t) AS n, …` — the
     // dashboard-tile shape) short-circuits to the log sum too, not
@@ -96,13 +96,9 @@ case class GraftRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     // DELETE shapes, and any SELECT with a store-reading subquery) get
     // the same native vectorized scan as top-level relations
     counted.transformUpWithSubqueries {
-      case r: DataSourceV2Relation
-          if r.table.isInstanceOf[GraftStoreTable] &&
-            !r.table.asInstanceOf[GraftStoreTable].hasDeleteVectors =>
-        val t = r.table.asInstanceOf[GraftStoreTable]
-        LogicalRelation(
-          GraftFileIndex.relation(session, t.root, t.liveEntries, t.schema),
-          r.output, None, isStreaming = false, stream = None)
+      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftStoreTable] =>
+        r.table.asInstanceOf[GraftStoreTable].scan(session, r.output)
+          .queryExecution.analyzed
     }
   }
 }

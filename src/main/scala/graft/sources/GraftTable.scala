@@ -4,6 +4,7 @@ import java.util.{Set => JSet}
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
@@ -35,10 +36,11 @@ import graft.ops.TableStore
   *    during analysis — vectorized reader + whole-stage codegen; this
   *    is the plan every SQL query gets;
   *  - the DSv2 [[GraftScanBuilder]] below is the self-contained
-  *    fallback (extensions not installed, or merge-on-read delete
-  *    vectors outstanding — the rewrite refuses those): V1Scan
-  *    delegation to the same pruned scan when the snapshot is
-  *    vector-free, else to the dv-aware [[TableStore.read]].
+  *    fallback when the extensions are not installed: V1Scan
+  *    delegation to the same pruned scan.
+  *
+  * Both are [[TableStore.scanFiles]], which applies merge-on-read
+  * delete vectors when the snapshot has them.
   */
 class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
                       providedSchema: Option[StructType] = None)
@@ -67,16 +69,21 @@ class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
     resolved.fold(Seq.empty[TableStore.FileEntry])(_.live)
 
   /** Outstanding merge-on-read delete vectors make a file's logical
-    * content a (file, dv) pair — raw file scans are then wrong, and
-    * both read paths must route through the dv-aware
-    * [[TableStore.read]]. */
+    * row count footer rows minus vectored rows, which the log cannot
+    * answer: the COUNT(*) pre-pass ([[GraftRewrite]]) scans then. */
   private[sources] lazy val hasDeleteVectors: Boolean =
     resolved.exists(_.dvs.nonEmpty)
 
-  /** The dv-aware snapshot frame — the hash target both read paths
-    * must match. */
-  private[sources] def snapshot: org.apache.spark.sql.DataFrame =
-    TableStore.readSnapshot(spark, root, resolved)
+  /** The store's one scan ([[TableStore.scanFiles]]) of `entries`
+    * under this table's declared-aware schema, with `output` as the
+    * relation's attributes when given. */
+  private[sources] def scan(session: SparkSession,
+                            output: Seq[AttributeReference] = Nil,
+                            entries: Seq[TableStore.FileEntry] = liveEntries)
+      : DataFrame =
+    TableStore.scanFiles(session,
+      resolved.getOrElse(new TableStore.Snapshot(root, Nil, 0L, Nil)),
+      Some(schema), entries, None, output)
 
   /** An existing store's commit log is the source of truth (a
     * user-provided schema is ignored there, the Delta posture); a
@@ -84,7 +91,7 @@ class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
     * takes the writer-provided schema, since nothing is committed
     * yet to infer from. */
   override lazy val schema: StructType =
-    if (storeExists) snapshot.schema
+    if (storeExists) TableStore.readSnapshot(spark, root, resolved).schema
     else providedSchema.getOrElse(
       throw new IllegalArgumentException(
         s"no store at $root — reads need a committed store; a first " +
@@ -221,21 +228,20 @@ class GraftScanBuilder(table: GraftStoreTable)
 
 /** V1Scan delegation: the scan plans as a RowDataSourceScanExec whose
   * RDD is the store's one pruned scan ([[TableStore.prunedFiles]] then
-  * [[TableStore.scanFiles]]) when the snapshot is vector-free, the
-  * dv-aware full read when not.
+  * [[TableStore.scanFiles]], which applies any delete vectors).
   * (The primary SQL path never reaches here: the analysis rewrite in
   * [[graft.functions.GraftExtensions]] replaces the relation with a
   * native parquet scan first. This path serves `spark.read
-  * .format("graft")` without extensions, and dv-carrying snapshots.)
+  * .format("graft")` in a session without the extensions.)
   *
   * Statistics come from the COMMIT LOG (byte and row sums over the
   * live entries — metadata-sized, zero IO): without them a fallback
   * relation defaults to `defaultSizeInBytes` = "huge", and a small
   * store on this path would never broadcast in a join — the planner
-  * regression a no-extensions session (or a dv-carrying snapshot)
-  * would otherwise silently pay. Bytes from pre-byte-logging commits
-  * are unknown: the estimate then reports only the row count rather
-  * than guessing low (an under-estimate flips joins the WRONG way).
+  * regression a no-extensions session would otherwise silently pay.
+  * Bytes from pre-byte-logging commits are unknown: the estimate then
+  * reports only the row count rather than guessing low (an
+  * under-estimate flips joins the WRONG way).
   * Under delete vectors the sums slightly over-count — conservative
   * for broadcast decisions. */
 class GraftScan(table: GraftStoreTable, required: StructType,
@@ -266,16 +272,9 @@ class GraftScan(table: GraftStoreTable, required: StructType,
       override def schema: StructType = required
       override def buildScan(): RDD[Row] = {
         val spark = context.sparkSession
-        val base =
-          if (table.hasDeleteVectors || table.liveEntries.isEmpty)
-            table.snapshot
-          // read under the table's (declared-aware) schema: an
-          // ALTER-evolved snapshot's pre-ALTER files null-fill the
-          // added column instead of inferring one file's shape
-          else TableStore.scanFiles(spark, table.root, Some(table.schema),
-            TableStore.prunedFiles(spark, table.root, table.liveEntries,
-              Some(table.schema), pushed))
-        base.select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
+        table.scan(spark, entries = TableStore.prunedFiles(spark,
+            table.root, table.liveEntries, Some(table.schema), pushed))
+          .select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
       }
     }
     rel.asInstanceOf[T]

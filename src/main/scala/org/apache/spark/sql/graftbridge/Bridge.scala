@@ -43,6 +43,23 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` with the metadata columns (`_metadata`) its top projection
+    * hides resolvable above it: the analyzer projects away what a join
+    * condition pulled into a file scan, and the projection's hidden
+    * output (where Spark keeps a USING join's) names them again. */
+  def keepMetadata(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.catalyst.util.MetadataColumnHelper
+    df.queryExecution.analyzed match {
+      case p: Project =>
+        p.setTagValue(Project.hiddenOutputTag,
+          p.child.output.filter(a => new MetadataColumnHelper(a).isMetadataCol))
+        dataFrame(df.sparkSession, p)
+      case _ => df
+    }
+  }
+
   /** Spark's own StructType → parquet MessageType conversion
     * (`SparkToParquetSchemaConverter` is sql-internal) — used to
     * write schema-anchor files driver-side with exactly the physical

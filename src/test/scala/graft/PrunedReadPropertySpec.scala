@@ -12,9 +12,10 @@ import graft.ops.TableStore
 import graft.sources.GraftFileIndex
 
 /** Differential check of the store's one file-pruning path. Random
-  * stores mix four kinds of commit — with log stats, stat-less, with
-  * blooms, and one written before an ALTER added the probed string
-  * column — and every typed read with a random probe must return
+  * stores mix five kinds of commit — with log stats, stat-less, with
+  * blooms, one written before an ALTER added the probed string
+  * column, and merge-on-read deletes whose vectors every scan applies
+  * — and every typed read with a random probe must return
   * exactly the rows of a full snapshot read under the same residual.
   * Every read's `touched` must also equal what the SQL surface's
   * [[GraftFileIndex]] keeps for the same predicate, footer bounds and
@@ -31,6 +32,9 @@ class PrunedReadPropertySpec extends SparkSpec {
   private case object Stats extends Kind
   private case object Bare extends Kind
   private case object Bloom extends Kind
+  /** A merge-on-read delete of the even-`y` rows in the commit's key
+    * span; it writes no rows. */
+  private case object Mor extends Kind
 
   /** One commit: its kind, its rows (k, y, s) and its file count. */
   private case class Commit(kind: Kind,
@@ -43,7 +47,8 @@ class PrunedReadPropertySpec extends SparkSpec {
   // keys clustered per commit so the log can prune; `s` follows `k`
   // (prefix "p<k/100>/") so string probes prune too; ~10% nulls
   private val genCommit: Gen[Commit] = for {
-    kind <- Gen.oneOf(Stats, Bare, Bloom)
+    kind <- Gen.frequency(3 -> Gen.oneOf(Stats, Bare, Bloom),
+      1 -> Gen.const(Mor))
     base <- Gen.choose(0L, 900L)
     n <- Gen.choose(1, 25)
     ks <- Gen.listOfN(n, Gen.choose(base, base + 99))
@@ -55,13 +60,15 @@ class PrunedReadPropertySpec extends SparkSpec {
       if (nulls(i) == 1) None else Some(f"p${ks(i) / 100}/${ks(i)}%04d"))
   }, files)
 
+  // the first commit writes rows: a delete has nothing to delete there
   private val genShape: Gen[Shape] = Gen.frequency(
     1 -> Gen.listOfN(3, genCommit)
       .map(cs => Shape(preAlter = false, cs.map(_.copy(kind = Stats)))),
     3 -> (for {
       pre <- Gen.oneOf(true, false)
       cs <- Gen.listOfN(4, genCommit)
-    } yield Shape(pre, cs)))
+    } yield Shape(pre, cs.head.copy(kind =
+      if (cs.head.kind == Mor) Stats else cs.head.kind) +: cs.tail)))
 
   private def build(shape: Shape): String = {
     val s = spark; import s.implicits._
@@ -71,11 +78,15 @@ class PrunedReadPropertySpec extends SparkSpec {
       val df0 = c.rows.toDF("k", "y", "s")
       val df = (if (pre) df0.drop("s") else df0).repartition(c.files)
       val cols = if (pre) Seq("k", "y") else Seq("k", "y", "s")
+      val keys = c.rows.flatMap(_._1)
       c.kind match {
         case Stats => TableStore.append(df, root, statsCols = cols)
         case Bare => TableStore.append(df, root)
         case Bloom => TableStore.append(df, root,
           bloomCols = cols.filterNot(_ == "y"))
+        case Mor if keys.nonEmpty => TableStore.deleteWhereMoR(spark, root,
+          col("k").between(keys.min, keys.max) && col("y") % 2 === 0)
+        case Mor =>
       }
       if (pre) TableStore.alterSchema(spark, root, Seq("s" -> StringType), Nil)
     }
@@ -147,6 +158,7 @@ class PrunedReadPropertySpec extends SparkSpec {
   private def str(k: Long) = f"p${k / 100}/$k%04d"
 
   private var bloomStores = 0
+  private var vectoredStores = 0
 
   test("typed reads == full read + residual; touched == file index's " +
     "count") {
@@ -158,6 +170,8 @@ class PrunedReadPropertySpec extends SparkSpec {
       case (shape, (lo, hi, ylo, yhi, keys, withNull)) =>
         val root = build(shape)
         if (shape.commits.exists(_.kind == Bloom)) bloomStores += 1
+        if (TableStore.snapshotOf(spark, root).exists(_.dvs.nonEmpty))
+          vectoredStores += 1
         val (slo, shi) = (str(lo), str(hi))
         val prefix = s"p${lo / 100}/"
         val strKeys = keys.map(str) ++ (if (withNull) Seq(null) else Nil)
@@ -206,5 +220,6 @@ class PrunedReadPropertySpec extends SparkSpec {
     val res = SCTest.check(params, prop)
     assert(res.passed, s"pruned reads failed: $res")
     assert(bloomStores > 0, "no bloom store reached the file-index check")
+    assert(vectoredStores > 0, "no store under delete vectors was read")
   }
 }

@@ -10,7 +10,9 @@ import graft.ops.Dml.{WhenMatched, WhenNotMatched}
   * store and batch they must leave the same table. Random stores mix
   * commits with log stats, with blooms and stat-less ones, over unique
   * non-null keys plus NULL keys; batches are unique per non-null key,
-  * may carry NULL keys, and may be empty. [[TableStore.merge]] pairs
+  * may carry NULL keys, and may be empty. Before each op a
+  * merge-on-read delete vectors some rows on both stores, so both
+  * engines rewrite vectored files. [[TableStore.merge]] pairs
   * with `WHEN MATCHED UPDATE * / WHEN NOT MATCHED INSERT *`, and
   * [[TableStore.applyChanges]] with a leading delete clause and an
   * upsert-only insert. */
@@ -59,7 +61,14 @@ class RewriteDifferentialSpec extends SparkSpec {
       def batch(): Seq[Row3] =
         if (rnd.nextInt(5) == 0) Nil
         else draw(0L until 120L, 1 + rnd.nextInt(15))
+      def morDelete(): Unit = {
+        val (m, r) = (2 + rnd.nextInt(4), rnd.nextInt(2))
+        roots.foreach(TableStore.deleteWhereMoR(spark, _,
+          col("k") % m === r && col("v") < 700))
+        same("MoR delete")
+      }
 
+      morDelete()
       val upserts = frame(batch())
       TableStore.merge(upserts, store, "k")
       Dml.merge(spark, sql, source(upserts), col("k") === col("sk"), "k",
@@ -67,6 +76,7 @@ class RewriteDifferentialSpec extends SparkSpec {
         notMatched = Seq(WhenNotMatched(None, insertAll)))
       same("merge")
 
+      morDelete()
       val changes = batch().map { case (k, v, p) =>
         (k, v, p, if (rnd.nextBoolean()) "upsert" else "delete")
       }.toDF("k", "v", "s", "_op")

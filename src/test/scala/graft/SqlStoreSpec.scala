@@ -12,9 +12,9 @@ import graft.sources.{GraftCatalog, StatsSkipping}
   * (named + absolute-path identifiers), VERSION/TIMESTAMP AS OF time
   * travel, the analysis rewrite to the native pruned parquet scan
   * (plan-asserted: FileSourceScanExec, PushedFilters reaching
-  * parquet, log-stats FILE pruning, column pruning), the dv-aware
-  * V1Scan fallback, `spark.read.format("graft")`, and the
-  * table_changes / table_history table-valued sugar. */
+  * parquet, log-stats FILE pruning, column pruning) with delete
+  * vectors applied, the V1Scan fallback, `spark.read.format("graft")`,
+  * and the table_changes / table_history table-valued sugar. */
 class SqlStoreSpec extends SparkSpec {
 
   private def tmp() = graft.TempRoots.create("graft_sqlstore") + "/t"
@@ -162,6 +162,34 @@ class SqlStoreSpec extends SparkSpec {
     // and the result matches the API read exactly
     assert(viaSql == TableStore.read(spark, root)
       .select("id").collect().map(_.getLong(0)).toSet)
+  }
+
+  test("SQL point reads over delete vectors plan the native pruned scan") {
+    val root = threeRangedCommits()
+    TableStore.deleteWhereMoR(spark, root, col("id") === 150L)
+    spark.conf.set("spark.sql.catalog.gsql",
+      classOf[GraftCatalog].getName)
+    def probe(k: Long): (Seq[Long], Int) = {
+      val df = spark.sql(s"SELECT id FROM gsql.`$root` WHERE id = $k")
+      val got = df.collect().map(_.getLong(0)).toSeq
+      def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
+          : Seq[FileSourceScanExec] = p.collect {
+        case f: FileSourceScanExec => Seq(f)
+        case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          scansOf(q.plan)
+      }.flatten
+      val store = scansOf(df.queryExecution.executedPlan)
+        .filter(_.relation.location.isInstanceOf[graft.sources.GraftFileIndex])
+      assert(store.size == 1, s"expected the store's file scan: $store")
+      val s = store.head
+      (got, s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
+        .map(_.files.size).sum)
+    }
+    // the vectored row stays deleted; its neighbour reads; each probe
+    // touches the one file of three its key can be in
+    assert(probe(150L) == (Nil, 1))
+    assert(probe(151L) == (Seq(151L), 1))
   }
 
   test("spark.read.format(graft) loads latest and pinned versions") {
@@ -428,17 +456,19 @@ class SqlStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1L to 50L: _*).coalesce(1), root,
       statsCols = Seq("id"))
-    // the dv forces the fallback path (the rewrite refuses dv
-    // snapshots) — exactly where missing stats used to default the
-    // relation to "huge" and break broadcast decisions
     TableStore.deleteWhereMoR(spark, root, col("id") === 1L)
+    // a session without the graft extensions plans the fallback path —
+    // exactly where missing stats used to default the relation to
+    // "huge" and break broadcast decisions
+    val plain = org.apache.spark.sql.graftbridge.TestSessions
+      .withoutExtensions(spark)
     // AQE off: the broadcast decision must come from PLAN-time stats
     // (AQE's runtime re-plan would mask a missing estimate)
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val aqe = plain.conf.get("spark.sql.adaptive.enabled")
+    plain.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val small = spark.read.format("graft").load(root)
-      val big = spark.range(0L, 100000L).select(col("id").as("k"))
+      val small = plain.read.format("graft").load(root)
+      val big = plain.range(0L, 100000L).select(col("id").as("k"))
       val j = big.join(small, col("k") === col("id"))
       assert(j.count() == 49L)
       val bhj = j.queryExecution.executedPlan.collect {
@@ -447,6 +477,9 @@ class SqlStoreSpec extends SparkSpec {
       assert(bhj.nonEmpty,
         s"expected a broadcast join from log-reported stats:\n" +
           j.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      assert(j.queryExecution.executedPlan.collect {
+        case r: org.apache.spark.sql.execution.RowDataSourceScanExec => r
+      }.nonEmpty, "the store must plan through its V1Scan fallback")
+    } finally plain.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

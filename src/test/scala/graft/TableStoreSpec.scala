@@ -997,36 +997,53 @@ class TableStoreSpec extends SparkSpec {
     val vsNow = TableStore.versions(spark, root)
     assert(TableStore.deleteWhereMoR(spark, root, col("id") === 150L) == vsNow.last)
     assert(TableStore.versions(spark, root) == vsNow)
-    // file-granularity ops refuse until purged, naming the remedy;
-    // every layout rewrite names itself
-    val rewrites: Seq[(String, () => Long)] = Seq(
-      "compact" -> (() =>
-        TableStore.compact(spark, root, targetBytes = 1L << 30)),
-      "compactSmall" -> (() =>
-        TableStore.compactSmall(spark, root, 1L << 30, 1L << 30)),
-      "optimizeLayout" -> (() =>
-        TableStore.optimizeLayout(spark, root, "id", 1L << 30)),
-      "optimizeLayoutWhere" -> (() =>
-        TableStore.optimizeLayoutWhere(spark, root, "id", 0L, 300L,
-          1L << 30)),
-      "optimizeLayoutCurve" -> (() =>
-        TableStore.optimizeLayoutCurve(spark, root, "id", "id", 9,
-          1L << 30)),
-      "restore" -> (() => TableStore.restore(spark, root, 1L)))
-    rewrites.foreach { case (op, run) =>
-      val ex = intercept[IllegalArgumentException](run())
-      assert(ex.getMessage.startsWith(s"requirement failed: $op plans"),
-        s"$op refusal names another op: ${ex.getMessage}")
-      assert(ex.getMessage.contains("purgeDeletes"))
+    // every op answers under the vectors as it does on a purged copy
+    // of the same store, and no vectored row comes back
+    val conf = spark.sparkContext.hadoopConfiguration
+    def copyOf(src: String): String = {
+      val (from, to) = (new org.apache.hadoop.fs.Path(src),
+        new org.apache.hadoop.fs.Path(tmp()))
+      org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(conf), from,
+        to.getFileSystem(conf), to, false, conf)
+      to.toString
     }
-    val ex2 = intercept[IllegalArgumentException] {
-      TableStore.readRange(spark, root, "id", 0L, 50L)
+    val purgedCopy = copyOf(root)
+    TableStore.purgeDeletes(spark, purgedCopy)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select("id", "payload").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val vectoredRows = Seq(150L, 151L, 160L).map(k => (k, s"r$k")).toSet
+    def thenRead(op: String => Long)(r: String) = {
+      op(r); TableStore.read(spark, r)
     }
-    assert(ex2.getMessage.contains("purgeDeletes"))
-    val ex3 = intercept[IllegalArgumentException] {
-      TableStore.merge(Seq((1L, "x")).toDF("id", "payload"), root, "id")
+    val ops: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "compact" -> thenRead(TableStore.compact(spark, _, 1L << 30)),
+      "compactSmall" -> thenRead(
+        TableStore.compactSmall(spark, _, 1L << 30, 1L << 30)),
+      "optimizeLayout" -> thenRead(
+        TableStore.optimizeLayout(spark, _, "id", 1L << 30)),
+      "optimizeLayoutWhere" -> thenRead(
+        TableStore.optimizeLayoutWhere(spark, _, "id", 0L, 300L, 1L << 30)),
+      "optimizeLayoutCurve" -> thenRead(
+        TableStore.optimizeLayoutCurve(spark, _, "id", "id", 9, 1L << 30)),
+      "restore" -> thenRead(TableStore.restore(spark, _, 1L)),
+      "readRange" -> (r => TableStore.readRange(spark, r, "id", 140L, 170L)._1),
+      "merge" -> thenRead(TableStore.merge(
+        Seq((1L, "x"), (155L, "y"), (160L, "z")).toDF("id", "payload"), _,
+        "id")))
+    ops.foreach { case (op, run) =>
+      val got = sorted(run(copyOf(root)))
+      assert(got == sorted(run(copyOf(purgedCopy))),
+        s"$op under delete vectors differs from $op after purgeDeletes")
+      assert(!got.exists(vectoredRows), s"$op brought a vectored row back")
     }
-    assert(ex3.getMessage.contains("purgeDeletes"))
+    // restoring a version before the deletes re-adds the vectored file
+    // and sheds its vectors, on both stores
+    val before = sorted(TableStore.read(spark, root, Some(3L)))
+    Seq(copyOf(root), copyOf(purgedCopy)).foreach { r =>
+      TableStore.restore(spark, r, 3L)
+      assert(sorted(TableStore.read(spark, r)) == before)
+    }
     // purge: one rewrite of ONLY the vectored file, content unchanged
     val pv = TableStore.purgeDeletes(spark, root)
     val ph = TableStore.history(spark, root)
@@ -1613,6 +1630,78 @@ class TableStoreSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("delete vector"))
     assert(ids(root) == Set(2L)) // the MoR delete holds
+  }
+
+  test("a layout rewrite that folded a vector rebases past a pure " +
+      "append; a vector landing in the race window still refuses") {
+    val root = tmp()
+    TableStore.append(mk(1, 2, 3), root) // v1
+    TableStore.deleteWhereMoR(spark, root, col("id") === 2L) // v2
+    val live = TableStore.liveAt(spark, root, 2L)
+    // the rewrite reads v2's visible rows: it folds v2's vector
+    val adds = stageRewrite(root, 2L)
+    TableStore.append(mk(4), root) // v3: the racer, a pure append
+    assert(TableStore.commitLayoutRebasing(
+      spark, root, 3L, adds, live.map(_.path)) == 4L)
+    assert(ids(root) == Set(1L, 3L, 4L))
+    // only a vector committed after the rewrite's snapshot refuses
+    val live4 = TableStore.liveAt(spark, root, 4L)
+    val adds4 = stageRewrite(root, 4L)
+    TableStore.deleteWhereMoR(spark, root, col("id") === 1L) // v5
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      TableStore.commitLayoutRebasing(
+        spark, root, 5L, adds4, live4.map(_.path))
+    }
+    assert(ex.getMessage.contains("delete vector"))
+    assert(ids(root) == Set(3L, 4L))
+  }
+
+  test("Dml.update over vectored files keeps the vectored rows deleted " +
+      "and rewrites only the file holding a match") {
+    val root = tmp()
+    TableStore.append(mk(1L to 10L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    TableStore.append(mk(11L to 20L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    TableStore.deleteWhereMoR(spark, root,
+      col("id") === 3L || col("id") === 15L) // one vector per file
+    // both files are candidates; discovery through _metadata.file_path
+    // over the vector-applied scan finds the one holding id 4
+    val v = graft.ops.Dml.update(spark, root, Seq("payload" -> lit("u")),
+      Some(col("id") === 4L || col("id") === 3L || col("id") === 15L))
+    val h = TableStore.history(spark, root).where(col("version") === v)
+      .collect()(0)
+    assert(h.getAs[Long]("n_removed") == 1L && h.getAs[Long]("n_added") == 1L)
+    val after = TableStore.read(spark, root)
+    assert(ids(root) == ((1L to 20L).toSet -- Set(3L, 15L)))
+    assert(after.where(col("payload") === "u").select("id").collect()
+      .map(_.getLong(0)).toSeq == Seq(4L))
+    // the untouched file keeps its vector, the rewritten one shed it
+    assert(TableStore.snapshotOf(spark, root).get.dvs.size == 1)
+  }
+
+  test("a scan of vector-free files is the bare relation: no join") {
+    val root = tmp()
+    TableStore.append(mk(1L to 10L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    TableStore.append(mk(11L to 20L: _*).coalesce(1), root,
+      statsCols = Seq("id"))
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size
+    assert(joins(TableStore.read(spark, root)) == 0)
+    TableStore.deleteWhereMoR(spark, root, col("id") === 15L)
+    // the pruned read keeps only the first file, which no vector
+    // touches: the plan is the one a vector-free store plans
+    val (clean, touched, live) = TableStore.readRange(spark, root, "id", 1L, 5L)
+    assert((touched, live) == (1, 2))
+    assert(joins(clean) == 0)
+    assert(clean.count() == 5L)
+    val (dirty, _, _) = TableStore.readRange(spark, root, "id", 11L, 20L)
+    assert(joins(dirty) == 1)
+    assert(dirty.select("id").collect().map(_.getLong(0)).toSet ==
+      (11L to 20L).toSet - 15L)
   }
 
   test("two competing compactors: one rebases only past appends, " +
