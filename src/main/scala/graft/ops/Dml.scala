@@ -305,7 +305,7 @@ object Dml {
   private[graft] def frameOf(spark: SparkSession, root: String,
                              snap: Option[TableStore.Snapshot]): DataFrame =
     snap.filter(_.live.nonEmpty) match {
-      case Some(s) => TableStore.scanFiles(spark, s,
+      case Some(s) => TableStore.scanFiles(spark, root, Some(s),
         Some(TableStore.scanSchema(spark, root, s.declared, s.live,
           mergeAll = true)), s.live)
       case None => TableStore.readSnapshot(spark, root, snap)
@@ -325,8 +325,8 @@ object Dml {
   private def target(spark: SparkSession, snap: TableStore.Snapshot,
                      snapshot: DataFrame,
                      entries: Seq[FileEntry]): DataFrame =
-    TableStore.scanFiles(spark, snap, Some(snapshot.schema), entries,
-      Some(TargetAlias))
+    TableStore.scanFiles(spark, snap.root, Some(snap),
+      Some(snapshot.schema), entries, Some(TargetAlias))
 
   /** The one row-level rewrite — levels 2 and 3 of the discovery
     * contract (see the object doc), the write, the constraint check

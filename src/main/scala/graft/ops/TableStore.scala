@@ -549,10 +549,13 @@ object TableStore {
     * starves under the sink's NORMAL state. Rebase validity is
     * exactly the content-identity claim re-checked at the new latest:
     * every removed path must still be LIVE (nobody else rewrote,
-    * deleted or compacted it) and must have taken no delete vector in
-    * the race window (the rewrite folded only the vectors it read; a
-    * later one would be dropped with the file, resurrecting its rows).
-    * A racer that passes both
+    * deleted or compacted it) and must have taken no delete vector
+    * and no re-ADD in the race window (the rewrite folded only the
+    * vectors it read: a later one would be dropped with the file,
+    * resurrecting its rows, and a [[restore]] re-add sheds the folded
+    * ones, bringing theirs back; a vacuum checkpoint past the base
+    * re-adds too, so it refuses conservatively). A racer that passes
+    * both
     * checks — a pure append, a metadata commit, a rewrite of DISJOINT
     * files — composes with this rewrite in either order, so the
     * rebased commit publishes the same table content the two ops
@@ -577,11 +580,11 @@ object TableStore {
         refuse(s"a concurrent writer removed ${lost.size} of its " +
           s"source files (e.g. ${lost.head})")
       val removedNames = removes.map(_.split('/').last).toSet
-      if (now.log.exists(r => r.v > base && r.action == "dv" &&
-          removedNames(r.path.split('/').last)))
-        refuse("a concurrent merge-on-read delete vector landed on " +
-          "a source file; dropping the file with this rewrite would " +
-          "resurrect the rows it deletes")
+      if (now.log.exists(r => r.v > base && removedNames(
+          r.path.split('/').last) && (r.action == "dv" || r.action == "add")))
+        refuse("a concurrent merge-on-read delete vector or re-add " +
+          "landed on a source file; this rewrite folded only the " +
+          "vectors it read, so it would resurrect rows")
     }
   }
 
@@ -669,11 +672,12 @@ object TableStore {
           "action landed in the race window; this rewrite's scans " +
           "and validation predate it"))
       // serializability screen: every file the racers ADDED must be
-      // REFUTED by the predicate's necessary conditions
-      val baseP =
-        if (now.versions.contains(base)) now.at(base).live.map(_.path).toSet
-        else Set.empty[String]
-      val newAdds = live.filterNot(f => baseP.contains(f.path))
+      // REFUTED by the predicate's necessary conditions — a restore's
+      // re-add of a file live at base too (it sheds vectors; a touched
+      // one holds a matched row, so it is never refuted)
+      val added = now.log.filter(r => r.v > base && r.action == "add")
+        .map(_.path).toSet
+      val newAdds = live.filter(f => added(f.path))
       val unrefuted =
         graft.sources.StatsSkipping.prune(newAdds, screenFilters)
       if (unrefuted.nonEmpty)
@@ -691,6 +695,9 @@ object TableStore {
       // predicate is per-row and a vanished row this op didn't
       // touch can't change which of ITS rows match.
       if (screenFilters.isEmpty) {
+        val baseP =
+          if (now.versions.contains(base)) now.at(base).live.map(_.path).toSet
+          else Set.empty[String]
         val goneElsewhere = baseP -- liveP -- removes
         if (goneElsewhere.nonEmpty)
           refuse(s"${goneElsewhere.size} file(s) beyond this op's " +
@@ -1117,32 +1124,34 @@ object TableStore {
     * read would infer ONE file's shape — else under [[scanSchema]]'s,
     * so planning runs no Spark job.
     *
-    * The only code that applies `s`'s delete vectors: when some of
-    * `entries` are vectored, a left anti-join on (file name,
+    * The only code that applies `snap`'s delete vectors (None: a
+    * store with no commits, so none): when some of `entries` are
+    * vectored, a left anti-join on (file name,
     * `_metadata.row_index`) against their vector files, read under
     * the vectors' fixed schema, drops the deleted rows; vector-free
     * entries scan as the bare relation. `_metadata` stays resolvable
     * ([[Bridge.keepMetadata]]), under `alias` when given. `output`
     * pins the relation's attributes (the SQL rewrite keeps its own). */
-  private[graft] def scanFiles(spark: SparkSession, s: Snapshot,
+  private[graft] def scanFiles(spark: SparkSession, root: String,
+                               snap: Option[Snapshot],
                                declared: Option[org.apache.spark.sql.types.StructType],
                                entries: Seq[FileEntry],
                                alias: Option[String] = None,
                                output: Seq[AttributeReference] = Nil)
       : DataFrame = {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val rel = graft.sources.GraftFileIndex.relation(spark, s.root, entries,
-      scanSchema(spark, s.root, declared, entries))
+    val rel = graft.sources.GraftFileIndex.relation(spark, root, entries,
+      scanSchema(spark, root, declared, entries))
     val bare = Bridge.dataFrame(spark,
       if (output.isEmpty) LogicalRelation(rel)
       else LogicalRelation(rel, output, None, false, None))
     val scan = alias.fold(bare)(bare.alias)
-    val vectors = s.vectorsOf(entries)
+    val vectors = snap.fold(Seq.empty[String])(_.vectorsOf(entries))
     if (vectors.isEmpty) scan
     else {
       val dv = spark.read.schema("fname STRING, idx BIGINT")
         .option("ignoreMissingFiles", "false")
-        .parquet(vectors.map(resolve(s.root, _)): _*)
+        .parquet(vectors.map(resolve(root, _)): _*)
       Bridge.keepMetadata(scan.join(dv,
         element_at(split(scan("_metadata.file_path"), "/"), -1) ===
           dv("fname") && scan("_metadata.row_index") === dv("idx"),
@@ -1227,7 +1236,8 @@ object TableStore {
     // aliased for correlated-subquery predicates from the SQL DML path
     // (their rebound outer refs are Dml.TargetAlias-qualified);
     // transparent to plain predicates
-    scanFiles(spark, s, s.declared, touched, Some(Dml.TargetAlias))
+    scanFiles(spark, root, Some(s), s.declared, touched,
+      Some(Dml.TargetAlias))
       .where(coalesce(pred, lit(false))) // definite-true rows only
       .select(
         element_at(split(col("_metadata.file_path"), "/"), -1)
@@ -1430,7 +1440,7 @@ object TableStore {
       // ALTER set one (scanFiles): pre-ALTER files null-fill its
       // columns inside the reader, also when an ALTER lands between a
       // MoR delete and its purge
-      case Some(s) => scanFiles(spark, s, s.declared, s.live)
+      case Some(s) => scanFiles(spark, root, Some(s), s.declared, s.live)
     }
 
   /** Snapshot read under an explicit TARGET schema — the
@@ -1444,7 +1454,7 @@ object TableStore {
              target: org.apache.spark.sql.types.StructType,
              version: Option[Long] = None): DataFrame = {
     val s = resolved(spark, root, version)
-    scanFiles(spark, s, Some(target), s.live)
+    scanFiles(spark, root, Some(s), Some(target), s.live)
   }
 
   /** Metadata-only table digest at `version` (default: latest): file
@@ -1720,7 +1730,7 @@ object TableStore {
     val adds = if (files.isEmpty) Seq.empty else {
       val bytes = files.map(sizeOf(spark, root, _)).sum
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val scan = scanFiles(spark, snap, snap.declared, files)
+      val scan = scanFiles(spark, root, Some(snap), snap.declared, files)
       writeData(clusterKey.fold(scan.repartition(nOut))(k =>
         scan.repartitionByRange(nOut, k).sortWithinPartitions(k)),
         root, n, statsCols, bloomCols)
@@ -1944,8 +1954,9 @@ object TableStore {
     val df =
       if (live.isEmpty) readSnapshot(spark, root, Some(snap)).where(residual)
         .limit(0)
-      else scanFiles(spark, snap, Some(scanSchema(spark, root, declared,
-        if (touched.isEmpty) live else touched)), touched).where(residual)
+      else scanFiles(spark, root, Some(snap), Some(scanSchema(spark, root,
+        declared, if (touched.isEmpty) live else touched)), touched)
+        .where(residual)
     (df, touched.size, live.size)
   }
 
@@ -2138,7 +2149,7 @@ object TableStore {
       statsCols, bloomCols)
     val staged =
       if (batchAdds.isEmpty) df.limit(0)
-      else scanFiles(spark, snap, None, batchAdds)
+      else scanFiles(spark, root, Some(snap), None, batchAdds)
     val matched = coalesce(pred, lit(false))
     val escapee = staged.where(!matched).limit(1)
       .collect() // bounded: first violation only
@@ -2428,7 +2439,7 @@ object TableStore {
                                         snap: Option[Snapshot],
                                         entries: Seq[FileEntry]): Unit =
     snap.filter(_ => entries.nonEmpty).foreach { s =>
-      lazy val df = scanFiles(spark, s, s.declared, entries)
+      lazy val df = scanFiles(spark, s.root, Some(s), s.declared, entries)
       s.constraints.foreach { case (name, exprSql) =>
         val bad = df.where(!coalesce(expr(exprSql), lit(true)))
           .limit(1).collect()
@@ -2814,7 +2825,7 @@ object TableStore {
     // merged target schema via a mergeSchema footer scan of every
     // add file, which tripled the version-diff gate's cost)
     adds.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, rows) =>
-      scanFiles(spark, snap, None, rows.map(_._1))
+      scanFiles(spark, root, Some(snap), None, rows.map(_._1))
         .withColumn("_commit_version", lit(v))
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
@@ -2869,8 +2880,8 @@ object TableStore {
     val addedFiles = after.filterNot(e => beforeP.contains(e.path))
     val removedFiles = before.filterNot(e => afterP.contains(e.path))
     val target = readSnapshot(spark, root, Some(snap)).schema
-    val a = scanFiles(spark, snap, Some(target), addedFiles)
-    val r = scanFiles(spark, snap, Some(target), removedFiles)
+    val a = scanFiles(spark, root, Some(snap), Some(target), addedFiles)
+    val r = scanFiles(spark, root, Some(snap), Some(target), removedFiles)
     // Multiset difference in ONE pass. The previous shape —
     // a.exceptAll(r) UNION r.exceptAll(a) — scanned BOTH file sets
     // TWICE and ran two aggregates (Spark rewrites each exceptAll

@@ -81,9 +81,8 @@ class GraftStoreTable(val root: String, val requestedVersion: Option[Long],
                             output: Seq[AttributeReference] = Nil,
                             entries: Seq[TableStore.FileEntry] = liveEntries)
       : DataFrame =
-    TableStore.scanFiles(session,
-      resolved.getOrElse(new TableStore.Snapshot(root, Nil, 0L, Nil)),
-      Some(schema), entries, None, output)
+    TableStore.scanFiles(session, root, resolved, Some(schema), entries,
+      None, output)
 
   /** An existing store's commit log is the source of truth (a
     * user-provided schema is ignored there, the Delta posture); a

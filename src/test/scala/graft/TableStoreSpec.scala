@@ -1656,6 +1656,51 @@ class TableStoreSpec extends SparkSpec {
     assert(ids(root) == Set(3L, 4L))
   }
 
+  test("a rewrite that folded a vector refuses to rebase past a " +
+      "restore that re-added its file") {
+    val root = tmp()
+    TableStore.append(mk(1, 2, 3).coalesce(1), root,
+      statsCols = Seq("id")) // v1
+    TableStore.append(mk(11, 12, 13).coalesce(1), root,
+      statsCols = Seq("id")) // v2
+    TableStore.deleteWhereMoR(spark, root, col("id") === 2L) // v3
+    val live = TableStore.liveAt(spark, root, 3L)
+    val (low, high) = live.partition(_.mins.get("id").contains(1L))
+    // the rewrite reads v3's visible rows: it folds v3's vector
+    val adds = stageRewrite(root, 3L)
+    // the racer: restore to v2 re-adds the vectored file, which sheds
+    // the vector and brings id 2 back; both files stay live
+    TableStore.restore(spark, root, 2L) // v4
+    assert(ids(root) == Set(1L, 2L, 3L, 11L, 12L, 13L))
+    def refusal(commit: => Long): String =
+      intercept[java.util.ConcurrentModificationException](commit)
+        .getMessage
+    assert(refusal(TableStore.commitLayoutRebasing(
+      spark, root, 4L, adds, live.map(_.path))).contains("re-add"))
+    // a re-added file is a concurrent add: a touched one holds a
+    // matched row, so the predicate's filters cannot refute it
+    assert(refusal(TableStore.commitRewriteRebasing(spark, root, 4L,
+      adds, low.map(_.path), Seq(LessThanOrEqual("id", 3L))))
+      .contains("might hold rows"))
+    // ...and an untouched one rebases only when they refute its rows
+    val rel = "data/v5-readdtest"
+    spark.read.parquet(high.map(e => s"$root/${e.path}"): _*)
+      .where(col("id") =!= 12L).coalesce(1).write.parquet(s"$root/$rel")
+    val dir = new org.apache.hadoop.fs.Path(s"$root/$rel")
+    val dropped12 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => TableStore.FileEntry(s"$rel/${f.getPath.getName}", 2L,
+        Map("id" -> 11L), Map("id" -> 13L)))
+    assert(refusal(TableStore.commitRewriteRebasing(spark, root, 4L,
+      dropped12, high.map(_.path), Seq(LessThanOrEqual("id", 13L))))
+      .contains("might hold rows"))
+    assert(TableStore.versions(spark, root).last == 4L)
+    assert(TableStore.commitRewriteRebasing(spark, root, 4L, dropped12,
+      high.map(_.path), Seq(GreaterThanOrEqual("id", 11L))) == 5L)
+    assert(ids(root) == Set(1L, 2L, 3L, 11L, 13L))
+  }
+
   test("Dml.update over vectored files keeps the vectored rows deleted " +
       "and rewrites only the file holding a match") {
     val root = tmp()
