@@ -18,6 +18,25 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame     = t(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
+
+  /** The orders split keys (lo, hi) gates slice orders into three
+    * key ranges on: 5000 and 10000 once the dense keys 0..max number
+    * 15000 or more, else the key range's thirds — three non-empty
+    * slices at every SF. Oracles restate it as [[Split3Sql]]. */
+  private[graft] def split3(s: SparkSession, d: String): (Long, Long) = {
+    val mx = orders(s, d)
+      .agg(org.apache.spark.sql.functions.max("o_orderkey").cast("long"))
+      .collect()(0)
+    val n = if (mx.isNullAt(0)) 0L else mx.getLong(0) + 1
+    (math.min(5000L, n / 3), math.min(10000L, 2 * n / 3))
+  }
+
+  /** [[split3]] as a DuckDB CTE body: one row (lo, hi). */
+  private[graft] val Split3Sql: String =
+    """SELECT LEAST(5000, (MAX(o_orderkey) + 1) // 3) AS lo,
+              LEAST(10000, 2 * (MAX(o_orderkey) + 1) // 3) AS hi
+       FROM orders"""
+
   /** events.ts has shipped in two physical forms across testdata
     * generations: TIMESTAMP(NANOS) parquet (surfaced as an epoch-nanos
     * long via spark.sql.legacy.parquet.nanosAsLong in GraftSession) and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-import TableStore.FileEntry
+import TableStore.{Change, FileEntry, Screen}
 
 /** Row-level DML over the versioned store with AUTOMATIC pruning —
   * the engine behind `DELETE FROM` / `UPDATE` / `MERGE INTO` on the
@@ -346,9 +346,10 @@ object Dml {
     *  - files declare the caller's `statsCols` plus the stats the log
     *    carries for live files, and the caller's `bloomCols` plus the
     *    blooms the touched files' footers carry;
-    *  - `screen` None commits via [[TableStore.commitExclusive]] (a
-    *    lost race is loud); `Some(filters)` via
-    *    [[TableStore.commitRewriteRebasing]] under those filters.
+    *  - the change commits through [[TableStore.commit]] under
+    *    `screen`: [[TableStore.Screen.Exclusive]] (a lost race is
+    *    loud) or [[TableStore.Screen.Rows]] (it rebases past racers
+    *    the predicate's filters prove disjoint).
     * Nothing touched and nothing written commits nothing and returns
     * the snapshot's version; else the committed version. */
   private[graft] def rewrite(spark: SparkSession, root: String,
@@ -356,7 +357,7 @@ object Dml {
       candidates: Seq[FileEntry], hits: DataFrame => DataFrame,
       rewritten: DataFrame => DataFrame, rewrittenIsNew: Boolean,
       fresh: Option[DataFrame],
-      screen: Option[Seq[org.apache.spark.sql.sources.Filter]],
+      screen: Screen,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       staged: Seq[FileEntry] = Nil, batchId: Option[Long] = None): Long = {
     val prev = snap.fold(0L)(_.version)
@@ -395,15 +396,8 @@ object Dml {
     // a rewrite that touched nothing is a pure append: no rewrite
     // marker, so an adds-only change feed stays consumable across it
     val marker = if (touched.isEmpty) None else Some("rewrite")
-    screen match {
-      case None =>
-        TableStore.commitExclusive(spark, root, n, staged ++ adds,
-          touched.map(_.path), marker, batchId)
-        n
-      case Some(filters) =>
-        TableStore.commitRewriteRebasing(spark, root, n, staged ++ adds,
-          touched.map(_.path), filters, marker)
-    }
+    TableStore.commit(spark, root, n, Change(staged ++ adds,
+      touched.map(_.path), marker, batchId, screen = screen)).get
   }
 
   /** The DELETE execution mode knob the SQL surface reads:
@@ -444,8 +438,9 @@ object Dml {
       // filter set refuses on any concurrent ADD (a truncate's
       // predicate matches everything — serial order would decide
       // whether the appended rows survive)
-      return TableStore.commitRewriteRebasing(spark, root, prev + 1,
-        Seq.empty, live.map(_.path), Seq.empty)
+      return TableStore.commit(spark, root, prev + 1, Change(Nil,
+        live.map(_.path), Some("rewrite"),
+        screen = Screen.Rows(Nil))).get
     }
     val mor = spark.conf.get(DeleteModeKey, "cow")
       .equalsIgnoreCase("mor")
@@ -472,7 +467,8 @@ object Dml {
     rewrite(spark, root, Some(snap), snapshot, candidates,
       hits = _.where(matched).select(col("_metadata.file_path")),
       rewritten = _.where(!matched), rewrittenIsNew = false,
-      fresh = None, screen = Some(screenFilters(snapshot, pred, filters)))
+      fresh = None,
+      screen = Screen.Rows(screenFilters(snapshot, pred, filters)))
   }
 
   /** `UPDATE store SET c = v, … WHERE pred` — copy-on-write, one
@@ -556,7 +552,7 @@ object Dml {
     rewrite(spark, root, Some(snap), snapshot, candidates,
       hits = _.where(matched).select(col("_metadata.file_path")),
       rewritten = rewritten, rewrittenIsNew = true, fresh = None,
-      screen = Some(screenFilters(snapshot, cond0, filters)))
+      screen = Screen.Rows(screenFilters(snapshot, cond0, filters)))
   }
 
   /** One WHEN MATCHED clause: `set = None` is DELETE, `Some(…)` is
@@ -794,6 +790,7 @@ object Dml {
       if (rowClauses) candidates else Seq.empty,
       hits = joined(_).where(actionCol() >= 0).select(col("__graft_file")),
       rewritten = rewritten, rewrittenIsNew = true, fresh = inserts,
-      screen = Some(if (readsStore(source, root)) Seq.empty else spanFilters))
+      screen = Screen.Rows(
+        if (readsStore(source, root)) Nil else spanFilters))
   }
 }

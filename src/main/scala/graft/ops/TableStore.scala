@@ -40,20 +40,18 @@ import graft.sources.StatsSkipping
   * RENAMED to `_log/v=<N>` — the rename is the commit point, so a
   * crash before it leaves only unreferenced data files (invisible to
   * readers, swept by vacuum) and never a torn snapshot. Version
-  * numbers are claimed optimistically: a writer that loses the
-  * `v=<N>` race gets a [[CommitConflictException]]. APPENDS retry at
-  * the next version automatically — their file sets are disjoint by
-  * construction (nothing to re-validate, the reference's concurrent
-  * `ON CONFLICT` upsert posture re-expressed as commits), so
-  * concurrent appenders serialize into a linear history with no data
-  * rewrite. LAYOUT rewrites (compact/optimize — content-identical by
-  * construction) REBASE on a lost race: they re-validate that their
-  * remove-set is still live and delete-vector-free at the new latest
-  * and re-commit at the next version, so maintenance cannot starve
-  * under a streaming sink's continuous appends
-  * ([[commitLayoutRebasing]]). Content-CHANGING snapshot-dependent
-  * ops (overwrite/delete/restore) computed their removes from a
-  * specific latest version, so a lost race surfaces loudly as a
+  * numbers are claimed optimistically by ONE [[commit]]: a writer
+  * that loses the `v=<N>` race judges the winners by its change's
+  * [[Screen]] and retries at the next version or refuses. APPENDS
+  * retry — their file sets are disjoint by construction (the
+  * reference's concurrent `ON CONFLICT` upsert posture re-expressed
+  * as commits), so concurrent appenders serialize into a linear
+  * history with no data rewrite. LAYOUT rewrites (compact/optimize —
+  * content-identical by construction) and keyed row-level rewrites
+  * REBASE past provably disjoint winners, so neither starves under a
+  * streaming sink's continuous appends. Snapshot-dependent ops
+  * (overwrite/restore/ALTER) computed their change from a specific
+  * latest version, so a lost race surfaces loudly as a
   * ConcurrentModificationException telling the caller to re-read —
   * never a silent clobber.
   *
@@ -95,10 +93,9 @@ object TableStore {
     if (path.startsWith("/") || path.contains("://")) path
     else s"$root/$path"
 
-  /** Thrown when an optimistic commit loses the version race: another
-    * writer published `v=N` first. Appends catch it and retry at the
-    * next version (their data dirs are attempt-unique, so nothing was
-    * clobbered); snapshot-dependent ops surface it loudly. */
+  /** Thrown when one commit attempt loses the version race: another
+    * writer published `v=N` first. [[commit]] catches it and judges
+    * the winner by the change's [[Screen]]. */
   final class CommitConflictException(msg: String)
     extends java.io.IOException(msg)
 
@@ -429,17 +426,14 @@ object TableStore {
     won
   }
 
-  /** Stage the action rows and RENAME into place — the commit point.
-    * `batchId` rides INSIDE the commit (the Delta txn-action move):
-    * a streaming batch is recorded exactly when its files are, so a
+  /** One attempt of [[commit]]: stage `change`'s action rows as
+    * version `n` and RENAME into place — the commit point. The batch
+    * id rides INSIDE the commit (the Delta txn-action move): a
+    * streaming batch is recorded exactly when its files are, so a
     * retry after any crash sees either both or neither. */
   private def commitLog(spark: SparkSession, root: String, n: Long,
-                        adds: Seq[FileEntry],
-                        removes: Seq[String],
-                        batchId: Option[Long] = None,
-                        marker: Option[String] = None,
-                        metaRows: Seq[(String, String, String)] = Nil)
-      : Unit = {
+                        change: Change): Unit = {
+    import change.{adds, batchId, marker, metaRows, removes}
     // commit-TYPE markers ride as inert rows (the vacuum "txn"
     // posture — a live set reads only add and remove rows, so they
     // never affect a snapshot): "layout" = content-identical rewrite (compact/
@@ -519,194 +513,162 @@ object TableStore {
       s"commit $n at $root published no log files — torn commit")
   }
 
-  /** Commit for SNAPSHOT-DEPENDENT operations (adds/removes computed
-    * from a specific latest version): a lost version race cannot be
-    * silently retried — the new latest may invalidate what this op
-    * read — so it surfaces loudly with the remedy. The abandoned
-    * attempt's data files are unreferenced and vacuum-swept. */
-  private[graft] def commitExclusive(spark: SparkSession, root: String,
-                                     n: Long, adds: Seq[FileEntry],
-                                     removes: Seq[String],
-                                     marker: Option[String] = None,
-                                     batchId: Option[Long] = None,
-                                     metaRows: Seq[(String, String, String)]
-                                       = Nil): Unit =
-    try commitLog(spark, root, n, adds, removes, batchId, marker,
-      metaRows)
-    catch { case e: CommitConflictException =>
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent writer committed version $n at $root while this " +
-          "operation was computing from the previous snapshot — " +
-          "re-read and retry", e)
-    }
+  /** How a commit that lost the version race judges the racers — the
+    * commits in (`first` - 1, latest] — before it retries at the next
+    * version: the racers and the change must compose as the serial
+    * order racers-then-change, or the commit refuses loudly
+    * (ConcurrentModificationException) and the caller re-reads. */
+  private[graft] sealed trait Screen
 
-  /** Commit for LAYOUT maintenance (content-identical rewrites —
-    * compact / small-file fold / recluster): the adds replace exactly
-    * `removes`' content, so a lost version race is REBASED instead of
-    * abandoned. Appends already auto-retry; without this, a
-    * compaction that loses to the streaming sink's continuous appends
-    * does its full rewrite IO and then throws it away — maintenance
-    * starves under the sink's NORMAL state. Rebase validity is
-    * exactly the content-identity claim re-checked at the new latest:
-    * every removed path must still be LIVE (nobody else rewrote,
-    * deleted or compacted it) and must have taken no delete vector
-    * and no re-ADD in the race window (the rewrite folded only the
-    * vectors it read: a later one would be dropped with the file,
-    * resurrecting its rows, and a [[restore]] re-add sheds the folded
-    * ones, bringing theirs back; a vacuum checkpoint past the base
-    * re-adds too, so it refuses conservatively). A racer that passes
-    * both
-    * checks — a pure append, a metadata commit, a rewrite of DISJOINT
-    * files — composes with this rewrite in either order, so the
-    * rebased commit publishes the same table content the two ops
-    * would produce serially. Anything else still surfaces loudly as
-    * ConcurrentModificationException: rebasing is for provably
-    * disjoint races only, never a silent clobber. Returns the version
-    * actually committed. */
-  private[graft] def commitLayoutRebasing(spark: SparkSession,
-                                          root: String, first: Long,
-                                          adds: Seq[FileEntry],
-                                          removes: Seq[String]): Long = {
-    val base = first - 1
-    commitRetrying(spark, root, first, "layout rewrite", adds, removes,
-        marker = Some("layout")) { (n, now, e) =>
-      def refuse(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"layout rewrite at $root lost the version-$n race and " +
-            s"cannot rebase: $why — re-plan from version ${now.version}", e)
-      val liveP = now.live.map(_.path).toSet
-      val lost = removes.filterNot(liveP.contains)
-      if (lost.nonEmpty)
-        refuse(s"a concurrent writer removed ${lost.size} of its " +
-          s"source files (e.g. ${lost.head})")
-      val removedNames = removes.map(_.split('/').last).toSet
-      if (now.log.exists(r => r.v > base && removedNames(
-          r.path.split('/').last) && (r.action == "dv" || r.action == "add")))
-        refuse("a concurrent merge-on-read delete vector or re-add " +
-          "landed on a source file; this rewrite folded only the " +
-          "vectors it read, so it would resurrect rows")
-    }
+  private[graft] object Screen {
+    /** Never rebases: the change was computed from one snapshot's live
+      * set or metadata (overwrite, restore, ALTER, constraints, delete
+      * vectors, keyed upserts), which any racer may invalidate. */
+    case object Exclusive extends Screen
+
+    /** New files only, in attempt-unique dirs, so disjoint from every
+      * racer's: rebases past any racer but a constraint declared in the
+      * window, which these rows were never checked against. A change
+      * whose batch id a racer already committed ends with no version —
+      * the exactly-once stand-down. */
+    case object Append extends Screen
+
+    /** A content-identical rewrite of the removes (compact, small-file
+      * fold, recluster, purge): rebases while every removed path is
+      * still live and took no delete vector and no re-ADD in the window.
+      * The rewrite folded only the vectors it read: a later one would be
+      * dropped with the file, resurrecting its rows, and a [[restore]]
+      * re-add sheds the folded ones, bringing theirs back; a vacuum
+      * checkpoint past the base re-adds too, so it refuses
+      * conservatively. A racer that passes — an append, a metadata
+      * commit, a rewrite of disjoint files — composes in either order,
+      * so maintenance cannot starve under a streaming sink. */
+    case object Layout extends Screen
+
+    /** A content-CHANGING row-level rewrite ([[Dml.rewrite]]): the
+      * Layout liveness check, plus serializability over the racers' new
+      * content. `filters` are the predicate's necessary conditions, each
+      * a conjunct the full predicate implies; every file the racers
+      * added (a [[restore]] re-add too — a touched one holds a matched
+      * row, so it is never refuted) must be refuted by them through
+      * [[prunedFiles]], the pruner every read uses, or it might hold a
+      * row the op should have seen. EMPTY filters (unconditional ops,
+      * untranslatable or subquery predicates, self-reading merges)
+      * refuse any concurrent add, and any concurrent remove beyond the
+      * touched files: the match set may depend on those rows. Any
+      * delete vector or constraint change in the window refuses too:
+      * the op's scans and validation predate it. */
+    final case class Rows(filters: Seq[Filter]) extends Screen
   }
 
-  /** Commit `adds`/`removes` at version `first`; on each lost version
-    * race, `rebase` checks the FRESH latest snapshot — the racers'
-    * commits — and refuses by throwing, else the commit retries at the
-    * next version. The attempt cap turns a pathological livelock (a
-    * writer that can never win) into a loud error naming `what`
-    * instead of an infinite loop. Returns the version committed. */
-  private def commitRetrying(spark: SparkSession, root: String, first: Long,
-                             what: String, adds: Seq[FileEntry],
-                             removes: Seq[String],
-                             batchId: Option[Long] = None,
-                             marker: Option[String] = None)(
-      rebase: (Long, Snapshot, CommitConflictException) => Unit): Long = {
+  /** One commit's content: the files it adds and removes, its
+    * commit-type marker, the streaming batch id it records, its table
+    * METADATA rows as (name, action, payload), and the [[Screen]] that
+    * judges a lost version race. */
+  private[graft] final case class Change(
+      adds: Seq[FileEntry], removes: Seq[String],
+      marker: Option[String] = None, batchId: Option[Long] = None,
+      metaRows: Seq[(String, String, String)] = Nil, screen: Screen)
+
+  /** The one commit of every store op: publish `change` as version
+    * `first` ([[commitLog]]). On a lost version race, resolve the
+    * latest snapshot once and judge the racers by the change's
+    * [[Screen]]: refuse, or retry the same data files at the next
+    * version (attempt-unique dirs, so nothing was clobbered; an
+    * abandoned attempt's files are vacuum-swept). The happy path
+    * resolves nothing. The attempt cap turns a pathological livelock
+    * (a writer that can never win) into a loud error. Returns the
+    * version committed — None only for an [[Screen.Append]] whose batch
+    * id a racer committed. */
+  private[graft] def commit(spark: SparkSession, root: String, first: Long,
+                            change: Change): Option[Long] = {
+    val base = first - 1
+    val what = change.screen match {
+      case Screen.Layout => "layout rewrite"
+      case Screen.Rows(_) => "row-level rewrite"
+      case _ => change.batchId.fold("append")(b => s"appendBatch($b)")
+    }
     var n = first
     var attempts = 0
     while (attempts < 64) {
-      try { commitLog(spark, root, n, adds, removes, batchId, marker); return n }
+      try { commitLog(spark, root, n, change); return Some(n) }
       catch { case e: CommitConflictException =>
         attempts += 1
-        val now = resolved(spark, root)
-        rebase(n, now, e)
+        lazy val now = resolved(spark, root)
+        lazy val window = now.log.filter(_.v > base)
+        lazy val liveP = now.live.map(_.path).toSet
+        lazy val lost = change.removes.filterNot(liveP)
+        def refuse(why: String, remedy: String): Nothing =
+          throw new java.util.ConcurrentModificationException(
+            s"$what at $root lost the version-$n race and cannot " +
+              s"rebase: $why — $remedy", e)
+        def rerun = s"re-read version ${now.version} and re-run the operation"
+        change.screen match {
+          case Screen.Exclusive =>
+            throw new java.util.ConcurrentModificationException(
+              s"concurrent writer committed version $n at $root while this " +
+                "operation was computing from the previous snapshot — " +
+                "re-read and retry", e)
+          case Screen.Append =>
+            if (change.batchId.exists(carries(Some(now), _))) return None
+            window.find(_.action == "constraint").foreach(c =>
+              refuse(s"CHECK constraint ${c.path} was declared in the race " +
+                "window and these rows were never checked against it", rerun))
+          case Screen.Layout =>
+            def replan = s"re-plan from version ${now.version}"
+            if (lost.nonEmpty)
+              refuse(s"a concurrent writer removed ${lost.size} of its " +
+                s"source files (e.g. ${lost.head})", replan)
+            val removedNames = change.removes.map(_.split('/').last).toSet
+            if (window.exists(r => removedNames(r.path.split('/').last) &&
+                (r.action == "dv" || r.action == "add")))
+              refuse("a concurrent merge-on-read delete vector or re-add " +
+                "landed on a source file; this rewrite folded only the " +
+                "vectors it read, so it would resurrect rows", replan)
+          case Screen.Rows(filters) =>
+            if (lost.nonEmpty)
+              refuse(s"a concurrent writer removed ${lost.size} of its " +
+                s"touched files (e.g. ${lost.head})", rerun)
+            window.find(r =>
+              Set("dv", "constraint", "constraint_drop")(r.action))
+              .foreach(m => refuse(s"a concurrent ${m.action} action landed " +
+                "in the race window; this rewrite's scans and validation " +
+                "predate it", rerun))
+            val added = window.filter(_.action == "add").map(_.path).toSet
+            val newAdds = now.live.filter(f => added(f.path))
+            // racers' files may all lack a filter column (an append of
+            // another shape): the pruner reads that as a misspelling,
+            // the screen as files it cannot refute
+            val unrefuted =
+              try prunedFiles(spark, root, newAdds, now.declared, filters)
+              catch { case _: IllegalArgumentException => newAdds }
+            if (unrefuted.nonEmpty)
+              refuse(s"${unrefuted.size} concurrently added file(s) " +
+                s"(e.g. ${unrefuted.head.path}) might hold rows the " +
+                "predicate matches — serial execution could differ", rerun)
+            // a racer can commit removes with zero adds (a COW DELETE
+            // whose matched files rewrite to zero rows), and an empty
+            // screen's match set can depend on rows in files this op
+            // never touched; a per-row predicate's cannot
+            if (filters.isEmpty) {
+              val baseP =
+                if (now.versions.contains(base)) now.at(base).live.map(_.path).toSet
+                else Set.empty[String]
+              val goneElsewhere = baseP -- liveP -- change.removes
+              if (goneElsewhere.nonEmpty)
+                refuse(s"${goneElsewhere.size} file(s) beyond this op's " +
+                  s"touched set (e.g. ${goneElsewhere.head}) were " +
+                  "concurrently removed — a subquery/self-reading/" +
+                  "unconditional operation's match set could depend on " +
+                  "their rows, so serial execution could differ", rerun)
+            }
+        }
         n = math.max(n + 1, now.version + 1)
       }
     }
     throw new java.io.IOException(
       s"$what lost the commit race $attempts times at $root — " +
         "livelocked against a faster writer")
-  }
-
-  /** Commit for CONTENT-CHANGING row-level rewrites (DELETE / UPDATE /
-    * MERGE from [[Dml]]): a lost version race REBASES when the racer
-    * is provably disjoint, instead of abandoning the whole rewrite —
-    * the [[commitLayoutRebasing]] argument applied to DML: under the
-    * streaming sink's continuous appends, a keyed DELETE that loses
-    * every race starves even though the appended rows provably cannot
-    * match its predicate. Unlike a layout rewrite, the adds here are
-    * NOT content-identical to the removes, so disjointness needs one
-    * more screen beyond live-sources + no-DVs: SERIALIZABILITY over
-    * the racer's new content. `screenFilters` carries the predicate's
-    * translated necessary conditions (each a conjunct the full
-    * predicate implies); a concurrently ADDED file whose log stats
-    * the filters cannot REFUTE might hold a row the op should have
-    * seen — serial execution would differ — so the rebase refuses
-    * loudly (the caller's remedy: re-read and re-run). An EMPTY
-    * filter set therefore means "any concurrent add refuses" — the
-    * conservative default for untranslatable predicates,
-    * unconditional ops, and not-matched-by-source merges.
-    *
-    * Remaining refusals, each a real serial-inequivalence:
-    *  - a removed (touched) path no longer live: the racer rewrote or
-    *    deleted the very rows this op rewrote;
-    *  - ANY delete-vector action in the race window: a MoR delete
-    *    changes logical content without moving file liveness, and
-    *    this op's scans applied only the vectors they read;
-    *  - a constraint change in the window: the op validated its
-    *    rewritten rows against the constraints it READ.
-    * Returns the version actually committed. */
-  private[graft] def commitRewriteRebasing(
-      spark: SparkSession, root: String, first: Long,
-      adds: Seq[FileEntry], removes: Seq[String],
-      screenFilters: Seq[org.apache.spark.sql.sources.Filter],
-      marker: Option[String] = Some("rewrite")): Long = {
-    val base = first - 1
-    commitRetrying(spark, root, first, "row-level rewrite", adds, removes,
-        marker = marker) { (n, now, e) =>
-      def refuse(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"row-level rewrite at $root lost the version-$n race " +
-            s"and cannot rebase: $why — re-read version ${now.version} " +
-            "and re-run the operation", e)
-      val live = now.live
-      val liveP = live.map(_.path).toSet
-      val lost = removes.filterNot(liveP.contains)
-      if (lost.nonEmpty)
-        refuse(s"a concurrent writer removed ${lost.size} of its " +
-          s"touched files (e.g. ${lost.head})")
-      // any dv/constraint action in (base, latest] — metadata-sized
-      val windowMeta = now.log
-        .find(r => r.v > base &&
-          Set("dv", "constraint", "constraint_drop")(r.action))
-      windowMeta.foreach(m =>
-        refuse(s"a concurrent ${m.action} " +
-          "action landed in the race window; this rewrite's scans " +
-          "and validation predate it"))
-      // serializability screen: every file the racers ADDED must be
-      // REFUTED by the predicate's necessary conditions — a restore's
-      // re-add of a file live at base too (it sheds vectors; a touched
-      // one holds a matched row, so it is never refuted)
-      val added = now.log.filter(r => r.v > base && r.action == "add")
-        .map(_.path).toSet
-      val newAdds = live.filter(f => added(f.path))
-      val unrefuted =
-        graft.sources.StatsSkipping.prune(newAdds, screenFilters)
-      if (unrefuted.nonEmpty)
-        refuse(s"${unrefuted.size} concurrently added file(s) " +
-          s"(e.g. ${unrefuted.head.path}) might hold rows the " +
-          "predicate matches — serial execution could differ")
-      // the empty-filter contract ("refuse on ANY live-set change")
-      // must cover REMOVES too: a racer can commit removes with zero
-      // adds (a COW DELETE whose matched files rewrite to zero rows
-      // drops the empty parts), and for a subquery predicate or a
-      // self-reading MERGE source the match set depends on rows in
-      // files this op never touched — removing them changes the
-      // subquery/source result, so serial execution could differ.
-      // With non-empty filters removes stay irrelevant: the
-      // predicate is per-row and a vanished row this op didn't
-      // touch can't change which of ITS rows match.
-      if (screenFilters.isEmpty) {
-        val baseP =
-          if (now.versions.contains(base)) now.at(base).live.map(_.path).toSet
-          else Set.empty[String]
-        val goneElsewhere = baseP -- liveP -- removes
-        if (goneElsewhere.nonEmpty)
-          refuse(s"${goneElsewhere.size} file(s) beyond this op's " +
-            s"touched set (e.g. ${goneElsewhere.head}) were " +
-            "concurrently removed — a subquery/self-reading/" +
-            "unconditional operation's match set could depend on " +
-            "their rows, so serial execution could differ")
-      }
-    }
   }
 
   // ------------------------------------------------------------------
@@ -1208,8 +1170,11 @@ object TableStore {
     * [[purgeDeletes]] folds the vectors back: [[metaStats]] and
     * [[metaBounds]] (log counts and bounds), [[shallowClone]] (file
     * references), [[restore]]'s target and [[readRowChanges]]' window
-    * ends (file diffs). Returns the committed version, or the current
-    * one when nothing matched (no-op, no commit). */
+    * ends (file diffs). The vector commit is [[Screen.Exclusive]]: a
+    * lost race is loud, since a racer may have rewritten the files
+    * whose row indexes the vector names. Returns the committed
+    * version, or the current one when nothing matched (no-op, no
+    * commit). */
   def deleteWhereMoR(spark: SparkSession, root: String,
                      pred: org.apache.spark.sql.Column): Long = {
     val s = resolved(spark, root)
@@ -1253,9 +1218,9 @@ object TableStore {
     }
     val hitFiles = touched.map(_.path)
       .filter(p => hitNames.contains(p.split('/').last))
-    commitExclusive(spark, root, n, Seq.empty, Seq.empty,
-      marker = Some("rewrite"),
-      metaRows = hitFiles.map(f => (f, "dv", dvRel)))
+    commit(spark, root, n, Change(Nil, Nil, marker = Some("rewrite"),
+      metaRows = hitFiles.map(f => (f, "dv", dvRel)),
+      screen = Screen.Exclusive))
     n
   }
 
@@ -1390,14 +1355,14 @@ object TableStore {
     // same rename-committed slot a racing first commit would take, so
     // exactly one of (drop, first commit) wins. Losing means a commit
     // landed: the store survives with its history, the drop aborts.
-    // Winning fences every later writer: commitLog refuses the v1→v2
+    // Winning fences every later writer: a commit refuses the v1→v2
     // transition over a tombstone, so a racer mid-retry cannot land
     // data into a directory about to be recursively deleted (the
     // check-then-delete race the plain re-verify only narrowed).
     if (!resumingDrop)
-      try commitLog(spark, root, 1L, Seq.empty, Seq.empty,
-        marker = Some("dropped"))
-      catch { case _: CommitConflictException =>
+      try commit(spark, root, 1L, Change(Nil, Nil, marker = Some("dropped"),
+        screen = Screen.Exclusive))
+      catch { case _: java.util.ConcurrentModificationException =>
         throw new IllegalArgumentException(
           s"$root received its first commit while DROP was checking — " +
             "the store survives with its history; re-read it")
@@ -1526,11 +1491,12 @@ object TableStore {
     val hint = versions(spark, root).lastOption.getOrElse(0L) + 1
     val (laid, stats) = withDeclaredLayout(df, root, statsCols)
     val adds = writeData(laid, root, hint, stats, bloomCols)
-    enforceConstraints(spark, snapshotOf(spark, root), adds)
-    // append file sets are disjoint by construction (attempt-unique
-    // data dirs), so a lost race needs no check: only the
-    // metadata-sized log commit re-runs at the next version
-    commitRetrying(spark, root, hint, "append", adds, Nil)((_, _, _) => ())
+    // the constraints checked and the first version tried come from
+    // one snapshot, so the Append screen sees every constraint since
+    val snap = snapshotOf(spark, root)
+    enforceConstraints(spark, snap, adds)
+    commit(spark, root, snap.fold(0L)(_.version) + 1,
+      Change(adds, Nil, screen = Screen.Append)).get
   }
 
   /** Replace the table's content with `df` as a new version; every
@@ -1548,9 +1514,10 @@ object TableStore {
     val (laid, stats) = withDeclaredLayout(df, root, statsCols)
     val adds = writeData(laid, root, n, stats, bloomCols)
     enforceConstraints(spark, snap, adds)
-    commitExclusive(spark, root, n, adds,
+    commit(spark, root, n, Change(adds,
       snap.fold(Seq.empty[String])(_.live.map(_.path)),
-      marker = snap.map(_ => "rewrite"), batchId = batchId)
+      marker = snap.map(_ => "rewrite"), batchId = batchId,
+      screen = Screen.Exclusive))
     n
   }
 
@@ -1571,7 +1538,8 @@ object TableStore {
     val n = snap.fold(0L)(_.version) + 1
     val adds = writeData(df, root, n, statsCols)
     enforceConstraints(spark, snap, adds)
-    commitExclusive(spark, root, n, adds, Seq.empty, metaRows = metaRows)
+    commit(spark, root, n, Change(adds, Nil, metaRows = metaRows,
+      screen = Screen.Exclusive))
     n
   }
 
@@ -1677,9 +1645,9 @@ object TableStore {
     // snapshot-dependent (the target embeds the CURRENT schema), so a
     // lost race surfaces loudly rather than composing blindly with a
     // concurrent ALTER
-    commitExclusive(spark, root, n, Seq.empty, Seq.empty,
+    commit(spark, root, n, Change(Nil, Nil,
       metaRows = Seq(((adds ++ widens).map(_._1).mkString(","), "schema",
-        target.json)))
+        target.json)), screen = Screen.Exclusive))
     n
   }
 
@@ -1712,8 +1680,8 @@ object TableStore {
     * files from the latest snapshot, fold their visible rows (the
     * scan applies their delete vectors, which leave with the files)
     * into ~`targetBytes` files, rows spread round-robin or
-    * range-clustered and sorted on `clusterKey`, and commit them via
-    * [[commitLayoutRebasing]]. Fewer than `minFiles` picked commits
+    * range-clustered and sorted on `clusterKey`, and commit them under
+    * [[Screen.Layout]]. Fewer than `minFiles` picked commits
     * nothing; an empty pick at `minFiles` 0 commits a no-action
     * version. */
   private def rewriteLayout(spark: SparkSession, root: String,
@@ -1735,7 +1703,8 @@ object TableStore {
         scan.repartitionByRange(nOut, k).sortWithinPartitions(k)),
         root, n, statsCols, bloomCols)
     }
-    commitLayoutRebasing(spark, root, n, adds, files.map(_.path))
+    commit(spark, root, n, Change(adds, files.map(_.path),
+      marker = Some("layout"), screen = Screen.Layout)).get
   }
 
   /** Rewrite the live set to ~targetBytes files as a new version,
@@ -1755,7 +1724,8 @@ object TableStore {
   /** The live files that may hold a row satisfying all `filters` —
     * the ONE file pruner behind every store read: [[readWhere]] and
     * interval-scoped rewrites here, the SQL file index
-    * ([[graft.sources.GraftFileIndex]]) and [[Dml]]'s candidates.
+    * ([[graft.sources.GraftFileIndex]]), [[Dml]]'s candidates and the
+    * [[Screen.Rows]] commit-race screen.
     *
     * The log's bounds go first, for every filter, zero IO. The footer
     * stage takes only the filters that reject nulls in every column
@@ -2011,31 +1981,19 @@ object TableStore {
       if (adds.isEmpty) None
       else {
         // the constraint check and the first commit attempt share one
-        // snapshot; only a lost race resolves again
-        var snap = snapshotOf(spark, root)
+        // snapshot; only a lost race resolves again.
+        // ORDER MATTERS: the marker check reads the log of the same
+        // snapshot that observed version n-1 committed. A twin writer
+        // (restarted stream, zombie executor) offering the same batch
+        // either committed before that observation — visible here,
+        // we stand down — or commits after it, claiming version n
+        // and forcing our commit into the Append screen's recheck.
+        // Either way the store ingests the batch exactly once.
+        val snap = snapshotOf(spark, root)
         enforceConstraints(spark, snap, adds)
-        var attempts = 0
-        while (attempts < 64) {
-          val n = snap.fold(0L)(_.version) + 1
-          // ORDER MATTERS: the marker check reads the log of the same
-          // snapshot that observed version n-1 committed. A twin writer
-          // (restarted stream, zombie executor) offering the same batch
-          // either committed before that observation — visible here,
-          // we stand down — or commits after it, claiming version n
-          // and forcing our commit into this conflict-and-recheck
-          // loop. Either way the store ingests the batch exactly once.
-          if (carries(snap, batchId)) return None
-          try {
-            commitLog(spark, root, n, adds, Seq.empty, Some(batchId))
-            return Some(n)
-          } catch { case _: CommitConflictException =>
-            attempts += 1
-            snap = snapshotOf(spark, root)
-          }
-        }
-        throw new java.io.IOException(
-          s"appendBatch($batchId) lost the commit race $attempts " +
-            s"times at $root — livelocked against a faster writer")
+        if (carries(snap, batchId)) None
+        else commit(spark, root, snap.fold(0L)(_.version) + 1,
+          Change(adds, Nil, batchId = Some(batchId), screen = Screen.Append))
       }
     }
   }
@@ -2167,7 +2125,7 @@ object TableStore {
         Dml.predicateFilters(store, pred)),
       hits = _.where(matched).select(col("_metadata.file_path")),
       rewritten = _.where(!matched), rewrittenIsNew = false, fresh = None,
-      screen = None, statsCols = statsCols, bloomCols = bloomCols,
+      screen = Screen.Exclusive, statsCols = statsCols, bloomCols = bloomCols,
       staged = batchAdds)
   }
 
@@ -2293,7 +2251,7 @@ object TableStore {
         .join(keys, isKey).select("__f"),
       rewritten = _.join(keys, isKey, "left_anti"), rewrittenIsNew = false,
       fresh = Some(inserts.select(store.columns.map(col): _*)),
-      screen = None, statsCols = statsCols, bloomCols = bloomCols,
+      screen = Screen.Exclusive, statsCols = statsCols, bloomCols = bloomCols,
       batchId = batchId)
   }
 
@@ -2326,8 +2284,8 @@ object TableStore {
     if (versions(spark, root).isEmpty) {
       val adds = writeData(latest, root, 1L, statsCols)
       if (adds.isEmpty) None
-      else { commitExclusive(spark, root, 1L, adds, Seq.empty,
-        batchId = Some(batchId)); Some(1L) }
+      else commit(spark, root, 1L, Change(adds, Nil,
+        batchId = Some(batchId), screen = Screen.Exclusive))
     } else
       Some(cowUpsert(latest, latest, root, key, statsCols, Nil,
         "mergeBatch", Some(batchId)))
@@ -2408,8 +2366,9 @@ object TableStore {
       s"cannot add CHECK constraint $name at $root: existing rows " +
         s"violate ($exprSql), e.g. ${bad.headOption.getOrElse("")}")
     val n = prev + 1
-    commitExclusive(spark, root, n, Seq.empty, Seq.empty,
-      metaRows = Seq((name, "constraint", exprSql)))
+    commit(spark, root, n, Change(Nil, Nil,
+      metaRows = Seq((name, "constraint", exprSql)),
+      screen = Screen.Exclusive))
     n
   }
 
@@ -2422,8 +2381,9 @@ object TableStore {
     require(snap.constraints.exists(_._1 == name),
       s"no active constraint named $name at $root")
     val n = snap.version + 1
-    commitExclusive(spark, root, n, Seq.empty, Seq.empty,
-      metaRows = Seq((name, "constraint_drop", "")))
+    commit(spark, root, n, Change(Nil, Nil,
+      metaRows = Seq((name, "constraint_drop", "")),
+      screen = Screen.Exclusive))
     n
   }
 
@@ -2482,7 +2442,8 @@ object TableStore {
     if (!hasAnchor(spark, dstRoot))
       publishAnchor(spark, dstRoot,
         readSnapshot(spark, srcRoot, Some(src)).schema)
-    commitLog(spark, dstRoot, 1L, entries, Seq.empty)
+    commit(spark, dstRoot, 1L, Change(entries, Nil,
+      screen = Screen.Exclusive))
     1L
   }
 
@@ -2510,10 +2471,10 @@ object TableStore {
     // file a vector hides rows of now is re-added: the re-add sheds
     // the vector (Snapshot.dvs)
     val targetPaths = target.map(_.path).toSet
-    commitExclusive(spark, root, n,
+    commit(spark, root, n, Change(
       target.filter(e => !current.contains(e.path) || snap.vectored(e)),
       current.filterNot(targetPaths.contains),
-      marker = Some("rewrite"))
+      marker = Some("rewrite"), screen = Screen.Exclusive))
     n
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Tables.{split3, Split3Sql}
 
 /** The versioned store consumed the way the reference consumes its
   * warehouse — through SQL over named tables (the reference's entire
@@ -32,23 +33,6 @@ object SqlQueries extends QueryPack {
       graft.ops.TableStore.append(src.where(p).coalesce(1), root,
         statsCols = Seq("o_orderkey")))
   }
-
-  /** The orders3 split keys: 5000 and 10000 once the dense keys
-    * 0..max number 15000 or more, else the key range's thirds — three
-    * non-empty files at every SF. Oracles restate it as [[Split3Sql]]. */
-  private def split3(s: org.apache.spark.sql.SparkSession,
-                     d: String): (Long, Long) = {
-    val mx = Tables.orders(s, d).agg(max(col("o_orderkey")).cast("long"))
-      .collect()(0)
-    val n = if (mx.isNullAt(0)) 0L else mx.getLong(0) + 1
-    (math.min(5000L, n / 3), math.min(10000L, 2 * n / 3))
-  }
-
-  /** [[split3]] as a DuckDB CTE body: one row (lo, hi). */
-  private val Split3Sql =
-    """SELECT LEAST(5000, (MAX(o_orderkey) + 1) // 3) AS lo,
-              LEAST(10000, 2 * (MAX(o_orderkey) + 1) // 3) AS hi
-       FROM orders"""
 
   /** (o_orderkey, o_custkey, o_totalprice) in one file — the
     * delete-exists twin stores' seeding. */
@@ -85,8 +69,8 @@ object SqlQueries extends QueryPack {
     * LOG's stats prune (SqlStoreSpec plan-asserts the 1-of-3 skip;
     * this gate pins the VALUES), and (b) a `VERSION AS OF 1` time-
     * travel read through the same SQL surface. The files_touched
-    * evidence column is computed by the very [[graft.sources
-    * .StatsSkipping]] evaluator the scan's file index runs, so a
+    * evidence column is computed by the very [[graft.ops.TableStore
+    * .prunedFiles]] evaluator the scan's file index runs, so a
     * broken skip fails the hash, not just a spec. */
   val storeSql = GQuery(
     "q_store_sql",
@@ -107,8 +91,10 @@ object SqlQueries extends QueryPack {
       s.conf.set("spark.sql.catalog.gsql",
         classOf[graft.sources.GraftCatalog].getName)
       // the skip evidence, from the same evaluator the scan runs
-      val live = graft.ops.TableStore.liveAt(s, root, 3L)
-      val touched = graft.sources.StatsSkipping.prune(live, Seq(
+      val snap = graft.ops.TableStore.snapshotOf(s, root, Some(3L)).get
+      val live = snap.live
+      val touched = graft.ops.TableStore.prunedFiles(s, root, live,
+        snap.declared, Seq(
         org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", 500L),
         org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", 1500L)))
       s.sql(s"""
@@ -172,13 +158,14 @@ object SqlQueries extends QueryPack {
       val root = graft.TempRoots.create("graft_sqlfeed") + "/orders"
       val src = Tables.orders(s, d)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
+      val (lo, hi) = split3(s, d)
       graft.ops.TableStore.append(
-        src.where(col("o_orderkey") < 5000L), root)
+        src.where(col("o_orderkey") < lo), root)
       graft.ops.TableStore.append(
-        src.where(col("o_orderkey") >= 5000L &&
-          col("o_orderkey") < 10000L), root)
+        src.where(col("o_orderkey") >= lo &&
+          col("o_orderkey") < hi), root)
       graft.ops.TableStore.append(
-        src.where(col("o_orderkey") >= 10000L), root)
+        src.where(col("o_orderkey") >= hi), root)
       s.sql(s"""
         SELECT 'w13' AS win, _op, COUNT(*) AS n_rows,
                SUM(o_orderkey) AS key_sum
@@ -190,13 +177,14 @@ object SqlQueries extends QueryPack {
         GROUP BY _op
         ORDER BY win, _op""")
     },
-    Some("""
+    Some(s"""
+      WITH b AS ($Split3Sql)
       SELECT 'w13' AS win, 'insert' AS _op, COUNT(*) AS n_rows,
              CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-      FROM orders WHERE o_orderkey >= 5000
+      FROM orders, b WHERE o_orderkey >= b.lo
       UNION ALL
       SELECT 'w12', 'insert', COUNT(*), CAST(SUM(o_orderkey) AS BIGINT)
-      FROM orders WHERE o_orderkey >= 5000 AND o_orderkey < 10000
+      FROM orders, b WHERE o_orderkey >= b.lo AND o_orderkey < b.hi
       ORDER BY win, _op
     """),
     eager = true)
@@ -1086,7 +1074,7 @@ object SqlQueries extends QueryPack {
     * [[graft.ops.TableStore.alterSchema]]: one schema commit, zero
     * data IO, pre-widen files up-cast inside the parquet reader,
     * log-stats pruning still exact in the widened type (in-body
-    * StatsSkipping evidence rides the hash), pre-widen snapshots
+    * prunedFiles evidence rides the hash), pre-widen snapshots
     * keep their own narrow schema (`require`). */
   val storeSqlWidenColumn = GQuery(
     "q_sql_widen_column",
@@ -1126,10 +1114,10 @@ object SqlQueries extends QueryPack {
       // pruning evidence in the WIDENED type: a probe above 2^32
       // must touch only the post-widen file, proved by the same
       // evaluator the scan runs
-      val live = graft.ops.TableStore.liveAt(s, root,
-        graft.ops.TableStore.versions(s, root).last)
-      val touched = graft.sources.StatsSkipping.prune(live, Seq(
-        org.apache.spark.sql.sources.GreaterThanOrEqual(
+      val snap = graft.ops.TableStore.snapshotOf(s, root).get
+      val live = snap.live
+      val touched = graft.ops.TableStore.prunedFiles(s, root, live,
+        snap.declared, Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(
           "o_key", 4000000000L)))
       s.sql(s"""
         SELECT 'latest' AS leg, COUNT(*) AS n_rows,
@@ -1185,7 +1173,7 @@ object SqlQueries extends QueryPack {
     * every INSERT range-clusters on the column and logs its per-file
     * bounds, so the month probe prunes at planning time from the
     * commit log alone — the in-body `require` pins files_touched <
-    * files_total with the same [[graft.sources.StatsSkipping]]
+    * files_total with the same [[graft.ops.TableStore.prunedFiles]]
     * evaluator the scan's file index runs, and the hashed result
     * carries the pruned flag beside the per-month digest. */
   val storeSqlCreatePartitioned = GQuery(
@@ -1212,10 +1200,11 @@ object SqlQueries extends QueryPack {
         s.sql(s"INSERT INTO gprt.`$root` SELECT * FROM gate_part_src " +
           s"WHERE o_month = '$m'")
       }
-      val live = graft.ops.TableStore.liveAt(s, root,
-        graft.ops.TableStore.versions(s, root).last)
-      val touched = graft.sources.StatsSkipping.prune(live, Seq(
-        org.apache.spark.sql.sources.EqualTo("o_month", "2024-02")))
+      val snap = graft.ops.TableStore.snapshotOf(s, root).get
+      val live = snap.live
+      val touched = graft.ops.TableStore.prunedFiles(s, root, live,
+        snap.declared, Seq(
+          org.apache.spark.sql.sources.EqualTo("o_month", "2024-02")))
       require(touched.nonEmpty && touched.size < live.size,
         s"the month probe must prune: ${touched.size} of ${live.size}")
       require(touched.forall(e =>

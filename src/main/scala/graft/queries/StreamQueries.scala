@@ -597,10 +597,10 @@ object StreamQueries extends QueryPack {
     * through as its delete+insert rows. The gate streams across a
     * rewrite boundary, lands the feed in a store sink, and
     * digests per (_op, _commit_version); the oracle restates the net
-    * delta from the slice algebra: inserts @1 = the v1 slice
-    * (< 10000), deletes @2 = rows only in v1 ([5000, 10000)),
-    * inserts @2 = rows only in v2 (>= 10000); the unchanged
-    * intersection (< 5000) cancels in the diff and must appear in
+    * delta from the slice algebra over the [[Tables.split3]] keys:
+    * inserts @1 = the v1 slice (< hi), deletes @2 = rows only in v1
+    * ([lo, hi)), inserts @2 = rows only in v2 (>= hi); the unchanged
+    * intersection (< lo) cancels in the diff and must appear in
     * NEITHER @2 leg — phantom rows break the hash. */
   val streamStoreCdc = GQuery(
     "q_stream_store_cdc",
@@ -610,8 +610,9 @@ object StreamQueries extends QueryPack {
       val ckpt = s"$base/ckpt"
       val orders = Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice")
+      val (lo, hi) = Tables.split3(s, d)
       graft.ops.TableStore.append(
-        orders.where(col("o_orderkey") < 10000L), src) // v1
+        orders.where(col("o_orderkey") < hi), src) // v1
       def drain(): Unit = {
         val q = s.readStream.format("graft").option("feed", "rows")
           .load(src)
@@ -622,13 +623,13 @@ object StreamQueries extends QueryPack {
         q.awaitTermination()
       }
       drain() // batch (0,1]: the v1 slice as inserts
-      // the REWRITE: keys < 5000 keep their rows (identical on both
+      // the REWRITE: keys < lo keep their rows (identical on both
       // sides of the diff — they cancel and must appear in NEITHER
-      // leg), keys in [5000, 10000) leave, keys >= 10000 arrive — all
-      // as ONE overwrite commit
+      // leg), keys in [lo, hi) leave, keys >= hi arrive — all as ONE
+      // overwrite commit
       graft.ops.TableStore.overwrite(
-        orders.where(col("o_orderkey") < 5000L)
-          .unionByName(orders.where(col("o_orderkey") >= 10000L)),
+        orders.where(col("o_orderkey") < lo)
+          .unionByName(orders.where(col("o_orderkey") >= hi)),
         src) // v2
       drain() // batch (1,2]: net delta across the rewrite
       require(graft.ops.TableStore.versions(s, out).size == 2,
@@ -641,16 +642,17 @@ object StreamQueries extends QueryPack {
           sum("o_orderkey").cast("long").as("key_sum"))
         .orderBy("_commit_version", "_op")
     },
-    Some("""
+    Some(s"""
+      WITH b AS (${Tables.Split3Sql})
       SELECT 'insert' AS _op, CAST(1 AS BIGINT) AS _commit_version,
              COUNT(*) AS n_rows, CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-      FROM orders WHERE o_orderkey < 10000
+      FROM orders, b WHERE o_orderkey < b.hi
       UNION ALL
       SELECT 'delete', 2, COUNT(*), CAST(SUM(o_orderkey) AS BIGINT)
-      FROM orders WHERE o_orderkey >= 5000 AND o_orderkey < 10000
+      FROM orders, b WHERE o_orderkey >= b.lo AND o_orderkey < b.hi
       UNION ALL
       SELECT 'insert', 2, COUNT(*), CAST(SUM(o_orderkey) AS BIGINT)
-      FROM orders WHERE o_orderkey >= 10000
+      FROM orders, b WHERE o_orderkey >= b.hi
       ORDER BY _commit_version, _op
     """),
     bench = false, eager = true)

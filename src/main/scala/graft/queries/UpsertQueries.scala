@@ -222,26 +222,28 @@ object UpsertQueries extends QueryPack {
             col("n_rows"), col("checksum"))
         sd.unionByName(gd)
       }
-      tick(1L, src.where(col("o_orderkey") < 10000L), false)
-      tick(2L, src.where(col("o_orderkey") >= 10000L), true) // CRASH
+      val (_, hi) = Tables.split3(s, d)
+      tick(1L, src.where(col("o_orderkey") < hi), false)
+      tick(2L, src.where(col("o_orderkey") >= hi), true) // CRASH
       // the crash window is real: silver's latest moved past the pin
       val pins = graft.ops.RunManifest.current(s, man).get._2
       require(graft.ops.TableStore.versions(s, silver).last >
         pins("silver")._2,
         "crash injection failed: silver never advanced past the pin")
       val mid = digests("mid") // still tick 1's pair, or the hash breaks
-      tick(2L, src.where(col("o_orderkey") >= 10000L), false) // re-run
+      tick(2L, src.where(col("o_orderkey") >= hi), false) // re-run
       mid.unionByName(digests("post")).orderBy("leg", "layer")
     },
-    Some("""
+    Some(s"""
+      WITH b AS (${Tables.Split3Sql})
       SELECT 'mid' AS leg, 'gold' AS layer,
              COUNT(DISTINCT strftime(o_orderdate, '%Y-%m')) AS n_rows,
              COUNT(*) AS checksum
-      FROM orders WHERE o_orderkey < 10000
+      FROM orders, b WHERE o_orderkey < b.hi
       UNION ALL
       SELECT 'mid', 'silver', COUNT(*),
              CAST(SUM(o_orderkey) AS BIGINT)
-      FROM orders WHERE o_orderkey < 10000
+      FROM orders, b WHERE o_orderkey < b.hi
       UNION ALL
       SELECT 'post', 'gold',
              COUNT(DISTINCT strftime(o_orderdate, '%Y-%m')), COUNT(*)

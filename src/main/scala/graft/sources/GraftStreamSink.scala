@@ -21,7 +21,7 @@ import graft.ops.TableStore
   * `maxLiveFiles`/`targetBytes` ([[TableStore.SinkMaintenance]]:
   * after a COMMITTED batch pushes the live set past the threshold,
   * the small-file backlog folds as an ordinary layout commit —
-  * which [[TableStore.commitLayoutRebasing]] lets race safely with
+  * whose [[TableStore.Screen.Layout]] lets it race safely with
   * concurrent appenders). Append-only by contract: per-batch commits
   * ARE appends; Complete/Update modes have no store spelling and
   * refuse at start. */

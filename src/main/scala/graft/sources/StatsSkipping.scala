@@ -11,8 +11,8 @@ import graft.ops.TableStore.FileEntry
   * [[TableStore.prunedFiles]], which asks it first of the commit log's
   * bounds (zero IO) and then of one row group's footer bounds handed
   * in as a [[FileEntry]]; [[TableStore.readWhere]], the SQL file index, the
-  * DSv2 fallback scan and the DML planner all reach it there. Only
-  * the commit-race screen calls [[prune]] directly, on log bounds.
+  * DSv2 fallback scan, the DML planner and the commit-race screen all
+  * reach it there.
   *
   * Soundness contract: `mayContain` returns false ONLY when the
   * bounds PROVE no row matches — unknown filter shapes, columns
@@ -131,9 +131,4 @@ object StatsSkipping {
          _: StringEndsWith | _: StringContains | _: IsNotNull => true
     case _ => false
   }
-
-  /** The live files whose log bounds survive every filter — the
-    * commit-race screen's test. */
-  def prune(live: Seq[FileEntry], filters: Seq[Filter]): Seq[FileEntry] =
-    live.filter(e => filters.forall(f => mayContain(e, f)))
 }

@@ -5,16 +5,16 @@ import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.ops.{Dml, TableStore}
 
-/** Conflict-aware rebase for row-level DML commits
-  * ([[TableStore.commitRewriteRebasing]]): a keyed DELETE/UPDATE/MERGE
-  * that loses a version race to a provably-disjoint racer (a pure
-  * append whose log stats the predicate's filters REFUTE) rebases and
-  * commits instead of abandoning its rewrite — the
-  * commitLayoutRebasing argument applied to DML, because under the
-  * streaming sink's continuous appends an always-losing DELETE
-  * starves. Everything NOT provably disjoint still refuses loudly:
-  * unrefuted concurrent adds (serial order would differ), removed
-  * touched files, delete vectors, constraint changes in the window. */
+/** Conflict-aware rebase for row-level DML commits ([[TableStore.commit]]
+  * under [[TableStore.Screen.Rows]]): a keyed DELETE/UPDATE/MERGE that
+  * loses a version race to a provably-disjoint racer (a pure append
+  * whose log or footer bounds the predicate's filters REFUTE) rebases
+  * and commits instead of abandoning its rewrite — the Layout screen's
+  * argument applied to DML, because under the streaming sink's
+  * continuous appends an always-losing DELETE starves. Everything NOT
+  * provably disjoint still refuses loudly: unrefuted concurrent adds
+  * (serial order would differ), removed touched files, delete vectors,
+  * constraint changes in the window. */
 class DmlRebaseSpec extends SparkSpec {
 
   private def tmp() = graft.TempRoots.create("graft_dmlrebase") + "/t"
@@ -34,10 +34,12 @@ class DmlRebaseSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toIndexedSeq
 
   /** Stage a DML-style rewrite of the middle file with id=12 deleted,
-    * WITHOUT committing — the injection point that lets a racer land
-    * between the op's planning and its commit deterministically. */
-  private def stageDelete12(root: String)
-      : (Seq[TableStore.FileEntry], Seq[String]) = {
+    * screened by `filters`, WITHOUT committing — the injection point
+    * that lets a racer land between the op's planning and its commit
+    * deterministically. */
+  private def stageDelete12(root: String,
+                            filters: Seq[org.apache.spark.sql.sources.Filter])
+      : TableStore.Change = {
     val live = TableStore.liveAt(spark, root,
       TableStore.versions(spark, root).last)
     val touched = live.filter(e =>
@@ -54,7 +56,8 @@ class DmlRebaseSpec extends SparkSpec {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => TableStore.FileEntry(s"$rel/${s.getPath.getName}", 2L,
         Map("id" -> 11L), Map("id" -> 13L)))
-    (adds, touched)
+    TableStore.Change(adds, touched, Some("rewrite"),
+      screen = TableStore.Screen.Rows(filters))
   }
 
   private val filters1113 = Seq(GreaterThanOrEqual("id", 11L),
@@ -63,16 +66,28 @@ class DmlRebaseSpec extends SparkSpec {
   test("DML rewrite rebases past a refuted concurrent append") {
     val root = tmp()
     ranged(root) // v1-3
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, filters1113)
     // the racer: an out-of-range append claims v4 — its logged bounds
     // [31, 33] are refuted by the predicate's [11, 13] filters
     assert(TableStore.append(mk(31L, 32L, 33L).coalesce(1), root,
       statsCols = Seq("id")) == 4L)
-    val committed = TableStore.commitRewriteRebasing(
-      spark, root, 4L, adds, touched, filters1113)
-    assert(committed == 5L) // rebased once, not abandoned
+    val committed = TableStore.commit(spark, root, 4L, delete12)
+    assert(committed == Some(5L)) // rebased once, not abandoned
     assert(TableStore.versions(spark, root) == Seq(1L, 2L, 3L, 4L, 5L))
     // both writers' work survives
+    assert(ids(root) ==
+      Seq(1L, 2L, 3L, 11L, 13L, 21L, 22L, 23L, 31L, 32L, 33L))
+  }
+
+  test("DML rewrite rebases past a stat-less append its footer " +
+      "bounds refute") {
+    val root = tmp()
+    ranged(root) // v1-3
+    val delete12 = stageDelete12(root, filters1113)
+    // the racer logs no bounds, but its footer's [31, 33] is refuted
+    // by the predicate's [11, 13] filters, the way a read prunes it
+    assert(TableStore.append(mk(31L, 32L, 33L).coalesce(1), root) == 4L)
+    assert(TableStore.commit(spark, root, 4L, delete12) == Some(5L))
     assert(ids(root) ==
       Seq(1L, 2L, 3L, 11L, 13L, 21L, 22L, 23L, 31L, 32L, 33L))
   }
@@ -81,27 +96,37 @@ class DmlRebaseSpec extends SparkSpec {
       "would differ)") {
     val root = tmp()
     ranged(root)
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, filters1113)
     // the racer appends a row INSIDE the predicate's range: serially
     // (append first) the delete should have examined it
     TableStore.append(mk(12L).coalesce(1), root, statsCols = Seq("id"))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root, 4L, adds, touched, filters1113)
+      TableStore.commit(spark, root, 4L, delete12)
     }
     assert(ex.getMessage.contains("might hold rows"), ex.getMessage)
     assert(TableStore.versions(spark, root) == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("rebase refuses a racer whose files lack the predicate's column") {
+    val root = tmp()
+    ranged(root)
+    val delete12 = stageDelete12(root, filters1113)
+    val s = spark; import s.implicits._
+    TableStore.append(Seq(7L).toDF("w").coalesce(1), root)
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      TableStore.commit(spark, root, 4L, delete12)
+    }
+    assert(ex.getMessage.contains("might hold rows"), ex.getMessage)
   }
 
   test("empty filters refuse on ANY concurrent add (the truncate / " +
       "untranslatable-predicate posture)") {
     val root = tmp()
     ranged(root)
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, Nil)
     TableStore.append(mk(99L).coalesce(1), root, statsCols = Seq("id"))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root, 4L, adds, touched, Seq.empty)
+      TableStore.commit(spark, root, 4L, delete12)
     }
     assert(ex.getMessage.contains("might hold rows"), ex.getMessage)
   }
@@ -109,11 +134,10 @@ class DmlRebaseSpec extends SparkSpec {
   test("rebase refuses when a racer removed a touched file") {
     val root = tmp()
     ranged(root)
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, filters1113)
     TableStore.overwrite(mk(50L), root) // the racer rewrites the table
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root, 4L, adds, touched, filters1113)
+      TableStore.commit(spark, root, 4L, delete12)
     }
     assert(ex.getMessage.contains("touched files"), ex.getMessage)
     assert(ids(root) == Seq(50L)) // the winner's table is untouched
@@ -123,22 +147,20 @@ class DmlRebaseSpec extends SparkSpec {
       "the window") {
     val root = tmp()
     ranged(root)
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, filters1113)
     TableStore.deleteWhereMoR(spark, root,
       col("id") === 21L) // v4: dv action
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root, 4L, adds, touched, filters1113)
+      TableStore.commit(spark, root, 4L, delete12)
     }
     assert(ex.getMessage.contains("dv"), ex.getMessage)
 
     val root2 = tmp()
     ranged(root2)
-    val (adds2, touched2) = stageDelete12(root2)
+    val delete12b = stageDelete12(root2, filters1113)
     TableStore.addConstraint(spark, root2, "vpos", "v >= 0") // v4
     val ex2 = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root2, 4L, adds2, touched2, filters1113)
+      TableStore.commit(spark, root2, 4L, delete12b)
     }
     assert(ex2.getMessage.contains("constraint"), ex2.getMessage)
   }
@@ -154,24 +176,22 @@ class DmlRebaseSpec extends SparkSpec {
     // vanished rows outside its touched set and keeps rebasing.
     val root = tmp()
     ranged(root)
-    val (adds, touched) = stageDelete12(root)
+    val delete12 = stageDelete12(root, Nil)
     assert(Dml.delete(spark, root,
       col("id") >= 21L && col("id") <= 23L) == 4L)
     assert(TableStore.liveAt(spark, root, 4L).size == 2,
       "racer must commit removes with zero adds")
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitRewriteRebasing(
-        spark, root, 4L, adds, touched, Seq.empty)
+      TableStore.commit(spark, root, 4L, delete12)
     }
     assert(ex.getMessage.contains("concurrently removed"), ex.getMessage)
 
     val root2 = tmp()
     ranged(root2)
-    val (adds2, touched2) = stageDelete12(root2)
+    val delete12b = stageDelete12(root2, filters1113)
     assert(Dml.delete(spark, root2,
       col("id") >= 21L && col("id") <= 23L) == 4L)
-    assert(TableStore.commitRewriteRebasing(
-      spark, root2, 4L, adds2, touched2, filters1113) == 5L)
+    assert(TableStore.commit(spark, root2, 4L, delete12b) == Some(5L))
     assert(ids(root2) == Seq(1L, 2L, 3L, 11L, 13L))
   }
 
@@ -183,8 +203,8 @@ class DmlRebaseSpec extends SparkSpec {
     // recursive delete ran
     val root = graft.TempRoots.create("graft_dropresume") + "/t"
     TableStore.createEmpty(spark, root, mk(1L).schema)
-    TableStore.commitRewriteRebasing(spark, root, 1L,
-      Seq.empty, Seq.empty, Seq.empty, marker = Some("dropped"))
+    TableStore.commit(spark, root, 1L, TableStore.Change(Nil, Nil,
+      Some("dropped"), screen = TableStore.Screen.Exclusive))
     assert(TableStore.versions(spark, root) == Seq(1L))
     // writers stay fenced by the tombstone (the v1→v2 check)…
     intercept[IllegalStateException] {

@@ -289,9 +289,10 @@ class SchemaAlterSpec extends SparkSpec {
       org.apache.spark.sql.types.IntegerType)
     // log-stats pruning still prunes in the widened type: the probe
     // for the big key must touch only the post-widen file
-    val live = TableStore.liveAt(spark, root, 3L)
-    val touched = graft.sources.StatsSkipping.prune(live, Seq(
-      org.apache.spark.sql.sources.GreaterThanOrEqual("k", 4000000000L)))
+    val snap = TableStore.snapshotOf(spark, root, Some(3L)).get
+    val live = snap.live
+    val touched = TableStore.prunedFiles(spark, root, live, snap.declared,
+      Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("k", 4000000000L)))
     assert(touched.size == 1, s"stats must prune the int-era file: " +
       s"${touched.map(_.path)}")
   }

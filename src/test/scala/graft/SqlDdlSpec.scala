@@ -90,8 +90,8 @@ class SqlDdlSpec extends SparkSpec {
     val live = graft.ops.TableStore.liveAt(spark, root, 3L)
     assert(live.size == 3, s"one file per month batch: " +
       s"${live.map(_.path)}")
-    val touched = graft.sources.StatsSkipping.prune(live, Seq(
-      org.apache.spark.sql.sources.EqualTo("run_month", "2024-02")))
+    val touched = graft.ops.TableStore.prunedFiles(spark, root, live, None,
+      Seq(org.apache.spark.sql.sources.EqualTo("run_month", "2024-02")))
     assert(touched.size < live.size,
       s"month probe must prune: ${touched.size} of ${live.size}")
     // the SCAN itself prunes: the rewrite's file index hands the

@@ -289,7 +289,7 @@ class SqlStoreSpec extends SparkSpec {
     // present, and a ranged probe prunes to one of the two files
     val live = TableStore.liveAt(spark, root, 2L)
     assert(live.size == 2 && live.forall(_.mins.contains("id")))
-    assert(StatsSkipping.prune(live,
+    assert(TableStore.prunedFiles(spark, root, live, None,
       Seq(LessThanOrEqual("id", 50L))).size == 1)
     // overwrite mode is one rewrite commit; the old snapshot survives
     mk(999L).write.format("graft").mode("overwrite").save(root)

@@ -1212,7 +1212,8 @@ class TableStoreSpec extends SparkSpec {
     // lost the race to this append must NOT silently clobber — it
     // surfaces the conflict with the remedy
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitExclusive(spark, root, 1L, Seq.empty, Seq.empty)
+      TableStore.commit(spark, root, 1L,
+        TableStore.Change(Nil, Nil, screen = TableStore.Screen.Exclusive))
     }
     assert(ex.getMessage.contains("concurrent writer"))
     assert(ex.getMessage.contains("re-read and retry"))
@@ -1556,24 +1557,26 @@ class TableStoreSpec extends SparkSpec {
     assert(kept == Set("a2", "nullkey"))
   }
 
-  /** Stage a content-identical rewrite of snapshot `v` the way a
-    * compactor would (attempt-unique data dir + FileEntry adds)
-    * WITHOUT committing — the injection point that lets these tests
-    * put a racing writer between a maintenance op's planning and its
-    * commit deterministically. */
-  private def stageRewrite(root: String, v: Long)
-      : Seq[TableStore.FileEntry] = {
+  /** Stage a content-identical rewrite of every live file of snapshot
+    * `v` the way a compactor would (attempt-unique data dir +
+    * FileEntry adds) as a Layout change, WITHOUT committing — the
+    * injection point that lets these tests put a racing writer
+    * between a maintenance op's planning and its commit
+    * deterministically. */
+  private def stageRewrite(root: String, v: Long): TableStore.Change = {
     val rel = s"data/v${v + 1}-rebasetest" +
       java.util.UUID.randomUUID.toString.take(8)
     val snap = TableStore.read(spark, root, Some(v))
     val rows = snap.count()
     snap.coalesce(1).write.parquet(s"$root/$rel")
     val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val adds = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => TableStore.FileEntry(
         s"$rel/${s.getPath.getName}", rows, Map.empty, Map.empty))
+    TableStore.Change(adds, TableStore.liveAt(spark, root, v).map(_.path),
+      Some("layout"), screen = TableStore.Screen.Layout)
   }
 
   test("layout rewrite rebases past a concurrent append and commits") {
@@ -1581,13 +1584,12 @@ class TableStoreSpec extends SparkSpec {
     TableStore.append(mk(1, 2), root) // v1
     TableStore.append(mk(3), root)    // v2
     val live = TableStore.liveAt(spark, root, 2L)
-    val adds = stageRewrite(root, 2L) // compactor's plan, uncommitted
+    val rewrite = stageRewrite(root, 2L) // compactor's plan, uncommitted
     // the racer: an append claims version 3 while the compactor holds
     // its plan — the streaming sink's normal state
     assert(TableStore.append(mk(4), root) == 3L)
-    val committed = TableStore.commitLayoutRebasing(
-      spark, root, 3L, adds, live.map(_.path))
-    assert(committed == 4L) // rebased once, not abandoned
+    val committed = TableStore.commit(spark, root, 3L, rewrite)
+    assert(committed == Some(4L)) // rebased once, not abandoned
     assert(TableStore.versions(spark, root) == Seq(1L, 2L, 3L, 4L))
     // both writers' work survives: the racer's row AND the rewrite
     assert(ids(root) == Set(1L, 2L, 3L, 4L))
@@ -1601,14 +1603,12 @@ class TableStoreSpec extends SparkSpec {
   test("layout rebase refuses when a racer removed a source file") {
     val root = tmp()
     TableStore.append(mk(1, 2), root) // v1
-    val live = TableStore.liveAt(spark, root, 1L)
-    val adds = stageRewrite(root, 1L)
+    val rewrite = stageRewrite(root, 1L)
     // the racer REWRITES the table: the staged rewrite's sources are
     // gone, so its content claim no longer holds
     TableStore.overwrite(mk(9), root) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitLayoutRebasing(
-        spark, root, 2L, adds, live.map(_.path))
+      TableStore.commit(spark, root, 2L, rewrite)
     }
     assert(ex.getMessage.contains("cannot rebase"))
     assert(ids(root) == Set(9L)) // the winner's table is untouched
@@ -1618,15 +1618,13 @@ class TableStoreSpec extends SparkSpec {
   test("layout rebase refuses when a delete vector landed on a source") {
     val root = tmp()
     TableStore.append(mk(1, 2), root) // v1
-    val live = TableStore.liveAt(spark, root, 1L)
-    val adds = stageRewrite(root, 1L)
+    val rewrite = stageRewrite(root, 1L)
     // the racer merge-on-read-deletes a row: the file stays LIVE, but
     // rewriting its raw bytes would resurrect the deleted row
     TableStore.deleteWhereMoR(spark, root,
       col("id") === 1L) // v2
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitLayoutRebasing(
-        spark, root, 2L, adds, live.map(_.path))
+      TableStore.commit(spark, root, 2L, rewrite)
     }
     assert(ex.getMessage.contains("delete vector"))
     assert(ids(root) == Set(2L)) // the MoR delete holds
@@ -1637,20 +1635,16 @@ class TableStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1, 2, 3), root) // v1
     TableStore.deleteWhereMoR(spark, root, col("id") === 2L) // v2
-    val live = TableStore.liveAt(spark, root, 2L)
     // the rewrite reads v2's visible rows: it folds v2's vector
-    val adds = stageRewrite(root, 2L)
+    val rewrite = stageRewrite(root, 2L)
     TableStore.append(mk(4), root) // v3: the racer, a pure append
-    assert(TableStore.commitLayoutRebasing(
-      spark, root, 3L, adds, live.map(_.path)) == 4L)
+    assert(TableStore.commit(spark, root, 3L, rewrite) == Some(4L))
     assert(ids(root) == Set(1L, 3L, 4L))
     // only a vector committed after the rewrite's snapshot refuses
-    val live4 = TableStore.liveAt(spark, root, 4L)
-    val adds4 = stageRewrite(root, 4L)
+    val rewrite4 = stageRewrite(root, 4L)
     TableStore.deleteWhereMoR(spark, root, col("id") === 1L) // v5
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitLayoutRebasing(
-        spark, root, 5L, adds4, live4.map(_.path))
+      TableStore.commit(spark, root, 5L, rewrite4)
     }
     assert(ex.getMessage.contains("delete vector"))
     assert(ids(root) == Set(3L, 4L))
@@ -1667,20 +1661,23 @@ class TableStoreSpec extends SparkSpec {
     val live = TableStore.liveAt(spark, root, 3L)
     val (low, high) = live.partition(_.mins.get("id").contains(1L))
     // the rewrite reads v3's visible rows: it folds v3's vector
-    val adds = stageRewrite(root, 3L)
+    val rewrite = stageRewrite(root, 3L)
     // the racer: restore to v2 re-adds the vectored file, which sheds
     // the vector and brings id 2 back; both files stay live
     TableStore.restore(spark, root, 2L) // v4
     assert(ids(root) == Set(1L, 2L, 3L, 11L, 12L, 13L))
-    def refusal(commit: => Long): String =
-      intercept[java.util.ConcurrentModificationException](commit)
-        .getMessage
-    assert(refusal(TableStore.commitLayoutRebasing(
-      spark, root, 4L, adds, live.map(_.path))).contains("re-add"))
+    def refusal(change: TableStore.Change): String =
+      intercept[java.util.ConcurrentModificationException](
+        TableStore.commit(spark, root, 4L, change)).getMessage
+    def rows(adds: Seq[TableStore.FileEntry],
+             removes: Seq[TableStore.FileEntry],
+             filters: org.apache.spark.sql.sources.Filter*) =
+      TableStore.Change(adds, removes.map(_.path), Some("rewrite"),
+        screen = TableStore.Screen.Rows(filters))
+    assert(refusal(rewrite).contains("re-add"))
     // a re-added file is a concurrent add: a touched one holds a
     // matched row, so the predicate's filters cannot refute it
-    assert(refusal(TableStore.commitRewriteRebasing(spark, root, 4L,
-      adds, low.map(_.path), Seq(LessThanOrEqual("id", 3L))))
+    assert(refusal(rows(rewrite.adds, low, LessThanOrEqual("id", 3L)))
       .contains("might hold rows"))
     // ...and an untouched one rebases only when they refute its rows
     val rel = "data/v5-readdtest"
@@ -1692,13 +1689,51 @@ class TableStoreSpec extends SparkSpec {
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(f => TableStore.FileEntry(s"$rel/${f.getPath.getName}", 2L,
         Map("id" -> 11L), Map("id" -> 13L)))
-    assert(refusal(TableStore.commitRewriteRebasing(spark, root, 4L,
-      dropped12, high.map(_.path), Seq(LessThanOrEqual("id", 13L))))
+    assert(refusal(rows(dropped12, high, LessThanOrEqual("id", 13L)))
       .contains("might hold rows"))
     assert(TableStore.versions(spark, root).last == 4L)
-    assert(TableStore.commitRewriteRebasing(spark, root, 4L, dropped12,
-      high.map(_.path), Seq(GreaterThanOrEqual("id", 11L))) == 5L)
+    assert(TableStore.commit(spark, root, 4L,
+      rows(dropped12, high, GreaterThanOrEqual("id", 11L))) == Some(5L))
     assert(ids(root) == Set(1L, 2L, 3L, 11L, 13L))
+  }
+
+  /** Stage an append of `df` the way [[TableStore.append]] plans one —
+    * attempt-unique data dir, constraints checked against the latest
+    * snapshot — WITHOUT committing: the version to commit at, and the
+    * Append change. */
+  private def stageAppend(df: org.apache.spark.sql.DataFrame, root: String,
+                          batchId: Option[Long]): (Long, TableStore.Change) = {
+    val snap = TableStore.snapshotOf(spark, root)
+    val n = snap.fold(0L)(_.version) + 1
+    val adds = TableStore.writeData(df, root, n, Seq("id"))
+    TableStore.enforceConstraints(spark, snap, adds)
+    (n, TableStore.Change(adds, Nil, batchId = batchId,
+      screen = TableStore.Screen.Append))
+  }
+
+  /** An append staged before a constraint was declared must not rebase
+    * past it: its rows were never checked against it. */
+  private def appendLosesToConstraint(batchId: Option[Long]): Unit = {
+    val root = tmp()
+    TableStore.append(mk(1, 2), root) // v1
+    // id -5 passes every constraint in force at v1 (there are none)
+    val (n, change) = stageAppend(mk(3, -5), root, batchId)
+    TableStore.addConstraint(spark, root, "id_pos", "id > 0") // v2 wins
+    val ex = intercept[java.util.ConcurrentModificationException](
+      TableStore.commit(spark, root, n, change))
+    assert(ex.getMessage.contains("constraint id_pos"), ex.getMessage)
+    assert(TableStore.versions(spark, root) == Seq(1L, 2L))
+    assert(ids(root) == Set(1L, 2L)) // no breaking row is readable
+  }
+
+  test("an append refuses to rebase past a constraint declared in its " +
+      "race window") {
+    appendLosesToConstraint(None)
+  }
+
+  test("an appendBatch refuses to rebase past a constraint declared in " +
+      "its race window") {
+    appendLosesToConstraint(Some(7L))
   }
 
   test("Dml.update over vectored files keeps the vectored rows deleted " +
@@ -1754,19 +1789,16 @@ class TableStoreSpec extends SparkSpec {
     val root = tmp()
     TableStore.append(mk(1, 2), root) // v1
     TableStore.append(mk(3), root)    // v2
-    val live = TableStore.liveAt(spark, root, 2L)
     // both compactors plan from v2 — the same remove-set
-    val addsA = stageRewrite(root, 2L)
-    val addsB = stageRewrite(root, 2L)
+    val rewriteA = stageRewrite(root, 2L)
+    val rewriteB = stageRewrite(root, 2L)
     // A wins the race outright (no conflict)
-    val vA = TableStore.commitLayoutRebasing(
-      spark, root, 3L, addsA, live.map(_.path))
-    assert(vA == 3L)
+    val vA = TableStore.commit(spark, root, 3L, rewriteA)
+    assert(vA == Some(3L))
     // B lost to a rewrite of its OWN sources: rebasing would publish
     // duplicate content (A's copy + B's copy) — must refuse
     val ex = intercept[java.util.ConcurrentModificationException] {
-      TableStore.commitLayoutRebasing(
-        spark, root, 3L, addsB, live.map(_.path))
+      TableStore.commit(spark, root, 3L, rewriteB)
     }
     assert(ex.getMessage.contains("cannot rebase"))
     assert(ids(root) == Set(1L, 2L, 3L)) // content intact, no dupes

@@ -3,8 +3,10 @@
 count of src/main; the line count and public defs of the versioned
 store and of its row-level DML engine (`ops/TableStore.scala`,
 `ops/Dml.scala`: defs at the object's top level, two-space indent,
-with no access modifier); and the number of `requireNoDvs` call sites
-in src/main, the ops that refuse under merge-on-read delete vectors.
+with no access modifier); the number of `def commit*` definitions in
+`ops/TableStore.scala`, the store's commit entry points; and the
+number of `requireNoDvs` call sites in src/main, the ops that refuse
+under merge-on-read delete vectors.
 Both objects are counted so that moving a def from one to the other
 cannot hide growth.
 
@@ -36,6 +38,10 @@ def main(argv):
         if "--list" in argv:
             for d in defs:
                 print(f"  {d}")
+        if name == "TableStore":
+            commits = re.findall(r"^\s*(?:private(?:\[\w+\])?\s+)?def commit\w*",
+                                 text, re.M)
+            print(f"TableStore def commit definitions: {len(commits)}")
     refusals = sum(len(re.findall(r"\.requireNoDvs\(",
                                   p.read_text(encoding="utf-8")))
                    for p in sorted(main_dir.rglob("*.scala")))
